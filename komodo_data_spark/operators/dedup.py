@@ -1874,16 +1874,6 @@ EMB_RECALL_SAMPLE_VECS = 1000
 _EMB_SAMPLE_MOD = 100_000
 
 
-def _emb_sample_buckets(n_vecs: int) -> int:
-    return max(
-        1,
-        min(
-            _EMB_SAMPLE_MOD,
-            EMB_RECALL_SAMPLE_VECS * _EMB_SAMPLE_MOD // max(n_vecs, 1),
-        ),
-    )
-
-
 def dedup_embedding_recall_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1899,7 +1889,7 @@ def dedup_embedding_recall_sampled(
 
     n_vecs = load_table(spark, sf_dir, "embeddings").count()
     gate = _bucket_col(F.col("vec_id"), mod=_EMB_SAMPLE_MOD) < (
-        _emb_sample_buckets(n_vecs)
+        _recall_sample_buckets(n_vecs, EMB_RECALL_SAMPLE_VECS, _EMB_SAMPLE_MOD)
     )
     v = (
         load_table(spark, sf_dir, "embeddings")
@@ -1929,53 +1919,29 @@ def dedup_embedding_recall_sampled(
     )
 
 
-def dedup_embedding_recall_sampled_oracle() -> str:
-    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
+def _emb_pair_oracle(pairs_sql: str) -> str:
+    """An embedding pair query renamed to the (doc_i, doc_j) pair shape —
+    the SQL side of the Spark twins' vec -> doc alias."""
+    return f"SELECT vec_i AS doc_i, vec_j AS doc_j FROM ({pairs_sql})"
 
-    buckets = (
-        f"greatest(1, least({_EMB_SAMPLE_MOD}, "
-        f"{EMB_RECALL_SAMPLE_VECS} * {_EMB_SAMPLE_MOD} // "
-        "greatest((SELECT count(*) FROM main.embeddings), 1)))"
+
+def dedup_embedding_recall_sampled_oracle() -> str:
+    return _pair_recall_oracle(
+        _emb_pair_oracle(dedup_embedding_pairs_oracle()),
+        _emb_pair_oracle(dedup_embedding_lsh_oracle()),
+        "n_lsh_pairs",
+        prelude=_sql_slice_cte(
+            "embeddings", EMB_RECALL_SAMPLE_VECS, "vec_id", _EMB_SAMPLE_MOD
+        ),
     )
-    return f"""
-    WITH embeddings AS (SELECT * FROM main.embeddings WHERE
-      {_sql_bucket('vec_id', mod=_EMB_SAMPLE_MOD)} < {buckets}),
-    truth AS ({dedup_embedding_pairs_oracle()}),
-    lsh AS ({dedup_embedding_lsh_oracle()}),
-    hit AS (
-      SELECT t.vec_i, t.vec_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM lsh l WHERE l.vec_i = t.vec_i AND l.vec_j = t.vec_j
-      )
-    )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM lsh) AS n_lsh_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
 
 
 def dedup_embedding_recall_oracle() -> str:
-    return f"""
-    WITH truth AS ({dedup_embedding_pairs_oracle()}),
-    lsh AS ({dedup_embedding_lsh_oracle()}),
-    hit AS (
-      SELECT t.vec_i, t.vec_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM lsh l WHERE l.vec_i = t.vec_i AND l.vec_j = t.vec_j
-      )
+    return _pair_recall_oracle(
+        _emb_pair_oracle(dedup_embedding_pairs_oracle()),
+        _emb_pair_oracle(dedup_embedding_lsh_oracle()),
+        "n_lsh_pairs",
     )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM lsh) AS n_lsh_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
 
 
 # --------------------------------------------------------------------------
@@ -2703,28 +2669,11 @@ def dedup_fuzzy_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_fuzzy_capped_recall_oracle() -> str:
-    return f"""
-    WITH truth AS (
-      SELECT doc_i, doc_j FROM ({dedup_fuzzy_prefix_oracle()})
-    ),
-    det AS (
-      SELECT doc_i, doc_j FROM ({dedup_fuzzy_prefix_capped_oracle()})
-    ),
-    hit AS (
-      SELECT t.doc_i, t.doc_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM det d
-        WHERE d.doc_i = t.doc_i AND d.doc_j = t.doc_j
-      )
+    return _pair_recall_oracle(
+        dedup_fuzzy_prefix_oracle(),
+        dedup_fuzzy_prefix_capped_oracle(),
+        "n_capped_pairs",
     )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM det) AS n_capped_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
 
 
 # --------------------------------------------------------------------------
@@ -3047,20 +2996,48 @@ EVAL_SLICE_PARTITIONS = 4
 
 
 def _recall_sample_buckets(
-    n_docs: int, target: int = RECALL_SAMPLE_TARGET_DOCS
+    n_rows: int, target: int = RECALL_SAMPLE_TARGET_DOCS, mod: int = 100
 ) -> int:
-    """Bucket count (of the md5 % 100 gate) sizing the recall eval's slice
-    to ~``target`` documents REGARDLESS of corpus size:
-    floor(target·100 / n), clamped to [1, 100]. A fixed bucket count was
-    the third-decade catch (BENCH_SCALING sf1→sf10): 50 buckets is a
-    fixed FRACTION, so the slice grew linearly and its all-pairs truth
-    quadratically (5.8 s → 403 s over a 10× step). With a fixed DOC
-    budget the eval is O(target²) at any corpus size; the % 100
-    granularity floors the slice at 1% — production at >100× the target
-    uses a finer modulus, same arithmetic. ``target`` defaults to the
-    shared text budget; evals with denser feature sets (the media gram
-    truth) pass their own."""
-    return max(1, min(100, target * 100 // max(n_docs, 1)))
+    """Bucket count (of the md5 % ``mod`` gate) sizing a recall eval's
+    slice to ~``target`` rows REGARDLESS of table size:
+    floor(target·mod / n), clamped to [1, mod] — THE slice-gate arithmetic
+    of every sampled recall twin (``_sql_sample_gate`` is its SQL twin).
+    A fixed bucket count was the third-decade catch (BENCH_SCALING
+    sf1→sf10): 50 buckets is a fixed FRACTION, so the slice grew linearly
+    and its all-pairs truth quadratically (5.8 s → 403 s over a 10× step).
+    With a fixed budget the eval is O(target²) at any corpus size; the
+    % 100 granularity floors the slice at 1%, so the vector evals, whose
+    budgets are far below 1% of a large corpus, pass a finer ``mod``.
+    ``target`` defaults to the shared text budget; evals with denser
+    feature sets (the media gram truth) pass their own."""
+    return max(1, min(mod, target * mod // max(n_rows, 1)))
+
+
+def _sql_sample_gate(table: str, target: int, key: str, mod: int) -> str:
+    """DuckDB twin of the slice gate ``_bucket_col(key, mod) <
+    _recall_sample_buckets(n, target, mod)``, with n = count(*) of
+    ``table``: the same integer arithmetic (floor via //, clamp to
+    [1, mod]), so a Spark slice and its oracle can never disagree."""
+    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
+
+    return (
+        f"{_sql_bucket(key, mod=mod)} < greatest(1, least({mod}, "
+        f"{target} * {mod} // greatest((SELECT count(*) FROM {table}), 1)))"
+    )
+
+
+def _sql_slice_cte(
+    table: str = "documents",
+    target: int = RECALL_SAMPLE_TARGET_DOCS,
+    key: str = "doc_id",
+    mod: int = 100,
+) -> str:
+    """CTE named ``table`` that shadows the registered view with its gated
+    slice for every CTE and subquery after it; the inner reference is
+    schema-qualified (main.<table>) because an unqualified self-name would
+    read as a circular CTE."""
+    gate = _sql_sample_gate(f"main.{table}", target, key, mod)
+    return f"{table} AS (SELECT * FROM main.{table} WHERE {gate})"
 
 
 def dedup_minhash_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3161,6 +3138,42 @@ def _detector_recall_counts(
     return out
 
 
+def _pair_recall_oracle(
+    truth_sql: str, det_sql: str, det_col: str, prelude: str = ""
+) -> str:
+    """DuckDB twin of :func:`_detector_recall_counts` — THE pair-recall
+    tail every detector recall oracle shares. ``truth_sql`` and
+    ``det_sql`` are pair queries with (doc_i, doc_j) columns; ``prelude``
+    holds CTEs they read (the sampled slice's table shadow, shared
+    feature CTEs)."""
+    prelude = f"{prelude},\n    " if prelude else ""
+    return f"""
+    WITH {prelude}truth AS (SELECT doc_i, doc_j FROM ({truth_sql})),
+    det AS (SELECT doc_i, doc_j FROM ({det_sql})),
+    hit AS (
+      SELECT t.doc_i, t.doc_j FROM truth t
+      WHERE EXISTS (
+        SELECT 1 FROM det d WHERE d.doc_i = t.doc_i AND d.doc_j = t.doc_j
+      )
+    )
+    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
+           (SELECT count(*) FROM det) AS {det_col},
+           (SELECT count(*) FROM hit) AS n_hit_pairs,
+           CASE WHEN (SELECT count(*) FROM truth) > 0
+                THEN (SELECT count(*) FROM hit)::DOUBLE
+                     / (SELECT count(*) FROM truth)
+                ELSE NULL END AS recall
+    """
+
+
+def _text_slice_recall_oracle(det_sql: str, det_col: str) -> str:
+    """SQL twin of scoring a detector against ``_recall_slice_shared``:
+    the exact-Jaccard truth and ``det_sql`` both read the gated slice."""
+    return _pair_recall_oracle(
+        dedup_ngram_pairs_oracle(), det_sql, det_col, prelude=_sql_slice_cte()
+    )
+
+
 def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the SimHash near-dup detector (hamming <= HAMMING_MAX over
     the 64-bit shingle-feature signatures) against the SAME exact
@@ -3204,31 +3217,7 @@ def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_simhash_recall_oracle() -> str:
-    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
-
-    buckets = (
-        f"greatest(1, least(100, {RECALL_SAMPLE_TARGET_DOCS} * 100 // "
-        "greatest((SELECT count(*) FROM main.documents), 1)))"
-    )
-    return f"""
-    WITH documents AS (SELECT * FROM main.documents WHERE
-      {_sql_bucket()} < {buckets}),
-    truth AS ({dedup_ngram_pairs_oracle()}),
-    det AS (SELECT doc_i, doc_j FROM ({dedup_simhash_oracle()})),
-    hit AS (
-      SELECT t.doc_i, t.doc_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM det l WHERE l.doc_i = t.doc_i AND l.doc_j = t.doc_j
-      )
-    )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM det) AS n_simhash_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
+    return _text_slice_recall_oracle(dedup_simhash_oracle(), "n_simhash_pairs")
 
 
 def dedup_minhash_oph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3258,31 +3247,7 @@ def dedup_minhash_oph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def dedup_minhash_oph_recall_oracle() -> str:
-    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
-
-    buckets = (
-        f"greatest(1, least(100, {RECALL_SAMPLE_TARGET_DOCS} * 100 // "
-        "greatest((SELECT count(*) FROM main.documents), 1)))"
-    )
-    return f"""
-    WITH documents AS (SELECT * FROM main.documents WHERE
-      {_sql_bucket()} < {buckets}),
-    truth AS ({dedup_ngram_pairs_oracle()}),
-    det AS (SELECT doc_i, doc_j FROM ({dedup_minhash_oph_oracle()})),
-    hit AS (
-      SELECT t.doc_i, t.doc_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM det l WHERE l.doc_i = t.doc_i AND l.doc_j = t.doc_j
-      )
-    )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM det) AS n_oph_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
+    return _text_slice_recall_oracle(dedup_minhash_oph_oracle(), "n_oph_pairs")
 
 
 def _truth_pairs_from(
@@ -3329,49 +3294,14 @@ def _truth_pairs_from(
     )
 
 
-def _recall_oracle_ctes() -> str:
-    """Shared CTE chain + projection of the two recall oracles (full and
-    sampled); callers prepend ``WITH `` or ``WITH documents AS (...), ``."""
-    return f"""truth AS ({dedup_ngram_pairs_oracle()}),
-    lsh AS ({dedup_minhash_lsh_oracle()}),
-    hit AS (
-      SELECT t.doc_i, t.doc_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM lsh l WHERE l.doc_i = t.doc_i AND l.doc_j = t.doc_j
-      )
-    )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM lsh) AS n_lsh_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
-
-
 def dedup_minhash_recall_oracle() -> str:
-    return "\n    WITH " + _recall_oracle_ctes()
+    return _pair_recall_oracle(
+        dedup_ngram_pairs_oracle(), dedup_minhash_lsh_oracle(), "n_lsh_pairs"
+    )
 
 
 def dedup_minhash_recall_sampled_oracle() -> str:
-    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
-
-    # A CTE named `documents` shadows the driver-registered view for every
-    # downstream CTE, applying the identical hash-bucket gate the Spark
-    # side uses; the inner reference is schema-qualified (main.documents)
-    # because an unqualified self-name would read as a circular CTE. The
-    # bucket count is the same integer arithmetic as _recall_sample_buckets
-    # (floor via //, clamp to [1, 100]) over the same count.
-    buckets = (
-        f"greatest(1, least(100, {RECALL_SAMPLE_TARGET_DOCS} * 100 // "
-        "greatest((SELECT count(*) FROM main.documents), 1)))"
-    )
-    return (
-        "\n    WITH documents AS (SELECT * FROM main.documents WHERE "
-        f"{_sql_bucket()} < {buckets}),\n    "
-        + _recall_oracle_ctes()
-    )
+    return _text_slice_recall_oracle(dedup_minhash_lsh_oracle(), "n_lsh_pairs")
 
 
 # --------------------------------------------------------------------------

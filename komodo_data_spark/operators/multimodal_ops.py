@@ -734,28 +734,13 @@ def media_simhash_capped_recall(
 
 
 def media_simhash_capped_recall_oracle() -> str:
-    return f"""
-    WITH truth AS (
-      SELECT doc_i, doc_j FROM ({media_simhash_pairs_oracle()})
-    ),
-    det AS (
-      SELECT doc_i, doc_j FROM ({media_simhash_pairs_capped_oracle()})
-    ),
-    hit AS (
-      SELECT t.doc_i, t.doc_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM det d
-        WHERE d.doc_i = t.doc_i AND d.doc_j = t.doc_j
-      )
+    from komodo_data_spark.operators.dedup import _pair_recall_oracle
+
+    return _pair_recall_oracle(
+        media_simhash_pairs_oracle(),
+        media_simhash_pairs_capped_oracle(),
+        "n_capped_pairs",
     )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM det) AS n_capped_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """
 
 
 #: Ground-truth threshold for the media recall twin, as an exact rational
@@ -874,15 +859,12 @@ def media_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def media_simhash_recall_oracle() -> str:
-    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
-
-    buckets = (
-        f"greatest(1, least(100, {MEDIA_RECALL_TARGET_DOCS} * 100 // "
-        "greatest((SELECT count(*) FROM main.documents), 1)))"
+    from komodo_data_spark.operators.dedup import (
+        _pair_recall_oracle,
+        _sql_slice_cte,
     )
-    return f"""
-    WITH documents AS (SELECT * FROM main.documents WHERE
-      {_sql_bucket()} < {buckets}),
+
+    prelude = f"""{_sql_slice_cte(target=MEDIA_RECALL_TARGET_DOCS)},
     dd AS (
       SELECT doc_id, text, ceil(length(text) / {FRAME_BYTES}.0)::BIGINT
                AS n_frames
@@ -904,26 +886,13 @@ def media_simhash_recall_oracle() -> str:
       SELECT a.doc_id AS doc_i, b.doc_id AS doc_j, count(*) AS c
       FROM ggr a JOIN ggr b USING (gram) WHERE a.doc_id < b.doc_id
       GROUP BY 1, 2
-    ),
-    truth AS (
-      -- integer cross-multiplication, mirroring the engine's
-      -- prefix_filtered_jaccard_pairs accept test exactly
+    )"""
+    # integer cross-multiplication, mirroring the engine's
+    # prefix_filtered_jaccard_pairs accept test exactly
+    truth = f"""
       SELECT doc_i, doc_j FROM tp
       JOIN sz si ON si.doc_id = doc_i JOIN sz sj ON sj.doc_id = doc_j
-      WHERE c * {MEDIA_JACCARD_Q[1]} >= {MEDIA_JACCARD_Q[0]} * (si.n + sj.n - c)
-    ),
-    det AS (SELECT doc_i, doc_j FROM ({media_simhash_pairs_oracle()})),
-    hit AS (
-      SELECT t.doc_i, t.doc_j FROM truth t
-      WHERE EXISTS (
-        SELECT 1 FROM det l WHERE l.doc_i = t.doc_i AND l.doc_j = t.doc_j
-      )
+      WHERE c * {MEDIA_JACCARD_Q[1]} >= {MEDIA_JACCARD_Q[0]} * (si.n + sj.n - c)"""
+    return _pair_recall_oracle(
+        truth, media_simhash_pairs_oracle(), "n_simhash_pairs", prelude=prelude
     )
-    SELECT (SELECT count(*) FROM truth) AS n_true_pairs,
-           (SELECT count(*) FROM det) AS n_simhash_pairs,
-           (SELECT count(*) FROM hit) AS n_hit_pairs,
-           CASE WHEN (SELECT count(*) FROM truth) > 0
-                THEN (SELECT count(*) FROM hit)::DOUBLE
-                     / (SELECT count(*) FROM truth)
-                ELSE NULL END AS recall
-    """

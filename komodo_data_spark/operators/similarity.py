@@ -551,12 +551,18 @@ def _recall_vs_bruteforce(bf: DataFrame, approx: DataFrame) -> DataFrame:
     )
 
 
-def _recall_oracle(approx_sql: str) -> str:
-    """DuckDB twin of _recall_vs_bruteforce over a given approximate-search
-    subquery — shared so every recall oracle measures identically."""
+def _recall_oracle(
+    approx_sql: str, truth_sql: str | None = None, prelude: str = ""
+) -> str:
+    """DuckDB twin of _recall_vs_bruteforce — THE top-K recall tail every
+    ANN recall oracle shares. ``approx_sql`` and ``truth_sql`` (default:
+    the exact ``knn_brute_force`` search) are (query_id, neighbor_id)
+    searches; ``prelude`` holds CTEs both read (a sampled query set)."""
+    truth_sql = knn_brute_force_oracle() if truth_sql is None else truth_sql
+    prelude = f"{prelude},\n    " if prelude else ""
     return f"""
-    WITH bf AS (
-      SELECT query_id, neighbor_id FROM ({knn_brute_force_oracle()}) b
+    WITH {prelude}bf AS (
+      SELECT query_id, neighbor_id FROM ({truth_sql}) b
     ),
     ap AS (
       SELECT query_id, neighbor_id FROM ({approx_sql}) l
@@ -622,37 +628,6 @@ KNN_RECALL_SAMPLE_QUERIES = 32
 _KNN_SAMPLE_MOD = 100_000
 
 
-def _knn_sample_buckets(n_vecs: int) -> int:
-    """Bucket count sizing the sampled query set to ~the budget
-    (``dedup._recall_sample_buckets`` arithmetic at the finer modulus)."""
-    return max(
-        1,
-        min(
-            _KNN_SAMPLE_MOD,
-            KNN_RECALL_SAMPLE_QUERIES * _KNN_SAMPLE_MOD // max(n_vecs, 1),
-        ),
-    )
-
-
-def _knn_sample_gate(n_vecs: int) -> Column:
-    from komodo_data_spark.operators.pipeline_ops import _bucket_col
-
-    return _bucket_col(F.col("vec_id"), mod=_KNN_SAMPLE_MOD) < (
-        _knn_sample_buckets(n_vecs)
-    )
-
-
-def _sql_knn_sample_gate() -> str:
-    from komodo_data_spark.operators.pipeline_ops import _sql_bucket
-
-    buckets = (
-        f"greatest(1, least({_KNN_SAMPLE_MOD}, "
-        f"{KNN_RECALL_SAMPLE_QUERIES} * {_KNN_SAMPLE_MOD} // "
-        "greatest((SELECT count(*) FROM embeddings), 1)))"
-    )
-    return f"{_sql_bucket('vec_id', mod=_KNN_SAMPLE_MOD)} < {buckets}"
-
-
 def knn_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``knn_lsh_recall`` with a SAMPLED query set — the production form
     of the ANN eval loop at corpus scale: ~KNN_RECALL_SAMPLE_QUERIES
@@ -669,12 +644,18 @@ def knn_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf1/sf10 in BENCH_SCALING where the fixed probe says nothing —
     truth cost O(budget · corpus), never quadratic.
     """
+    from komodo_data_spark.operators.dedup import _recall_sample_buckets
+    from komodo_data_spark.operators.pipeline_ops import _bucket_col
+
     n_vecs = load_table(spark, sf_dir, "embeddings").count()
+    gate = _bucket_col(F.col("vec_id"), mod=_KNN_SAMPLE_MOD) < (
+        _recall_sample_buckets(n_vecs, KNN_RECALL_SAMPLE_QUERIES, _KNN_SAMPLE_MOD)
+    )
     v = _vectors(spark, sf_dir).withColumn("bucket", _bucket(F.col("e")))
     # small frame (≈ the budget), consumed by the truth and detector
     # subtrees — materialize once, GC-released
     q = (
-        v.filter(_knn_sample_gate(n_vecs))
+        v.filter(gate)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("e").alias("qe"),
@@ -715,44 +696,31 @@ def knn_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def knn_lsh_recall_sampled_oracle() -> str:
-    return f"""
-    WITH v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    from komodo_data_spark.operators.dedup import _sql_sample_gate
+
+    gate = _sql_sample_gate(
+        "embeddings", KNN_RECALL_SAMPLE_QUERIES, "vec_id", _KNN_SAMPLE_MOD
+    )
+
+    def topk(on: str, k: int) -> str:
+        return f"""
+      SELECT query_id, neighbor_id FROM (
+        SELECT q.query_id, v.vec_id AS neighbor_id,
+               row_number() OVER (
+                 PARTITION BY q.query_id ORDER BY {_SQL_COS} DESC,
+                 v.vec_id ASC
+               ) AS rnk
+        FROM qq q JOIN vv v ON {on}
+      ) WHERE rnk <= {k}"""
+
+    return _recall_oracle(
+        topk("v.bucket = q.qbucket AND v.vec_id <> q.query_id", 3),
+        truth_sql=topk("v.vec_id <> q.query_id", TOP_K),
+        prelude=f"""v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
     vv AS (SELECT vec_id, e, {_sql_bucket("v0")} AS bucket FROM v0),
     qq AS (SELECT vec_id AS query_id, e, bucket AS qbucket
-           FROM vv WHERE {_sql_knn_sample_gate()}),
-    bf AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine,
-               row_number() OVER (
-                 PARTITION BY q.query_id ORDER BY {_SQL_COS} DESC,
-                 v.vec_id ASC
-               ) AS rnk
-        FROM qq q JOIN vv v ON v.vec_id <> q.query_id
-      ) WHERE rnk <= {TOP_K}
-    ),
-    ap AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine,
-               row_number() OVER (
-                 PARTITION BY q.query_id ORDER BY {_SQL_COS} DESC,
-                 v.vec_id ASC
-               ) AS rnk
-        FROM qq q JOIN vv v
-          ON v.bucket = q.qbucket AND v.vec_id <> q.query_id
-      ) WHERE rnk <= 3
-    ),
-    hits AS (
-      SELECT bf.query_id, count(*) AS n_hit
-      FROM bf SEMI JOIN ap
-        ON ap.query_id = bf.query_id AND ap.neighbor_id = bf.neighbor_id
-      GROUP BY bf.query_id
-    ),
-    truth AS (SELECT query_id, count(*) AS k FROM bf GROUP BY query_id)
-    SELECT t.query_id, coalesce(h.n_hit, 0) AS n_hit,
-           coalesce(h.n_hit, 0)::DOUBLE / t.k AS recall
-    FROM truth t LEFT JOIN hits h ON h.query_id = t.query_id
-    ORDER BY t.query_id
-    """
+           FROM vv WHERE {gate})""",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1156,36 +1124,10 @@ def knn_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.desc("qcos"), F.asc("neighbor_id")
     )
-    quant = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id")
+    quant = scored.withColumn("rnk", F.row_number().over(w)).filter(
+        F.col("rnk") <= TOP_K
     )
-    # referenced by both the hit semi-join and the denominator — the lazy
-    # checkpoint (O(queries×K) rows) stops the brute-force search running
-    # twice, as in _recall_vs_bruteforce
-    bf = (
-        knn_brute_force(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=False)
-    )
-    hits = (
-        bf.join(quant, ["query_id", "neighbor_id"], "left_semi")
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    truth = bf.groupBy("query_id").agg(F.count(F.lit(1)).alias("k"))
-    return (
-        truth.join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hit", F.lit(0)).alias("n_hit"),
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double") / F.col("k")
-            ).alias("recall"),
-        )
-        .orderBy("query_id")
-    )
+    return _recall_vs_bruteforce(knn_brute_force(spark, sf_dir), quant)
 
 
 def knn_quantized_recall_oracle() -> str:
@@ -1193,7 +1135,7 @@ def knn_quantized_recall_oracle() -> str:
         "list_transform(e, x -> round(127.0 * x /"
         " list_aggregate(list_transform(e, y -> abs(y)), 'max')))"
     )
-    return f"""
+    return _recall_oracle(f"""
     WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
     vq AS (SELECT vec_id, {qe} AS e FROM v),
     q AS (SELECT vec_id AS query_id, e FROM vq WHERE vec_id < {N_QUERIES}),
@@ -1205,22 +1147,9 @@ def knn_quantized_recall_oracle() -> str:
       SELECT *, row_number() OVER (
         PARTITION BY query_id ORDER BY qcos DESC, neighbor_id ASC
       ) AS rnk FROM scored
-    ),
-    quant AS (SELECT query_id, neighbor_id FROM ranked WHERE rnk <= {TOP_K}),
-    bf AS (SELECT query_id, neighbor_id FROM ({knn_brute_force_oracle()}) b),
-    hits AS (
-      SELECT bf.query_id, count(*) AS n_hit
-      FROM bf SEMI JOIN quant
-        ON quant.query_id = bf.query_id
-       AND quant.neighbor_id = bf.neighbor_id
-      GROUP BY bf.query_id
-    ),
-    truth AS (SELECT query_id, count(*) AS k FROM bf GROUP BY query_id)
-    SELECT t.query_id, coalesce(h.n_hit, 0) AS n_hit,
-           coalesce(h.n_hit, 0)::DOUBLE / t.k AS recall
-    FROM truth t LEFT JOIN hits h ON h.query_id = t.query_id
-    ORDER BY t.query_id
-    """
+    )
+    SELECT query_id, neighbor_id FROM ranked WHERE rnk <= {TOP_K}
+    """)
 
 
 # --------------------------------------------------------------------------

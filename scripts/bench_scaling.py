@@ -128,13 +128,14 @@ def norm_ratio(t_hi, n_hi, t_lo, n_lo):
 
 def classify_flags(queries: dict, cand_vol: dict) -> list:
     """The ONE decade-gate classification ladder, shared by the live
-    bench (main below) and scripts/reflag_scaling.py (round-10 ADVICE:
-    the reflag script hand-duplicated this and the copies would drift,
-    silently reclassifying stored artifacts under stale rules).
+    bench (main below) and any re-classification of a stored artifact
+    (round-10 ADVICE: a separate reflag script hand-duplicated this and
+    the copies would drift, silently reclassifying stored artifacts under
+    stale rules).
 
     Operates on the per-query dicts AFTER the time/ratio/rows/norm
     fields are filled in (the live bench computes them from fresh
-    measurements; reflag reads them from the stored artifact). Mutates
+    measurements; a re-classification reads them from the stored artifact). Mutates
     the gate-exempt bookkeeping fields for the candidate-cost gate and
     returns the sorted flag list. ``-2.0`` is the classified-guard-
     refusal sentinel: recorded in guard_refusals, never flagged."""

@@ -33,6 +33,50 @@ def canon(df: pd.DataFrame) -> list[tuple]:
     return sorted(zip(*cols), key=lambda t: tuple(map(str, t))) if cols else []
 
 
+TABLES = (
+    "region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings",
+)
+
+
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB connection with every test table of ``sf_dir`` as a view."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def compare_query(spark, con, name, fn, oracle_sql, sf_dir) -> tuple[bool, str]:
+    """Run one registry query on Spark and its oracle SQL on ``con``;
+    returns (passed, report line). A rows-only query (no oracle SQL)
+    passes when Spark runs."""
+    try:
+        got = fn(spark, sf_dir).toPandas()
+    except Exception as exc:
+        return False, f"FAIL {name}: spark error: {exc}"
+    if oracle_sql is None:
+        return True, f"okR  {name}: rows-only ({len(got)})"
+    try:
+        exp = con.execute(oracle_sql).fetchdf()
+    except Exception as exc:
+        return False, f"FAIL {name}: oracle error: {exc}"
+    if sorted(got.columns) != sorted(exp.columns):
+        return False, f"FAIL {name}: cols {sorted(got.columns)} vs {sorted(exp.columns)}"
+    if len(got) != len(exp):
+        return False, f"FAIL {name}: rows {len(got)} vs {len(exp)}"
+    g, x = canon(got), canon(exp)
+    if g != x:
+        bad = next(i for i, (a, b) in enumerate(zip(g, x)) if a != b)
+        return False, (
+            f"FAIL {name}: values differ; first at {bad}:\n"
+            f"  spark : {g[bad]}\n  oracle: {x[bad]}"
+        )
+    return True, f"ok   {name}: {len(got)} rows match"
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -62,15 +106,7 @@ def main() -> int:
         "run scripts/gen_registry_block.py in the same commit"
     )
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-
+    con = oracle_connection(sf_dir)
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -80,36 +116,10 @@ def main() -> int:
         # invocation; without this, a 223-query sweep accumulates caches
         # and leans on LRU eviction.
         spark.catalog.clearCache()
-        try:
-            got = fn(spark, sf_dir).toPandas()
-        except Exception as exc:
-            print(f"FAIL {name}: spark error: {exc}")
+        ok, line = compare_query(spark, con, name, fn, oracles.get(name), sf_dir)
+        print(line)
+        if not ok:
             failed.append(name)
-            continue
-        if name not in oracles:
-            print(f"okR  {name}: rows-only ({len(got)})")
-            continue
-        try:
-            exp = con.execute(oracles[name]).fetchdf()
-        except Exception as exc:
-            print(f"FAIL {name}: oracle error: {exc}")
-            failed.append(name)
-            continue
-        if sorted(got.columns) != sorted(exp.columns):
-            print(f"FAIL {name}: cols {sorted(got.columns)} vs {sorted(exp.columns)}")
-            failed.append(name)
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: rows {len(got)} vs {len(exp)}")
-            failed.append(name)
-            continue
-        g, x = canon(got), canon(exp)
-        if g != x:
-            bad = next(i for i, (a, b) in enumerate(zip(g, x)) if a != b)
-            print(f"FAIL {name}: values differ; first at {bad}:\n  spark : {g[bad]}\n  oracle: {x[bad]}")
-            failed.append(name)
-            continue
-        print(f"ok   {name}: {len(got)} rows match")
     print(f"\n{len(failed)} failed" + (f": {failed}" if failed else ""))
     return 1 if failed else 0
 

@@ -1,14 +1,15 @@
 #!/usr/bin/env python
-"""Regenerate the registry-count block in SURVEY.md and BASELINE.md from the
-single source of truth (`__spark_entry__._registry()`), so the docs can never
-drift from the code (round-2 finding; recurred in miniature in round 3).
+"""Regenerate the registry-count block in SURVEY.md, BASELINE.md and
+README.md from the single source of truth (`__spark_entry__._registry()`),
+so the docs can never drift from the code (round-2 finding; recurred in
+miniature in round 3).
 
 Run from the repo root in the same commit as any registry/_PRIORITY edit:
 
     python scripts/gen_registry_block.py
 
-Rewrites the text between the REGISTRY-COUNTS markers in both docs with one
-identical generated paragraph.
+Rewrites the text between the REGISTRY-COUNTS markers in all three docs with
+one identical generated paragraph.
 """
 
 from __future__ import annotations
@@ -124,5 +125,6 @@ if __name__ == "__main__":
     b = block()
     rewrite(os.path.join(REPO, "SURVEY.md"), b)
     rewrite(os.path.join(REPO, "BASELINE.md"), b)
+    rewrite(os.path.join(REPO, "README.md"), b)
     rewrite(os.path.join(REPO, "SURVEY.md"), registry_table(), TBL_BEGIN, TBL_END)
     rewrite_check_count()

@@ -241,19 +241,27 @@ def test_decode_image_stub_raises():
 # --------------------------------------------------------------------------
 
 
-#: The only rows-only entries allowed in these packs — each must carry an
-#: exact non-SQL twin (text_compression_ratio: the CPython-zlib pytest pin).
-ROWS_ONLY_OK = {"text_compression_ratio"}
+#: Rows-only entries pinned by a non-SQL check instead of a twin:
+#: text_compression_ratio is pinned against CPython zlib in pytest.
+PINNED_ROWS_ONLY = {"text_compression_ratio"}
 
 
 def test_registries_expose_oracles():
+    """Every entry carries oracle SQL, except a rows-only (``None``) entry
+    that is an ``*_approx`` whose exact twin (same name without
+    ``_approx``) is oracle-paired, or one in PINNED_ROWS_ONLY."""
     for mod in (text_analysis, dedup, similarity, multimodal_ops):
         reg = mod.registry()
         assert reg
         for name, (fn, sql) in reg.items():
             assert callable(fn), name
-            if name in ROWS_ONLY_OK:
-                assert sql is None, name
+            if sql is None:
+                exact = reg.get(name.removesuffix("_approx"))
+                assert name in PINNED_ROWS_ONLY or (
+                    name.endswith("_approx")
+                    and exact is not None
+                    and isinstance(exact[1], str)
+                ), f"{name}: rows-only without an oracle-paired exact twin"
             else:
                 assert isinstance(sql, str) and "SELECT" in sql.upper(), name
 

@@ -41,7 +41,7 @@ def test_dedup_detectors_leave_no_persistent_blocks(spark, sf_dir):
        released by the ContextCleaner during the NEXT batch's activity
        (weak-ref discovery rides the JVM GCs that allocation pressure
        triggers; an idle session drains slowly — measured ~17 in-flight
-       after 120 bench queries, scripts/triage_checkpoint_accumulation.py).
+       after 120 bench queries in one session).
        With the cache() leak this reading was ≥ 50 and growing."""
     from komodo_data_spark.operators.dedup import (
         dedup_containment_pairs,
