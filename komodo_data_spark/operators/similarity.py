@@ -752,10 +752,12 @@ def _kmeans_assign(v: DataFrame, cents: DataFrame) -> DataFrame:
     the old crossJoin + groupBy ``F.min(struct)`` computed, WITHOUT
     shuffling the corpus vectors through a K-fanned exchange. Every
     Lloyd iteration and every encode pass loses one corpus-sized
-    shuffle; at 100 TB the assignment never leaves the scan tasks."""
+    shuffle; at 100 TB the assignment never leaves the scan tasks.
+    An empty centroid frame assigns nothing (zero rows, like
+    ``_pq_assign``), never a NULL cid."""
     cands = cents.agg(
         F.collect_list(F.struct(F.col("cid"), F.col("ce"))).alias("_cands")
-    )
+    ).filter(F.size("_cands") > 0)
     return v.crossJoin(F.broadcast(cands)).select(
         "vec_id",
         F.array_min(
@@ -1463,8 +1465,9 @@ def _pq_reconstruct_inline(v: DataFrame, cents: DataFrame) -> DataFrame:
     subvector explode->code rows and the (vec_id)-keyed reassembly
     shuffle: scan -> reconstructed vector, nothing leaves the scan task.
     Arithmetic is term-identical to _pq_assign + _pq_reconstruct, so
-    published ≡ refit still hash-checks against the refit oracle."""
-    one = _pq_codebook_row(cents)
+    published ≡ refit still hash-checks against the refit oracle. An
+    empty codebook reconstructs nothing (zero rows), never ``re=[]``."""
+    one = _pq_codebook_row(cents).filter(F.size("cb") > 0)
 
     def winner(mc):
         return F.array_min(

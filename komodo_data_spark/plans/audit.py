@@ -1,7 +1,7 @@
 """Executed-plan introspection: the counts that matter at 100 TB.
 
-Shared by the engine facade (``KomodoEngine.explain_query``) and the
-PLANS.md generator (scripts/explain_audit.py). All stats come from the
+Used by the engine facade (``KomodoEngine.explain_query``, also behind
+``python -m komodo_data_spark explain <query>``). All stats come from the
 FINAL adaptive plan — the one AQE actually ran, with its runtime
 re-optimizations — not the pre-execution estimate.
 """

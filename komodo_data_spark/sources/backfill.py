@@ -5,10 +5,10 @@ The op a 100 TB pipeline runs daily: a late-arriving correction or a logic
 fix invalidates some partitions; rerunning the whole table is a non-starter
 and hand-deleting directories is how tables get corrupted. The contract
 here: the caller names the partition values to rebuild and supplies the
-recompute as a DataFrame function; the write uses dynamic partition
-overwrite, so exactly the recomputed partitions are replaced atomically
-per-partition and a re-run of the same backfill is a no-op-shaped overwrite
-(idempotent, like every per-epoch streaming write in streaming/).
+recompute as a DataFrame function; the write is the epoch-store
+protocol's partition overwrite (``streaming/stores.overwrite_partitions``),
+so exactly the recomputed partitions are replaced and a re-run of the same
+backfill is a no-op-shaped overwrite.
 
 Scale: the recompute frame is filtered to the target partitions BEFORE any
 work (partition pruning on the source scan), and the overwrite touches only
@@ -21,6 +21,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from komodo_data_spark.streaming.stores import overwrite_partitions
 
 
 def backfill_partitions(
@@ -64,12 +66,7 @@ def backfill_partitions(
         .filter(F.col(partition_col).isin(list(partition_values)))
         .count()
     )
-    (
-        in_scope.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(table_path)
-    )
+    overwrite_partitions(in_scope, table_path, partition_col)
     if emptied:
         # Spark Hive-escapes special characters in partition DIRECTORY
         # names (':' -> '%3A', ...), so the on-disk name cannot be built by

@@ -11,9 +11,7 @@ bucket-postings store, per micro-batch:
    expression the batch operator uses (one code path, no drift) plus its
    precomputed norm,
 2. appends (vec_id, bucket, e, nrm) rows to the batch's own ``epoch_id=N``
-   partition with dynamic overwrite — the band/block-store pattern, so
-   foreachBatch's at-least-once replay overwrites its own partition
-   instead of duplicating state.
+   partition (the epoch-store protocol, ``streaming/stores.py``).
 
 This is the IVF storage layout (cell key + vector payload co-located), so
 reads never re-join the base embeddings table: ``knn_from_store`` is one
@@ -37,7 +35,6 @@ before compaction.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -47,6 +44,13 @@ from komodo_data_spark.operators.similarity import (
     _bucket,
     _cos_pre,
     _nrm,
+)
+from komodo_data_spark.streaming.stores import (
+    compact_distinct_store,
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    start_batches,
 )
 
 STORE_COLS = ("vec_id", "bucket", "e", "nrm")
@@ -65,14 +69,9 @@ def index_batch(
         .withColumn("bucket", _bucket(F.col("e")))
         .withColumn("nrm", _nrm(F.col("e")))
         .select(*STORE_COLS)
+        .withColumn("epoch_id", F.lit(int(epoch_id)))
     )
-    (
-        rows.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
-    )
+    overwrite_partitions(rows, store_path, "epoch_id")
 
 
 def start_incremental_ann_index(
@@ -83,38 +82,35 @@ def start_incremental_ann_index(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Stream an embeddings parquet directory into the index store."""
-    schema = spark.read.parquet(emb_dir).schema  # footer peek, no scan
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
-        .select("vec_id", "embedding")
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: index_batch(b, e, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, emb_dir, max_files_per_trigger).select(
+            "vec_id", "embedding"
+        ),
+        checkpoint,
+        lambda b, e: index_batch(b, e, store_path),
     )
 
 
-def read_index(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The accumulated index, one row per vec_id (cross-lineage duplicate
-    epochs collapse deterministically to the highest epoch's row). None if
+def _latest_per_vec(
+    spark: SparkSession, store_path: str, cols: tuple[str, ...]
+) -> DataFrame | None:
+    """The store's ``cols``, one row per vec_id: cross-lineage duplicate
+    epochs collapse deterministically to the highest epoch's row. None if
     the store never accumulated a vector."""
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
+    store = read_store(spark, store_path)
+    if store is None:
+        return None
     w = Window.partitionBy("vec_id").orderBy(F.desc("epoch_id"))
     return (
         store.withColumn("rn_", F.row_number().over(w))
         .filter(F.col("rn_") == 1)
-        .select(*STORE_COLS)
+        .select(*cols)
     )
+
+
+def read_index(spark: SparkSession, store_path: str) -> DataFrame | None:
+    """The accumulated index, one row per vec_id (see ``_latest_per_vec``)."""
+    return _latest_per_vec(spark, store_path, STORE_COLS)
 
 
 def knn_from_store(
@@ -158,6 +154,4 @@ def compact_ann_store(spark: SparkSession, store_path: str) -> int:
     are DISTINCT-mergeable facts; indexing is monotone (a replayed batch
     re-derives identical rows), so folding even the max epoch is safe —
     the band-store argument, not the block-scrub one."""
-    from komodo_data_spark.streaming.stores import compact_distinct_store
-
     return compact_distinct_store(spark, store_path, list(STORE_COLS))

@@ -16,8 +16,8 @@ computes. This module is that upgrade:
    frozen model — nearest coarse cell (broadcast argmin, the exact
    expression the batch fit uses), residual, per-subspace code argmin —
    and appends (vec_id, cell_id, codes) rows to the batch's own
-   ``epoch_id=N`` partition with dynamic overwrite (the band/block-store
-   idempotent-replay pattern).
+   ``epoch_id=N`` partition (the epoch-store protocol,
+   ``streaming/stores.py``).
 3. ``knn_from_pq_store`` serves ADC top-k from the store alone: candidate
    generation is the cell_id equi-join against the probed cells,
    reconstruction is a broadcast codebook join, queries stay exact
@@ -46,7 +46,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -60,7 +59,14 @@ from komodo_data_spark.operators.similarity import (
     _pq_subvectors,
     _sqdist,
 )
-from komodo_data_spark.streaming.stores import require_store
+from komodo_data_spark.streaming.ann_incremental import _latest_per_vec
+from komodo_data_spark.streaming.stores import (
+    compact_distinct_store,
+    file_stream,
+    overwrite_partitions,
+    require_store,
+    start_batches,
+)
 
 PQ_STORE_COLS = ("vec_id", "cell_id", "codes")
 
@@ -152,13 +158,10 @@ def encode_batch(
         )
     )
     rows = resid.select("vec_id", "cell_id").join(codes, "vec_id")
-    (
-        rows.select(*PQ_STORE_COLS)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    overwrite_partitions(
+        rows.select(*PQ_STORE_COLS).withColumn("epoch_id", F.lit(int(epoch_id))),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -176,38 +179,19 @@ def start_incremental_pq_index(
     inside the first micro-batch)."""
     require_store(spark, _cells_path(model_path), "IVFPQ coarse-cell")
     require_store(spark, _codebooks_path(model_path), "IVFPQ codebook")
-    schema = spark.read.parquet(emb_dir).schema  # footer peek, no scan
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(emb_dir)
-        .select("vec_id", "embedding")
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: encode_batch(b, e, model_path, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, emb_dir, max_files_per_trigger).select(
+            "vec_id", "embedding"
+        ),
+        checkpoint,
+        lambda b, e: encode_batch(b, e, model_path, store_path),
     )
 
 
 def read_pq_index(spark: SparkSession, store_path: str) -> DataFrame | None:
-    """The accumulated code store, one row per vec_id (cross-lineage
-    duplicate epochs collapse to the highest epoch's row — same contract
-    as the float store). None if nothing was ever indexed."""
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
-    w = Window.partitionBy("vec_id").orderBy(F.desc("epoch_id"))
-    return (
-        store.withColumn("rn_", F.row_number().over(w))
-        .filter(F.col("rn_") == 1)
-        .select(*PQ_STORE_COLS)
-    )
+    """The accumulated code store, one row per vec_id (same latest-epoch
+    collapse as the float store). None if nothing was ever indexed."""
+    return _latest_per_vec(spark, store_path, PQ_STORE_COLS)
 
 
 def knn_from_pq_store(
@@ -292,6 +276,4 @@ def compact_pq_store(spark: SparkSession, store_path: str) -> int:
     DISTINCT-mergeable facts and encoding against a frozen model is
     monotone (a replayed batch re-derives identical rows), so folding
     every epoch is safe — the band-store argument."""
-    from komodo_data_spark.streaming.stores import compact_distinct_store
-
     return compact_distinct_store(spark, store_path, list(PQ_STORE_COLS))

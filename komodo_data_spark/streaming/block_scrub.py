@@ -18,10 +18,8 @@ and, per micro-batch:
 3. writes the scrubbed per-doc rows and appends the batch's distinct
    blocks to the store.
 
-Both writes are epoch-idempotent (each goes to the batch's own
-``epoch_id=N`` partition with dynamic overwrite, the streaming/sketches.py
-pattern), so foreachBatch's at-least-once replay cannot duplicate state
-or output.
+Both writes follow the epoch-store protocol (``streaming/stores.py``), so
+foreachBatch's at-least-once replay cannot duplicate state or output.
 
 When files arrive in doc_id order, the union of scrubbed outputs equals
 the batch operator's result over the full corpus (pinned by test): the
@@ -42,7 +40,6 @@ broadcast map), exactly as in the batch operator.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -52,6 +49,13 @@ from komodo_data_spark.operators.dedup import (
     block_occurrences,
     blocked_docs,
     scrub_blocks,
+)
+from komodo_data_spark.streaming.stores import (
+    compact_distinct_store,
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    start_batches,
 )
 
 
@@ -65,38 +69,27 @@ def scrub_batch(
     """Process one micro-batch of documents (doc_id, text)."""
     blocked = blocked_docs(batch_df).localCheckpoint()
     occ = block_occurrences(blocked)
-    try:
+    stats = occ.groupBy("blk").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min(F.col("doc_id") * POS_BASE + F.col("pos")).alias("batch_keeper"),
+    )
+    # None = no history yet (missing or zero-partition store); any other
+    # read failure raises so the epoch retries instead of emitting
+    # unscrubbed docs that the committed checkpoint never corrects.
+    seen = read_store(spark, store_path)
+    if seen is not None:
+        # History is STRICTLY-earlier epochs (plus the compacted -1 base).
+        # A crash between the store write and the checkpoint commit
+        # replays this epoch with its OWN blocks already on disk — without
+        # this filter the replay would see them as history and scrub every
+        # block of every replayed doc.
         seen = (
-            spark.read.parquet(store_path)
-            # History is STRICTLY-earlier epochs (plus the compacted -1
-            # base). A crash between the store write and the checkpoint
-            # commit replays this epoch with its OWN blocks already on
-            # disk — without this filter the replay would see them as
-            # history and scrub every block of every replayed doc.
-            .filter(
+            seen.filter(
                 (F.col("epoch_id") == -1) | (F.col("epoch_id") < int(epoch_id))
             )
             .select("blk")
             .distinct()
         )
-    except AnalysisException as exc:
-        # ONLY the empty-store shapes mean "no history yet": a missing
-        # path, or a directory a zero-block batch created with no
-        # partitions in it (dynamic overwrite of an empty frame). Any
-        # other read failure must propagate so foreachBatch fails and
-        # retries the epoch — swallowing it would emit unscrubbed docs
-        # that the committed checkpoint then never corrects.
-        if exc.getCondition() not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        seen = None
-    stats = occ.groupBy("blk").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(F.col("doc_id") * POS_BASE + F.col("pos")).alias("batch_keeper"),
-    )
-    if seen is not None:
         stats = stats.join(
             seen.withColumn("in_history", F.lit(True)), "blk", "left"
         )
@@ -118,21 +111,12 @@ def scrub_batch(
         F.length("clean_text").alias("clean_len"),
         F.md5("clean_text").alias("clean_fp"),
     )
-    (
-        scrubbed.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(out_path)
-    )
-    (
-        occ.select("blk")
-        .distinct()
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    epoch = F.lit(int(epoch_id))
+    overwrite_partitions(scrubbed.withColumn("epoch_id", epoch), out_path, "epoch_id")
+    overwrite_partitions(
+        occ.select("blk").distinct().withColumn("epoch_id", epoch),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -147,21 +131,10 @@ def start_incremental_block_scrub(
     """Stream a documents parquet directory through the incremental scrub.
     ``max_files_per_trigger=1`` makes each file its own batch — the
     arrival granularity of a crawl-dump pipeline."""
-    schema = spark.read.parquet(docs_dir).schema  # footer peek, no scan
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .select("doc_id", "text")
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: scrub_batch(spark, b, e, store_path, out_path)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger).select("doc_id", "text"),
+        checkpoint,
+        lambda b, e: scrub_batch(spark, b, e, store_path, out_path),
     )
 
 
@@ -187,8 +160,6 @@ def compact_block_store(
     that can be uncommitted — is therefore excluded; pass
     ``committed_through`` (the last committed batch id from the query's
     progress) to fold it too once it is known safe."""
-    from komodo_data_spark.streaming.stores import compact_distinct_store
-
     return compact_distinct_store(
         spark,
         store_path,

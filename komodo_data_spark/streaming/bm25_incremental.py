@@ -14,9 +14,9 @@ reconstruct the exact avg(dl) = sum/count arithmetic, but the per-doc
 term-score sum is order-sensitive in its last ulp; pinned by test at
 1e-12 relative).
 
-Both writes are epoch-idempotent (per-epoch partition, dynamic
-overwrite), so at-least-once foreachBatch replay cannot double-count a
-batch's postings or its corpus counters. Postings are plain facts —
+Both writes follow the epoch-store protocol (``streaming/stores.py``), so
+at-least-once foreachBatch replay cannot double-count a batch's postings
+or its corpus counters. Postings are plain facts —
 retention folds them with the shared DISTINCT compaction; the counter
 store stays one row per epoch (negligible) and is summed at read.
 
@@ -30,7 +30,6 @@ scoring joins the postings (already one row per doc-term) against a
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -41,6 +40,13 @@ from komodo_data_spark.operators.text_analysis import (
     BM25_K1,
     BM25_QUERY,
     BM25_TOPK,
+)
+from komodo_data_spark.streaming.stores import (
+    compact_distinct_store,
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    start_batches,
 )
 
 
@@ -75,19 +81,12 @@ def index_batch(
     counters = d.agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    (
-        postings.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(_postings_path(store_path))
+    epoch = F.lit(int(epoch_id))
+    overwrite_partitions(
+        postings.withColumn("epoch_id", epoch), _postings_path(store_path), "epoch_id"
     )
-    (
-        counters.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(_counters_path(store_path))
+    overwrite_partitions(
+        counters.withColumn("epoch_id", epoch), _counters_path(store_path), "epoch_id"
     )
 
 
@@ -99,19 +98,10 @@ def start_incremental_bm25(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """Stream a documents parquet directory into the BM25 index."""
-    schema = spark.read.parquet(docs_dir).schema  # footer peek, no scan
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .select("doc_id", "text")
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: index_batch(spark, b, e, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger).select("doc_id", "text"),
+        checkpoint,
+        lambda b, e: index_batch(spark, b, e, store_path),
     )
 
 
@@ -123,33 +113,21 @@ def bm25_from_store(spark: SparkSession, store_path: str) -> DataFrame:
         F.sum("n_docs").cast("double").alias("n_docs"),
         (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
     )
+    # Counters exist but postings don't (None): every ingested batch
+    # lacked the query terms entirely — a valid empty index, so return an
+    # empty top-k, not a read error.
+    tf = read_store(spark, _postings_path(store_path))
+    if tf is None:
+        return spark.createDataFrame(
+            [],
+            "doc_id long, bm25_score double, n_terms_matched long, dl long",
+        )
     # DISTINCT guards the one replay interleaving the epoch partitions
     # can't: a batch replayed AFTER compaction folded it into the base
     # re-writes its epoch partition, duplicating rows (base + epoch).
     # Postings rows are deterministic facts, so the duplicates are exact
     # and fold away here — df counts and per-doc sums stay correct.
-    try:
-        tf = (
-            spark.read.parquet(_postings_path(store_path))
-            .select("doc_id", "term", "tf", "dl")
-            .distinct()
-        )
-    except AnalysisException as exc:
-        # Counters exist but postings don't: every ingested batch lacked
-        # the query terms entirely. Dynamic overwrite of an empty frame
-        # leaves either no directory (PATH_NOT_FOUND) or an empty one with
-        # zero partitions (UNABLE_TO_INFER_SCHEMA) — both mean a valid
-        # empty index; return an empty top-k, not a read error. Any OTHER
-        # failure propagates.
-        if exc.getCondition() not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        return spark.createDataFrame(
-            [],
-            "doc_id long, bm25_score double, n_terms_matched long, dl long",
-        )
+    tf = tf.select("doc_id", "term", "tf", "dl").distinct()
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = (
         tf.join(F.broadcast(df_), "term")
@@ -192,8 +170,6 @@ def compact_bm25_postings(spark: SparkSession, store_path: str) -> int:
     postings DISTINCT, so exact duplicates cannot inflate df or per-doc
     sums. The counter store is one row per epoch and needs no
     compaction."""
-    from komodo_data_spark.streaming.stores import compact_distinct_store
-
     return compact_distinct_store(
         spark, _postings_path(store_path), ["doc_id", "term", "tf", "dl"]
     )

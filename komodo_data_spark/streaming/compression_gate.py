@@ -14,9 +14,8 @@ Per micro-batch: annotate every row IN PLACE with a pass-through
 mapInPandas kernel (full batch schema + the ratio/keep verdicts — scored
 by the same ``zlib_score_lists`` the batch operator uses), split
 keep/quarantine, and write each side to the batch's own ``epoch_id=N``
-partition with dynamic overwrite — the repo-wide epoch-idempotent write
-contract (an at-least-once replay overwrites its own partitions rather
-than duplicating). Pass-through, NOT a doc_id re-join (review finding):
+partition (the epoch-store protocol, ``streaming/stores.py``).
+Pass-through, NOT a doc_id re-join (review finding):
 a join would multiply duplicate doc_ids within a batch (a re-crawl
 delivering the same document twice — the very input the dedup stack
 exists for) and silently drop NULL-keyed rows from both outputs; a gate
@@ -36,6 +35,11 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
 from komodo_data_spark.operators.text_analysis import zlib_score_lists
+from komodo_data_spark.streaming.stores import (
+    file_stream,
+    overwrite_partitions,
+    start_batches,
+)
 
 
 def compression_gate_batch(
@@ -69,22 +73,10 @@ def compression_gate_batch(
         # the Python stage); same contract as expectations.gate_batch
         .localCheckpoint(eager=True)
     )
-    (
-        annotated.filter(F.col("keep"))
-        .drop("keep")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(clean_path)
-    )
-    (
-        annotated.filter(~F.col("keep"))
-        .drop("keep")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(quarantine_path)
-    )
+    keep = annotated.filter(F.col("keep")).drop("keep")
+    overwrite_partitions(keep, clean_path, "epoch_id")
+    drop = annotated.filter(~F.col("keep")).drop("keep")
+    overwrite_partitions(drop, quarantine_path, "epoch_id")
 
 
 def start_docs_compression_gate(
@@ -96,18 +88,8 @@ def start_docs_compression_gate(
     max_files_per_trigger: int = 16,
 ) -> StreamingQuery:
     """Gate a documents file-source stream on the zlib keep band."""
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: compression_gate_batch(
-                b, e, clean_path, quarantine_path
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: compression_gate_batch(b, e, clean_path, quarantine_path),
     )

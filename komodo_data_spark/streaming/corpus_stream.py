@@ -25,6 +25,7 @@ from komodo_data_spark.operators.text_analysis import (
     QUALITY_LR_KEEP_THRESHOLD,
     quality_probability_col,
 )
+from komodo_data_spark.streaming.stores import file_stream
 
 
 def clean_docs(docs):
@@ -50,14 +51,8 @@ def start_corpus_clean_stream(
 ) -> StreamingQuery:
     """Drain a documents parquet directory through the gate into a clean
     parquet table. One file per micro-batch (crawl-dump arrival shape)."""
-    schema = spark.read.parquet(docs_dir).schema  # footer peek
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-    )
     return (
-        clean_docs(stream)
+        clean_docs(file_stream(spark, docs_dir, max_files_per_trigger))
         .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint)

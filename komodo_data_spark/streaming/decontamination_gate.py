@@ -14,21 +14,20 @@ and compression gates.
 
 Benchmark-shingle store: a parquet directory partitioned by
 ``version=N``. ``update_benchmark_store`` writes one benchmark release's
-distinct shingles into its own version partition with dynamic overwrite
-(idempotent re-publish); the gate re-reads the store at EVERY
-micro-batch, so a new benchmark version landing mid-stream screens all
-SUBSEQUENT batches against the union of versions — already-published
-epochs are not rewritten (their verdicts were correct against the store
-as of their ingestion; a retro-screen of history is the batch
-operator's job, run once over the clean corpus).
+distinct shingles into its own version partition (idempotent re-publish);
+the gate re-reads the store at EVERY micro-batch, so a new benchmark
+version landing mid-stream screens all SUBSEQUENT batches against the
+union of versions — already-published epochs are not rewritten (their
+verdicts were correct against the store as of their ingestion; a
+retro-screen of history is the batch operator's job, run once over the
+clean corpus).
 
 Per micro-batch: annotate every row pass-through (one output row per
 input row — duplicate and NULL doc_ids ride through unchanged, per the
 compression-gate review finding), split keep/quarantine on the
 contamination fraction, and write each side to the batch's own
-``epoch_id=N`` partition with dynamic overwrite — the repo-wide
-epoch-idempotent write contract (an at-least-once replay overwrites its
-own partitions rather than duplicating).
+``epoch_id=N`` partition (the epoch-store protocol,
+``streaming/stores.py``).
 
 Scale: the benchmark-shingle store is tiny next to the corpus (a few
 thousand eval docs vs billions of training docs) and is broadcast by
@@ -49,6 +48,12 @@ from komodo_data_spark.operators.pipeline_ops import (
     benchmark_shingles,
     contamination_annotate,
 )
+from komodo_data_spark.streaming.stores import (
+    file_stream,
+    overwrite_partitions,
+    require_store,
+    start_batches,
+)
 
 #: Quarantine threshold: a document keeping MORE than this fraction of its
 #: distinct 4-gram shingles inside the benchmark set is quarantined. 0.0
@@ -62,15 +67,12 @@ def update_benchmark_store(
     bench_docs: DataFrame, store_path: str, version: int
 ) -> None:
     """Publish one benchmark release's distinct 4-gram shingles into the
-    store's ``version=N`` partition (dynamic overwrite → idempotent
-    re-publish; a crashed write is simply re-run)."""
-    (
-        benchmark_shingles(bench_docs)
-        .withColumn("version", F.lit(int(version)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("version")
-        .parquet(store_path)
+    store's ``version=N`` partition (idempotent re-publish; a crashed
+    write is simply re-run)."""
+    overwrite_partitions(
+        benchmark_shingles(bench_docs).withColumn("version", F.lit(int(version))),
+        store_path,
+        "version",
     )
 
 
@@ -98,22 +100,10 @@ def decontamination_gate_batch(
         # contract as the compression gate
         .localCheckpoint(eager=True)
     )
-    (
-        annotated.filter(F.col("keep"))
-        .drop("keep")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(clean_path)
-    )
-    (
-        annotated.filter(~F.col("keep"))
-        .drop("keep")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(quarantine_path)
-    )
+    keep = annotated.filter(F.col("keep")).drop("keep")
+    overwrite_partitions(keep, clean_path, "epoch_id")
+    drop = annotated.filter(~F.col("keep")).drop("keep")
+    overwrite_partitions(drop, quarantine_path, "epoch_id")
 
 
 def start_docs_decontamination_gate(
@@ -135,21 +125,11 @@ def start_docs_decontamination_gate(
     un-screened pass-through default would silently disable
     decontamination — the one wrong behavior for a privacy/leakage gate).
     """
-    from komodo_data_spark.streaming.stores import require_store
-
     require_store(spark, store_path, "benchmark-shingle")
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: decontamination_gate_batch(
-                b, e, store_path, clean_path, quarantine_path, max_contam_frac
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: decontamination_gate_batch(
+            b, e, store_path, clean_path, quarantine_path, max_contam_frac
+        ),
     )

@@ -12,8 +12,7 @@ persistent band-key store and, per micro-batch:
    themselves (new × new) to emit candidate pairs,
 3. appends the batch's bands to the store.
 
-Both writes are epoch-idempotent (each goes to the batch's own ``epoch=N``
-partition with dynamic overwrite, the streaming/sketches.py pattern), so
+Both writes follow the epoch-store protocol (``streaming/stores.py``), so
 foreachBatch's at-least-once replay cannot duplicate state or output.
 
 Scale (100 TB of history): the store holds LSH_BANDS rows per document —
@@ -30,12 +29,18 @@ splits differently — consumers dedup by (doc_i, doc_j), which
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from komodo_data_spark.operators.dedup import bands_of, postings_of
+from komodo_data_spark.streaming.stores import (
+    compact_distinct_store,
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    start_batches,
+)
 
 
 def _pairs(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -62,42 +67,18 @@ def detect_batch(
 ) -> None:
     """Process one micro-batch of documents (doc_id, text)."""
     bands = bands_of(postings_of(batch_df)).localCheckpoint()
-    try:
-        store = spark.read.parquet(store_path).select(
-            "doc_id", "band_id", "band_hash"
-        )
-    except AnalysisException as exc:
-        # ONLY the empty-store shapes mean "no history yet": a missing
-        # path, or a directory an all-short-docs batch (no shingles, so no
-        # bands) created with zero partitions. Any other read failure (IO
-        # error, permissions, corrupt footer) must propagate: swallowing
-        # it would silently drop every new-vs-history candidate pair for
-        # this epoch, and once the epoch commits via the checkpoint those
-        # pairs are lost for good. Propagating lets foreachBatch fail the
-        # batch and retry it.
-        if exc.getCondition() not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        store = None
+    # A missing store (or one an all-short-docs first batch left with zero
+    # partitions) means "no history yet"; any other read failure raises,
+    # so the batch retries instead of committing without its
+    # new-vs-history pairs.
+    store = read_store(spark, store_path)
     cand = _pairs(bands, bands)
     if store is not None:
+        store = store.select("doc_id", "band_id", "band_hash")
         cand = cand.union(_pairs(bands, store)).distinct()
-    (
-        cand.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(pairs_path)
-    )
-    (
-        bands.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
-    )
+    epoch = F.lit(int(epoch_id))
+    overwrite_partitions(cand.withColumn("epoch_id", epoch), pairs_path, "epoch_id")
+    overwrite_partitions(bands.withColumn("epoch_id", epoch), store_path, "epoch_id")
 
 
 def start_incremental_dedup(
@@ -111,21 +92,10 @@ def start_incremental_dedup(
     """Stream a documents parquet directory through the incremental
     detector. ``max_files_per_trigger=1`` makes each file its own batch —
     the arrival granularity of a crawl-dump pipeline."""
-    schema = spark.read.parquet(docs_dir).schema  # footer peek, no scan
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .select("doc_id", "text")
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: detect_batch(spark, b, e, store_path, pairs_path)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger).select("doc_id", "text"),
+        checkpoint,
+        lambda b, e: detect_batch(spark, b, e, store_path, pairs_path),
     )
 
 
@@ -138,12 +108,9 @@ def compact_band_store(spark: SparkSession, store_path: str) -> int:
     """Fold all epoch partitions of the band store into the reserved
     ``epoch_id=-1`` base partition — band rows are plain facts (doc_id,
     band_id, band_hash), so the fold is a DISTINCT, and future probes see
-    exactly the same key set (pinned by test). Same write-then-prune
-    contract and local-FS caveat as sketches.compact_store; run while the
-    detection stream is paused.
+    exactly the same key set (pinned by test). Run while the detection
+    stream is paused.
     """
-    from komodo_data_spark.streaming.stores import compact_distinct_store
-
     # Folding even an uncommitted max epoch is safe HERE because candidate
     # emission is monotone: a replayed batch probing its own bands in the
     # base re-derives exactly the pairs it already emitted (deduped at

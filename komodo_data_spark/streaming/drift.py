@@ -14,9 +14,8 @@ Design:
 - Each micro-batch collapses to bin counts in ONE map-side-combinable
   aggregate (the only shuffle, types × bins rows), PSI arithmetic runs on
   that KB-scale frame, and one log row per (epoch, event_type) is appended
-  to the drift log — epoch-partitioned dynamic overwrite, so foreachBatch
-  replay cannot double-log (the streaming/sketches.py idempotence
-  pattern).
+  to the drift log's epoch partition (the epoch-store protocol,
+  ``streaming/stores.py``), so foreachBatch replay cannot double-log.
 - Smoothing and binning share the batch op's constants: stream PSI ==
   batch PSI on the same rows (pinned by test).
 """
@@ -33,6 +32,7 @@ from komodo_data_spark.operators.events_analytics import (
     _PSI_BINS,
     _PSI_SMOOTH,
 )
+from komodo_data_spark.streaming.stores import overwrite_partitions, start_batches
 
 
 def bin_col() -> F.Column:
@@ -115,12 +115,7 @@ def monitor_batch(
     log = psi_of(value_bins(batch_df), ref, ["event_type"]).withColumn(
         "epoch_id", F.lit(int(epoch_id))
     )
-    (
-        log.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(log_path)
-    )
+    overwrite_partitions(log, log_path, "epoch_id")
 
 
 def start_drift_monitor(
@@ -133,15 +128,10 @@ def start_drift_monitor(
 ) -> StreamingQuery:
     from komodo_data_spark.streaming.windows import events_stream
 
-    return (
-        events_stream(spark, events_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: monitor_batch(spark, b, e, ref_path, log_path)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        events_stream(spark, events_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: monitor_batch(spark, b, e, ref_path, log_path),
     )
 
 

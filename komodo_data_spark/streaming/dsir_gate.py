@@ -13,8 +13,8 @@ disagree about any document.
 
 Model store: a parquet directory partitioned by ``version=N``.
 ``update_dsir_model_store`` fits the (b, llr) table from a corpus
-snapshot and publishes it into its own version partition with dynamic
-overwrite (idempotent re-publish). Unlike the benchmark-SHINGLE store
+snapshot and publishes it into its own version partition (idempotent
+re-publish). Unlike the benchmark-SHINGLE store
 (where versions are releases that accumulate and the gate screens
 against their union), a DSIR model is a frozen estimator that newer
 fits SUPERSEDE — the gate reads only the LATEST version at every
@@ -27,7 +27,7 @@ Per micro-batch: annotate every row pass-through (one output row per
 input row — duplicate and NULL doc_ids ride through unchanged, per the
 compression-gate review finding), split keep/diverted on the importance
 weight, and write each side to the batch's own ``epoch_id=N`` partition
-with dynamic overwrite — the repo-wide epoch-idempotent write contract.
+(the epoch-store protocol, ``streaming/stores.py``).
 
 Scale: the model is ≤ DSIR_BUCKETS (256) rows no matter the corpus size
 and is broadcast by the shared kernel; the corpus side pays one
@@ -47,6 +47,12 @@ from komodo_data_spark.operators.pipeline_ops import (
     dsir_annotate,
     dsir_fit_llr,
 )
+from komodo_data_spark.streaming.stores import (
+    file_stream,
+    overwrite_partitions,
+    require_store,
+    start_batches,
+)
 
 #: Keep threshold: a document whose importance weight is at or above this
 #: is admitted. 0.0 = "at least as target-like as the raw pool average",
@@ -59,15 +65,12 @@ def update_dsir_model_store(
     corpus_docs: DataFrame, store_path: str, version: int
 ) -> None:
     """Fit the DSIR (b, llr) model from a corpus snapshot and publish it
-    into the store's ``version=N`` partition (dynamic overwrite →
-    idempotent re-publish; a crashed write is simply re-run)."""
-    (
-        dsir_fit_llr(corpus_docs)
-        .withColumn("version", F.lit(int(version)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("version")
-        .parquet(store_path)
+    into the store's ``version=N`` partition (idempotent re-publish; a
+    crashed write is simply re-run)."""
+    overwrite_partitions(
+        dsir_fit_llr(corpus_docs).withColumn("version", F.lit(int(version))),
+        store_path,
+        "version",
     )
 
 
@@ -101,22 +104,10 @@ def dsir_gate_batch(
         # contract as the compression and decontamination gates
         .localCheckpoint(eager=True)
     )
-    (
-        annotated.filter(F.col("keep"))
-        .drop("keep")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(keep_path)
-    )
-    (
-        annotated.filter(~F.col("keep"))
-        .drop("keep")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(diverted_path)
-    )
+    keep = annotated.filter(F.col("keep")).drop("keep")
+    overwrite_partitions(keep, keep_path, "epoch_id")
+    drop = annotated.filter(~F.col("keep")).drop("keep")
+    overwrite_partitions(drop, diverted_path, "epoch_id")
 
 
 def start_docs_dsir_gate(
@@ -136,21 +127,11 @@ def start_docs_dsir_gate(
     the streaming query with a bare path-not-found on the first
     micro-batch instead of a clear precondition error at start time.
     """
-    from komodo_data_spark.streaming.stores import require_store
-
     require_store(spark, store_path, "DSIR model")
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: dsir_gate_batch(
-                b, e, store_path, keep_path, diverted_path, min_log_weight
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: dsir_gate_batch(
+            b, e, store_path, keep_path, diverted_path, min_log_weight
+        ),
     )

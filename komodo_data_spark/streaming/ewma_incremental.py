@@ -6,20 +6,14 @@ epoch's partition — sum-mergeable state, the same counter-store shape as
 ``mix_incremental``. Reads fold base + epochs with one grid-bounded
 aggregate and apply the SAME ``ewma_from_counts`` math as the batch
 operator, so stream and batch cannot disagree (and the dyadic alpha makes
-the equality BIT-exact, not just tolerance-close). Retention uses the
-shared marker-protocol fold (``sketches.compact_fold_store``): a sum fold
-without the marker would double-count on crash.
+the equality BIT-exact, not just tolerance-close). Writes, retention and
+crash recovery follow the epoch-store protocol (``streaming/stores.py``).
 
 Why incremental: the corpus-scale work of the batch monitor is the count
 aggregate; everything after it runs on a KB-scale grid. Keeping the
 partials per epoch means "what is the smoothed rate NOW" never re-reads
 landed history — each batch adds O(types x 24) rows and the read is
 O(store), exactly the hypertable continuous-aggregate lifecycle.
-
-Replay idempotence holds WITHIN one checkpoint lineage (an epoch
-overwrites its own partition). Like every sum store, a fresh-checkpoint
-restart must target a fresh store path — folded history carries no key
-that could expose the stale epochs.
 """
 
 from __future__ import annotations
@@ -28,10 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from komodo_data_spark.streaming.sketches import (
-    _TMP_EPOCH,
-    _recover_compaction,
+from komodo_data_spark.streaming.stores import (
     compact_fold_store,
+    overwrite_partitions,
+    read_fold_store,
+    start_batches,
 )
 
 _COUNT_SCHEMA = "event_type string, day bigint, h bigint, n bigint"
@@ -39,17 +34,13 @@ _COUNT_SCHEMA = "event_type string, day bigint, h bigint, n bigint"
 
 def counts_batch(batch_df: DataFrame, epoch_id: int, store_path: str) -> None:
     """Fold one micro-batch into its epoch partition of the counter store.
-    Replay-idempotent: an epoch overwrites exactly its own partition. The
-    aggregation is the batch operator's own ``hourly_counts`` kernel."""
+    The aggregation is the batch operator's own ``hourly_counts`` kernel."""
     from komodo_data_spark.operators.timeseries import hourly_counts
 
-    (
-        hourly_counts(batch_df)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    overwrite_partitions(
+        hourly_counts(batch_df).withColumn("epoch_id", F.lit(int(epoch_id))),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -62,36 +53,24 @@ def start_incremental_ewma(
 ) -> StreamingQuery:
     from komodo_data_spark.streaming.windows import events_stream
 
-    return (
-        events_stream(spark, events_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: counts_batch(b, e, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        events_stream(spark, events_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: counts_batch(b, e, store_path),
     )
 
 
 def read_ewma(spark: SparkSession, store_path: str) -> DataFrame:
     """Current smoothed hourly rates from the counter store: fold base +
     epochs per (event_type, day, h), then the shared batch math."""
-    from pyspark.errors import AnalysisException
-
     from komodo_data_spark.operators.timeseries import ewma_from_counts
 
-    _recover_compaction(store_path)
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
+    store = read_fold_store(spark, store_path)
+    if store is None:
         return ewma_from_counts(spark.createDataFrame([], _COUNT_SCHEMA))
-    merged = (
-        store.filter(F.col("epoch_id") != _TMP_EPOCH)
-        .groupBy("event_type", "day", "h")
-        .agg(F.sum("n").alias("n"))
+    return ewma_from_counts(
+        store.groupBy("event_type", "day", "h").agg(F.sum("n").alias("n"))
     )
-    return ewma_from_counts(merged)
 
 
 def compact_ewma_store(spark: SparkSession, store_path: str) -> int:

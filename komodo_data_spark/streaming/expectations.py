@@ -9,8 +9,7 @@ strings the batch auditor uses, evaluated map-side in one codegen'd
 projection; nothing about the gate shuffles.
 
 Per-epoch idempotence: both outputs write to the epoch's own partition
-with dynamic overwrite (the streaming/sketches.py pattern), so foreachBatch
-replay after a crash overwrites rather than duplicates. At 100 TB the gate
+(the epoch-store protocol, ``streaming/stores.py``). At 100 TB the gate
 adds one array projection to the ingest scan; quarantine volume is
 violation-bounded, not input-bounded.
 """
@@ -20,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from komodo_data_spark.streaming.stores import (
+    file_stream,
+    overwrite_partitions,
+    start_batches,
+)
 
 #: Expectations for the events stream: same string-predicate contract as
 #: profiling._ORDERS_RULES.
@@ -51,42 +56,10 @@ def gate_batch(
     )
     # localCheckpoint: two output branches must not re-read the source batch
     annotated = annotated.localCheckpoint(eager=True)
-    (
-        annotated.filter(F.size("failed_rules") == 0)
-        .drop("failed_rules")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(clean_path)
-    )
-    (
-        annotated.filter(F.size("failed_rules") > 0)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(quarantine_path)
-    )
-
-
-def _start_gate(
-    stream_df: DataFrame,
-    rules: dict[str, str],
-    clean_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-) -> StreamingQuery:
-    """Shared gate wiring: any source stream -> epoch-idempotent
-    clean/quarantine split via gate_batch. One definition so the events and
-    documents gates can never diverge on trigger/checkpoint behavior."""
-    return (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: gate_batch(b, e, rules, clean_path, quarantine_path)
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
+    clean = annotated.filter(F.size("failed_rules") == 0).drop("failed_rules")
+    overwrite_partitions(clean, clean_path, "epoch_id")
+    bad = annotated.filter(F.size("failed_rules") > 0)
+    overwrite_partitions(bad, quarantine_path, "epoch_id")
 
 
 def start_expectations_stream(
@@ -101,9 +74,10 @@ def start_expectations_stream(
     from komodo_data_spark.streaming.windows import events_stream
 
     rules = EVENTS_RULES if rules is None else rules
-    return _start_gate(
+    return start_batches(
         events_stream(spark, events_dir, max_files_per_trigger),
-        rules, clean_path, quarantine_path, checkpoint,
+        checkpoint,
+        lambda b, e: gate_batch(b, e, rules, clean_path, quarantine_path),
     )
 
 
@@ -144,11 +118,9 @@ def start_docs_expectations_stream(
 ) -> StreamingQuery:
     """Gate a documents file-source stream through ``docs_rules()`` —
     same epoch-idempotent clean/quarantine split as the events gate."""
-    schema = spark.read.parquet(docs_dir).schema
     rules = docs_rules() if rules is None else rules
-    return _start_gate(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir),
-        rules, clean_path, quarantine_path, checkpoint,
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: gate_batch(b, e, rules, clean_path, quarantine_path),
     )

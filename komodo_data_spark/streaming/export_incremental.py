@@ -8,9 +8,9 @@ files per hour. This stream appends each micro-batch under
 - shard assignment is the SAME pure hash as the batch sink
   (``pmod(xxhash64(key), n)``), so a document lands in the same shard
   whichever path wrote it;
-- each epoch writes only its own ``(shard, epoch_id)`` partitions with
-  dynamic overwrite, so an at-least-once replay of a batch overwrites its
-  own partitions rather than duplicating (the band/block-store pattern);
+- each epoch writes only its own ``(shard, epoch_id)`` partitions, so an
+  at-least-once replay of a batch overwrites its own partitions rather
+  than duplicating (the epoch-store protocol, ``streaming/stores.py``);
 - consumers either read the epoch-partitioned layout directly or run
   ``compact_export``, which folds every epoch through the BATCH sink —
   producing the audited ``_manifest.json`` + ``verify_export`` contract —
@@ -44,6 +44,12 @@ from komodo_data_spark.sources.publish import (
     prepare_staging,
     publish_staged,
 )
+from komodo_data_spark.streaming.stores import (
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    start_batches,
+)
 
 
 def export_batch(
@@ -54,8 +60,7 @@ def export_batch(
     key_col: str = "doc_id",
 ) -> None:
     """Write one micro-batch's rows into their hash shards under this
-    epoch's partitions. Replay-idempotent: the same epoch overwrites
-    exactly its own partitions."""
+    epoch's partitions."""
     for reserved in ("shard", "epoch_id"):
         if reserved in batch_df.columns:
             raise ValueError(
@@ -63,16 +68,10 @@ def export_batch(
                 "— the export would silently clobber it (same contract as "
                 "the batch sink)"
             )
-    (
-        batch_df.withColumn(
-            "shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards))
-        )
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("shard", "epoch_id")
-        .parquet(path)
-    )
+    sharded = batch_df.withColumn(
+        "shard", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_shards))
+    ).withColumn("epoch_id", F.lit(int(epoch_id)))
+    overwrite_partitions(sharded, path, "shard", "epoch_id")
 
 
 def start_incremental_export(
@@ -84,18 +83,10 @@ def start_incremental_export(
     key_col: str = "doc_id",
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: export_batch(b, e, export_path, n_shards, key_col)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: export_batch(b, e, export_path, n_shards, key_col),
     )
 
 
@@ -126,19 +117,14 @@ def compact_export(
     (``sources/publish.py``): a crashed compaction is healed — forward or
     back — by ``prepare_staging`` on the next run.
     """
-    from pyspark.errors import AnalysisException
-
     from komodo_data_spark.sources.export import export_training_shards
 
     if on_duplicate_keys not in ("error", "keep_latest_epoch"):
         raise ValueError(f"unknown on_duplicate_keys={on_duplicate_keys!r}")
     staging = prepare_staging(path)  # heals prior crashes; path live after
-    try:
-        raw = spark.read.parquet(path)
-    except AnalysisException as exc:
-        if exc.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
+    raw = read_store(spark, path)
+    if raw is None:
+        return None
     if "epoch_id" in raw.columns:
         # count(key_col) skips NULLs, so the duplicate test compares
         # non-null rows to distinct non-null keys — a NULL-keyed row must

@@ -23,18 +23,17 @@ record until an out-of-band promotion job ran (round-6 advice finding).
 Each record's ``origin_epoch`` column preserves its ingestion epoch;
 ``epoch_id`` (the partition) is the epoch that RELEASED it.
 
-Every write stays epoch-idempotent:
+Every write follows the epoch-store protocol (``streaming/stores.py``):
 
-- class-count store: parquet partitioned by ``epoch_id``; each batch
-  writes ITS OWN class counts with dynamic overwrite, so an
-  at-least-once replay overwrites the identical partition and the
-  accumulated fold (groupBy-sum at read) never double-counts.
-- released / held: one partition per epoch, dynamic overwrite. The
-  promotion set is deterministic on replay because it reads only STRICT
-  PRIOR state: held partitions with epoch_id < E and the crossing test
-  compares the store folded through E against the store folded through
-  E-1 (both sides exclude anything epoch E itself might have
-  half-written before a crash). A class crosses k exactly once — counts
+- class-count store: each batch writes ITS OWN class counts into its
+  epoch partition, so the accumulated fold (groupBy-sum at read) never
+  double-counts a replay.
+- released / held: one partition per epoch. The promotion set is
+  deterministic on replay because it reads only STRICT PRIOR state: held
+  partitions with epoch_id < E and the crossing test compares the store
+  folded through E against the store folded through E-1 (both sides
+  exclude anything epoch E itself might have half-written before a
+  crash). A class crosses k exactly once — counts
   only grow and every parked record's class was below k at its origin —
   so no held record can be promoted twice. Held partitions are
   append-only (promotion never rewrites them); the live parked set is
@@ -55,7 +54,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from komodo_data_spark.operators.pipeline_ops import K_ANON, QI_COLS, qi_classes
-from komodo_data_spark.streaming.stores import read_store_or_empty
+from komodo_data_spark.streaming.stores import (
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    read_store_or_empty,
+    start_batches,
+)
 
 
 def accumulated_class_counts(spark: SparkSession, store_path: str) -> DataFrame:
@@ -79,14 +84,9 @@ def k_anonymity_gate_batch(
     qi = qi_classes(batch_df).localCheckpoint(eager=True)
     # 1. publish THIS epoch's class counts (idempotent: replay overwrites
     #    the same partition with the same counts)
-    (
-        qi.groupBy(*QI_COLS)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    counts = qi.groupBy(*QI_COLS).agg(F.count(F.lit(1)).alias("n"))
+    overwrite_partitions(
+        counts.withColumn("epoch_id", F.lit(int(epoch_id))), store_path, "epoch_id"
     )
     # 2. verdict against the accumulated counts (now includes this epoch);
     #    broadcast: the folded frame is QI-domain-sized, never record-sized
@@ -101,12 +101,7 @@ def k_anonymity_gate_batch(
         .localCheckpoint(eager=True)
     )
     held_new = annotated.filter(~F.col("releasable")).drop("releasable")
-    (
-        held_new.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(held_path)
-    )
+    overwrite_partitions(held_new, held_path, "epoch_id")
     # 3. atomic whole-class release: classes that CROSSED k at this epoch
     #    (folded-through-E >= k, folded-through-E-1 < k) pull their parked
     #    members out of held in the SAME released partition. Both inputs
@@ -140,12 +135,7 @@ def k_anonymity_gate_batch(
         .withColumn("origin_epoch", F.lit(int(epoch_id)))
         .unionByName(promoted)
     )
-    (
-        released.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(released_path)
-    )
+    overwrite_partitions(released, released_path, "epoch_id")
 
 
 def start_k_anonymity_gate(
@@ -159,20 +149,12 @@ def start_k_anonymity_gate(
     max_files_per_trigger: int = 16,
 ) -> StreamingQuery:
     """Gate a customer file-source stream on accumulated k-anonymity."""
-    schema = spark.read.parquet(customers_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(customers_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: k_anonymity_gate_batch(
-                b, e, store_path, released_path, held_path, k
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, customers_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: k_anonymity_gate_batch(
+            b, e, store_path, released_path, held_path, k
+        ),
     )
 
 
@@ -202,23 +184,14 @@ def still_held(
     if schema is not None:
         held = read_store_or_empty(spark, held_path, schema)
     else:
-        from pyspark.errors import AnalysisException
-
-        from komodo_data_spark.streaming.stores import (
-            _MISSING_STORE_CONDITIONS,
-        )
-
-        try:
-            held = spark.read.parquet(held_path)
-        except AnalysisException as exc:
-            if exc.getCondition() not in _MISSING_STORE_CONDITIONS:
-                raise
+        held = read_store(spark, held_path)
+        if held is None:
             raise RuntimeError(
                 f"held store at '{held_path}' has no readable partitions "
                 f"(all epochs released, or never parked) — pass "
                 f"still_held(..., schema=<held-row schema>) to get the "
                 f"empty parked view"
-            ) from exc
+            )
     return held.join(
         F.broadcast(ok.select(*QI_COLS)), list(QI_COLS), "left_anti"
     )

@@ -16,11 +16,8 @@ ulp, pinned by test at 1e-12 relative).
 The two count shapes share one store schema with a ``kind`` discriminator
 (``tri`` rows carry (u, v, w), ``bi`` rows carry (u, NULL, w)) so the
 fold, retention, and crash-recovery paths are single-store — the
-``mix_incremental`` counter-store lifecycle verbatim. Writes are
-epoch-idempotent (per-epoch partition, dynamic overwrite); retention uses
-the shared marker-protocol fold (a sum fold without the marker would
-double-count on crash); a fresh-checkpoint restart must target a fresh
-store path, like every sum store here.
+``mix_incremental`` counter-store lifecycle verbatim, on the epoch-store
+protocol's marker fold (``streaming/stores.py``).
 
 Scale (100 TB of history): per-batch work is two map-side-combinable
 aggregates over the batch only; the store grows O(distinct n-gram types),
@@ -30,15 +27,16 @@ seen so far" never re-reads landed history.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from komodo_data_spark.streaming.sketches import (
-    _TMP_EPOCH,
-    _recover_compaction,
+from komodo_data_spark.streaming.stores import (
     compact_fold_store,
+    file_stream,
+    overwrite_partitions,
+    read_fold_store,
+    start_batches,
 )
 
 _COUNT_SCHEMA = "kind string, u string, v string, w string, n bigint"
@@ -64,15 +62,11 @@ def kn3_count_partials(batch_df: DataFrame) -> DataFrame:
 
 
 def counts_batch(batch_df: DataFrame, epoch_id: int, store_path: str) -> None:
-    """Fold one micro-batch into its epoch partition. Replay-idempotent:
-    an epoch overwrites exactly its own partition."""
-    (
-        kn3_count_partials(batch_df)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    """Fold one micro-batch into its epoch partition."""
+    overwrite_partitions(
+        kn3_count_partials(batch_df).withColumn("epoch_id", F.lit(int(epoch_id))),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -84,35 +78,18 @@ def start_incremental_kn3(
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
     """File-source document stream (doc_id, text, ...) -> counter store."""
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: counts_batch(b, e, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: counts_batch(b, e, store_path),
     )
 
 
 def _folded_counts(spark: SparkSession, store_path: str) -> DataFrame:
-    _recover_compaction(store_path)
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        if exc.getCondition() not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
+    store = read_fold_store(spark, store_path)
+    if store is None:
         return spark.createDataFrame([], _COUNT_SCHEMA)
-    return (
-        store.filter(F.col("epoch_id") != _TMP_EPOCH)
-        .groupBy("kind", "u", "v", "w")
-        .agg(F.sum("n").alias("n"))
-    )
+    return store.groupBy("kind", "u", "v", "w").agg(F.sum("n").alias("n"))
 
 
 def read_kn3_scores(

@@ -5,22 +5,18 @@ Per micro-batch, one tiny (source, n_tokens) sum lands in that epoch's
 partition — sum-mergeable state, the counter analogue of the sketch
 store. Reads fold base + epochs with one |sources|-bounded aggregate and
 apply the SAME ``temperature_weights`` function as the batch operator, so
-stream and batch can never disagree on the math. Retention uses the
-shared marker-protocol fold (``sketches.compact_fold_store``): a sum fold
-without the marker would double-count on crash, unlike the DISTINCT
-stores.
+stream and batch can never disagree on the math. Writes, retention and
+crash recovery follow the epoch-store protocol (``streaming/stores.py``).
 
 Why incremental: re-deriving mixture weights from 100 TB for every batch
 of new arrivals re-tokenizes the corpus; this store keeps O(|sources|)
 rows per epoch and folds to O(|sources|) total, making "what should the
 sampling distribution be NOW" a constant-time read.
 
-Replay idempotence holds WITHIN one checkpoint lineage (an epoch
-overwrites its own partition). A sum store carries no key that could
-expose a fresh-checkpoint restart, so unlike ``compact_export`` nothing
-can detect it after the fact: restarting with a NEW checkpoint must
-target a NEW store path (or an emptied one), never a store that already
-holds folded history.
+A sum store carries no key that could expose a fresh-checkpoint restart,
+so unlike ``compact_export`` nothing can detect it after the fact:
+restarting with a NEW checkpoint must target a NEW store path (or an
+emptied one), never a store that already holds folded history.
 """
 
 from __future__ import annotations
@@ -29,16 +25,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from komodo_data_spark.streaming.sketches import (
-    _TMP_EPOCH,
-    _recover_compaction,
+from komodo_data_spark.streaming.stores import (
     compact_fold_store,
+    file_stream,
+    overwrite_partitions,
+    read_fold_store,
+    start_batches,
 )
 
 
 def counts_batch(batch_df: DataFrame, epoch_id: int, store_path: str) -> None:
     """Fold one micro-batch into its epoch partition of the counter store.
-    Replay-idempotent: an epoch overwrites exactly its own partition.
     The aggregation is the batch operator's own helper — both halves of
     the math (counting AND weighting) are shared, so the two paths cannot
     drift."""
@@ -46,13 +43,12 @@ def counts_batch(batch_df: DataFrame, epoch_id: int, store_path: str) -> None:
         per_source_token_counts,
     )
 
-    (
-        per_source_token_counts(batch_df)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    overwrite_partitions(
+        per_source_token_counts(batch_df).withColumn(
+            "epoch_id", F.lit(int(epoch_id))
+        ),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -63,44 +59,26 @@ def start_incremental_mix(
     checkpoint: str,
     max_files_per_trigger: int = 1,
 ) -> StreamingQuery:
-    schema = spark.read.parquet(docs_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: counts_batch(b, e, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: counts_batch(b, e, store_path),
     )
 
 
 def read_mix_weights(spark: SparkSession, store_path: str) -> DataFrame:
     """Current temperature-sampling weights from the counter store: fold
     base + epochs per source, then the shared batch math."""
-    from pyspark.errors import AnalysisException
-
     from komodo_data_spark.operators.pipeline_ops import temperature_weights
 
-    # a crashed compaction's scratch partition holds a full copy of every
-    # count — heal it first, and belt-and-braces exclude it from the fold
-    _recover_compaction(store_path)
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        # never-populated store: empty weights frame, same schema
+    store = read_fold_store(spark, store_path)
+    if store is None:  # never-populated store: empty weights frame
         return temperature_weights(
             spark.createDataFrame([], "source string, n_tokens bigint")
         )
-    per_src = (
-        store.filter(F.col("epoch_id") != _TMP_EPOCH)
-        .groupBy("source")
-        .agg(F.sum("n_tokens").alias("n_tokens"))
+    return temperature_weights(
+        store.groupBy("source").agg(F.sum("n_tokens").alias("n_tokens"))
     )
-    return temperature_weights(per_src)
 
 
 def compact_mix_store(spark: SparkSession, store_path: str) -> int:

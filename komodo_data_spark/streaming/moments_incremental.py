@@ -10,9 +10,8 @@ bm25_incremental.py = term stats, drift.py = PSI reference).
 
 Design (same rules as every store here):
 - Each micro-batch writes its own hourly partial rows under an
-  ``epoch_id=`` partition with dynamic overwrite — foreachBatch replay
-  after a crash rewrites the SAME partition instead of double-counting
-  (the streaming/sketches.py idempotence pattern).
+  ``epoch_id=`` partition (the epoch-store protocol,
+  ``streaming/stores.py``).
 - An hour spanning several micro-batches simply appears once per epoch;
   the shared ``merge_daily`` fold is associative-commutative over partial
   rows, so no compaction is ever REQUIRED for correctness. A retention
@@ -35,19 +34,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from komodo_data_spark.operators.timeseries import hourly_partials, merge_daily
+from komodo_data_spark.streaming.stores import overwrite_partitions, start_batches
 
 
 def write_batch_partials(
     batch_df: DataFrame, epoch_id: int, store_path: str
 ) -> None:
     """One micro-batch -> its hourly partial rows, epoch-partitioned."""
-    (
-        hourly_partials(batch_df)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    overwrite_partitions(
+        hourly_partials(batch_df).withColumn("epoch_id", F.lit(int(epoch_id))),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -60,15 +57,10 @@ def start_moments_stream(
 ) -> StreamingQuery:
     from komodo_data_spark.streaming.windows import events_stream
 
-    return (
-        events_stream(spark, events_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: write_batch_partials(b, e, store_path)
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        events_stream(spark, events_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: write_batch_partials(b, e, store_path),
     )
 
 

@@ -14,9 +14,8 @@ percentile by test.
 
 Design (same rules as every store here):
 - Each micro-batch writes its own (event_type, bin, n) partial rows
-  under an ``epoch_id=`` partition with dynamic overwrite — foreachBatch
-  replay after a crash rewrites the SAME partition instead of
-  double-counting (the streaming/sketches.py idempotence pattern).
+  under an ``epoch_id=`` partition (the epoch-store protocol,
+  ``streaming/stores.py``).
 - A bin spanning several micro-batches simply appears once per epoch;
   the shared read-time fold (``percentiles_from_partials``) sums counts,
   so no compaction is ever REQUIRED for correctness. The retention fold
@@ -44,19 +43,17 @@ from komodo_data_spark.operators.timeseries import (
     percentiles_from_partials,
     value_hist_partials,
 )
+from komodo_data_spark.streaming.stores import overwrite_partitions, start_batches
 
 
 def write_batch_partials(
     batch_df: DataFrame, epoch_id: int, store_path: str
 ) -> None:
     """One micro-batch -> its (event_type, bin) count rows, epoch-partitioned."""
-    (
-        value_hist_partials(batch_df)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    overwrite_partitions(
+        value_hist_partials(batch_df).withColumn("epoch_id", F.lit(int(epoch_id))),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -69,13 +66,10 @@ def start_value_quantile_stream(
 ) -> StreamingQuery:
     from komodo_data_spark.streaming.windows import events_stream
 
-    return (
-        events_stream(spark, events_dir, max_files_per_trigger)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(lambda b, e: write_batch_partials(b, e, store_path))
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        events_stream(spark, events_dir, max_files_per_trigger),
+        checkpoint,
+        lambda b, e: write_batch_partials(b, e, store_path),
     )
 
 

@@ -39,9 +39,8 @@ broadcastable) and whose store side prunes to the probed keys once
 bucketed on (seg_id, seg_val); the occupancy aggregate is one
 map-side-combinable count over the same store scan. The cap bounds the
 per-key probe cost at cap·|batch keys| regardless of how degenerate
-history's signature distribution becomes. Writes are epoch-idempotent
-(each epoch's own partition, dynamic overwrite — the
-streaming/sketches.py pattern), and the history read excludes the
+history's signature distribution becomes. Writes follow the epoch-store
+protocol (``streaming/stores.py``), and the history read excludes the
 current epoch's partition (``epoch_id < epoch``), so at-least-once
 replay cannot double-count occupancy (batch + its own stored copy) or
 duplicate output rows.
@@ -49,7 +48,6 @@ duplicate output rows.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -64,6 +62,13 @@ from komodo_data_spark.operators.multimodal_ops import (
     MEDIA_SEG_CAP,
     MEDIA_SIMHASH_BITS,
     _media_gram_toks,
+)
+from komodo_data_spark.streaming.stores import (
+    compact_distinct_store,
+    file_stream,
+    overwrite_partitions,
+    read_store,
+    start_batches,
 )
 
 SEG_STORE_COLS = ("doc_id", "simhash", "seg_id", "seg_val")
@@ -104,7 +109,10 @@ def detect_batch(
     segs = _simhash_pigeonhole_segs(
         sig, pigeonhole_widths(MEDIA_SIMHASH_BITS, MEDIA_HAMMING_MAX)
     ).localCheckpoint()  # occupancy count + both joins + store write
-    try:
+    # None = no history yet; any other read failure raises so the epoch
+    # retries instead of silently dropping new-vs-history pairs.
+    store = read_store(spark, store_path)
+    if store is not None:
         # Exclude this epoch's own partition (and any later one) from the
         # history view: after a store write that committed but whose
         # checkpoint did not, the replayed batch would otherwise see its
@@ -113,22 +121,9 @@ def detect_batch(
         # dynamically overwriting the epoch's pairs partition with the
         # smaller post-flip set, silently losing verified pairs. The base
         # partition (epoch_id=-1) and all strictly-earlier epochs remain.
-        store = (
-            spark.read.parquet(store_path)
-            .filter(F.col("epoch_id") < int(epoch_id))
-            .select(*SEG_STORE_COLS)
+        store = store.filter(F.col("epoch_id") < int(epoch_id)).select(
+            *SEG_STORE_COLS
         )
-    except AnalysisException as exc:
-        # ONLY the empty-store shapes mean "no history yet"; any other
-        # read failure must propagate so foreachBatch retries the epoch
-        # instead of silently dropping new-vs-history pairs (see
-        # dedup_incremental.detect_batch for the full rationale).
-        if exc.getCondition() not in (
-            "PATH_NOT_FOUND",
-            "UNABLE_TO_INFER_SCHEMA",
-        ):
-            raise
-        store = None
     occ_src = (
         segs.select("seg_id", "seg_val")
         if store is None
@@ -149,20 +144,12 @@ def detect_batch(
         cand = cand.union(
             _verified_pairs(segs_ok, store_ok, MEDIA_HAMMING_MAX)
         ).distinct()
-    (
-        cand.withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(pairs_path)
-    )
-    (
-        segs.select(*SEG_STORE_COLS)
-        .withColumn("epoch_id", F.lit(int(epoch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
+    epoch = F.lit(int(epoch_id))
+    overwrite_partitions(cand.withColumn("epoch_id", epoch), pairs_path, "epoch_id")
+    overwrite_partitions(
+        segs.select(*SEG_STORE_COLS).withColumn("epoch_id", epoch),
+        store_path,
+        "epoch_id",
     )
 
 
@@ -178,23 +165,10 @@ def start_incremental_simhash(
     """Stream a documents parquet directory through the incremental
     capped detector. ``max_files_per_trigger=1`` makes each file its own
     batch — the arrival granularity of a crawl-dump pipeline."""
-    schema = spark.read.parquet(docs_dir).schema  # footer peek, no scan
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(docs_dir)
-        .select("doc_id", "text")
-    )
-    return (
-        stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda b, e: detect_batch(
-                spark, b, e, store_path, pairs_path, key_cap
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        file_stream(spark, docs_dir, max_files_per_trigger).select("doc_id", "text"),
+        checkpoint,
+        lambda b, e: detect_batch(spark, b, e, store_path, pairs_path, key_cap),
     )
 
 
@@ -221,8 +195,6 @@ def compact_seg_store(spark: SparkSession, store_path: str) -> int:
     partition while the base still holds the folded copy — per-key
     occupancy inflated until the next compaction, spurious cap refusals
     meanwhile (the ``compact_band_store`` crash-window rationale)."""
-    from komodo_data_spark.streaming.stores import compact_distinct_store
-
     return compact_distinct_store(
         spark, store_path, list(SEG_STORE_COLS), keep_max_epoch=True
     )

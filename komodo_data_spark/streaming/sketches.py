@@ -1,25 +1,30 @@
 """Incremental frequency-sketch maintenance over the events stream.
 
 The streaming sibling of operators/stats_ops.events_heavy_hitters_merged:
-each micro-batch collapses to ONE persisted approx_top_k state row
-(appended to a parquet sketch store via ``foreachBatch``), and the heavy-
-hitter query combines + estimates over the stored sketches at read time —
-no replay of ingested batches, ever.
+each micro-batch collapses to ONE persisted approx_top_k state row in its
+epoch partition, and the heavy-hitter query combines + estimates over the
+stored sketches at read time — no replay of ingested batches, ever.
 
 Why this shape at 100 TB: the per-batch write is O(sketch) ≈ KBs no matter
 how many rows the batch carried, the store grows by one row per batch (not
-per key), and the read-side combine is a single tiny aggregation. Appends
-are idempotent per epoch via the epoch_id column — a replayed batch
-overwrites its own partition instead of double-counting.
+per key), and the read-side combine is a single tiny aggregation. Replay
+safety, retention and crash recovery follow the epoch-store protocol
+(``streaming/stores.py``).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from komodo_data_spark.streaming.stores import (
+    _INFLIGHT_MARKER,  # noqa: F401 - the file a crashed fold leaves here
+    _TMP_EPOCH,
+    compact_fold_store,
+    overwrite_partitions,
+    start_batches,
+)
 
 MAX_ITEMS_TRACKED = 100_000
 
@@ -27,17 +32,12 @@ MAX_ITEMS_TRACKED = 100_000
 def accumulate_batch(
     spark: SparkSession, batch_df: DataFrame, epoch_id: int, sketch_path: str
 ) -> None:
-    """Collapse one micro-batch into a single sketch row, written to the
-    epoch's own partition (idempotent under micro-batch replay)."""
+    """Collapse one micro-batch into a single sketch row in its epoch
+    partition."""
     sk = batch_df.agg(
         F.expr(f"approx_top_k_accumulate(user_id, {MAX_ITEMS_TRACKED})").alias("sk")
     ).withColumn("epoch_id", F.lit(int(epoch_id)))
-    (
-        sk.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(sketch_path)
-    )
+    overwrite_partitions(sk, sketch_path, "epoch_id")
 
 
 def start_sketch_maintenance(
@@ -47,17 +47,10 @@ def start_sketch_maintenance(
     checkpoint: str,
 ) -> StreamingQuery:
     """Maintain the per-batch sketch store from a streaming events frame."""
-    return (
-        events.select("user_id")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(
-            lambda batch_df, epoch: accumulate_batch(
-                spark, batch_df, epoch, sketch_path
-            )
-        )
-        .trigger(availableNow=True)
-        .start()
+    return start_batches(
+        events.select("user_id"),
+        checkpoint,
+        lambda b, e: accumulate_batch(spark, b, e, sketch_path),
     )
 
 
@@ -102,67 +95,6 @@ def heavy_hitters_from_store(
     )
 
 
-#: Scratch partition the new base is staged into before the swap. Never a
-#: real epoch (stream epochs are >= 0; -1 is the committed base).
-_TMP_EPOCH = -2
-#: Underscore-prefixed so Spark's parquet listing ignores it (like _SUCCESS).
-_INFLIGHT_MARKER = "_compaction_inflight.json"
-
-
-def _recover_compaction(sketch_path: str) -> None:
-    """Bring the store to a consistent state after a crash at ANY point of a
-    prior compaction, then (re)enter the finalize steps if a committed fold
-    is pending. Doubles as the finalize path for a live compaction — one
-    code path, every step idempotent:
-
-    - tmp partition WITHOUT marker  → the fold crashed mid-write; originals
-      are intact, so the partial tmp is discarded.
-    - marker + tmp                  → the fold committed; delete exactly the
-      epochs listed in the marker (idempotent — some may already be gone),
-      drop the old base, rename tmp → base (atomic on a local fs; on
-      object stores use the FileSystem rename, same contract), drop marker.
-    - marker WITHOUT tmp            → crash after the rename; just drop the
-      marker.
-
-    The marker records the exact epoch list folded, so epochs that arrive
-    AFTER a crashed compaction (stream resumed before the re-run) are never
-    mistaken for folded ones and never deleted unfolded.
-    """
-    import json
-    import shutil
-
-    marker = os.path.join(sketch_path, _INFLIGHT_MARKER)
-    tmp_dir = os.path.join(sketch_path, f"epoch_id={_TMP_EPOCH}")
-    base_dir = os.path.join(sketch_path, "epoch_id=-1")
-    if os.path.exists(marker + ".tmp"):
-        os.remove(marker + ".tmp")  # crashed mid marker write; orphan
-    if not os.path.exists(marker):
-        if os.path.isdir(tmp_dir):
-            shutil.rmtree(tmp_dir)
-        return
-    try:
-        with open(marker) as fh:
-            folded = json.load(fh)["epochs"]
-    except (ValueError, KeyError):
-        # Unreadable marker = the marker write itself crashed. The marker
-        # is installed by atomic rename AFTER the fold completes and the
-        # prune only starts once a valid marker exists, so the originals
-        # are intact: discard marker + tmp and let the caller refold.
-        os.remove(marker)
-        if os.path.isdir(tmp_dir):
-            shutil.rmtree(tmp_dir)
-        return
-    if os.path.isdir(tmp_dir):
-        for e in folded:
-            d = os.path.join(sketch_path, f"epoch_id={e}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-        if os.path.isdir(base_dir):
-            shutil.rmtree(base_dir)
-        os.rename(tmp_dir, base_dir)
-    os.remove(marker)
-
-
 def compact_store(spark: SparkSession, sketch_path: str) -> int:
     """Fold every per-epoch sketch row into ONE base row so the store stays
     O(1) instead of one-row-per-batch forever — the retention pass that
@@ -172,19 +104,9 @@ def compact_store(spark: SparkSession, sketch_path: str) -> int:
     a, b), c) == combine(a, b, c), so folding historical epochs into a base
     row changes no downstream estimate (pinned by test).
 
-    Crash-reentrant by construction: the new base (old base + epochs) is
-    staged into the scratch ``epoch_id=-2`` partition, a marker file then
-    records WHICH epochs it folded, and only then are those epochs pruned
-    and the scratch renamed over ``epoch_id=-1``. A re-run after a crash at
-    any step resumes (or discards) via ``_recover_compaction`` — the fold
-    can never double-count a previously folded epoch, because a committed
-    base is only ever installed together with the deletion of exactly the
-    epochs it folded. Run while the maintenance stream is paused (readers
-    mid-swap could transiently see both base generations).
-
-    Returns the number of epoch partitions folded away. Pruning uses the
-    local filesystem API (this rig); on s3://-style stores swap the
-    rmtree/rename for Hadoop FileSystem delete/rename, same contract.
+    Crash-reentrant through the marker-protocol fold
+    (``stores.compact_fold_store``); run while the maintenance stream is
+    paused. Returns the number of epoch partitions folded away.
     """
     return compact_fold_store(
         sketch_path,
@@ -195,53 +117,3 @@ def compact_store(spark: SparkSession, sketch_path: str) -> int:
             )
         ),
     )
-
-
-def compact_fold_store(store_path: str, spark: SparkSession, fold) -> int:
-    """The marker-protocol fold, fold-function generic: ``fold(rows)``
-    receives every base+epoch row (minus nothing — epoch_id included) and
-    must return the new O(1) base frame WITHOUT epoch_id. Used by the
-    sketch store (approx_top_k_combine), and by any sum-/count-mergeable
-    counter store (groupBy + sum) — the protocol (stage to the scratch
-    epoch, atomic marker, prune-and-swap via ``_recover_compaction``) is
-    identical and NOT safe to reimplement per store: a fold without the
-    marker double-counts on crash for any non-DISTINCT merge.
-    """
-    import json
-
-    from pyspark.errors import AnalysisException
-
-    _recover_compaction(store_path)
-    try:
-        store = spark.read.parquet(store_path)
-    except AnalysisException as exc:
-        # a store that never accumulated a fact (missing path, or only
-        # zero-partition empty-frame writes) has nothing to fold
-        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            raise
-        return 0
-    epochs = [
-        r["epoch_id"]
-        for r in store.select("epoch_id").distinct().collect()
-        if r["epoch_id"] != -1
-    ]
-    if not epochs:
-        return 0
-    base = fold(store).withColumn("epoch_id", F.lit(_TMP_EPOCH))
-    # materialize BEFORE overwriting: the fold must not lazily re-read
-    # partitions mid-swap
-    base = base.localCheckpoint(eager=True)
-    (
-        base.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("epoch_id")
-        .parquet(store_path)
-    )
-    # marker install is ATOMIC (tmp write + rename): a crash mid-write can
-    # never leave a half-written marker that wedges recovery
-    marker = os.path.join(store_path, _INFLIGHT_MARKER)
-    with open(marker + ".tmp", "w") as fh:
-        json.dump({"epochs": [int(e) for e in epochs]}, fh)
-    os.rename(marker + ".tmp", marker)
-    _recover_compaction(store_path)  # finalize: prune + swap + drop marker
-    return len(epochs)

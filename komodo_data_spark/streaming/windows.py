@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from komodo_data_spark.streaming.stores import file_stream
+
 #: Canonical (normalized) events stream schema: ts as epoch-nanos long, the
 #: form the engine itself writes (sources.tables.normalize_events output).
 EVENTS_STREAM_SCHEMA = (
@@ -39,21 +41,15 @@ def events_stream(
     """File-source stream over an events parquet directory, with the same
     derived ``ts``/``ts_ms``/``ts_ts`` columns as sources.tables.load_events.
 
-    Streams must declare their schema up front, but the driver testdata has
-    shipped ``ts`` under two physical types (nanos-long and timestamp[us]);
-    a one-time batch footer peek picks up whichever is on disk, then
-    normalize_events canonicalizes — driver-side metadata only, no data scan.
+    The driver testdata has shipped ``ts`` under two physical types
+    (nanos-long and timestamp[us]); the file source's footer peek picks up
+    whichever is on disk, then normalize_events canonicalizes.
     ``max_files_per_trigger`` sets the micro-batch granularity (1 = one
     batch per arrival file, the shape the latency bench measures).
     """
     from komodo_data_spark.sources.tables import normalize_events
 
-    schema = spark.read.parquet(events_dir).schema
-    return normalize_events(
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(events_dir)
-    )
+    return normalize_events(file_stream(spark, events_dir, max_files_per_trigger))
 
 
 def hourly_rollup(events: DataFrame) -> DataFrame:

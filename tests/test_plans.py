@@ -268,7 +268,7 @@ def test_capped_twins_use_equi_joins_only(spark):
 
 # --------------------------------------------------------------------------
 # broadcast-ceiling degradation (round-11 verdict ask #4): at sf0.01 every
-# unhinted join broadcasts, so PLANS.md shows zero sort-merge joins — these
+# unhinted join broadcasts, so plan audits show zero sort-merge joins — these
 # pins prove the big joins degrade to SMJ (never BroadcastNestedLoop) when
 # the small side outgrows the broadcast ceiling, by disabling auto-broadcast
 # outright, and that AQE's skew handling stays armed underneath.

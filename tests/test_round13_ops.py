@@ -7,7 +7,8 @@
 2. The map-side Lloyd argmin (array_min over the broadcast candidate
    array) must keep producing the exact assignment the old shuffle
    argmin produced — pinned structurally (no vec_id exchange in the
-   assignment plan) and behaviorally via the kmeans digest.
+   assignment plan) and behaviorally via the kmeans digest. An empty
+   model gives zero rows, as the old shuffle argmin did.
 """
 
 from __future__ import annotations
@@ -93,3 +94,21 @@ def test_kmeans_assign_is_map_side(spark):
     rows = sim.kmeans_clusters(spark, SF).collect()
     assert len(rows) == sim.KMEANS_K
     assert sum(r["n_members"] for r in rows) > 0
+
+
+def test_empty_model_assigns_no_rows(spark):
+    """An empty centroid frame or codebook yields ZERO rows from every
+    shared argmin helper — never vectors with a NULL cid or an empty
+    reconstruction that would flow on silently."""
+    from komodo_data_spark.operators import similarity as sim
+
+    dim = sim.PQ_M * sim.PQ_SUBDIM
+    v = spark.createDataFrame([(1, [0.5] * dim)], "vec_id long, e array<double>")
+    sub = spark.createDataFrame(
+        [(1, 0, [0.5] * sim.PQ_SUBDIM)], "vec_id long, m int, s array<double>"
+    )
+    no_cents = spark.createDataFrame([], "cid long, ce array<double>")
+    no_codebook = spark.createDataFrame([], "m int, cid long, ce array<double>")
+    assert sim._kmeans_assign(v, no_cents).count() == 0
+    assert sim._pq_assign(sub, no_codebook).count() == 0
+    assert sim._pq_reconstruct_inline(v, no_codebook).count() == 0

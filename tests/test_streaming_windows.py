@@ -723,10 +723,15 @@ def test_incremental_dedup_store_read_failure_fails_batch(spark, tmp_path):
     but cannot be read (corrupt footer, IO error) must raise so foreachBatch
     retries the epoch — swallowing it would permanently drop every
     new-vs-history candidate pair for that epoch once the checkpoint
-    commits."""
+    commits. The shared reader every store goes through
+    (``stores.read_store``) is pinned directly on the same three shapes."""
     import pytest
 
     from komodo_data_spark.streaming.dedup_incremental import detect_batch
+    from komodo_data_spark.streaming.stores import (
+        overwrite_partitions,
+        read_store,
+    )
 
     docs = spark.createDataFrame(
         [(1, "the quick brown fox jumps over the lazy dog again and again"),
@@ -744,6 +749,17 @@ def test_incremental_dedup_store_read_failure_fails_batch(spark, tmp_path):
     (bad_store / "part-00000.parquet").write_bytes(b"not a parquet file")
     with pytest.raises(Exception):
         detect_batch(spark, docs, 1, str(bad_store), pairs)
+
+    # the shared reader: missing path and an empty-frame partitioned
+    # write both mean "never accumulated a fact"; a corrupt file raises
+    assert read_store(spark, str(tmp_path / "never_written")) is None
+    empty_store = str(tmp_path / "empty_store")
+    overwrite_partitions(
+        spark.createDataFrame([], "k long, epoch_id int"), empty_store, "epoch_id"
+    )
+    assert read_store(spark, empty_store) is None
+    with pytest.raises(Exception):
+        read_store(spark, str(bad_store))
 
 
 def test_streaming_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_path):
