@@ -35,6 +35,7 @@ from komodo_data_spark.functions.text_features import (
     sql_tokens,
     tokens,
 )
+from komodo_data_spark.operators.model_memo import shared_fit
 from komodo_data_spark.sources.tables import load_spread, load_table
 
 #: MinHash/LSH geometry: 12 hashes in 4 bands of 3. With Jaccard j the
@@ -542,56 +543,51 @@ def dedup_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_exact_pairs_shared(spark, sf_dir)
 
 
+@shared_fit("ngram_exact_pairs")
 def _ngram_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact all-pairs shingle-Jaccard detection
     (doc_i, doc_j, jaccard), ONE self-join per session — read by
     ``dedup_ngram_pairs`` and as the ground-truth side of
     ``dedup_minhash_recall``."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        # Carry each side's set size on the exploded rows: the pair
-        # groupBy can then compute Jaccard directly (first(n) is constant
-        # within a group), avoiding two extra joins back to a sizes
-        # frame. Materialize the FLAT form — see _doc_postings for why
-        # the array form is the wrong one. EAGER (was lazy): both
-        # self-join sides read the frame as concurrent AQE stage jobs
-        # and re-ran the explode per side under lazy materialization.
-        # Blocks are released by the ContextCleaner when the result
-        # frame is GC'd (test_dedup_detectors_leave_no_persistent_blocks).
-        e = exploded(
-            _doc_shingles(spark, sf_dir),
-            F.col("sh"),
-            "g",
-            "doc_id",
-            F.size("sh").alias("n_sh"),
-        ).localCheckpoint(eager=True)
-        return (
-            e.alias("a")
-            .join(e.alias("b"), "g")
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(
-                F.col("a.doc_id").alias("doc_i"),
-                F.col("b.doc_id").alias("doc_j"),
-            )
-            .agg(
-                F.count(F.lit(1)).alias("common"),
-                F.first("a.n_sh").alias("n_i"),
-                F.first("b.n_sh").alias("n_j"),
-            )
-            .select(
-                "doc_i",
-                "doc_j",
-                (
-                    F.col("common").cast("double")
-                    / (F.col("n_i") + F.col("n_j") - F.col("common"))
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-            .localCheckpoint(eager=True)
+    # Carry each side's set size on the exploded rows: the pair groupBy
+    # can then compute Jaccard directly (first(n) is constant within a
+    # group), avoiding two extra joins back to a sizes frame. Materialize
+    # the FLAT form — see _doc_postings for why the array form is the
+    # wrong one. EAGER (was lazy): both self-join sides read the frame as
+    # concurrent AQE stage jobs and re-ran the explode per side under
+    # lazy materialization. Blocks are released by the ContextCleaner
+    # when the result frame is GC'd
+    # (test_dedup_detectors_leave_no_persistent_blocks).
+    e = exploded(
+        _doc_shingles(spark, sf_dir),
+        F.col("sh"),
+        "g",
+        "doc_id",
+        F.size("sh").alias("n_sh"),
+    ).localCheckpoint(eager=True)
+    return (
+        e.alias("a")
+        .join(e.alias("b"), "g")
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("doc_i"),
+            F.col("b.doc_id").alias("doc_j"),
         )
-
-    return session_model(spark, "ngram_exact_pairs", (sf_dir,), fit)
+        .agg(
+            F.count(F.lit(1)).alias("common"),
+            F.first("a.n_sh").alias("n_i"),
+            F.first("b.n_sh").alias("n_j"),
+        )
+        .select(
+            "doc_i",
+            "doc_j",
+            (
+                F.col("common").cast("double")
+                / (F.col("n_i") + F.col("n_j") - F.col("common"))
+            ).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
 
 
 def dedup_ngram_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -743,15 +739,12 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_pairs_shared(spark, sf_dir)
 
 
+@shared_fit("minhash_pairs")
 def minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The verified near-dup pair list, ONE detection per session: six
-    downstream consumers (the clustering family, split leakage, keeper
-    selection, source overlap, corpus splits) each re-ran the full
-    MinHash pipeline — and each left its own `.cache()` behind. The
-    detection is deterministic in sf_dir and its output is pairs-sized
-    (≪ corpus), so the memoized eager checkpoint is both tiny and
-    frame-identical to a re-detection; the postings cache the pipeline
-    needs internally is released once the checkpoint materializes.
+    """The verified near-dup pair list, ONE detection per session, shared
+    by six downstream consumers (the clustering family, split leakage,
+    keeper selection, source overlap, corpus splits); the output is
+    pairs-sized (≪ corpus).
 
     Candidate generation joins on (band_id, band_hash) — expected O(1)
     occupancy per bucket, so the join is linear, not quadratic;
@@ -762,22 +755,15 @@ def minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     12 interpreted higher-order array_min passes per row; the grouped
     form is one shuffle on doc_id and ~4× faster at sf0.1. Values are
     identical."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def detect():
-        # EAGER: the detection action reads postings from four subtrees
-        # (signature aggregate, both verify join sides, the size
-        # aggregate) that AQE submits as concurrent stage jobs — under a
-        # lazy cache() they raced on the unpopulated cache and re-ran
-        # the corpus shingle explode up to 4x (measured: job-time sum
-        # 12.9 s vs 4.9 s wall on the first consumer). Same storage
-        # footprint as the cache it replaces, GC-released.
-        posts = _doc_postings(spark, sf_dir).localCheckpoint(eager=True)
-        return _verify_jaccard(
-            posts, _band_candidates(bands_of(posts))
-        ).localCheckpoint(eager=True)
-
-    return session_model(spark, "minhash_pairs", (sf_dir,), detect)
+    # EAGER: the detection action reads postings from four subtrees
+    # (signature aggregate, both verify join sides, the size aggregate)
+    # that AQE submits as concurrent stage jobs — under a lazy cache()
+    # they raced on the unpopulated cache and re-ran the corpus shingle
+    # explode up to 4x (measured: job-time sum 12.9 s vs 4.9 s wall on
+    # the first consumer). Same storage footprint as the cache it
+    # replaces, GC-released.
+    posts = _doc_postings(spark, sf_dir).localCheckpoint(eager=True)
+    return _verify_jaccard(posts, _band_candidates(bands_of(posts)))
 
 
 def dedup_minhash_lsh_oracle() -> str:
@@ -1565,6 +1551,7 @@ def _matmul_hits(l_ids, l_mat, r_ids, r_mat, diagonal: bool):
     )
 
 
+@shared_fit("emb_exact_pairs")
 def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector near-dup: pairs with cosine ≥ 0.45 over array<float>.
 
@@ -1581,25 +1568,18 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-bucket first (dedup_embedding_lsh below): candidate volume drops
     2^bits-fold and the same per-bucket matmul applies.
 
-    The detection is read through the session memo: the recall eval
-    (``dedup_embedding_recall``) scores exactly this pair set, so the
-    two queries share one checkpointed detection per session.
+    A shared fit: the recall eval (``dedup_embedding_recall``) scores
+    exactly this pair set.
     """
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        # NULL vectors cannot be near anything (their cosine is NULL,
-        # which never clears the threshold — same in the oracle); drop
-        # them BEFORE the pandas stage, where np.stack over a None would
-        # kill the task
-        v = (
-            load_spread(spark, sf_dir, "embeddings")
-            .filter(F.col("embedding").isNotNull())
-            .select("vec_id", "embedding")
-        )
-        return _embedding_pairs_from(v).localCheckpoint(eager=True)
-
-    return session_model(spark, "emb_exact_pairs", (sf_dir,), fit)
+    # NULL vectors cannot be near anything (their cosine is NULL, which
+    # never clears the threshold — same in the oracle); drop them BEFORE
+    # the pandas stage, where np.stack over a None would kill the task
+    v = (
+        load_spread(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding")
+    )
+    return _embedding_pairs_from(v)
 
 
 def _embedding_pairs_from(
@@ -1671,6 +1651,7 @@ EMB_LSH_BITS = 6
 EMB_LSH_TASK_ROWS = 4096
 
 
+@shared_fit("emb_lsh_pairs")
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate cosine near-dup: candidates restricted to the same
     sign-bit LSH bucket (bit i = sign of dim i), then an exact BLAS matmul
@@ -1691,6 +1672,8 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall is tunable via bits/multiprobe (see knn_lsh_multiprobe); the
     oracle mirrors the bucket restriction exactly (routing never changes
     the result set), so correctness is deterministic.
+
+    A shared fit: the recall eval scores exactly this pair set.
     """
     # NULL vectors cannot be near anything (their cosine is NULL, which
     # never clears the threshold — same in the oracle); drop them BEFORE
@@ -1698,19 +1681,12 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Plain load_table, not load_spread: the per-row work all happens
     # AFTER the bkt exchange (which already distributes the vectors), so
     # a round-robin pre-spread is a pure extra materialization here.
-    # Read through the session memo: the recall eval scores exactly this
-    # pair set, so the two queries share one detection per session.
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        v = (
-            load_table(spark, sf_dir, "embeddings")
-            .filter(F.col("embedding").isNotNull())
-            .select("vec_id", "embedding")
-        )
-        return _embedding_lsh_from(v).localCheckpoint(eager=True)
-
-    return session_model(spark, "emb_lsh_pairs", (sf_dir,), fit)
+    v = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", "embedding")
+    )
+    return _embedding_lsh_from(v)
 
 
 def _embedding_lsh_from(v: DataFrame) -> DataFrame:
@@ -2346,28 +2322,20 @@ def fuzzy_prefix_candidate_volume(spark: SparkSession, sf_dir: str) -> int:
     return join_candidate_volume(seg, ["l", "i", "s"], probe)
 
 
+@shared_fit("fuzzy_titles")
 def _fuzzy_titles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, title) frame every PassJoin consumer explodes, ONE
-    scan+tokenize per session (eager checkpoint through the session
-    memo): the exact detector, the capped twin, and the recall eval each
-    re-ran the scan, the tokenizer, and the title slice."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        return (
-            load_spread(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                F.concat_ws(
-                    " ", F.slice(tokens(), 1, FUZZY_PREFIX_TOKENS)
-                ).alias("title"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    return session_model(spark, "fuzzy_titles", (sf_dir,), fit)
+    scan+tokenize per session, shared by the exact detector, the capped
+    twin, and the recall eval."""
+    return load_spread(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat_ws(" ", F.slice(tokens(), 1, FUZZY_PREFIX_TOKENS)).alias(
+            "title"
+        ),
+    )
 
 
+@shared_fit("fuzzy_exact_pairs")
 def _fuzzy_exact_pairs_shared(
     spark: SparkSession, sf_dir: str, budget: int | None
 ) -> DataFrame:
@@ -2377,40 +2345,33 @@ def _fuzzy_exact_pairs_shared(
     detection the registry already ran; it does not re-detect). The
     candidate-volume guard runs inside the fit with the caller's budget,
     so a trip raises without memoizing anything."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        d = _fuzzy_titles_shared(spark, sf_dir)
-        seg, probe = _passjoin_frames(d)
-        if budget is not None:
-            est = join_candidate_volume(seg, ["l", "i", "s"], probe)
-            if est > budget:
-                raise CandidateVolumeError(
-                    "dedup_fuzzy_prefix",
-                    est,
-                    budget,
-                    "title space is adversarially dense (one template "
-                    "within the edit threshold); dedup exact titles first "
-                    "or raise the budget",
-                )
-        # verify FIRST, deduplicate AFTER — see dedup_fuzzy_prefix's note
-        return (
-            seg.alias("a")
-            .join(probe.alias("b"), ["l", "i", "s"])
-            .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("doc_i"),
-                F.greatest("a.doc_id", "b.doc_id").alias("doc_j"),
-                F.levenshtein(
-                    F.col("a.title"), F.col("b.title"), FUZZY_MAX_DIST
-                ).alias("edit_dist"),
+    seg, probe = _passjoin_frames(_fuzzy_titles_shared(spark, sf_dir))
+    if budget is not None:
+        est = join_candidate_volume(seg, ["l", "i", "s"], probe)
+        if est > budget:
+            raise CandidateVolumeError(
+                "dedup_fuzzy_prefix",
+                est,
+                budget,
+                "title space is adversarially dense (one template within "
+                "the edit threshold); dedup exact titles first or raise "
+                "the budget",
             )
-            .filter(F.col("edit_dist") >= 0)
-            .distinct()
-            .localCheckpoint(eager=True)
+    # verify FIRST, deduplicate AFTER — see dedup_fuzzy_prefix's note
+    return (
+        seg.alias("a")
+        .join(probe.alias("b"), ["l", "i", "s"])
+        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
+        .select(
+            F.least("a.doc_id", "b.doc_id").alias("doc_i"),
+            F.greatest("a.doc_id", "b.doc_id").alias("doc_j"),
+            F.levenshtein(
+                F.col("a.title"), F.col("b.title"), FUZZY_MAX_DIST
+            ).alias("edit_dist"),
         )
-
-    return session_model(spark, "fuzzy_exact_pairs", (sf_dir, budget), fit)
+        .filter(F.col("edit_dist") >= 0)
+        .distinct()
+    )
 
 
 def dedup_fuzzy_prefix(
@@ -2524,47 +2485,40 @@ def dedup_fuzzy_prefix_capped(
     return _fuzzy_capped_pairs_shared(spark, sf_dir, key_cap)
 
 
+@shared_fit("fuzzy_capped_pairs")
 def _fuzzy_capped_pairs_shared(
     spark: SparkSession, sf_dir: str, key_cap: int
 ) -> DataFrame:
     """The capped PassJoin pair list, ONE detection per session per cap —
     read by ``dedup_fuzzy_prefix_capped`` and as the detector side of
     ``dedup_fuzzy_capped_recall``."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        seg, probe = _passjoin_frames(_fuzzy_titles_shared(spark, sf_dir))
-        keys = ["l", "i", "s"]
-        u = seg.select(
-            *keys, F.lit(1).alias("na"), F.lit(0).alias("nb")
-        ).unionByName(
-            probe.select(*keys, F.lit(0).alias("na"), F.lit(1).alias("nb"))
+    seg, probe = _passjoin_frames(_fuzzy_titles_shared(spark, sf_dir))
+    keys = ["l", "i", "s"]
+    u = seg.select(*keys, F.lit(1).alias("na"), F.lit(0).alias("nb")).unionByName(
+        probe.select(*keys, F.lit(0).alias("na"), F.lit(1).alias("nb"))
+    )
+    ok = (
+        u.groupBy(*keys)
+        .agg(F.sum("na").alias("ca"), F.sum("nb").alias("cb"))
+        .filter((F.col("ca") <= key_cap) & (F.col("cb") <= key_cap))
+        .select(*keys)
+    )
+    seg_r = seg.join(ok, keys, "left_semi")
+    probe_r = probe.join(ok, keys, "left_semi")
+    return (
+        seg_r.alias("a")
+        .join(probe_r.alias("b"), keys)
+        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
+        .select(
+            F.least("a.doc_id", "b.doc_id").alias("doc_i"),
+            F.greatest("a.doc_id", "b.doc_id").alias("doc_j"),
+            F.levenshtein(
+                F.col("a.title"), F.col("b.title"), FUZZY_MAX_DIST
+            ).alias("edit_dist"),
         )
-        ok = (
-            u.groupBy(*keys)
-            .agg(F.sum("na").alias("ca"), F.sum("nb").alias("cb"))
-            .filter((F.col("ca") <= key_cap) & (F.col("cb") <= key_cap))
-            .select(*keys)
-        )
-        seg_r = seg.join(ok, keys, "left_semi")
-        probe_r = probe.join(ok, keys, "left_semi")
-        return (
-            seg_r.alias("a")
-            .join(probe_r.alias("b"), keys)
-            .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(
-                F.least("a.doc_id", "b.doc_id").alias("doc_i"),
-                F.greatest("a.doc_id", "b.doc_id").alias("doc_j"),
-                F.levenshtein(
-                    F.col("a.title"), F.col("b.title"), FUZZY_MAX_DIST
-                ).alias("edit_dist"),
-            )
-            .filter(F.col("edit_dist") >= 0)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    return session_model(spark, "fuzzy_capped_pairs", (sf_dir, key_cap), fit)
+        .filter(F.col("edit_dist") >= 0)
+        .distinct()
+    )
 
 
 def dedup_fuzzy_prefix_capped_oracle(key_cap: int = FUZZY_KEY_CAP) -> str:
@@ -3067,35 +3021,32 @@ def dedup_minhash_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _detector_recall_counts(truth, lsh, "n_lsh_pairs", release=(lsh,))
 
 
+@shared_fit("recall_slice")
 def _recall_slice_shared(
     spark: SparkSession,
     sf_dir: str,
     target: int = RECALL_SAMPLE_TARGET_DOCS,
 ) -> tuple:
     """(sliced postings, exact-Jaccard truth pairs) for the deterministic
-    hash-bucket eval slice, ONE derivation per session (eager
-    checkpoints through the session memo): every text recall twin gates
-    the same ~``target``-doc slice and self-joins the same quadratic
-    ground truth — only the DETECTOR under evaluation differs."""
-    from komodo_data_spark.operators.model_memo import session_model
+    hash-bucket eval slice, ONE derivation per session: every text
+    recall twin gates the same ~``target``-doc slice and self-joins the
+    same quadratic ground truth — only the DETECTOR under evaluation
+    differs."""
     from komodo_data_spark.operators.pipeline_ops import _bucket_col
 
-    def fit():
-        n_docs = load_table(spark, sf_dir, "documents").count()
-        # The gate is on doc_id only, so it commutes with shingling:
-        # Catalyst pushes it below the explode to the scan side.
-        posts = (
-            _doc_postings(spark, sf_dir)
-            .filter(_bucket_col() < _recall_sample_buckets(n_docs, target))
-            # the slice is budget-fixed: O(slice) tasks downstream, not
-            # corpus scan width (see EVAL_SLICE_PARTITIONS)
-            .repartition(EVAL_SLICE_PARTITIONS)
-            .localCheckpoint(eager=True)
-        )
-        truth = _truth_pairs_from(posts).localCheckpoint(eager=True)
-        return posts, truth
-
-    return session_model(spark, "recall_slice", (sf_dir, target), fit)
+    n_docs = load_table(spark, sf_dir, "documents").count()
+    # The gate is on doc_id only, so it commutes with shingling: Catalyst
+    # pushes it below the explode to the scan side.
+    posts = (
+        _doc_postings(spark, sf_dir)
+        .filter(_bucket_col() < _recall_sample_buckets(n_docs, target))
+        # the slice is budget-fixed: O(slice) tasks downstream, not
+        # corpus scan width (see EVAL_SLICE_PARTITIONS)
+        .repartition(EVAL_SLICE_PARTITIONS)
+        # read twice: the truth self-join here and every detector
+        .localCheckpoint(eager=True)
+    )
+    return posts, _truth_pairs_from(posts)
 
 
 def _detector_recall_counts(

@@ -26,36 +26,28 @@ from komodo_data_spark.operators.events_analytics import (
     copresence_pairs,
     copresence_pairs_oracle,
 )
+from komodo_data_spark.operators.model_memo import shared_fit
 
 PAGERANK_ITERS = 3
 PAGERANK_D = 0.85
 
 
+@shared_fit("user_edges")
 def _user_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct undirected co-presence edges, normalized to u < v.
 
-    Materialized eagerly (localCheckpoint): every consumer references the
-    edge list from several plan branches (symmetric union, 3-way triangle
-    join, per-iteration rank joins), and a lazy cache would recompute the
-    whole copresence pipeline once per branch inside the first job.
-    Read through the session memo: SIX graph operators (components,
-    pagerank, reachability, triangles, k-core, LPA) consume the same
-    deterministic pairs-sized edge list, and each previously re-ran the
-    events scan + time-bucket self-join + distinct to build it."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        cp = copresence_pairs(spark, sf_dir)
-        return (
-            cp.select(
-                F.least("user_i", "user_j").alias("u"),
-                F.greatest("user_i", "user_j").alias("v"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
+    A shared fit: SIX graph operators (components, pagerank,
+    reachability, triangles, k-core, LPA) consume the same pairs-sized
+    edge list, each from several plan branches (symmetric union, 3-way
+    triangle join, per-iteration rank joins)."""
+    return (
+        copresence_pairs(spark, sf_dir)
+        .select(
+            F.least("user_i", "user_j").alias("u"),
+            F.greatest("user_i", "user_j").alias("v"),
         )
-
-    return session_model(spark, "user_edges", (sf_dir,), fit)
+        .distinct()
+    )
 
 
 def _sql_user_edges() -> str:

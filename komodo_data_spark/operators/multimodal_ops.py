@@ -36,6 +36,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from komodo_data_spark.operators.model_memo import shared_fit
 from komodo_data_spark.sources.tables import load_table
 
 FRAME_BYTES = 64  # fake "frame" = 64-byte chunk
@@ -520,31 +521,24 @@ MEDIA_HAMMING_MAX = 2
 MEDIA_SEG_CAP = 256
 
 
+@shared_fit("media_simhash_sigs")
 def _media_sigs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full-corpus (doc_id, simhash) frame-gram signature frame, ONE
     vote aggregate per session: the expensive part of every media
     SimHash query is the md5-per-gram exploded-vote aggregate over the
-    whole corpus, and three registry queries (exact pairs, capped pairs,
-    the capped-recall eval) each re-ran it. The signature is
-    deterministic in sf_dir, so the memoized eager checkpoint is
-    frame-identical to a re-aggregation (same ``session_model`` contract
-    as ``dedup.minhash_pairs_shared``)."""
+    whole corpus, shared by three registry queries (exact pairs, capped
+    pairs, the capped-recall eval)."""
     from komodo_data_spark.operators.dedup import _simhash_signatures
-    from komodo_data_spark.operators.model_memo import session_model
 
-    def fit():
-        d = load_table(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull() & (F.length("text") > 0)
-        )
-        return _simhash_signatures(
-            d.withColumn("toks", _media_gram_toks()).filter(
-                F.size("toks") > 0
-            )
-        ).localCheckpoint(eager=True)
-
-    return session_model(spark, "media_simhash_sigs", (sf_dir,), fit)
+    d = load_table(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.length("text") > 0)
+    )
+    return _simhash_signatures(
+        d.withColumn("toks", _media_gram_toks()).filter(F.size("toks") > 0)
+    )
 
 
+@shared_fit("media_simhash_exact_pairs")
 def _media_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The exact pigeonhole pair list (doc_i, doc_j, hamming), ONE join
     per session — read by ``media_simhash_pairs`` and as the truth side
@@ -553,18 +547,15 @@ def _media_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     (candidate-volume budget) runs inside the fit, so whichever consumer
     triggers the detection gets the registry refusal semantics."""
     from komodo_data_spark.operators.dedup import simhash_pigeonhole_pairs
-    from komodo_data_spark.operators.model_memo import session_model
 
-    def fit():
-        return simhash_pigeonhole_pairs(
-            _media_sigs_shared(spark, sf_dir),
-            bits=MEDIA_SIMHASH_BITS,
-            hmax=MEDIA_HAMMING_MAX,
-        ).localCheckpoint(eager=True)
-
-    return session_model(spark, "media_simhash_exact_pairs", (sf_dir,), fit)
+    return simhash_pigeonhole_pairs(
+        _media_sigs_shared(spark, sf_dir),
+        bits=MEDIA_SIMHASH_BITS,
+        hmax=MEDIA_HAMMING_MAX,
+    )
 
 
+@shared_fit("media_simhash_capped_pairs")
 def _media_capped_pairs_shared(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -574,18 +565,12 @@ def _media_capped_pairs_shared(
     from komodo_data_spark.operators.dedup import (
         simhash_pigeonhole_pairs_capped,
     )
-    from komodo_data_spark.operators.model_memo import session_model
 
-    def fit():
-        return simhash_pigeonhole_pairs_capped(
-            _media_sigs_shared(spark, sf_dir),
-            bits=MEDIA_SIMHASH_BITS,
-            hmax=MEDIA_HAMMING_MAX,
-            key_cap=MEDIA_SEG_CAP,
-        ).localCheckpoint(eager=True)
-
-    return session_model(
-        spark, "media_simhash_capped_pairs", (sf_dir, MEDIA_SEG_CAP), fit
+    return simhash_pigeonhole_pairs_capped(
+        _media_sigs_shared(spark, sf_dir),
+        bits=MEDIA_SIMHASH_BITS,
+        hmax=MEDIA_HAMMING_MAX,
+        key_cap=MEDIA_SEG_CAP,
     )
 
 

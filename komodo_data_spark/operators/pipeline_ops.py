@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.text_features import sql_tokens, tokens
+from komodo_data_spark.operators.model_memo import shared_fit
 from komodo_data_spark.sources.tables import load_events, load_table
 
 # --------------------------------------------------------------------------
@@ -3527,6 +3528,7 @@ def _dsir_scores(keyed: DataFrame, llr: DataFrame) -> DataFrame:
     )
 
 
+@shared_fit("dsir_weights")
 def _dsir_weights_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared DSIR scorer: hashed-unigram importance weights of every RAW
     document (source != DSIR_TARGET_SOURCE) against the target domain.
@@ -3542,25 +3544,14 @@ def _dsir_weights_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     total (fit, score), which is DSIR's own structure — and exactly the
     frozen-model shape the streaming gate replays per micro-batch.
 
-    Read through the session memo: the weights frame is deterministic in
-    sf_dir and doc-sized, and both ``docs_dsir_weights`` and
-    ``docs_dsir_resample`` consume it — each previously re-ran the fit
-    and the scoring pass."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        d = load_table(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull()
-        )
-        llr = dsir_fit_llr(d)
-        raw = d.filter(F.col("source") != DSIR_TARGET_SOURCE)
-        return (
-            _dsir_scores(raw.withColumn("__uid", F.col("doc_id")), llr)
-            .select(F.col("__uid").alias("doc_id"), "n_toks", "log_weight")
-            .localCheckpoint(eager=True)
-        )
-
-    return session_model(spark, "dsir_weights", (sf_dir,), fit)
+    A shared fit: the weights frame is doc-sized, and both
+    ``docs_dsir_weights`` and ``docs_dsir_resample`` consume it."""
+    d = load_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    llr = dsir_fit_llr(d)
+    raw = d.filter(F.col("source") != DSIR_TARGET_SOURCE)
+    return _dsir_scores(raw.withColumn("__uid", F.col("doc_id")), llr).select(
+        F.col("__uid").alias("doc_id"), "n_toks", "log_weight"
+    )
 
 
 def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

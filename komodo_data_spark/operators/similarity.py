@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.operators.model_memo import shared_fit
 from komodo_data_spark.sources.tables import load_table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -797,25 +798,13 @@ def _kmeans_fit(spark: SparkSession, sf_dir: str):
     return centroids, assign(centroids)
 
 
+@shared_fit("kmeans")
 def _kmeans_fit_shared(spark: SparkSession, sf_dir: str):
-    """``_kmeans_fit`` memoized per session: three consumers
-    (``kmeans_clusters``, ``dedup_semantic``, ``_ivfpq_fit``) each
-    re-ran the Lloyd chain over the same corpus. The fit is
-    deterministic in sf_dir (first-K init, fixed iterations), so the
-    memoized (centroids, assignment) checkpoints are frame-identical to
-    a refit; both frames are the standard build-once index artifacts
-    (centroids KMEANS_K rows; the assignment one narrow row per
-    vector)."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        centroids, assigned = _kmeans_fit(spark, sf_dir)
-        return (
-            centroids.localCheckpoint(eager=True),
-            assigned.localCheckpoint(eager=True),
-        )
-
-    return session_model(spark, "kmeans", (sf_dir,), fit)
+    """``_kmeans_fit`` as a shared fit of three consumers
+    (``kmeans_clusters``, ``dedup_semantic``, ``_ivfpq_fit``): the
+    standard build-once index artifacts (centroids KMEANS_K rows; the
+    assignment one narrow row per vector)."""
+    return _kmeans_fit(spark, sf_dir)
 
 
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1370,7 +1359,7 @@ def _pq_lloyd(sub: DataFrame, k: int = PQ_K):
     PQ_K vectors' subvectors, PQ_ITERS fixed Lloyd iterations — the
     kmeans_clusters unroll, run over ALL subspaces in ONE pipeline).
     Returns (codebooks(m, cid, ce), codes(vec_id, m, cid, s)). Fed raw
-    subvectors by ``_pq_fit`` (flat PQ) and coarse-cell RESIDUAL
+    subvectors by ``_pq_fit_shared`` (flat PQ) and coarse-cell RESIDUAL
     subvectors by ``_ivfpq_fit`` (the FAISS IVFPQ composition).
 
     Scale design: every Lloyd iteration is ONE broadcast join against the
@@ -1517,28 +1506,13 @@ def _pq_reconstruct(codes: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def _pq_fit(spark: SparkSession, sf_dir: str):
-    """Flat PQ fit over the raw embedding subvectors (see _pq_lloyd)."""
+@shared_fit("pq_flat")
+def _pq_fit_shared(spark: SparkSession, sf_dir: str):
+    """Flat PQ fit over the raw embedding subvectors (see _pq_lloyd):
+    (codebooks, codes), a shared fit of ``knn_pq_adc``, its recall twin,
+    and the publish path — one Lloyd fit, every consumer."""
     v = _vectors(spark, sf_dir).select("vec_id", "e")
     return _pq_lloyd(_pq_subvectors(v))
-
-
-def _pq_fit_shared(spark: SparkSession, sf_dir: str):
-    """``_pq_fit`` memoized per session (round-11 verdict ask #1):
-    ``knn_pq_adc``, its recall twin, and the publish path consume the
-    SAME codebook — one Lloyd fit, every consumer. The codebooks are
-    already checkpointed by ``_pq_lloyd``; the code assignment is
-    checkpointed here so later consumers re-read the encoded corpus
-    instead of re-running the assign. Deterministic in sf_dir (fixed
-    init, fixed iterations), so a memo hit is frame-identical to a
-    refit — the ``_ivfpq_fit_shared`` contract one section below."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        cents, codes = _pq_fit(spark, sf_dir)
-        return cents, codes.localCheckpoint(eager=True)
-
-    return session_model(spark, "pq_flat", (sf_dir,), fit)
 
 
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1808,29 +1782,12 @@ def _ivfpq_fit(spark: SparkSession, sf_dir: str):
     return cells, picked.select("vec_id", "cell_id"), cents, codes
 
 
+@shared_fit("ivfpq")
 def _ivfpq_fit_shared(spark: SparkSession, sf_dir: str):
-    """``_ivfpq_fit`` memoized per session (round-10 verdict ask #5):
-    ``knn_ivfpq_adc`` and ``knn_ivfpq_recall`` consume the SAME index —
-    one fit, both queries. The model frames (cells, codebooks) are
-    already checkpointed by the fit; the index frames (assignments,
-    codes) are checkpointed here so the second consumer re-reads the
-    built index instead of re-running coarse assignment + residual
-    coding — the in-session form of what ``publish_ivfpq_model`` +
-    the PQ store do across sessions. The fit is deterministic in
-    sf_dir (fixed init, fixed iterations), so a memo hit is
-    frame-identical to a refit."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        cells, picked, cents, codes = _ivfpq_fit(spark, sf_dir)
-        return (
-            cells,
-            picked.localCheckpoint(eager=True),
-            cents,
-            codes.localCheckpoint(eager=True),
-        )
-
-    return session_model(spark, "ivfpq", (sf_dir,), fit)
+    """``_ivfpq_fit`` as a shared fit: ``knn_ivfpq_adc`` and
+    ``knn_ivfpq_recall`` consume the SAME index — the in-session form of
+    what ``publish_ivfpq_model`` + the PQ store do across sessions."""
+    return _ivfpq_fit(spark, sf_dir)
 
 
 def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -30,6 +30,7 @@ from komodo_data_spark.functions.text_features import (
     sql_tokens,
     tokens,
 )
+from komodo_data_spark.operators.model_memo import shared_fit
 from komodo_data_spark.sources.tables import load_table
 
 
@@ -675,28 +676,27 @@ def _bpe_corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_fit("bpe_vocab")
+def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The weighted word vocabulary (word, cnt) — a shared fit of the
+    exact trainer, the batched trainer, and the published-model appliers.
+    Materialized because the unrolled rounds would otherwise re-run the
+    corpus explode per round (measured 15 s → 1.3 s at sf0.1)."""
+    return (
+        _bpe_corpus_tokens(spark, sf_dir)
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 def _bpe_corpus_vocab(spark: SparkSession, sf_dir: str):
     """The one corpus-sized BPE stage, shared by the exact and batched
-    trainers: explode tokens, build the weighted word vocabulary
-    (localCheckpointed — without this the unrolled rounds re-run the
-    corpus explode per round, measured 15 s → 1.3 s at sf0.1), and wrap
-    each word into its symbol-string form. Returns (toks, cur)."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    toks = _bpe_corpus_tokens(spark, sf_dir)
-
-    def build():
-        return (
-            toks.groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
-
-    # memoized per session: the weighted vocabulary is input prep shared
-    # by the exact trainer, the batched trainer, and the published-model
-    # appliers — deterministic in sf_dir, so a memo hit ≡ a rebuild
-    vocab = session_model(spark, "bpe_vocab", (sf_dir,), build)
-    return toks, vocab.withColumn("w", _bpe_wrapped(F.col("word")))
+    trainers: the exploded tokens and the weighted word vocabulary
+    (``_bpe_vocab``) with each word wrapped into its symbol-string form.
+    Returns (toks, cur)."""
+    return _bpe_corpus_tokens(spark, sf_dir), _bpe_vocab(
+        spark, sf_dir
+    ).withColumn("w", _bpe_wrapped(F.col("word")))
 
 
 def _bpe_pair_weights(cur) -> DataFrame:
@@ -719,71 +719,51 @@ def _bpe_pair_weights(cur) -> DataFrame:
     )
 
 
+@shared_fit("bpe_exact")
 def _bpe_fit(spark: SparkSession, sf_dir: str):
-    """Shared BPE trainer: returns (corpus tokens, fitted vocabulary with
-    final wrapped symbol strings, learned merge table (rank, a, b)). See
+    """Shared BPE trainer: returns (fitted vocabulary with final wrapped
+    symbol strings, learned merge table (rank, a, b)). See
     ``text_bpe_train_apply`` for the algorithm and scale notes.
 
-    The fit itself — the model, i.e. the vocab-sized fitted symbol
-    strings and the BPE_MERGES-row merge table — is memoized per session
-    (``model_memo`` contract: deterministic in sf_dir, so a memo hit is
-    frame-identical to a refit, pinned by the published≡refit tests).
-    Before the memo, ``text_bpe_train_apply`` and ``text_bpe_merges``
-    each re-ran the identical 8-round training loop (~2 × 16 scheduler
-    round-trips for one deterministic model; the round-10 verdict
-    retired exactly this shape for batched BPE / IVFPQ). The corpus
-    token stream is NOT memoized — it is data-scale, rebuilt lazily per
-    caller."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    toks = _bpe_corpus_tokens(spark, sf_dir)
-
-    def fit():
-        _toks, base = _bpe_corpus_vocab(spark, sf_dir)
-        sep = _BPE_SEP
-        # One TakeOrdered job per round, nothing else: the winning merge
-        # is ONE bounded row (its size is fixed by the algorithm, not the
-        # corpus — the same driver-scalar class as the candidate-volume
-        # guards' .first()), so collecting it and folding it back as a
-        # LITERAL replace keeps the loop-carried vocabulary a chain of
-        # narrow string maps over the one checkpointed vocab. The old
-        # shape paid per round a broadcast build + crossJoin AND an eager
-        # vocab checkpoint job (2 scheduler waves + a materialization,
-        # ~16 jobs for the 8-round fit); measured at sf0.1 the fit fell
-        # ~2x. A missing row (vocabulary out of pairs before BPE_MERGES
-        # rounds) records the ('', '') sentinel and applies as a no-op,
-        # exactly like the old sentinel union.
-        merge_rows = []
-        w_expr = F.col("w")
-        for r in range(BPE_MERGES):
-            cur = base.select("cnt", w_expr.alias("w"))
-            row = (
-                _bpe_pair_weights(cur)
-                .orderBy(F.desc("wt"), F.asc("a"), F.asc("b"))
-                .select("a", "b")
-                .first()
+    A shared fit of ``text_bpe_train_apply`` and ``text_bpe_merges``
+    (pinned by the published≡refit tests). The corpus token stream is
+    NOT part of it — it is data-scale, rebuilt lazily per caller."""
+    _toks, base = _bpe_corpus_vocab(spark, sf_dir)
+    sep = _BPE_SEP
+    # One TakeOrdered job per round, nothing else: the winning merge is
+    # ONE bounded row (its size is fixed by the algorithm, not the corpus
+    # — the same driver-scalar class as the candidate-volume guards'
+    # .first()), so collecting it and folding it back as a LITERAL
+    # replace keeps the loop-carried vocabulary a chain of narrow string
+    # maps over the one checkpointed vocab. The old shape paid per round
+    # a broadcast build + crossJoin AND an eager vocab checkpoint job
+    # (2 scheduler waves + a materialization, ~16 jobs for the 8-round
+    # fit); measured at sf0.1 the fit fell ~2x. A missing row (vocabulary
+    # out of pairs before BPE_MERGES rounds) records the ('', '')
+    # sentinel and applies as a no-op, exactly like the old sentinel
+    # union.
+    merge_rows = []
+    w_expr = F.col("w")
+    for r in range(BPE_MERGES):
+        cur = base.select("cnt", w_expr.alias("w"))
+        row = (
+            _bpe_pair_weights(cur)
+            .orderBy(F.desc("wt"), F.asc("a"), F.asc("b"))
+            .select("a", "b")
+            .first()
+        )
+        a, b = (row["a"], row["b"]) if row is not None else ("", "")
+        merge_rows.append((a, b, r))
+        if a != "" or b != "":
+            w_expr = F.replace(
+                w_expr,
+                F.lit(sep + a + sep * 2 + b + sep),
+                F.lit(sep + a + b + sep),
             )
-            a, b = (row["a"], row["b"]) if row is not None else ("", "")
-            merge_rows.append((a, b, r))
-            if a != "" or b != "":
-                w_expr = F.replace(
-                    w_expr,
-                    F.lit(sep + a + sep * 2 + b + sep),
-                    F.lit(sep + a + b + sep),
-                )
-        # vocab-sized; materialized once so memo consumers re-run none of
-        # the replace chain
-        cur = base.select("word", "cnt", w_expr.alias("w")).localCheckpoint(
-            eager=True
-        )
-        # BPE_MERGES driver rows — a LocalTableScan, free to every reader
-        merges = spark.createDataFrame(
-            merge_rows, "a string, b string, rank int"
-        )
-        return cur, merges
-
-    cur, merges = session_model(spark, "bpe_exact", (sf_dir,), fit)
-    return toks, cur, merges
+    # BPE_MERGES driver rows — a Scan ExistingRDD (LogicalRDD), which the
+    # memo reads as-is; the vocab-sized ``cur`` is the materialized part
+    merges = spark.createDataFrame(merge_rows, "a string, b string, rank int")
+    return base.select("word", "cnt", w_expr.alias("w")), merges
 
 
 def text_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -811,7 +791,8 @@ def text_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word → n_symbols) table onto the exploded corpus tokens, then a
     per-doc sum.
     """
-    toks, cur, _merges = _bpe_fit(spark, sf_dir)
+    cur, _merges = _bpe_fit(spark, sf_dir)
+    toks = _bpe_corpus_tokens(spark, sf_dir)
     fitted = cur.select("word", F.size(_bpe_syms("w")).alias("n_syms"))
     return (
         toks.join(F.broadcast(fitted), "word")
@@ -828,7 +809,7 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     inspectable artifact of ``text_bpe_train_apply``'s fit (what ships to
     the tokenizer at inference time). Sentinel no-op rounds (vocabulary
     exhausted before ``BPE_MERGES`` merges) are excluded."""
-    _toks, _cur, merges = _bpe_fit(spark, sf_dir)
+    _cur, merges = _bpe_fit(spark, sf_dir)
     return merges.filter(
         (F.col("a") != "") | (F.col("b") != "")
     ).select("rank", "a", "b").orderBy("rank")
@@ -1071,33 +1052,22 @@ def _bpe_fit_batched(
     return toks, cur, merges
 
 
+@shared_fit("bpe_batched")
 def _bpe_fit_shared(
     spark: SparkSession,
     sf_dir: str,
     rounds: int = BPE_BATCH_ROUNDS,
     topc: int = BPE_BATCH_TOPC,
 ):
-    """(cur, merges) of the batched fit, ONE fit per session (round-10
-    verdict ask #1): the trainer is deterministic in (sf_dir, geometry),
-    so the four registry consumers (merge table, train_apply, encode,
-    packed sequences) share the memoized model frames instead of
-    re-running the fit each — a real pipeline trains once and applies
-    everywhere. ``cur`` (vocab-sized fitted symbol strings) is
-    materialized here; ``merges`` is ≤ rounds·topc driver rows (a
-    LocalTableScan, free to every reader). Cross-session sharing is the
-    parquet form: :func:`text_bpe_publish` / :func:`text_bpe_apply_published`."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        _toks, cur, merges = _bpe_fit_batched(spark, sf_dir, rounds, topc)
-        return cur.localCheckpoint(eager=True), merges
-
-    return session_model(
-        spark,
-        "bpe_batched",
-        (sf_dir, rounds, topc, BPE_BATCH_WAVES),
-        fit,
-    )
+    """(cur, merges) of the batched fit, a shared fit of the four
+    registry consumers (merge table, train_apply, encode, packed
+    sequences). ``cur`` (vocab-sized fitted symbol strings) is the
+    materialized part; ``merges`` is ≤ rounds·topc driver rows (a Scan
+    ExistingRDD — a ``LogicalRDD`` — read as-is). Cross-session sharing
+    is the parquet form: :func:`text_bpe_publish` /
+    :func:`text_bpe_apply_published`."""
+    _toks, cur, merges = _bpe_fit_batched(spark, sf_dir, rounds, topc)
+    return cur, merges
 
 
 def _bpe_merges_store_path(model_path: str) -> str:
@@ -1970,6 +1940,7 @@ def text_quality_classifier_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@shared_fit("bigram_logprob")
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score each document under the corpus's OWN empirical bigram
     distribution — the CCNet/Gopher "perplexity filter" shape with the
@@ -1989,23 +1960,10 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, avg log-prob, and the keep verdict at the 25th-percentile-ish
     fixed threshold.
 
-    Read through the session memo: the scored frame is deterministic in
-    sf_dir and doc-sized, and THREE registry queries consume it (this
-    one and both CCNet bucketers — ``docs_perplexity_buckets``,
-    ``docs_ppl_token_weighted_buckets``), each previously re-running the
-    corpus explode, the model fold, and the scoring join.
+    A shared fit: the scored frame is doc-sized, and THREE registry
+    queries consume it (this one and both CCNet bucketers —
+    ``docs_perplexity_buckets``, ``docs_ppl_token_weighted_buckets``).
     """
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        return _bigram_logprob_frame(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-
-    return session_model(spark, "bigram_logprob", (sf_dir,), fit)
-
-
-def _bigram_logprob_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     from komodo_data_spark.sources.tables import load_spread
 
     d = load_spread(spark, sf_dir, "documents")
@@ -3549,25 +3507,13 @@ def text_quality_rule_flags_oracle() -> str:
 NB_VOCAB_SIZE = 2000  # top-df terms kept in the model
 
 
+@shared_fit("nb_doc_scores")
 def _nb_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared NB fit + per-document scoring: weak label and the posterior
     log-odds ``score`` (ll_sum + class prior) for every document — the one
     model definition behind ``text_nb_quality_classifier`` (thresholds it
-    at 0) and ``text_nb_calibration`` (maps it through a sigmoid). Read
-    through the session memo: the fit+scoring is deterministic in sf_dir
-    and doc-sized, so the two consumers (and repeated invocations) reuse
-    one eager checkpoint instead of re-training per query."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        return _nb_doc_scores_frame(spark, sf_dir).localCheckpoint(
-            eager=True
-        )
-
-    return session_model(spark, "nb_doc_scores", (sf_dir,), fit)
-
-
-def _nb_doc_scores_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    at 0) and ``text_nb_calibration`` (maps it through a sigmoid), a
+    doc-sized shared fit of both."""
     # ONE tokenize+explode+shuffle pass feeds labels, vocabulary, training
     # counts, and scoring alike — EAGER (was lazy): those four consumers
     # run as concurrent AQE stage jobs of one action and raced on the
@@ -3845,33 +3791,24 @@ def text_nb_calibration_oracle() -> str:
 QUALITY_KEEP_Q = (7, 10)
 
 
+@shared_fit("quality_scored")
 def _quality_scored_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_id, source, n_tokens, quality_score) frame ALL THREE
     quality filters threshold — ONE tokenize pass per session instead of
-    one per filter (r13; the ``_nb_doc_scores``/``_dsir_weights_frame``
-    pattern). Deterministic in sf_dir, doc-sized (never corpus-token-
-    sized), eager so concurrent AQE stage jobs of the first consumer
-    cannot race a lazy checkpoint into repeated tokenize passes."""
-    from komodo_data_spark.operators.model_memo import session_model
+    one per filter; doc-sized, never corpus-token-sized."""
     from komodo_data_spark.sources.tables import load_spread
 
-    def fit():
-        d = load_spread(spark, sf_dir, "documents").withColumn(
-            "toks", tokens()
-        )
-        n_tokens = F.size("toks")
-        ttr = F.size(F.array_distinct("toks")).cast("double") / n_tokens
-        return d.select(
-            "doc_id",
-            "source",
-            n_tokens.alias("n_tokens"),
-            (
-                F.least(n_tokens / F.lit(100.0), F.lit(1.0))
-                * (0.5 + 0.5 * ttr)
-            ).alias("quality_score"),
-        ).localCheckpoint(eager=True)
-
-    return session_model(spark, "quality_scored", (sf_dir,), fit)
+    d = load_spread(spark, sf_dir, "documents").withColumn("toks", tokens())
+    n_tokens = F.size("toks")
+    ttr = F.size(F.array_distinct("toks")).cast("double") / n_tokens
+    return d.select(
+        "doc_id",
+        "source",
+        n_tokens.alias("n_tokens"),
+        (
+            F.least(n_tokens / F.lit(100.0), F.lit(1.0)) * (0.5 + 0.5 * ttr)
+        ).alias("quality_score"),
+    )
 
 
 def docs_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4360,27 +4297,19 @@ UNI_SCALE = 1_000_000
 UNI_NEG = -(10**15)
 
 
+@shared_fit("uni_words")
 def _uni_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-weighted word vocabulary for the unigram fit — the same
-    'train on (word, count), never on raw docs' move as ``_bpe_fit``;
-    localCheckpointed because every EM round reads it, and session-
-    memoized (the ``bpe_vocab`` precedent: deterministic in sf_dir,
-    vocab-bounded) so the fit and the apply op share one corpus fold."""
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def build():
-        d = _docs(spark, sf_dir).select("doc_id", tokens().alias("toks"))
-        toks = exploded(d, F.col("toks"), "word", "doc_id")
-        return (
-            toks.filter(
-                (F.length("word") >= 1) & (F.length("word") <= UNI_MAXW)
-            )
-            .groupBy("word")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .localCheckpoint(eager=True)
-        )
-
-    return session_model(spark, "uni_words", (sf_dir,), build)
+    'train on (word, count), never on raw docs' move as ``_bpe_fit``; a
+    vocab-bounded shared fit that every EM round reads, so the fit and
+    the apply op share one corpus fold."""
+    d = _docs(spark, sf_dir).select("doc_id", tokens().alias("toks"))
+    return (
+        exploded(d, F.col("toks"), "word", "doc_id")
+        .filter((F.length("word") >= 1) & (F.length("word") <= UNI_MAXW))
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
 
 
 def _uni_substrings(words: DataFrame) -> DataFrame:
@@ -4448,6 +4377,7 @@ def _uni_viterbi(words_with_map: DataFrame) -> DataFrame:
     )
 
 
+@shared_fit("uni_lm")
 def _uni_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-round Viterbi-EM unigram-LM fit. Returns the final piece
     table (piece, n_uses, score_q): usage counts from the last E-step,
@@ -4465,20 +4395,9 @@ def _uni_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays segmentable in every round (single chars keep nonzero
     probability). Loop-carried piece tables are localCheckpointed.
 
-    Session-memoized (``model_memo`` contract — deterministic in sf_dir,
-    final piece table is model-sized): before the memo,
-    ``text_unigram_lm`` and ``text_unigram_apply`` each re-ran the
-    identical UNI_EM-round fit.
+    A shared fit (the final piece table is model-sized) of
+    ``text_unigram_lm`` and ``text_unigram_apply``.
     """
-    from komodo_data_spark.operators.model_memo import session_model
-
-    def fit():
-        return _uni_fit_impl(spark, sf_dir)
-
-    return session_model(spark, "uni_lm", (sf_dir,), fit)
-
-
-def _uni_fit_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = _uni_words(spark, sf_dir)
     subs = _uni_substrings(words).localCheckpoint(eager=True)
     seed = (

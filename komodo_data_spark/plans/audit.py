@@ -15,15 +15,19 @@ from contextlib import redirect_stdout
 from pyspark.sql import DataFrame
 
 
+#: A shuffle's ``Exchange`` node at the head of a plan-tree line. A
+#: materialized ``ShuffleQueryStage`` prints its Exchange as its child, so
+#: counting these alone counts each shuffle once, live or materialized; a
+#: ``ReusedExchange`` runs no shuffle and does not match.
+_EXCHANGE = re.compile(r"^[\s|:+-]*(?:\*\(\d+\) )?Exchange\b", re.MULTILINE)
+
+
 def plan_stats(simple: str) -> dict[str, object]:
     """Shuffle/join/codegen/python/pushdown counts from an executed plan's
     final section (``executedPlan().toString()`` after an action)."""
     final = simple.split("== Initial Plan ==")[0]
     return {
-        # a shuffle in the final AQE plan is either a live Exchange or an
-        # already-materialized (possibly reused) ShuffleQueryStage
-        "exchanges": len(re.findall(r"\bExchange\b", final))
-        + len(set(re.findall(r"ShuffleQueryStage (\d+)", final))),
+        "exchanges": len(_EXCHANGE.findall(final)),
         "broadcast_joins": len(re.findall(r"BroadcastHashJoin", final)),
         "sortmerge_joins": len(re.findall(r"SortMergeJoin", final)),
         # codegen span ids appear as "*(n)" markers

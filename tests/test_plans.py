@@ -338,3 +338,20 @@ def test_q3_fact_join_degrades_to_sort_merge_with_aqe_skew_armed(spark):
     assert "SortMergeJoin" in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_plan_stats_counts_each_shuffle_once(spark):
+    """A shuffle whose stage has materialized prints as a
+    ``ShuffleQueryStage`` with its ``Exchange`` as the child: that is ONE
+    shuffle, not two. A ``ReusedExchange`` (the same aggregate read by
+    both join sides) runs no shuffle of its own."""
+    from pyspark.sql import functions as F
+
+    from komodo_data_spark.plans.audit import executed_plan_string, plan_stats
+
+    agg = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    assert plan_stats(executed_plan_string(agg))["exchanges"] == 1
+    reused = agg.join(agg.withColumnRenamed("count", "c2"), "k")
+    plan = executed_plan_string(reused)
+    assert "ReusedExchange" in plan
+    assert plan_stats(plan)["exchanges"] == 1

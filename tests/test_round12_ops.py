@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import gc
 
+import pytest
+
 
 def _persistent_rdd_count(spark) -> int:
     gc.collect()  # flush dead Python frames -> py4j releases the JVM refs
@@ -212,6 +214,92 @@ def test_session_model_rekeys_on_rewritten_dir(spark, tmp_path):
     assert session_model(spark, "tfam", (str(d1),), fit_factory("a4")) == "a4"
     assert calls == ["a1", "b1", "a4"]
     assert len([k for k in model_memo._MEMO if k[0] == app]) == n_before
+
+
+def _jobs_run(spark, fn):
+    """(fn(), Spark jobs it ran), counted through a one-off job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"shared-fit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_shared_fit_materializes_and_memoizes(spark, tmp_path):
+    """``@shared_fit``: returned frames come back materialized (a
+    ``LogicalRDD``) and identical on a hit; a frame the fit already
+    checkpointed costs no extra job; an omitted default and the same
+    value passed explicitly share one entry; a fit that raises memoizes
+    nothing, so the next call fits again (the guard-trip contract)."""
+    from komodo_data_spark.operators import model_memo
+    from komodo_data_spark.operators.model_memo import shared_fit
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    (d / "t.parquet").write_bytes(b"v1")
+    calls = []
+    trip = [True]
+    ready = spark.range(3).localCheckpoint(eager=True)
+
+    @shared_fit("test_shared_fit_frames")
+    def fit(spark, sf_dir, k=2):
+        calls.append(k)
+        return spark.range(10).filter(f"id % {k} = 0"), ready, k
+
+    @shared_fit("test_shared_fit_ready")
+    def fit_ready(spark, sf_dir):
+        return ready
+
+    @shared_fit("test_shared_fit_guard")
+    def guarded(spark, sf_dir):
+        if trip[0]:
+            trip[0] = False
+            raise RuntimeError("guard tripped")
+        return ready
+
+    def plan_class(df):
+        return df._jdf.logicalPlan().getClass().getSimpleName()
+
+    lazy, same, k = fit(spark, str(d))
+    assert plan_class(lazy) == "LogicalRDD"
+    assert same is ready and k == 2
+    assert sorted(r.id for r in lazy.collect()) == [0, 2, 4, 6, 8]
+    again = fit(spark, str(d), k=2)
+    assert again[0] is lazy and again[1] is ready
+    assert fit(spark, str(d), 2)[0] is lazy
+    assert calls == [2]
+    fit(spark, str(d), k=5)
+    assert calls == [2, 5]
+
+    out, jobs = _jobs_run(spark, lambda: fit_ready(spark, str(d)))
+    assert out is ready and jobs == 0
+
+    with pytest.raises(RuntimeError, match="guard tripped"):
+        guarded(spark, str(d))
+    assert all(key[1] != "test_shared_fit_guard" for key in model_memo._MEMO)
+    assert guarded(spark, str(d)) is ready
+
+
+def test_shared_fit_rejects_a_redeclared_family():
+    """Two fits declaring one family would share its memo key and
+    silently serve each other's frames: the second declaration raises."""
+    from komodo_data_spark.operators.model_memo import shared_fit
+
+    @shared_fit("test_shared_fit_dup")
+    def first(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="test_shared_fit_dup"):
+
+        @shared_fit("test_shared_fit_dup")
+        def second(spark, sf_dir):
+            return None
 
 
 def test_detection_shares_are_memo_hits_and_self_consistent(spark, sf_dir):
