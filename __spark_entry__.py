@@ -1,9 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship query (TPC-H Q1 pricing summary) on
-sf0.001. ``queries()`` registers every implemented operator from
-SURVEY.md §2 (+ extension pack); ``oracle_sql()`` pairs each with the
-DuckDB-runnable ANSI SQL the driver compares against at sf0.01.
+sf0.001. ``queries()`` lists every registered operator and
+``oracle_sql()`` pairs each with the DuckDB-runnable ANSI SQL it is
+compared against at sf0.01. A query is declared in one place, with
+``@query`` at its def (``komodo_data_spark/registry.py``); this file only
+puts the ``_PRIORITY`` window first.
 
 Column names are aliased identically on both sides — the driver sorts
 columns by name before hashing values.
@@ -11,11 +13,9 @@ columns by name before hashing values.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 
-QueryFn = Callable[[SparkSession, str], DataFrame]
+from komodo_data_spark.registry import QueryFn, registered
 
 SF0001 = "/root/testdata/sf0.001"
 
@@ -28,179 +28,11 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def _registry() -> dict[str, tuple[QueryFn, str | None]]:
-    """name -> (query callable, oracle SQL or None for rows-only checks)."""
-    from komodo_data_spark.operators import events_analytics as ea
-    from komodo_data_spark.operators import relational as rel
-
-    reg: dict[str, tuple[QueryFn, str | None]] = {
-        # --- relational pack (joins / aggs / windows / set ops) ---
-        "q1_pricing_summary": (rel.q1_pricing_summary, rel.q1_oracle()),
-        "q3_shipping_priority": (rel.q3_shipping_priority, rel.q3_oracle()),
-        "q5_local_supplier_volume": (rel.q5_local_supplier_volume, rel.q5_oracle()),
-        "q6_forecast_revenue": (rel.q6_forecast_revenue, rel.q6_oracle()),
-        "q10_returned_items": (rel.q10_returned_items, rel.q10_oracle()),
-        "top_customers_per_nation": (
-            rel.top_customers_per_nation,
-            rel.top_customers_oracle(),
-        ),
-        "revenue_rollup": (rel.revenue_rollup, rel.revenue_rollup_oracle()),
-        "customers_with_orders": (
-            rel.customers_with_orders,
-            rel.customers_with_orders_oracle(),
-        ),
-        "customers_without_orders": (
-            rel.customers_without_orders,
-            rel.customers_without_orders_oracle(),
-        ),
-        "asof_last_click_before_purchase": (
-            rel.asof_last_click_before_purchase,
-            rel.asof_oracle(),
-        ),
-        "asof_nearest_click": (rel.asof_nearest_click, rel.asof_nearest_oracle()),
-        "asof_cogroup": (rel.asof_cogroup, rel.asof_oracle()),
-        "events_hourly_rollup": (rel.events_hourly_rollup, rel.events_hourly_oracle()),
-        "customer_year_setops": (
-            rel.customer_year_setops,
-            rel.customer_year_setops_oracle(),
-        ),
-        "customers_every_year": (
-            rel.customers_every_year,
-            rel.customers_every_year_oracle(),
-        ),
-        "orders_status_cube": (
-            rel.orders_status_cube,
-            rel.orders_status_cube_oracle(),
-        ),
-        "supplier_part_distinct_exact": (
-            rel.supplier_part_distinct_exact,
-            rel.supplier_part_distinct_exact_oracle(),
-        ),
-        "supplier_part_distinct_approx": (
-            rel.supplier_part_distinct_approx,
-            None,  # HLL sketch: rows-only check, exact twin pins semantics
-        ),
-        "lineitem_price_tiers": (
-            rel.lineitem_price_tiers,
-            rel.lineitem_price_tiers_oracle(),
-        ),
-        "lineitem_price_tiers_bucketed": (
-            rel.lineitem_price_tiers_bucketed,
-            rel.lineitem_price_tiers_oracle(),  # same semantics, equi-join plan
-        ),
-        "events_distinct_users_two_stage": (
-            rel.events_distinct_users_two_stage,
-            rel.events_distinct_users_two_stage_oracle(),
-        ),
-        "nation_revenue_share": (
-            rel.nation_revenue_share,
-            rel.nation_revenue_share_oracle(),
-        ),
-        # --- reference analytics re-targeted at the events table ---
-        "interaction_counts": (ea.interaction_counts, ea.interaction_counts_oracle()),
-        "user_activity": (ea.user_activity, ea.user_activity_oracle()),
-        "user_energy_events": (ea.user_energy_events, ea.user_energy_events_oracle()),
-        "user_copresence": (ea.user_copresence, ea.user_copresence_oracle()),
-        "copresence_pairs": (ea.copresence_pairs, ea.copresence_pairs_oracle()),
-        "event_pattern": (ea.event_pattern, ea.event_pattern_oracle()),
-        "user_state_history": (
-            ea.user_state_history,
-            ea.user_state_history_oracle(),
-        ),
-        "funnel_conversion": (ea.funnel_conversion, ea.funnel_conversion_oracle()),
-        "retention_cohorts": (ea.retention_cohorts, ea.retention_cohorts_oracle()),
-        "events_value_histogram": (
-            ea.events_value_histogram,
-            ea.events_value_histogram_oracle(),
-        ),
-        "events_value_anomalies": (
-            ea.events_value_anomalies,
-            ea.events_value_anomalies_oracle(),
-        ),
-        "events_seasonal_anomalies": (
-            ea.events_seasonal_anomalies,
-            ea.events_seasonal_anomalies_oracle(),
-        ),
-        "events_props_variant": (
-            ea.events_props_variant,
-            ea.events_props_variant_oracle(),
-        ),
-        "user_click_purchase_reconcile": (
-            ea.user_click_purchase_reconcile,
-            ea.user_click_purchase_reconcile_oracle(),
-        ),
-        "events_user_trend": (ea.events_user_trend, ea.events_user_trend_oracle()),
-        "events_transition_matrix": (
-            ea.events_transition_matrix,
-            ea.events_transition_matrix_oracle(),
-        ),
-        "events_interarrival_stats": (
-            ea.events_interarrival_stats,
-            ea.events_interarrival_stats_oracle(),
-        ),
-        "events_type_correlations": (
-            ea.events_type_correlations,
-            ea.events_type_correlations_oracle(),
-        ),
-        "events_value_histogram_equidepth": (
-            ea.events_value_histogram_equidepth,
-            ea.events_value_histogram_equidepth_oracle(),
-        ),
-        "events_value_psi_drift": (
-            ea.events_value_psi_drift,
-            ea.events_value_psi_drift_oracle(),
-        ),
-        "events_distinct_sketch_union": (
-            ea.events_distinct_sketch_union,
-            None,  # sketch estimate: rows-only; exact twin pins semantics in tests
-        ),
-        "events_disorder_stats": (
-            ea.events_disorder_stats,
-            ea.events_disorder_stats_oracle(),
-        ),
-        "events_audience_overlap": (
-            ea.events_audience_overlap,
-            ea.events_audience_overlap_oracle(),
-        ),
-    }
-
-    # Import failures must raise, not shrink the registry: a silently-dropped
-    # pack would make the correctness gate report fewer queries while staying
-    # green. scripts/check.py asserts EXPECTED_REGISTRY_COUNT as a backstop.
-    from komodo_data_spark.functions import udtfs
-    from komodo_data_spark.operators import (
-        corpus,
-        dedup,
-        graph_ops,
-        join_strategies,
-        multimodal_ops,
-        pipeline_ops,
-        profiling,
-        reshape,
-        retrieval,
-        sessions,
-        similarity,
-        stats_ops,
-        text_analysis,
-        timeseries,
-        tpch_extended,
-        window_ops,
-    )
-
-    for pack in (
-        tpch_extended, window_ops, reshape, pipeline_ops, corpus, sessions,
-        dedup, text_analysis, similarity, retrieval, multimodal_ops,
-        profiling, graph_ops, join_strategies, stats_ops, timeseries,
-    ):
-        reg.update(pack.registry())
-    reg["udtf_sentences"] = (udtfs.udtf_sentences, udtfs.udtf_sentences_oracle())
-
-    ordered: dict[str, tuple[QueryFn, str | None]] = {}
-    for name in _PRIORITY:
-        ordered[name] = reg[name]
-    for name, entry in reg.items():
-        if name not in ordered:
-            ordered[name] = entry
-    return ordered
+    """name -> (query callable, oracle SQL or None for rows-only checks):
+    the ``@query`` catalog with the ``_PRIORITY`` window first."""
+    reg = registered()
+    # updating an existing key keeps its position: the window stays first
+    return {**{name: reg[name] for name in _PRIORITY}, **reg}
 
 
 # The driver records correctness rows for the FIRST 50 registry entries in

@@ -1,7 +1,8 @@
 """Benchmark harness: runs every registered query and prints ONE JSON line.
 
-Usage: ``python bench.py``. Env: ``SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1), ``SPARK_GRAFT_CPUS`` (default 32).
+Usage: ``python bench.py``. Env: ``SPARK_GRAFT_SF_DIR`` (default: the
+sf0.1 test scale directory) and ``SPARK_GRAFT_CPUS`` (default: the cores
+this process may run on).
 
 Each query is executed once as a full action (count of the result, which
 forces every exchange/agg/window in the plan). Warm-up before timing covers
@@ -141,7 +142,7 @@ def _timed_sweep(spark, qs, sf_dir: str) -> tuple[dict[str, float], dict]:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     from komodo_data_spark.session import get_spark

@@ -41,15 +41,9 @@ def _engine(sf_dir: str, cores: int):
 
 
 def _queries():
-    import os
+    from komodo_data_spark.registry import registered
 
-    # the driver contract file lives at the repo root, next to the package
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo_root not in sys.path:
-        sys.path.insert(0, repo_root)
-    import __spark_entry__ as entry
-
-    return entry.queries()
+    return {name: fn for name, (fn, _sql) in registered().items()}
 
 
 def serve(args) -> int:

@@ -90,22 +90,22 @@ class KomodoEngine:
         return self.spark.sql(query)
 
     def query(self, name: str) -> DataFrame:
-        """Run any operator from the driver registry by name."""
+        """Run any registered operator by name."""
         if self.sf_dir is None:
             raise ValueError("register_tables(sf_dir) first")
-        import __spark_entry__ as entry
+        from komodo_data_spark.registry import registered
 
-        qs = entry.queries()
-        if name not in qs:
+        reg = registered()
+        if name not in reg:
             raise KeyError(
-                f"unknown query {name!r}; available: {sorted(qs)}"
+                f"unknown query {name!r}; available: {sorted(reg)}"
             )
-        return qs[name](self.spark, self.sf_dir)
+        return reg[name][0](self.spark, self.sf_dir)
 
     def query_names(self) -> list[str]:
-        import __spark_entry__ as entry
+        from komodo_data_spark.registry import registered
 
-        return sorted(entry.queries())
+        return sorted(registered())
 
     # -- observability ----------------------------------------------------
     def explain_query(self, name: str) -> dict:
@@ -186,16 +186,15 @@ class KomodoEngine:
         from komodo_data_spark.operators.corpus import corpus_prepare_docs
         from komodo_data_spark.sources.export import export_training_shards
 
-        docs = corpus_prepare_docs(self.spark, self.sf_dir).cache()
-        try:
-            return {
-                split: export_training_shards(
-                    docs.filter(F.col("split") == split).drop("split"),
-                    os.path.join(path, split),
-                    n_shards=n_shards,
-                    token_col="n_tokens",
-                )
-                for split in splits
-            }
-        finally:
-            docs.unpersist()
+        docs = corpus_prepare_docs(self.spark, self.sf_dir).localCheckpoint(
+            eager=True
+        )
+        return {
+            split: export_training_shards(
+                docs.filter(F.col("split") == split).drop("split"),
+                os.path.join(path, split),
+                n_shards=n_shards,
+                token_col="n_tokens",
+            )
+            for split in splits
+        }

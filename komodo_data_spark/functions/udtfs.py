@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
+from komodo_data_spark.registry import query
+
 
 @udtf(returnType="sent_idx int, sentence string, n_chars int")
 class SentenceSplit:
@@ -46,6 +48,7 @@ def register_udtfs(spark: SparkSession) -> None:
     spark.udtf.register("sentence_split", SentenceSplit)
 
 
+@query
 def udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence spans per document via the registered UDTF, lateral-joined —
     the canonical `FROM t, LATERAL udtf(t.col)` usage."""

@@ -16,12 +16,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.text_features import sql_tokens, tokens
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events, load_table
 
 MIN_TOKENS = 10
 MIN_QUALITY = 0.3
 
 
+@query
 def corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Surviving documents after quality gate + exact-dedup keep-first.
 
@@ -83,6 +85,7 @@ def corpus_clean_oracle() -> str:
     """
 
 
+@query
 def event_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated p50/p90/p99 of ``value`` per event_type.
 
@@ -110,6 +113,7 @@ def event_value_percentiles_oracle() -> str:
     """
 
 
+@query(oracle=None)  # sketch percentiles: rows-only; exact twin is the anchor
 def event_value_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch-based percentiles (approx_percentile): mergeable bounded-memory
     state, the scale path. Rows-only driver check — the exact twin above
@@ -120,23 +124,6 @@ def event_value_percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFram
         F.expr("approx_percentile(value, 0.9, 1000)").alias("p90_approx"),
         F.count(F.lit(1)).alias("n_events"),
     )
-
-
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "corpus_clean": (corpus_clean, corpus_clean_oracle()),
-        "corpus_prepare": (corpus_prepare, corpus_prepare_oracle()),
-        "event_value_percentiles": (
-            event_value_percentiles,
-            event_value_percentiles_oracle(),
-        ),
-        "event_value_percentiles_approx": (event_value_percentiles_approx, None),
-        "docs_chunk_windows": (
-            docs_chunk_windows,
-            docs_chunk_windows_oracle(),
-        ),
-    }
 
 
 # --------------------------------------------------------------------------
@@ -222,6 +209,7 @@ def corpus_prepare_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The whole training-data preparation pipeline as ONE composed plan:
     quality gate -> benchmark decontamination -> exact-dedup keep-first ->
@@ -317,6 +305,7 @@ CHUNK_SIZE = 32  # tokens per chunk
 CHUNK_STRIDE = 24  # tokens between chunk starts (8-token overlap)
 
 
+@query
 def docs_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split every document into overlapping fixed-stride token windows —
     the chunking stage every embedding/RAG pipeline runs before encoding

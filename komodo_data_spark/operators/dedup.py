@@ -36,6 +36,7 @@ from komodo_data_spark.functions.text_features import (
     tokens,
 )
 from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_spread, load_table
 
 #: MinHash/LSH geometry: 12 hashes in 4 bands of 3. With Jaccard j the
@@ -489,6 +490,7 @@ def _sql_doc_shingles(n: int = 3) -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup on the normalized token stream: one hash-aggregate on the
     md5 fingerprint; representative = min doc_id (deterministic keeper)."""
@@ -519,6 +521,7 @@ def dedup_exact_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def dedup_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All document pairs with 3-token-shingle Jaccard ≥ 0.7.
 
@@ -590,6 +593,7 @@ def _ngram_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def dedup_ngram_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT twin of :func:`dedup_ngram_pairs` via prefix filtering
     (:func:`prefix_filtered_jaccard_pairs`) — identical output, identical
@@ -687,6 +691,7 @@ def _df_capped_pairs(
     return _verify_jaccard(posts, cand, threshold)
 
 
+@query
 def dedup_ngram_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-capped n-gram dedup: candidates must share a shingle seen
     in ≤ NGRAM_DF_CAP docs; Jaccard is then verified on the FULL shingle
@@ -730,6 +735,7 @@ def dedup_ngram_pairs_capped_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via MinHash banding, verified with exact Jaccard —
     read through the session memo, so the detection runs once however
@@ -891,6 +897,7 @@ def _bands_from_sig(sig: DataFrame) -> DataFrame:
     ).select("doc_id", "band.band_id", "band.band_hash")
 
 
+@query
 def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via ONE-PERMUTATION MinHash banding, verified with
     exact Jaccard — same contract and output shape as dedup_minhash_lsh,
@@ -1220,6 +1227,7 @@ def simhash_multiprobe_pairs(
     )
 
 
+@query
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs within Hamming distance <= HAMMING_MAX of the 64-bit
     shingle-feature SimHash (see the SIMHASH_BITS note for the empirical
@@ -1551,6 +1559,7 @@ def _matmul_hits(l_ids, l_mat, r_ids, r_mat, diagonal: bool):
     )
 
 
+@query
 @shared_fit("emb_exact_pairs")
 def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector near-dup: pairs with cosine ≥ 0.45 over array<float>.
@@ -1651,6 +1660,7 @@ EMB_LSH_BITS = 6
 EMB_LSH_TASK_ROWS = 4096
 
 
+@query
 @shared_fit("emb_lsh_pairs")
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate cosine near-dup: candidates restricted to the same
@@ -1812,6 +1822,7 @@ def dedup_embedding_pairs_oracle() -> str:
     """
 
 
+@query
 def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the sign-bit LSH embedding near-dup detector against the
     exact all-pairs ground truth — the embedding-side counterpart of
@@ -1850,6 +1861,7 @@ EMB_RECALL_SAMPLE_VECS = 1000
 _EMB_SAMPLE_MOD = 100_000
 
 
+@query
 def dedup_embedding_recall_sampled(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1946,6 +1958,7 @@ def _positional_grams(toks, n: int):
     )
 
 
+@query
 def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal per-document spans of tokens duplicated VERBATIM in some
     other document: every SPAN_GRAM-token window shared across >= 2 docs is
@@ -2050,6 +2063,7 @@ def dedup_substring_spans_oracle() -> str:
     """
 
 
+@query
 def dedup_substring_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Close the ExactSubstr loop: CUT the detected duplicated spans out of
     each document and report the per-doc cleaning result (tokens before /
@@ -2119,86 +2133,6 @@ def dedup_substring_scrub_oracle() -> str:
                ' '), '')) AS clean_fp
     FROM scrubbed
     """
-
-
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "dedup_exact": (dedup_exact, dedup_exact_oracle()),
-        "dedup_ngram_pairs": (dedup_ngram_pairs, dedup_ngram_pairs_oracle()),
-        "dedup_ngram_pairs_capped": (
-            dedup_ngram_pairs_capped,
-            dedup_ngram_pairs_capped_oracle(),
-        ),
-        "dedup_ngram_pairs_prefix": (
-            dedup_ngram_pairs_prefix,
-            dedup_ngram_pairs_prefix_oracle(),
-        ),
-        "dedup_containment_pairs": (
-            dedup_containment_pairs,
-            dedup_containment_pairs_oracle(),
-        ),
-        "dedup_minhash_lsh": (dedup_minhash_lsh, dedup_minhash_lsh_oracle()),
-        "dedup_minhash_oph": (dedup_minhash_oph, dedup_minhash_oph_oracle()),
-        "dedup_minhash_oph_recall": (
-            dedup_minhash_oph_recall,
-            dedup_minhash_oph_recall_oracle(),
-        ),
-        "dedup_minhash_recall": (
-            dedup_minhash_recall,
-            dedup_minhash_recall_oracle(),
-        ),
-        "dedup_minhash_recall_sampled": (
-            dedup_minhash_recall_sampled,
-            dedup_minhash_recall_sampled_oracle(),
-        ),
-        "dedup_simhash": (dedup_simhash, dedup_simhash_oracle()),
-        "dedup_simhash_recall": (
-            dedup_simhash_recall,
-            dedup_simhash_recall_oracle(),
-        ),
-        "dedup_embedding_pairs": (
-            dedup_embedding_pairs,
-            dedup_embedding_pairs_oracle(),
-        ),
-        "dedup_embedding_lsh": (
-            dedup_embedding_lsh,
-            dedup_embedding_lsh_oracle(),
-        ),
-        "dedup_embedding_recall": (
-            dedup_embedding_recall,
-            dedup_embedding_recall_oracle(),
-        ),
-        "dedup_embedding_recall_sampled": (
-            dedup_embedding_recall_sampled,
-            dedup_embedding_recall_sampled_oracle(),
-        ),
-        "dedup_fuzzy_prefix": (dedup_fuzzy_prefix, dedup_fuzzy_prefix_oracle()),
-        "dedup_fuzzy_prefix_capped": (
-            dedup_fuzzy_prefix_capped,
-            dedup_fuzzy_prefix_capped_oracle(),
-        ),
-        "dedup_fuzzy_capped_recall": (
-            dedup_fuzzy_capped_recall,
-            dedup_fuzzy_capped_recall_oracle(),
-        ),
-        "dedup_substring_spans": (
-            dedup_substring_spans,
-            dedup_substring_spans_oracle(),
-        ),
-        "dedup_substring_scrub": (
-            dedup_substring_scrub,
-            dedup_substring_scrub_oracle(),
-        ),
-        "dedup_source_overlap": (
-            dedup_source_overlap,
-            dedup_source_overlap_oracle(),
-        ),
-        "dedup_repeated_blocks": (
-            dedup_repeated_blocks,
-            dedup_repeated_blocks_oracle(),
-        ),
-    }
 
 
 # --------------------------------------------------------------------------
@@ -2374,6 +2308,7 @@ def _fuzzy_exact_pairs_shared(
     )
 
 
+@query
 def dedup_fuzzy_prefix(
     spark: SparkSession,
     sf_dir: str,
@@ -2459,6 +2394,7 @@ def dedup_fuzzy_prefix_oracle() -> str:
 FUZZY_KEY_CAP = 64
 
 
+@query
 def dedup_fuzzy_prefix_capped(
     spark: SparkSession, sf_dir: str, key_cap: int = FUZZY_KEY_CAP
 ) -> DataFrame:
@@ -2593,6 +2529,7 @@ def dedup_fuzzy_prefix_capped_oracle(key_cap: int = FUZZY_KEY_CAP) -> str:
     """
 
 
+@query
 def dedup_fuzzy_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What the PassJoin key cap costs, measured: the capped detector's
     pairs are a SUBSET of the exact detector's (same levenshtein verify,
@@ -2635,6 +2572,7 @@ def dedup_fuzzy_capped_recall_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Which SOURCES duplicate each other: near-dup pairs (MinHash-verified)
     rolled up by the unordered source pair, with an average similarity per
@@ -2810,6 +2748,7 @@ def scrub_blocks(blocked: DataFrame, dup: DataFrame) -> DataFrame:
     )
 
 
+@query
 def dedup_repeated_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level block dedup (the C4 "three-sentence span" rule, cf. the
     public C4 paper appendix): any fixed-width token block that occurs more
@@ -2895,6 +2834,7 @@ def dedup_repeated_blocks_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the MinHash-LSH near-dup detector against exact n-gram
     Jaccard ground truth — the text-dedup counterpart of
@@ -2994,6 +2934,7 @@ def _sql_slice_cte(
     return f"{table} AS (SELECT * FROM main.{table} WHERE {gate})"
 
 
+@query
 def dedup_minhash_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_minhash_recall`` restricted to a deterministic hash-bucket
     slice of the corpus — the PRODUCTION mode of the recall eval. The
@@ -3125,6 +3066,7 @@ def _text_slice_recall_oracle(det_sql: str, det_col: str) -> str:
     )
 
 
+@query
 def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the SimHash near-dup detector (hamming <= HAMMING_MAX over
     the 64-bit shingle-feature signatures) against the SAME exact
@@ -3171,6 +3113,7 @@ def dedup_simhash_recall_oracle() -> str:
     return _text_slice_recall_oracle(dedup_simhash_oracle(), "n_simhash_pairs")
 
 
+@query
 def dedup_minhash_oph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the one-permutation MinHash detector against the SAME
     exact 3-gram-Jaccard truth slice every text recall twin uses — the
@@ -3262,6 +3205,7 @@ def dedup_minhash_recall_sampled_oracle() -> str:
 CONTAINMENT_THRESHOLD = 0.85
 
 
+@query
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle CONTAINMENT (Broder's resemblance companion
     measure): C(i in j) = |S_i ∩ S_j| / |S_i| — the detector for documents

@@ -15,11 +15,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.json_compat import jget, jget_num
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events
 
 ENTITY_NAMES = ["head", "left_hand", "right_hand", "spawned_entity"]
 
 
+@query
 def interaction_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aggregate_interaction_type analog (process.py:79-88): events of one
     type counted per user; count(props) keeps the non-NULL-count semantics."""
@@ -38,6 +40,7 @@ def interaction_counts_oracle() -> str:
     """
 
 
+@query
 def user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aggregate_user analog (process.py:144-173): one user's activity grouped
     by a decoded JSON attribute (k mod 4 plays entityType)."""
@@ -67,6 +70,7 @@ def user_activity_oracle() -> str:
     """
 
 
+@query
 def user_energy_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """user_energy analog (process.py:196-213): per-user LAG over the ordered
     stream, delta(value) / delta(ms); lag-before-filter order preserved."""
@@ -100,6 +104,7 @@ def user_energy_events_oracle() -> str:
     """
 
 
+@query
 def user_copresence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """user_proximity analog (process.py:413-448): seconds where >1 user is
     active (IN-subquery → semi join), then consecutive-row distance within
@@ -144,6 +149,7 @@ def user_copresence_oracle() -> str:
     """
 
 
+@query
 def event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """drawing_pattern analog (process.py:386-402): NULL-skipping count of a
     JSON path per group — count('$.k') counts present keys, count('$.missing')
@@ -166,6 +172,7 @@ def event_pattern_oracle() -> str:
     """
 
 
+@query
 def copresence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documented 100 TB alternative to user_copresence's window
     formulation (SURVEY.md §2.3): an explicit self-equi-join on the time
@@ -222,6 +229,7 @@ def copresence_pairs_oracle() -> str:
     """
 
 
+@query
 def user_state_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2-style state history from the event log: collapse each user's
     event stream into contiguous runs of the same event_type, with
@@ -307,6 +315,7 @@ def user_state_history_oracle() -> str:
 _FUNNEL_STEPS = ("view", "click", "purchase")
 
 
+@query
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel view -> click -> purchase: a user converts step k only
     with an event strictly AFTER their step-k-1 time (the standard funnel
@@ -406,6 +415,7 @@ def funnel_conversion_oracle() -> str:
 _WEEK_MS = 7 * 24 * 3600 * 1000
 
 
+@query
 def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly retention triangle: users grouped by first-activity week
     (cohort), counted distinct in each later week, reported as
@@ -470,6 +480,7 @@ def retention_cohorts_oracle() -> str:
 _HIST_LO, _HIST_HI, _HIST_BINS = 0.0, 100.0, 20
 
 
+@query
 def events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of event values per event_type: 20 bins over
     [0, 100), out-of-range values clamped into the edge bins. Single
@@ -519,6 +530,7 @@ _PSI_BINS = 10
 _PSI_SMOOTH = 0.5
 
 
+@query
 def events_value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of each day's value distribution against
     the whole corpus, per event_type — the standard "did the input
@@ -608,6 +620,7 @@ def events_value_psi_drift_oracle() -> str:
 _ZSCORE_CUT = 2.5
 
 
+@query
 def events_value_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events whose value is > 2.5 sample standard deviations from their
     event_type's mean. Two narrow aggregates: per-type mean/std (types ×
@@ -645,6 +658,7 @@ def events_value_anomalies_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type stats over a JSON property, extracted through Spark 4's
     VARIANT type (``parse_json`` -> ``variant_get``) instead of per-access
@@ -688,6 +702,7 @@ def events_props_variant_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def user_click_purchase_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reconcile two per-user rollups with a FULL OUTER join: users who
     click vs users who purchase, segmented both/click_only/purchase_only —
@@ -751,6 +766,7 @@ def user_click_purchase_reconcile_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_user_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user linear trend of value over time (OLS slope + intercept,
     x = hours since the user's first event) via grouped-map
@@ -829,6 +845,7 @@ def events_user_trend_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle=None)  # sketch estimate: rows-only; exact twin pins semantics in tests
 def events_distinct_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event_type via PERSISTABLE DataSketches HLL:
     build one sketch per (event_type, day), then union the daily sketches
@@ -861,6 +878,7 @@ def events_distinct_sketch_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def events_value_histogram_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-DEPTH histogram (quartiles) of event values: one exact
     percentile aggregate produces the 3 quartile boundaries, broadcast
@@ -914,6 +932,7 @@ def events_value_histogram_equidepth_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order transition counts/probabilities between consecutive
     event types per user — the Markov-chain estimate behind next-action
@@ -966,6 +985,7 @@ def events_transition_matrix_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type inter-arrival statistics (median / p90 / max of the
     per-user gap in ms) — the cadence profile behind rate limiting, bot
@@ -1016,6 +1036,7 @@ def events_interarrival_stats_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_type_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pearson correlation between the hourly activity series of every
     event-type pair — "do purchases move with clicks?" — the co-movement
@@ -1085,6 +1106,7 @@ def events_type_correlations_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_disorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type out-of-orderness audit: how far behind the per-user
     event-time high-water mark does each event arrive? ``event_id`` is the
@@ -1148,6 +1170,7 @@ def events_disorder_stats_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audience overlap for every event-type pair: how many users are
     active in BOTH types, and the Jaccard of the two user sets — the
@@ -1223,6 +1246,7 @@ def events_audience_overlap_oracle() -> str:
     """
 
 
+@query
 def events_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonally-adjusted anomalies: an event is flagged when its value
     deviates > _ZSCORE_CUT standard deviations from the mean of its OWN

@@ -27,6 +27,7 @@ from komodo_data_spark.operators.events_analytics import (
     copresence_pairs_oracle,
 )
 from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.registry import query
 
 PAGERANK_ITERS = 3
 PAGERANK_D = 0.85
@@ -57,6 +58,7 @@ def _sql_user_edges() -> str:
     """
 
 
+@query
 def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Triangle count per user over the copresence graph, plus the user's
     degree — the local clustering numerator/denominator.
@@ -119,6 +121,7 @@ def graph_triangles_oracle() -> str:
     """
 
 
+@query
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, 3 fixed iterations) over the undirected
     copresence graph; every node has degree ≥ 1 by construction, so there
@@ -216,6 +219,7 @@ FROM r GROUP BY node
 """
 
 
+@query
 def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded transitive closure via Spark 4's recursive CTE: nodes within
     REACH_MAX_HOPS of the seed (smallest vertex), with min-hop distance and
@@ -241,6 +245,7 @@ def graph_reachability_oracle() -> str:
     return f"WITH RECURSIVE e AS ({_sql_user_edges()}), {body}"
 
 
+@query
 def graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weakly-connected components of the copresence graph — the
     social/session-cluster view of the same edges the triangle and rank
@@ -294,6 +299,7 @@ KCORE_K = 2
 KCORE_ROUNDS = 3
 
 
+@query
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling (k=KCORE_K, KCORE_ROUNDS fixed rounds): repeatedly
     drop nodes whose degree in the SURVIVING subgraph is below k — the
@@ -364,24 +370,10 @@ def graph_kcore_oracle() -> str:
     """
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "graph_triangles": (graph_triangles, graph_triangles_oracle()),
-        "graph_pagerank": (graph_pagerank, graph_pagerank_oracle()),
-        "graph_reachability": (graph_reachability, graph_reachability_oracle()),
-        "graph_components": (graph_components, graph_components_oracle()),
-        "graph_kcore": (graph_kcore, graph_kcore_oracle()),
-        "graph_communities_lpa": (
-            graph_communities_lpa,
-            graph_communities_lpa_oracle(),
-        ),
-    }
-
-
 LPA_ROUNDS = 3
 
 
+@query
 def graph_communities_lpa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous label propagation (LPA) over the copresence graph,
     LPA_ROUNDS fixed rounds — the cheap community detector that groups

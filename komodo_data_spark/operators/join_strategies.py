@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
 #: Salt fan-out: the hottest key splits across this many shuffle tasks.
@@ -29,6 +30,7 @@ N_SALTS = 8
 FUZZY_MAX_CUSTKEY = 3000
 
 
+@query
 def orders_customer_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders⋈customer revenue per nation with an 8-way salted join.
 
@@ -71,6 +73,7 @@ def orders_customer_join_salted_oracle() -> str:
     """
 
 
+@query
 def customers_no_f_orders_notin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no 'F'-status order, phrased as NOT IN so Spark's
     null-aware anti join carries the three-valued logic: if any subquery
@@ -101,6 +104,7 @@ def customers_no_f_orders_notin_oracle() -> str:
     """
 
 
+@query
 def nation_top2_customers_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-2 customers by account balance per nation via a correlated
     LATERAL subquery (SQL:1999) — the for-each-row-run-a-query surface.
@@ -138,6 +142,7 @@ def nation_top2_customers_lateral_oracle() -> str:
     """
 
 
+@query
 def customers_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy self-join: customer pairs whose names are within edit distance
     1, by DELETION-NEIGHBORHOOD candidate generation — the sub-quadratic
@@ -214,25 +219,3 @@ def customers_fuzzy_name_pairs_oracle() -> str:
       AND b.c_custkey <= {FUZZY_MAX_CUSTKEY}
     ORDER BY custkey_i, custkey_j
     """
-
-
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "customers_fuzzy_name_pairs": (
-            customers_fuzzy_name_pairs,
-            customers_fuzzy_name_pairs_oracle(),
-        ),
-        "nation_top2_customers_lateral": (
-            nation_top2_customers_lateral,
-            nation_top2_customers_lateral_oracle(),
-        ),
-        "orders_customer_join_salted": (
-            orders_customer_join_salted,
-            orders_customer_join_salted_oracle(),
-        ),
-        "customers_no_f_orders_notin": (
-            customers_no_f_orders_notin,
-            customers_no_f_orders_notin_oracle(),
-        ),
-    }

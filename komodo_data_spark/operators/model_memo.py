@@ -35,6 +35,7 @@ from __future__ import annotations
 import functools
 import inspect
 import os
+import tempfile
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -104,6 +105,20 @@ def session_model(
             del _MEMO[k]
         _MEMO[key] = fit()
     return _MEMO[key]
+
+
+def session_model_path(spark: SparkSession, kind: str, sf_dir: str) -> str:
+    """The store path a registered query publishes a ``kind`` model to and
+    applies it from: per application and scale dir under the system temp
+    dir (a registered query cannot take a model path; production passes a
+    durable one). The temp dir is read per call, so a re-pointed TMPDIR
+    takes effect."""
+    return os.path.join(
+        tempfile.gettempdir(),
+        f"komodo_{kind}_model",
+        spark.sparkContext.applicationId,
+        os.path.basename(os.path.abspath(sf_dir)),
+    )
 
 
 def _materialize(out: Any) -> Any:

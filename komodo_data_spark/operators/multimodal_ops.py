@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
 FRAME_BYTES = 64  # fake "frame" = 64-byte chunk
@@ -92,6 +93,7 @@ _META_SCHEMA = (
 )
 
 
+@query
 def media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-payload metadata: byte length, sha256, frame count (=⌈bytes/64⌉).
 
@@ -138,6 +140,7 @@ def media_metadata_oracle() -> str:
 _FRAME_SCHEMA = "doc_id long, frame_idx long, frame_md5 string"
 
 
+@query
 def media_frame_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample every 4th 64-byte frame of each payload; emit its md5.
 
@@ -188,6 +191,7 @@ def media_frame_samples_oracle() -> str:
 _FEAT_SCHEMA = "doc_id long, n_bytes long, mean_byte double, max_byte long"
 
 
+@query
 def media_decoded_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Decode' each payload into byte statistics — the deterministic
     stand-in for a real feature extractor (embedding model / spectrogram).
@@ -231,6 +235,7 @@ def media_decoded_features_oracle() -> str:
 RESIZE_FACTOR = 4
 
 
+@query
 def media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """'Resize' each payload by keeping every 4th byte — the deterministic
     stand-in for an image/audio downsample. Unlike the fan-out stages this
@@ -268,41 +273,6 @@ def media_resize_oracle() -> str:
     """
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "media_resize": (media_resize, media_resize_oracle()),
-        "media_metadata": (media_metadata, media_metadata_oracle()),
-        "media_frame_samples": (media_frame_samples, media_frame_samples_oracle()),
-        "media_decoded_features": (
-            media_decoded_features,
-            media_decoded_features_oracle(),
-        ),
-        "media_audio_energy": (media_audio_energy, media_audio_energy_oracle()),
-        "media_metadata_arrow": (
-            media_metadata_arrow,
-            media_metadata_arrow_oracle(),
-        ),
-        "media_frame_dedup": (media_frame_dedup, media_frame_dedup_oracle()),
-        "media_simhash_pairs": (
-            media_simhash_pairs,
-            media_simhash_pairs_oracle(),
-        ),
-        "media_simhash_recall": (
-            media_simhash_recall,
-            media_simhash_recall_oracle(),
-        ),
-        "media_simhash_pairs_capped": (
-            media_simhash_pairs_capped,
-            media_simhash_pairs_capped_oracle(),
-        ),
-        "media_simhash_capped_recall": (
-            media_simhash_capped_recall,
-            media_simhash_capped_recall_oracle(),
-        ),
-    }
-
-
 # --------------------------------------------------------------------------
 # audio-style windowed energy (numpy over raw bytes, no codec needed)
 # --------------------------------------------------------------------------
@@ -310,6 +280,7 @@ def registry():
 _ENERGY_SCHEMA = "doc_id long, frame_idx long, rms double"
 
 
+@query
 def media_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-frame RMS energy over the payload interpreted as unsigned 8-bit
     samples (64-sample frames, partial tail frame dropped) — the windowed
@@ -369,6 +340,7 @@ def media_audio_energy_oracle() -> str:
 _ARROW_META_SCHEMA = "doc_id long, n_bytes long, n_frames long"
 
 
+@query
 def media_metadata_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-length metadata via ``mapInArrow``: the batch stays a
     ``pyarrow.RecordBatch`` end-to-end and the byte lengths come from
@@ -416,6 +388,7 @@ def media_metadata_arrow_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def media_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-media duplicate-frame profile: which of a media item's SAMPLED
     frames (the ``media_frame_samples`` stream) also occur — byte-identical
@@ -574,6 +547,7 @@ def _media_capped_pairs_shared(
     )
 
 
+@query
 def media_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate media pairs — the fuzzy upgrade of
     ``media_frame_dedup``, which catches only byte-identical frames and
@@ -664,6 +638,7 @@ def media_simhash_pairs_oracle() -> str:
     """
 
 
+@query
 def media_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degraded-but-running twin of ``media_simhash_pairs`` (round-10
     verdict ask #2): same 32-bit frame-gram signatures, pairs from the
@@ -690,6 +665,7 @@ def media_simhash_pairs_capped_oracle() -> str:
     """
 
 
+@query
 def media_simhash_capped_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -746,6 +722,7 @@ MEDIA_JACCARD_Q = (4, 5)
 MEDIA_RECALL_TARGET_DOCS = 1250
 
 
+@query
 def media_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the media SimHash detector against exact byte-4-gram
     Jaccard ground truth — the media counterpart of

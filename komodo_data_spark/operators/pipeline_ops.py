@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.text_features import sql_tokens, tokens
 from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events, load_table
 
 # --------------------------------------------------------------------------
@@ -95,6 +96,7 @@ def _sql_split_case(key: str = "doc_id") -> str:
            END"""
 
 
+@query
 def sample_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split by doc_id hash, reported
     as per-split stats. Hash-assignment (vs random()) keeps every row's
@@ -121,6 +123,7 @@ def sample_hash_split_oracle() -> str:
     """
 
 
+@query
 def split_leakage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-split contamination audit: near-duplicate pairs whose members
     landed in DIFFERENT train/val/test splits. A hash split assigns
@@ -172,6 +175,7 @@ def split_leakage_pairs_oracle() -> str:
     """
 
 
+@query
 def docs_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free train/val/test split: the fix ``split_leakage_pairs``'
     docstring prescribes. Every near-dup CLUSTER is assigned wholly to one
@@ -280,6 +284,7 @@ def docs_split_by_cluster_oracle() -> str:
 SAMPLE_K = 20
 
 
+@query
 def docs_per_source_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-k-per-source deterministic sample: rank each source's docs
     by a salted hash and keep the first SAMPLE_K — the balanced eval-set
@@ -325,6 +330,7 @@ def docs_per_source_sample_k_oracle() -> str:
 STRATA_RATES = {"en": 10, "de": 30, "es": 30, "fr": 30, "zh": 50}
 
 
+@query
 def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-language sampling: keep doc iff its md5 bucket falls
     under the language's rate. Unlike ``df.sampleBy`` (seeded RNG, engine-
@@ -371,6 +377,7 @@ def stratified_sample_oracle() -> str:
 WEIGHTED_SAMPLE_K = 100
 
 
+@query
 def docs_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sample-without-replacement of K docs, weight = n_chars:
     Efraimidis–Spirakis with a DETERMINISTIC uniform. Each doc gets
@@ -416,6 +423,7 @@ MIX_TOKEN_BUDGETS = {"src0": 3000, "src1": 750, "src2": 0}
 MIX_DEFAULT_BUDGET = 1500
 
 
+@query
 def docs_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-source token-budget selection — the "mix sources to
     target proportions" step of a training-data build. Docs are ordered
@@ -488,6 +496,7 @@ def docs_token_budget_mix_oracle() -> str:
     """
 
 
+@query(oracle="docs_token_budget_mix_oracle")  # admitted-set exact scale path
 def docs_token_budget_mix_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB path for :func:`docs_token_budget_mix`, admitted-set
     EXACT (same oracle): replace the per-source global ordered window with
@@ -577,6 +586,7 @@ def docs_token_budget_mix_twostage(spark: SparkSession, sf_dir: str) -> DataFram
 CURRICULUM_CUTS = (4.4, 4.5, 4.65)
 
 
+@query
 def docs_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic curriculum schedule: every document gets a global
     training rank — easy phases first (phase = fixed difficulty cutoffs on
@@ -681,6 +691,7 @@ CHUNK_LEN = 200
 CHUNK_STRIDE = 150
 
 
+@query
 def doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split each document into overlapping character chunks (len 200,
     stride 150) — the context-window prep step. Map-side explode: chunk
@@ -728,6 +739,7 @@ def doc_chunks_oracle() -> str:
 _REDACT_PAT = r"\b(customer|supplier|order)\b"
 
 
+@query
 def term_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Redact blocklisted terms; report per-doc hit count and the redacted
     length. Pure codegen projection (regexp_extract_all + regexp_replace)."""
@@ -765,6 +777,7 @@ def term_redaction_oracle() -> str:
 _CC_MAX_ROUNDS = 15
 
 
+@query
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group near-duplicate pairs (from the MinHash-LSH detector) into
     clusters: connected components by iterative min-label propagation, the
@@ -1010,6 +1023,7 @@ def _cc_star(edges: DataFrame, max_rounds: int = _CC_STAR_MAX_ROUNDS):
     return labels, rounds
 
 
+@query(oracle="dedup_clusters_oracle")
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_clusters' exact twin on the alternating large-star/small-star
     algorithm — identical output (same oracle), O(log n) rounds instead of
@@ -1067,6 +1081,7 @@ PACK_CAPACITY = 2048
 _PACK_PARTITIONS = 8
 
 
+@query
 def token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack documents into fixed token-budget bins per language: docs are
     laid end-to-end in doc_id order and cut every PACK_CAPACITY tokens
@@ -1152,6 +1167,7 @@ def token_packing_oracle() -> str:
 PACK_CANDIDATE_LENS = (64, 256, 1024)
 
 
+@query
 def token_packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Padding/truncation economics per candidate context length — the
     numbers a training pipeline reads before fixing max_seq_len. For each
@@ -1234,6 +1250,7 @@ def token_packing_stats_oracle() -> str:
 PACK_SEQ_LEN = 128
 
 
+@query
 def token_packing_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pack the per-language token stream into fixed-PACK_SEQ_LEN training
     SEQUENCES — the actual batch-prep step ``token_packing`` (which cuts
@@ -1342,143 +1359,12 @@ def token_packing_sequences_oracle() -> str:
     """
 
 
-def registry():
-    """name -> (query fn, oracle SQL) for the driver contract."""
-    return {
-        "sample_hash_split": (sample_hash_split, sample_hash_split_oracle()),
-        "split_leakage_pairs": (
-            split_leakage_pairs,
-            split_leakage_pairs_oracle(),
-        ),
-        "docs_split_by_cluster": (
-            docs_split_by_cluster,
-            docs_split_by_cluster_oracle(),
-        ),
-        "docs_stratified_sample": (
-            docs_stratified_sample,
-            docs_stratified_sample_oracle(),
-        ),
-        "docs_per_source_sample_k": (
-            docs_per_source_sample_k,
-            docs_per_source_sample_k_oracle(),
-        ),
-        "stratified_sample": (stratified_sample, stratified_sample_oracle()),
-        "docs_weighted_sample": (
-            docs_weighted_sample,
-            docs_weighted_sample_oracle(),
-        ),
-        "docs_token_budget_mix": (
-            docs_token_budget_mix,
-            docs_token_budget_mix_oracle(),
-        ),
-        "docs_token_budget_mix_twostage": (
-            docs_token_budget_mix_twostage,
-            docs_token_budget_mix_oracle(),  # admitted-set exact scale path
-        ),
-        "docs_curriculum_order": (
-            docs_curriculum_order,
-            docs_curriculum_order_oracle(),
-        ),
-        "docs_dsir_weights": (docs_dsir_weights, docs_dsir_weights_oracle()),
-        "docs_dsir_resample": (
-            docs_dsir_resample,
-            docs_dsir_resample_oracle(),
-        ),
-        "benchmark_contamination_semantic": (
-            benchmark_contamination_semantic,
-            benchmark_contamination_semantic_oracle(),
-        ),
-        "doc_chunks": (doc_chunks, doc_chunks_oracle()),
-        "term_redaction": (term_redaction, term_redaction_oracle()),
-        "dedup_clusters": (dedup_clusters, dedup_clusters_oracle()),
-        "dedup_clusters_star": (dedup_clusters_star, dedup_clusters_oracle()),
-        "dedup_clusters_best_keeper": (
-            dedup_clusters_best_keeper,
-            dedup_clusters_best_keeper_oracle(),
-        ),
-        "token_packing": (token_packing, token_packing_oracle()),
-        "token_packing_stats": (
-            token_packing_stats,
-            token_packing_stats_oracle(),
-        ),
-        "token_packing_sequences": (
-            token_packing_sequences,
-            token_packing_sequences_oracle(),
-        ),
-        "dedup_keep_latest": (dedup_keep_latest, dedup_keep_latest_oracle()),
-        "dedup_keep_latest_maxby": (
-            dedup_keep_latest_maxby,
-            dedup_keep_latest_oracle(),  # same semantics, aggregate plan
-        ),
-        "incremental_new_docs": (
-            incremental_new_docs,
-            incremental_new_docs_oracle(),
-        ),
-        "benchmark_contamination": (
-            benchmark_contamination,
-            benchmark_contamination_oracle(),
-        ),
-        "benchmark_contamination_bloom": (
-            benchmark_contamination_bloom,
-            benchmark_contamination_bloom_oracle(),
-        ),
-        "text_pii_scan": (text_pii_scan, text_pii_scan_oracle()),
-        "text_pii_redact": (text_pii_redact, text_pii_redact_oracle()),
-        "docs_domain_stats": (docs_domain_stats, docs_domain_stats_oracle()),
-        "docs_temperature_mix": (
-            docs_temperature_mix,
-            docs_temperature_mix_oracle(),
-        ),
-        "url_canonical_dedup": (
-            url_canonical_dedup,
-            url_canonical_dedup_oracle(),
-        ),
-        "cdc_apply_changes": (cdc_apply_changes, cdc_apply_changes_oracle()),
-        "docs_surrogate_keys": (
-            docs_surrogate_keys,
-            docs_surrogate_keys_oracle(),
-        ),
-        "customers_pseudonymized": (
-            customers_pseudonymized,
-            customers_pseudonymized_oracle(),
-        ),
-        "customers_k_anonymity": (
-            customers_k_anonymity,
-            customers_k_anonymity_oracle(),
-        ),
-        "docs_dp_release": (docs_dp_release, docs_dp_release_oracle()),
-        "orders_dp_sum_release": (
-            orders_dp_sum_release,
-            orders_dp_sum_release_oracle(),
-        ),
-        "events_dp_mean_release": (
-            events_dp_mean_release,
-            events_dp_mean_release_oracle(),
-        ),
-        "customers_l_diversity": (
-            customers_l_diversity,
-            customers_l_diversity_oracle(),
-        ),
-        "customers_t_closeness": (
-            customers_t_closeness,
-            customers_t_closeness_oracle(),
-        ),
-        "customers_t_closeness_emd": (
-            customers_t_closeness_emd,
-            customers_t_closeness_emd_oracle(),
-        ),
-        "events_key_skew_profile": (
-            events_key_skew_profile,
-            events_key_skew_profile_oracle(),
-        ),
-    }
-
-
 # --------------------------------------------------------------------------
 # keep-latest-per-key dedup (snapshot semantics)
 # --------------------------------------------------------------------------
 
 
+@query
 def dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Latest event per (user_id, event_type) — the "current snapshot per
     key" dedup every recrawled/refreshed corpus needs (keep newest version
@@ -1516,6 +1402,7 @@ def dedup_keep_latest_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def incremental_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Docs whose content fingerprint is NOT already in the 'seen' snapshot
     — the incremental-crawl dedup step. The seen set here is the even
@@ -1639,6 +1526,7 @@ def contamination_annotate(
     )
 
 
+@query
 def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document contamination against a benchmark set: the fraction of a
     training document's distinct 4-token shingles that also appear in any
@@ -1794,6 +1682,7 @@ def bloom_fit(keys: DataFrame, key_col: str, n_keys: int) -> DataFrame:
     )
 
 
+@query
 def benchmark_contamination_bloom(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1903,6 +1792,7 @@ def benchmark_contamination_bloom_oracle() -> str:
     return benchmark_contamination_oracle()
 
 
+@query
 def benchmark_contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-space benchmark decontamination: a training vector is
     contaminated when its max cosine against ANY benchmark vector clears
@@ -2030,6 +1920,7 @@ def _synthetic_url_col() -> F.Column:
     )
 
 
+@query
 def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalize URL variants and keep one document per canonical URL —
     the crawl-dedup step that runs before any content hashing.
@@ -2095,6 +1986,7 @@ def url_canonical_dedup_oracle() -> str:
 _CDC_OPS = {"view": "I", "click": "U", "purchase": "D"}
 
 
+@query
 def cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize the current snapshot from a change log: latest change
     per key wins; a terminal delete removes the key. This is the batch
@@ -2163,6 +2055,7 @@ def cdc_apply_changes_oracle() -> str:
 _SK_PARTITIONS = 8
 
 
+@query
 def docs_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign dense sequential ids 1..N in doc_id order — WITHOUT the
     single-task trap. ``row_number() OVER (ORDER BY doc_id)`` forces every
@@ -2210,6 +2103,7 @@ def docs_surrogate_keys_oracle() -> str:
     """
 
 
+@query(oracle="dedup_keep_latest_oracle")  # same semantics, aggregate plan
 def dedup_keep_latest_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by twin of :func:`dedup_keep_latest`: the latest row per key as
     a plain AGGREGATE (``max_by(payload_struct, ordering_struct)``) instead
@@ -2247,6 +2141,7 @@ def dedup_keep_latest_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@query
 def customers_pseudonymized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic PII pseudonymization: replace the name with a salted
     sha256 token that stays JOINABLE (same input -> same token across tables
@@ -2276,6 +2171,7 @@ def customers_pseudonymized_oracle() -> str:
     """
 
 
+@query
 def events_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew diagnosis for ``events.user_id``: per-key counts
     re-aggregated into the numbers that decide a join strategy — key count,
@@ -2331,6 +2227,7 @@ def events_key_skew_profile_oracle() -> str:
     """
 
 
+@query
 def dedup_clusters_best_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keeper selection per near-dup cluster by QUALITY, not by id: real
     pipelines keep the best-written member of each duplicate cluster (the
@@ -2454,6 +2351,7 @@ _PII_TEXT_SQL = """
 """
 
 
+@query
 def text_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document PII hit counts (emails / phones / IPv4) — the scan half
     of the detect-then-redact stage every training-data pipeline runs
@@ -2497,6 +2395,7 @@ def text_pii_scan_oracle() -> str:
     """
 
 
+@query
 def text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed-placeholder PII redaction: emails -> ``[EMAIL]``, phones ->
     ``[PHONE]``, IPv4 -> ``[IP]``; emits the total redaction count and the
@@ -2562,6 +2461,7 @@ def text_pii_redact_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def docs_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain crawl statistics — doc count, tracking-param share,
     distinct path count, total chars — the aggregate a crawl-curation pass
@@ -2646,6 +2546,7 @@ TEMP_ALPHA = 0.3  # the published multilingual-LM default (p_i^alpha)
 TEMP_BUDGET_TOKENS = 50_000  # target mixture size the weights allocate
 
 
+@query
 def docs_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source sampling weights: raw token share
     ``p_i = n_i / N`` flattened to ``q_i ∝ p_i^alpha`` (alpha < 1 boosts
@@ -2744,6 +2645,7 @@ def qi_classes(customers: DataFrame) -> DataFrame:
     )
 
 
+@query
 def customers_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over the quasi-identifier tuple (nation, market
     segment, account-balance band): the privacy check that runs AFTER
@@ -2787,6 +2689,7 @@ L_DIVERSITY = 3
 LDIV_QI = ("c_nationkey", "bal_band")
 
 
+@query
 def customers_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (Machanavajjhala et al.): per QI class (nation,
     balance band), how many DISTINCT market-segment values it contains
@@ -2854,6 +2757,7 @@ def customers_l_diversity_oracle() -> str:
 T_CLOSENESS = 0.2
 
 
+@query
 def customers_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit (Li et al. 2007) — the third rung of the privacy
     ladder after ``customers_k_anonymity`` (class size) and
@@ -2938,6 +2842,7 @@ def customers_t_closeness_oracle() -> str:
     """
 
 
+@query
 def customers_t_closeness_emd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness with the EARTH MOVER'S DISTANCE over an ORDERED
     sensitive attribute (Li et al. 2007, §4.2) — the companion of
@@ -3126,6 +3031,7 @@ DP_PUBLIC_SOURCES: tuple = tuple(f"src{i}" for i in range(20))
 DP_PUBLIC_LANGS: tuple = ("de", "en", "es", "fr", "zh")
 
 
+@query
 def docs_dp_release(
     spark: SparkSession, sf_dir: str, salt: str | None = None
 ) -> DataFrame:
@@ -3205,6 +3111,7 @@ def docs_dp_release(
 DP_SUM_CLAMP = 600_000.0
 
 
+@query
 def orders_dp_sum_release(
     spark: SparkSession, sf_dir: str, salt: str | None = None
 ) -> DataFrame:
@@ -3275,6 +3182,7 @@ def orders_dp_sum_release_oracle() -> str:
     """
 
 
+@query
 def events_dp_mean_release(
     spark: SparkSession, sf_dir: str, salt: str | None = None
 ) -> DataFrame:
@@ -3554,6 +3462,7 @@ def _dsir_weights_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document DSIR importance weight (hashed-unigram log-likelihood
     ratio vs the target domain) — see _dsir_weights_frame for the method
@@ -3602,6 +3511,7 @@ def docs_dsir_weights_oracle() -> str:
     return _dsir_weights_oracle_body()
 
 
+@query
 def docs_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR's sampling step: Gumbel-top-K over the importance weights —
     sampling-without-replacement ∝ w via key = log w − ln(−ln(u)), with
@@ -3657,6 +3567,7 @@ def docs_dsir_resample_oracle() -> str:
 STRATA_QUOTA = 50  # docs kept per language
 
 
+@query
 def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACTLY ``STRATA_QUOTA`` documents per language (all of them when a
     language has fewer) — deterministic across runs and engines: the kept

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
 #: column -> kind ('num' | 'txt' | 'date') for the profiled table
@@ -33,6 +34,7 @@ _ORDERS_COLS: dict[str, str] = {
 }
 
 
+@query
 def profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per column of ``orders``: row count, null count, exact
     distinct count, and min/max (numeric columns in ``min_num``/``max_num``,
@@ -125,6 +127,7 @@ _ORDERS_RULES: dict[str, str] = {
 }
 
 
+@query
 def orders_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectations over ``orders``: one row per rule with its
     violation count and pass flag — the write-audit gate a pipeline runs
@@ -189,6 +192,7 @@ def orders_expectations_oracle() -> str:
     )
 
 
+@query
 def orders_group_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-insensitive content fingerprint per order status — the
     cross-engine data-validation primitive (compare a migrated table to its
@@ -229,27 +233,12 @@ def orders_group_fingerprint_oracle() -> str:
     """
 
 
-def registry():
-    """name -> (query fn, oracle SQL) for the driver contract."""
-    return {
-        "profile_orders": (profile_orders, profile_orders_oracle()),
-        "orders_expectations": (orders_expectations, orders_expectations_oracle()),
-        "orders_group_fingerprint": (
-            orders_group_fingerprint,
-            orders_group_fingerprint_oracle(),
-        ),
-        "orders_benford_digits": (
-            orders_benford_digits,
-            orders_benford_digits_oracle(),
-        ),
-    }
-
-
 # --------------------------------------------------------------------------
 # Benford first-digit audit (numeric data-quality profiling)
 # --------------------------------------------------------------------------
 
 
+@query
 def orders_benford_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-significant-digit distribution of order totals vs Benford's
     law — the classic fabricated-/corrupted-numeric-column detector a

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events, load_table
 
 
@@ -35,6 +36,7 @@ def _dbl(c: Column) -> Column:
     return c.cast("double")
 
 
+@query(oracle="q1_oracle")
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1: pricing summary report (scan → filter → 4-way agg)."""
     l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") <= "2000-09-02")
@@ -73,6 +75,7 @@ def q1_oracle() -> str:
     """
 
 
+@query(oracle="q3_oracle")
 def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3: unshipped-order revenue (dim-filtered 3-way join, top 10).
 
@@ -116,6 +119,7 @@ def q3_oracle() -> str:
     """
 
 
+@query(oracle="q5_oracle")
 def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5: revenue by nation where customer and supplier share the
     nation (6-way join; region/nation broadcast, AQE reorders the rest)."""
@@ -155,6 +159,7 @@ def q5_oracle() -> str:
     """
 
 
+@query(oracle="q6_oracle")
 def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6: pure scan-filter-aggregate; every predicate pushes to parquet."""
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -178,6 +183,7 @@ def q6_oracle() -> str:
     """
 
 
+@query(oracle="q10_oracle")
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10: revenue lost to returns, top 20 customers."""
     c = load_table(spark, sf_dir, "customer")
@@ -213,6 +219,7 @@ def q10_oracle() -> str:
     """
 
 
+@query(oracle="top_customers_oracle")
 def top_customers_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking window: top-3 customers by account balance per nation.
 
@@ -242,6 +249,7 @@ def top_customers_oracle() -> str:
     """
 
 
+@query
 def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ROLLUP over (returnflag, linestatus) — subtotal lattice."""
     l = load_table(spark, sf_dir, "lineitem")
@@ -264,6 +272,7 @@ def revenue_rollup_oracle() -> str:
     """
 
 
+@query
 def customers_with_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-semi join: customers that placed at least one qualifying order."""
     c = load_table(spark, sf_dir, "customer")
@@ -281,6 +290,7 @@ def customers_with_orders_oracle() -> str:
     """
 
 
+@query
 def customers_without_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-anti join: customers with no HIGH-VALUE orders (>450k).
 
@@ -305,6 +315,7 @@ def customers_without_orders_oracle() -> str:
     """
 
 
+@query(oracle="asof_oracle")
 def asof_last_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: for each purchase event, the user's most recent prior click.
 
@@ -352,6 +363,7 @@ def asof_oracle() -> str:
 ASOF_TOLERANCE_MS = 600_000
 
 
+@query(oracle="asof_nearest_oracle")
 def asof_nearest_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-as-of join with tolerance: for each purchase, the click
     closest in time (either direction) within ±10 minutes; ties (equidistant
@@ -432,6 +444,7 @@ def asof_nearest_oracle() -> str:
     """
 
 
+@query(oracle="events_hourly_oracle")
 def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window per event type.
 
@@ -467,6 +480,7 @@ def events_hourly_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def customer_year_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION / INTERSECT / EXCEPT over yearly active-customer sets.
 
@@ -502,6 +516,7 @@ def customer_year_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+@query
 def customers_every_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational division: customers with at least one order in EVERY year
     the orders table spans.
@@ -564,6 +579,7 @@ def customer_year_setops_oracle() -> str:
     """
 
 
+@query
 def orders_status_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (o_orderstatus, o_orderpriority): all 2^2 grouping sets in
     one pass — Spark expands the cube map-side and aggregates once."""
@@ -586,6 +602,7 @@ def orders_status_cube_oracle() -> str:
     """
 
 
+@query
 def supplier_part_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct counts per brand (the oracle-checked twin of the
     approx query below)."""
@@ -604,6 +621,7 @@ def supplier_part_distinct_exact_oracle() -> str:
     """
 
 
+@query(oracle=None)  # HLL sketch: rows-only check, exact twin pins semantics
 def supplier_part_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog++ distinct counts per brand (rows-only driver check: the
     sketch is Spark-specific, so no value-exact oracle — the exact twin
@@ -616,6 +634,7 @@ def supplier_part_distinct_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+@query
 def lineitem_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Non-equi range join: bucket line items into price tiers.
 
@@ -660,6 +679,7 @@ def lineitem_price_tiers_oracle() -> str:
     """
 
 
+@query(oracle="lineitem_price_tiers_oracle")  # same semantics, equi-join plan
 def lineitem_price_tiers_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The scale path promised by lineitem_price_tiers' docstring: turn the
     interval θ-join into an EQUI-join by bucketing.
@@ -722,6 +742,7 @@ def lineitem_price_tiers_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+@query
 def events_distinct_users_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct users per event_type via two-stage aggregation.
 
@@ -750,6 +771,7 @@ def events_distinct_users_two_stage_oracle() -> str:
     """
 
 
+@query(oracle="asof_oracle")
 def asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cogrouped-applyInPandas twin of :func:`asof_last_click_before_purchase`
     — identical semantics through the OTHER custom-op surface: clicks and
@@ -817,6 +839,7 @@ def asof_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Percent-of-total (ratio_to_report): each nation's share of global
     order revenue — the OLAP idiom where a windowed grand total divides a

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -34,6 +35,7 @@ def _day_col():
     return F.expr(f"ts_ms div {_DAY_MS}").alias("day")
 
 
+@query
 def events_pivot_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily event counts pivoted to one column per event type."""
     ev = load_events(spark, sf_dir)
@@ -57,6 +59,7 @@ def events_pivot_daily_oracle() -> str:
     """
 
 
+@query
 def events_unpivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-trip: pivot per-user counts wide, then UNPIVOT back to long
     (user_id, event_type, n). Zero cells are dropped so the round-trip
@@ -83,6 +86,7 @@ def events_unpivot_counts_oracle() -> str:
     """
 
 
+@query
 def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS ((event_type, day), (event_type), (day), ()) with a
     grouping_id discriminator — all four aggregates in one Expand+shuffle."""
@@ -111,18 +115,3 @@ def events_grouping_sets_oracle() -> str:
     FROM events
     GROUP BY GROUPING SETS ((event_type, 2), (event_type), (2), ())
     """
-
-
-def registry():
-    """name -> (query fn, oracle SQL) for the driver contract."""
-    return {
-        "events_pivot_daily": (events_pivot_daily, events_pivot_daily_oracle()),
-        "events_unpivot_counts": (
-            events_unpivot_counts,
-            events_unpivot_counts_oracle(),
-        ),
-        "events_grouping_sets": (
-            events_grouping_sets,
-            events_grouping_sets_oracle(),
-        ),
-    }

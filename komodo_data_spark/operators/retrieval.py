@@ -52,6 +52,7 @@ from komodo_data_spark.operators.text_analysis import (
     text_bm25_rank,
     text_bm25_rank_oracle,
 )
+from komodo_data_spark.registry import query
 
 #: RRF damping constant (the standard k=60 from the original TREC runs).
 RRF_K = 60
@@ -65,20 +66,7 @@ RRF_TOPK = 20
 IVF_K = 3
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "retrieval_hybrid_rrf": (
-            retrieval_hybrid_rrf,
-            retrieval_hybrid_rrf_oracle(),
-        ),
-        "retrieval_label_metrics": (
-            retrieval_label_metrics,
-            retrieval_label_metrics_oracle(),
-        ),
-    }
-
-
+@query
 def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuse the BM25 top-20 (fixed bag-of-words query) with the dense
     cosine top-20 (query vector = embedding of ``RRF_QVEC``) by
@@ -293,6 +281,7 @@ def _label_metrics_sql(ranked_sql: str, k: int, method: str) -> str:
     """
 
 
+@query
 def retrieval_label_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@k / MRR / precision@k of the exact brute-force top-5 and the
     single-probe IVF top-3 against label-match relevance — the graded

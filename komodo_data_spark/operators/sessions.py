@@ -17,11 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events
 
 SESSION_GAP_MS = 30 * 60 * 1000  # 30 minutes
 
 
+@query
 def event_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessions: (user_id, session_seq, n_events, start_ms, end_ms,
     duration_ms) with a 30-minute inactivity gap."""
@@ -78,6 +80,7 @@ def event_sessions_oracle() -> str:
 OVERLAP_CHUNK_MS = 3_600_000
 
 
+@query
 def session_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval overlap join: pairs of sessions from DIFFERENT users whose
     [start, end] spans intersect, with the overlap length.
@@ -151,6 +154,7 @@ def session_overlap_pairs_oracle() -> str:
     """
 
 
+@query
 def events_session_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered per-session transcript assembly — the SFT-data shape: each
     session becomes one training example whose "turns" are its events in
@@ -223,18 +227,3 @@ def events_session_transcripts_oracle() -> str:
            string_agg(event_type, '>' ORDER BY ts_ms, event_id) AS transcript
     FROM s GROUP BY user_id, session_seq
     """
-
-
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "event_sessions": (event_sessions, event_sessions_oracle()),
-        "session_overlap_pairs": (
-            session_overlap_pairs,
-            session_overlap_pairs_oracle(),
-        ),
-        "events_session_transcripts": (
-            events_session_transcripts,
-            events_session_transcripts_oracle(),
-        ),
-    }

@@ -26,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.operators.model_memo import session_model_path, shared_fit
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -73,6 +74,7 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id < 10)."""
     v = _vectors(spark, sf_dir)
@@ -136,6 +138,7 @@ def _sql_bucket(alias: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+@query
 def knn_lsh_signbits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-3 neighbors per query, restricted to the query's LSH
     bucket — the equi-join-keyed scale variant of knn_brute_force."""
@@ -189,65 +192,10 @@ def knn_lsh_signbits_oracle() -> str:
     """
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "knn_brute_force": (knn_brute_force, knn_brute_force_oracle()),
-        "knn_lsh_signbits": (knn_lsh_signbits, knn_lsh_signbits_oracle()),
-        "knn_ivf": (knn_ivf, knn_ivf_oracle()),
-        "knn_lsh_multiprobe": (knn_lsh_multiprobe, knn_lsh_multiprobe_oracle()),
-        "knn_ivf_multiprobe": (knn_ivf_multiprobe, knn_ivf_multiprobe_oracle()),
-        "knn_lsh_recall": (knn_lsh_recall, knn_lsh_recall_oracle()),
-        "knn_lsh_recall_sampled": (
-            knn_lsh_recall_sampled,
-            knn_lsh_recall_sampled_oracle(),
-        ),
-        "knn_ivf_recall": (knn_ivf_recall, knn_ivf_recall_oracle()),
-        "knn_quantized_recall": (
-            knn_quantized_recall,
-            knn_quantized_recall_oracle(),
-        ),
-        "knn_pq_adc": (knn_pq_adc, knn_pq_adc_oracle()),
-        "knn_pq_recall": (knn_pq_recall, knn_pq_recall_oracle()),
-        "knn_pq_published_adc": (knn_pq_published_adc, knn_pq_adc_oracle()),
-        "knn_ivfpq_adc": (knn_ivfpq_adc, knn_ivfpq_adc_oracle()),
-        "knn_ivfpq_recall": (knn_ivfpq_recall, knn_ivfpq_recall_oracle()),
-        "kmeans_clusters": (kmeans_clusters, kmeans_clusters_oracle()),
-        "kmeans_clusters_published": (
-            kmeans_clusters_published,
-            kmeans_clusters_oracle(),
-        ),
-        "dedup_semantic": (dedup_semantic, dedup_semantic_oracle()),
-        "dedup_semantic_published": (
-            dedup_semantic_published,
-            dedup_semantic_oracle(),
-        ),
-        "embeddings_vector_stats": (
-            embeddings_vector_stats,
-            embeddings_vector_stats_oracle(),
-        ),
-        "embeddings_centroid_similarity": (
-            embeddings_centroid_similarity,
-            embeddings_centroid_similarity_oracle(),
-        ),
-        "embeddings_dim_covariance": (
-            embeddings_dim_covariance,
-            embeddings_dim_covariance_oracle(),
-        ),
-        "embeddings_hard_negatives": (
-            embeddings_hard_negatives,
-            embeddings_hard_negatives_oracle(),
-        ),
-        "embeddings_top_pc": (
-            embeddings_top_pc,
-            embeddings_top_pc_oracle(),
-        ),
-    }
-
-
 N_CELLS = 8  # IVF coarse cells (centroids = first N_CELLS vectors)
 
 
+@query
 def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-style ANN: coarse-quantize every vector to its nearest "centroid"
     (deterministically, the first N_CELLS vectors stand in for k-means
@@ -341,6 +289,7 @@ def knn_ivf_oracle() -> str:
     """
 
 
+@query
 def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-probe sign-bit LSH: each query searches its own bucket plus the
     LSH_BITS single-bit-flip neighbor buckets (5 probes at 4 bits).
@@ -419,6 +368,7 @@ def knn_lsh_multiprobe_oracle() -> str:
 IVF_PROBES = 2  # search the query's 2 nearest cells
 
 
+@query
 def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with multi-cell probing: queries search their IVF_PROBES nearest
     cells instead of one — the IVF recall dial (same role as bit-flip
@@ -582,6 +532,7 @@ def _recall_oracle(
     """
 
 
+@query
 def knn_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of sign-bit LSH against the exact brute-force top-K — the
     evaluation loop every ANN deployment runs before trusting an index."""
@@ -594,6 +545,7 @@ def knn_lsh_recall_oracle() -> str:
     return _recall_oracle(knn_lsh_signbits_oracle())
 
 
+@query
 def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of single-probe IVF against the exact brute-force top-K —
     completes the eval ladder: every approximate search path (sign-bit
@@ -629,6 +581,7 @@ KNN_RECALL_SAMPLE_QUERIES = 32
 _KNN_SAMPLE_MOD = 100_000
 
 
+@query
 def knn_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``knn_lsh_recall`` with a SAMPLED query set — the production form
     of the ANN eval loop at corpus scale: ~KNN_RECALL_SAMPLE_QUERIES
@@ -807,6 +760,7 @@ def _kmeans_fit_shared(spark: SparkSession, sf_dir: str):
     return _kmeans_fit(spark, sf_dir)
 
 
+@query
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means over the embeddings (k=4, 2 fixed Lloyd iterations,
     deterministic init = the first k vectors) — the iterative-numeric
@@ -884,23 +838,13 @@ def kmeans_apply_published(
 
 def _published_kmeans_roundtrip(spark: SparkSession, sf_dir: str):
     """Publish to the session-scoped store and apply through it (the
-    ``text_bpe_published_apply`` / ``knn_pq_published_adc`` pattern: a
-    registry query cannot take a model_path argument, so the roundtrip
-    uses a per-application temp path; production passes a durable path
-    to the same two functions)."""
-    import os
-    import tempfile
-
-    model_path = os.path.join(
-        tempfile.gettempdir(),
-        "komodo_kmeans_model",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.abspath(sf_dir)),
-    )
+    ``text_bpe_published_apply`` / ``knn_pq_published_adc`` pattern)."""
+    model_path = session_model_path(spark, "kmeans", sf_dir)
     publish_kmeans_model(spark, sf_dir, model_path)
     return kmeans_apply_published(spark, sf_dir, model_path)
 
 
+@query(oracle="kmeans_clusters_oracle")
 def kmeans_clusters_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``kmeans_clusters`` through the published cell store; the oracle
     is ``kmeans_clusters``'s, so published ≡ refit is hash-checked in
@@ -909,6 +853,7 @@ def kmeans_clusters_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _kmeans_clusters_from(centroids, assigned)
 
 
+@query(oracle="dedup_semantic_oracle")
 def dedup_semantic_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``dedup_semantic`` through the published cell store; oracle =
     ``dedup_semantic``'s (published ≡ refit in the correctness gate)."""
@@ -966,6 +911,7 @@ def kmeans_clusters_oracle() -> str:
 SEMDEDUP_COSINE = 0.40
 
 
+@query
 def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic dedup (Abbas et al., 2023, re-expressed
     Spark-first): cluster the embedding space (k-means), then look for
@@ -1042,6 +988,7 @@ def dedup_semantic_oracle() -> str:
     """
 
 
+@query
 def embeddings_vector_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector geometry stats (dim, L2 norm, mean component, max |x|)
     computed entirely with JVM higher-order functions — the zero-UDF path
@@ -1087,6 +1034,7 @@ def embeddings_vector_stats_oracle() -> str:
 QUANT_LEVELS = 127  # symmetric int8
 
 
+@query
 def knn_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of per-vector symmetric int8 quantization against the exact
     float top-K — the evaluation for the OTHER standard ANN trade: 4×
@@ -1148,6 +1096,7 @@ def knn_quantized_recall_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def embeddings_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cosine between per-label embedding CENTROIDS — the
     class-separation audit run before trusting label-conditioned sampling
@@ -1266,6 +1215,7 @@ def _dim_cov_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def embeddings_dim_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-dimension-pair covariance and Pearson correlation of the
     embedding space — the anisotropy audit run before trusting cosine-based
@@ -1515,6 +1465,7 @@ def _pq_fit_shared(spark: SparkSession, sf_dir: str):
     return _pq_lloyd(_pq_subvectors(v))
 
 
+@query
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN search (Jégou et al. 2011, re-expressed
     Spark-first): each corpus vector is stored as PQ_M codebook codes
@@ -1617,6 +1568,7 @@ def knn_pq_apply_published(
     return _pq_adc_topk(spark, sf_dir, _pq_reconstruct_inline(v, cents))
 
 
+@query(oracle="knn_pq_adc_oracle")
 def knn_pq_published_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing roundtrip of the PUBLISH path: freeze the codebooks
     to a session-scoped store (`publish_pq_model` — tiny parquet write),
@@ -1624,20 +1576,9 @@ def knn_pq_published_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     require_store gate, read, broadcast encode + ADC). The oracle is
     `knn_pq_adc`'s — published ≡ refit is thereby hash-checked in the
     correctness gate itself, not only pinned in pytest (the
-    `text_bpe_published_apply` pattern). The store path is
-    per-application under the system temp dir (a registry query cannot
-    take a model_path argument), overwritten on each publish; a
-    production pipeline passes a durable path to the same two
-    functions."""
-    import os
-    import tempfile
-
-    model_path = os.path.join(
-        tempfile.gettempdir(),
-        "komodo_pq_model",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.abspath(sf_dir)),
-    )
+    `text_bpe_published_apply` pattern). The store is
+    ``session_model_path``'s, overwritten on each publish."""
+    model_path = session_model_path(spark, "pq", sf_dir)
     publish_pq_model(spark, sf_dir, model_path)
     return knn_pq_apply_published(spark, sf_dir, model_path)
 
@@ -1719,6 +1660,7 @@ def knn_pq_adc_oracle() -> str:
     """
 
 
+@query
 def knn_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of PQ/ADC search against the exact float top-K — prices
     the 256× compression the same way the int8 twin prices its 4×: every
@@ -1790,6 +1732,7 @@ def _ivfpq_fit_shared(spark: SparkSession, sf_dir: str):
     return _ivfpq_fit(spark, sf_dir)
 
 
+@query
 def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN search — the production-standard composed index: probe
     the query's IVF_PROBES nearest coarse cells, ADC-score only their
@@ -1932,6 +1875,7 @@ def knn_ivfpq_adc_oracle() -> str:
     """
 
 
+@query
 def knn_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of the composed IVF-PQ index against the exact float
     top-K — prices BOTH approximations at once (probe misses from the
@@ -1952,6 +1896,7 @@ def knn_ivfpq_recall_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def embeddings_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K most-similar vectors under a DIFFERENT label for each query
     vector — hard-negative mining for contrastive/embedding training: the
@@ -2040,6 +1985,7 @@ def embeddings_hard_negatives_oracle() -> str:
 POWER_ITERS = 5
 
 
+@query
 def embeddings_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dominant principal component of the embedding space by POWER_ITERS
     fixed rounds of power iteration on the covariance matrix — the audit

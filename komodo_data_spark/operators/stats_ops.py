@@ -21,12 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events, load_table
 
 #: Support threshold: users with at least this many events are "heavy".
 HEAVY_MIN_EVENTS = 80
 
 
+@query
 def events_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users with >= HEAVY_MIN_EVENTS events, found with one approx_top_k
     sketch instead of a full groupBy over the key space.
@@ -57,6 +59,7 @@ def events_heavy_hitters_oracle() -> str:
     """
 
 
+@query(oracle="events_heavy_hitters_oracle")  # same result through the merge path
 def events_heavy_hitters_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same heavy-hitter result through the MERGEABLE sketch lifecycle:
     approx_top_k_accumulate per day -> approx_top_k_combine across days ->
@@ -95,6 +98,7 @@ def events_heavy_hitters_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def orders_stats_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-priority order statistics: modal status (deterministic lowest-on-
     tie via WITHIN GROUP ASC), exact median and 25th discrete percentile of
@@ -148,43 +152,6 @@ def orders_stats_pack_oracle() -> str:
     """
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "events_heavy_hitters": (events_heavy_hitters, events_heavy_hitters_oracle()),
-        "events_heavy_hitters_merged": (
-            events_heavy_hitters_merged,
-            events_heavy_hitters_oracle(),  # same result through the merge path
-        ),
-        "orders_stats_pack": (orders_stats_pack, orders_stats_pack_oracle()),
-        "events_ks_test": (events_ks_test, events_ks_test_oracle()),
-        "events_welch_ttest": (
-            events_welch_ttest,
-            events_welch_ttest_oracle(),
-        ),
-        "events_cusum_changepoint": (
-            events_cusum_changepoint,
-            events_cusum_changepoint_oracle(),
-        ),
-        "events_mannwhitney_u": (
-            events_mannwhitney_u,
-            events_mannwhitney_u_oracle(),
-        ),
-        "events_mad_outliers": (
-            events_mad_outliers,
-            events_mad_outliers_oracle(),
-        ),
-        "events_mad_outliers_approx": (
-            events_mad_outliers_approx,
-            None,  # sketch medians: rows-only; exact twin is the anchor
-        ),
-        "events_spearman_trend": (
-            events_spearman_trend,
-            events_spearman_trend_oracle(),
-        ),
-    }
-
-
 # --------------------------------------------------------------------------
 # two-sample hypothesis tests (experimentation / drift significance)
 # --------------------------------------------------------------------------
@@ -201,6 +168,7 @@ KS_BUCKET_WIDTH = 16.0
 KS_CRIT_95 = 1.3581015157406195
 
 
+@query
 def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov–Smirnov statistic between the value
     distributions of two event types — the significance test behind the
@@ -323,6 +291,7 @@ WELCH_GROUP_A = "view"
 WELCH_GROUP_B = "error"
 
 
+@query
 def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test between two event types' value
     means — the experimentation-analytics primitive (A/B test readout)
@@ -415,6 +384,7 @@ def events_welch_ttest_oracle() -> str:
 _CUSUM_DAY_MS = 86_400_000
 
 
+@query
 def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per event_type, WHERE the value level shifted: the classic CUSUM
     localization statistic — cumulative sum of deviations from the grand
@@ -519,6 +489,7 @@ def events_cusum_changepoint_oracle() -> str:
 MWU_Z_95 = 1.959963984540054
 
 
+@query
 def events_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-corrected Mann–Whitney U between the value distributions of the
     two KS event types — the RANK-based member of the two-sample family
@@ -675,6 +646,7 @@ MAD_CONSISTENCY = 0.6745
 MAD_Z_CUT = 3.5
 
 
+@query
 def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type MAD outliers: flag events whose modified z-score
     0.6745·(value − median)/MAD exceeds 3.5 in magnitude — the robust
@@ -756,6 +728,7 @@ def events_mad_outliers_oracle() -> str:
     """
 
 
+@query(oracle=None)  # sketch medians: rows-only; exact twin is the anchor
 def events_mad_outliers_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPROX twin of ``events_mad_outliers`` (rows-only): median and MAD
     come from two chained ``approx_percentile`` sketch aggregates instead
@@ -811,6 +784,7 @@ def events_mad_outliers_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 SPEARMAN_TS_BUCKET_MS = 86_400_000
 
 
+@query
 def events_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type Spearman rank correlation between event TIME and
     value — the nonparametric monotone-trend test (a drifting sensor

@@ -30,7 +30,8 @@ from komodo_data_spark.functions.text_features import (
     sql_tokens,
     tokens,
 )
-from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.operators.model_memo import session_model_path, shared_fit
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
 
@@ -43,6 +44,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+@query
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token counts: whitespace tokens, distinct tokens,
     average token length, type-token ratio."""
@@ -99,6 +101,7 @@ TEXTRANK_ITERS = 3
 TEXTRANK_K = 20
 
 
+@query
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level TextRank keywords: weighted PageRank over the word
     co-occurrence graph (adjacent-token edges, stopwords and self-loops
@@ -273,6 +276,7 @@ def text_textrank_keywords_oracle() -> str:
     """
 
 
+@query
 def text_kneser_ney_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score EVERY document under a Kneser-Ney bigram model fit ONLY on
     the train split — the frozen-model form of ``text_kneser_ney_logprob``
@@ -407,6 +411,7 @@ def text_kneser_ney_apply_oracle() -> str:
     """
 
 
+@query
 def text_entropy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token-distribution entropy — the information-theoretic
     quality signal next to the heuristic ratios (``text_quality_scores``)
@@ -499,6 +504,7 @@ def text_entropy_stats_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality features: length, stopword ratio, mean word length,
     and a bounded composite score = min(n_tokens/100, 1) * (0.5 + 0.5*TTR)."""
@@ -542,6 +548,7 @@ def text_quality_scores_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID; output is the (actual, predicted) confusion
     matrix. Ties break in declaration order (en > de > fr > es); docs with
@@ -608,6 +615,7 @@ def text_language_id_oracle() -> str:
 _BPE_PATTERN = r"[a-z]+|[0-9]{1,3}|[^a-z0-9\s]"
 
 
+@query
 def text_bpe_token_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-cost estimation per document: whitespace token count vs a
     BPE-ish regex token count, plus chars-per-BPE-token (the budget number a
@@ -766,6 +774,7 @@ def _bpe_fit(spark: SparkSession, sf_dir: str):
     return base.select("word", "cnt", w_expr.alias("w")), merges
 
 
+@query
 def text_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train a real byte-pair encoder on the corpus and apply it: learn the
     top ``BPE_MERGES`` merges by exact corpus-weighted pair counting
@@ -804,6 +813,7 @@ def text_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table itself — (rank, a, b) in training order, the
     inspectable artifact of ``text_bpe_train_apply``'s fit (what ships to
@@ -1161,6 +1171,9 @@ def text_bpe_apply_published(
     )
 
 
+# published ≡ refit: the store roundtrip must hash-match the
+# in-session train_apply oracle exactly
+@query(oracle="text_bpe_batched_train_apply_oracle")
 def text_bpe_published_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-facing roundtrip of the PUBLISH path: freeze the merge
     table to a session-scoped store (`text_bpe_publish` — tiny parquet
@@ -1168,23 +1181,14 @@ def text_bpe_published_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     require_store gate, read, rank-order fold). The oracle is
     `text_bpe_batched_train_apply`'s — published ≡ refit is thereby
     hash-checked in the correctness gate itself, not only pinned in
-    pytest. The store path is per-application under the system temp dir
-    (a registry query cannot take a model_path argument), overwritten
-    on each publish; a production pipeline passes a durable path to the
-    same two functions."""
-    import os
-    import tempfile
-
-    model_path = os.path.join(
-        tempfile.gettempdir(),
-        "komodo_bpe_model",
-        spark.sparkContext.applicationId,
-        os.path.basename(os.path.abspath(sf_dir)),
-    )
+    pytest. The store is ``session_model_path``'s, overwritten on each
+    publish."""
+    model_path = session_model_path(spark, "bpe", sf_dir)
     text_bpe_publish(spark, sf_dir, model_path)
     return text_bpe_apply_published(spark, sf_dir, model_path)
 
 
+@query
 def text_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batched trainer's merge table — (rank, a, b) in acceptance
     order. Same artifact shape as ``text_bpe_merges`` but learned at
@@ -1197,6 +1201,7 @@ def text_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges.orderBy("rank")
 
 
+@query
 def text_bpe_batched_train_apply(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1244,6 +1249,7 @@ def text_bpe_batched_train_apply_oracle() -> str:
     """
 
 
+@query
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual TOKEN STREAM under the batched-trained BPE vocabulary:
     one row per emitted token, addressed (doc_id, pos, sym_pos, token) —
@@ -1306,6 +1312,7 @@ def text_bpe_encode_oracle() -> str:
     """
 
 
+@query
 def text_bpe_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END of the tokenizer pipeline: the corpus's BPE token stream
     packed into fixed-PACK_SEQ_LEN training sequences — one row per
@@ -1545,6 +1552,7 @@ def text_bpe_merges_batched_oracle(
 BOILERPLATE_TOP_K = 20
 
 
+@query
 def boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 5-token shingles by document frequency — the boilerplate
     detector (headers/footers/licenses repeat verbatim across documents).
@@ -1584,6 +1592,7 @@ def boilerplate_ngrams_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content fingerprints: md5 of the normalized token stream (exact-dup
     key) plus the lexicographic-min md5 over 5-token shingles (a 1-coordinate
@@ -1621,6 +1630,7 @@ _RH_MOD = 2_147_483_647  # 2^31 - 1: acc*31+255 < 2^36, exact in BIGINT
 _RH_WIN = 8
 
 
+@query
 def text_rolling_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Karp–Rabin fingerprints: the full-document polynomial hash plus the
     minimum rolling hash over all 8-char windows (winnowing-lite — stable
@@ -1689,6 +1699,7 @@ COMPRESSION_KEEP_MIN = 0.25
 COMPRESSION_KEEP_MAX = 0.95
 
 
+@query(oracle=None)  # zlib has no SQL twin: rows-only; exact pytest pin
 def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """zlib compression ratio per document — the classic cheap quality
     signal (degenerate repetition compresses to almost nothing; random or
@@ -1762,6 +1773,7 @@ def compression_frame(d: DataFrame) -> DataFrame:
     )
 
 
+@query
 def text_repetition_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition signals in the style of the Gopher quality
     rules (Rae et al. 2021, public paper): the fraction of tokens taken by
@@ -1882,6 +1894,7 @@ def quality_probability_col():
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
 
 
+@query
 def text_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-based quality filtering: featurize each document (log token
     count, type-token ratio, stopword ratio, mean word length), apply a
@@ -1940,6 +1953,7 @@ def text_quality_classifier_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 @shared_fit("bigram_logprob")
 def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score each document under the corpus's OWN empirical bigram
@@ -2040,6 +2054,7 @@ KN_DISCOUNT = 0.75
 KN_LOGPROB_MIN = -3.41
 
 
+@query
 def text_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score each document under an interpolated Kneser-Ney bigram LM fit
     on the corpus itself — the smoothing family KenLM uses and the missing
@@ -2250,6 +2265,7 @@ def _kn3_score(g3: DataFrame, m3: DataFrame, m2: DataFrame) -> DataFrame:
     )
 
 
+@query
 def text_kneser_ney3_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score each document under an interpolated TRIGRAM Kneser-Ney LM fit
     on the corpus itself — completing the LM ladder to KenLM parity
@@ -2394,6 +2410,7 @@ def text_kneser_ney3_logprob_oracle() -> str:
     """
 
 
+@query
 def text_kneser_ney3_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score EVERY document under a trigram Kneser-Ney model fit ONLY on
     the train split — the frozen-model twin of
@@ -2546,6 +2563,7 @@ def text_kneser_ney3_apply_oracle() -> str:
     """
 
 
+@query
 def source_ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source n-gram diversity: distinct vs total 3-token shingles and
     their type-token ratio — the corpus-health signal that drops when a
@@ -2617,168 +2635,7 @@ def source_ngram_diversity_oracle() -> str:
     """
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "source_ngram_diversity": (
-            source_ngram_diversity,
-            source_ngram_diversity_oracle(),
-        ),
-        "docs_quality_quantile_filter": (
-            docs_quality_quantile_filter,
-            docs_quality_quantile_filter_oracle(),
-        ),
-        "docs_quality_quantile_filter_approx": (
-            docs_quality_quantile_filter_approx,
-            None,  # sketch thresholds: rows-only; exact twin is the anchor
-        ),
-        "docs_perplexity_buckets": (
-            docs_perplexity_buckets,
-            docs_perplexity_buckets_oracle(),
-        ),
-        "docs_perplexity_buckets_approx": (
-            docs_perplexity_buckets_approx,
-            None,  # sketch cut points: rows-only; exact twin is the anchor
-        ),
-        "docs_quality_band_filter": (
-            docs_quality_band_filter,
-            docs_quality_band_filter_oracle(),
-        ),
-        "docs_quality_token_weighted_filter": (
-            docs_quality_token_weighted_filter,
-            docs_quality_token_weighted_filter_oracle(),
-        ),
-        "docs_ppl_token_weighted_buckets": (
-            docs_ppl_token_weighted_buckets,
-            docs_ppl_token_weighted_buckets_oracle(),
-        ),
-        "text_repetition_signals": (
-            text_repetition_signals,
-            text_repetition_signals_oracle(),
-        ),
-        "text_compression_ratio": (
-            text_compression_ratio,
-            None,  # zlib has no SQL twin: rows-only; exact pytest pin
-        ),
-        "text_token_stats": (text_token_stats, text_token_stats_oracle()),
-        "text_quality_scores": (text_quality_scores, text_quality_scores_oracle()),
-        "text_quality_rule_flags": (
-            text_quality_rule_flags,
-            text_quality_rule_flags_oracle(),
-        ),
-        "text_nb_quality_classifier": (
-            text_nb_quality_classifier,
-            text_nb_quality_classifier_oracle(),
-        ),
-        "text_quality_classifier": (
-            text_quality_classifier,
-            text_quality_classifier_oracle(),
-        ),
-        "text_bigram_logprob": (
-            text_bigram_logprob,
-            text_bigram_logprob_oracle(),
-        ),
-        "text_kneser_ney_logprob": (
-            text_kneser_ney_logprob,
-            text_kneser_ney_logprob_oracle(),
-        ),
-        "text_entropy_stats": (
-            text_entropy_stats,
-            text_entropy_stats_oracle(),
-        ),
-        "text_kneser_ney_apply": (
-            text_kneser_ney_apply,
-            text_kneser_ney_apply_oracle(),
-        ),
-        "text_kneser_ney3_logprob": (
-            text_kneser_ney3_logprob,
-            text_kneser_ney3_logprob_oracle(),
-        ),
-        "text_kneser_ney3_apply": (
-            text_kneser_ney3_apply,
-            text_kneser_ney3_apply_oracle(),
-        ),
-        "text_textrank_keywords": (
-            text_textrank_keywords,
-            text_textrank_keywords_oracle(),
-        ),
-        "source_unigram_divergence": (
-            source_unigram_divergence,
-            source_unigram_divergence_oracle(),
-        ),
-        "text_language_id": (text_language_id, text_language_id_oracle()),
-        "text_fingerprints": (text_fingerprints, text_fingerprints_oracle()),
-        "text_tfidf_top_terms": (
-            text_tfidf_top_terms,
-            text_tfidf_top_terms_oracle(),
-        ),
-        "text_bpe_token_estimate": (
-            text_bpe_token_estimate,
-            text_bpe_token_estimate_oracle(),
-        ),
-        "text_bpe_train_apply": (
-            text_bpe_train_apply,
-            text_bpe_train_apply_oracle(),
-        ),
-        "text_bpe_merges": (
-            text_bpe_merges,
-            text_bpe_merges_oracle(),
-        ),
-        "text_bpe_merges_batched": (
-            text_bpe_merges_batched,
-            text_bpe_merges_batched_oracle(),
-        ),
-        "text_bpe_batched_train_apply": (
-            text_bpe_batched_train_apply,
-            text_bpe_batched_train_apply_oracle(),
-        ),
-        "text_bpe_published_apply": (
-            text_bpe_published_apply,
-            # published ≡ refit: the store roundtrip must hash-match the
-            # in-session train_apply oracle exactly
-            text_bpe_batched_train_apply_oracle(),
-        ),
-        "text_bpe_encode": (
-            text_bpe_encode,
-            text_bpe_encode_oracle(),
-        ),
-        "text_bpe_packed_sequences": (
-            text_bpe_packed_sequences,
-            text_bpe_packed_sequences_oracle(),
-        ),
-        "text_unigram_lm": (
-            text_unigram_lm,
-            text_unigram_lm_oracle(),
-        ),
-        "text_unigram_apply": (
-            text_unigram_apply,
-            text_unigram_apply_oracle(),
-        ),
-        "text_cooccurrence_pmi": (
-            text_cooccurrence_pmi,
-            text_cooccurrence_pmi_oracle(),
-        ),
-        "text_nb_calibration": (
-            text_nb_calibration,
-            text_nb_calibration_oracle(),
-        ),
-        "boilerplate_ngrams": (boilerplate_ngrams, boilerplate_ngrams_oracle()),
-        "text_rolling_fingerprints": (
-            text_rolling_fingerprints,
-            text_rolling_fingerprints_oracle(),
-        ),
-        "boilerplate_ngrams_cm": (
-            boilerplate_ngrams_cm,
-            boilerplate_ngrams_cm_oracle(),
-        ),
-        "text_bm25_rank": (text_bm25_rank, text_bm25_rank_oracle()),
-        "text_tfidf_cosine_pairs": (
-            text_tfidf_cosine_pairs,
-            text_tfidf_cosine_pairs_oracle(),
-        ),
-    }
-
-
+@query
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (smooth idf = ln((N+1)/(df+1)) + 1).
 
@@ -2846,6 +2703,7 @@ CM_WIDTH = 1024
 CM_DEPTH = 4
 
 
+@query
 def boilerplate_ngrams_cm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min-sketch document-frequency estimates for the exact top-20
     boilerplate shingles: (g, df_exact, df_cm) with df_cm >= df_exact by
@@ -2961,6 +2819,7 @@ def boilerplate_ngrams_cm_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query
 def source_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL(source ‖ corpus) over unigram distributions, per source — the
     distribution-shift score behind data-selection schemes (DSIR-style
@@ -3044,6 +2903,7 @@ BM25_B = 0.75
 BM25_TOPK = 20
 
 
+@query
 def text_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k documents by BM25 score for a fixed bag-of-words query — the
     ranked-retrieval primitive a pipeline uses to pull eval-adjacent or
@@ -3155,6 +3015,7 @@ TFIDF_PAIR_DF_CAP = 4
 TFIDF_COS_THRESHOLD = 0.9
 
 
+@query
 def text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document pairs whose unigram TF-IDF vectors have cosine similarity
     >= the threshold — the *sparse* (lexical) counterpart of the
@@ -3370,6 +3231,7 @@ _RULE_ORDER = (
 )
 
 
+@query
 def text_quality_rule_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality rule verdicts: one boolean per rule, the
     composite ``keep``, and the FIRST failed rule as ``drop_reason`` —
@@ -3596,6 +3458,7 @@ def _nb_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def text_nb_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train-and-apply in one plan: weak labels from the Gopher rule bank
     (``text_quality_rule_flags``' keep — the SAME function, so labels
@@ -3710,6 +3573,7 @@ def text_nb_quality_classifier_oracle() -> str:
 NB_CALIB_BINS = 10
 
 
+@query
 def text_nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration of the NB quality classifier: reliability bins over the
     predicted keep-probability (sigmoid of the posterior log-odds from
@@ -3811,6 +3675,7 @@ def _quality_scored_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def docs_quality_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep each source's top-quality slice: a doc survives iff its
     composite quality score (the ``text_quality_scores`` formula —
@@ -3875,6 +3740,7 @@ def docs_quality_quantile_filter_oracle() -> str:
     """
 
 
+@query(oracle=None)  # sketch thresholds: rows-only; exact twin is the anchor
 def docs_quality_quantile_filter_approx(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -3911,6 +3777,7 @@ QUALITY_BAND_LO = (1, 2)
 QUALITY_BAND_HI = (9, 10)
 
 
+@query
 def docs_quality_band_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source quality BAND keep: survive iff the composite quality
     score lands in [median, 90th percentile) of the doc's own source.
@@ -3967,6 +3834,7 @@ def docs_quality_band_filter_oracle() -> str:
 TOKEN_MASS_DROP_Q = (3, 10)
 
 
+@query
 def docs_quality_token_weighted_filter(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4048,6 +3916,7 @@ PPL_HEAD_Q = (2, 3)
 PPL_TAIL_Q = (1, 3)
 
 
+@query
 def docs_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet head/middle/tail bucketing: score every doc under the corpus
     bigram LM (``text_bigram_logprob`` — reused, not re-derived, so the
@@ -4126,6 +3995,7 @@ def docs_perplexity_buckets_oracle() -> str:
     """
 
 
+@query(oracle=None)  # sketch cut points: rows-only; exact twin is the anchor
 def docs_perplexity_buckets_approx(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4160,6 +4030,7 @@ def docs_perplexity_buckets_approx(
     )
 
 
+@query
 def docs_ppl_token_weighted_buckets(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -4461,6 +4332,7 @@ def _uni_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+@query
 def text_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train a SentencePiece-style unigram-LM tokenizer (fixed-round
     Viterbi-EM over a substring seed vocabulary, corpus-weighted) and
@@ -4581,6 +4453,7 @@ def text_unigram_lm_oracle() -> str:
     """
 
 
+@query
 def text_unigram_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the trained unigram LM to the corpus: per document, the word
     count and the EXACT token count under the final fitted piece
@@ -4652,6 +4525,7 @@ PMI_MIN_PAIR = 5  # minimum pair support to report
 PMI_TOP = 50
 
 
+@query
 def text_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information over skip-gram token pairs — the
     word2vec-era association statistic (collocations, phrase mining,

@@ -22,12 +22,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events
 
 HOUR_MS = 3_600_000
 SLIDE_MS = 1_800_000
 
 
+@query
 def events_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly per-user grid with last-observation-carried-forward values.
 
@@ -104,6 +106,7 @@ def events_gapfill_locf_oracle() -> str:
     """
 
 
+@query
 def events_sliding_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hopping-window rollup: 1-hour windows every 30 minutes per event type.
 
@@ -149,6 +152,7 @@ def events_sliding_rollup_oracle() -> str:
 LOCAL_TZ = "America/New_York"
 
 
+@query
 def events_local_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily rollup in a reporting timezone: UTC event instants bucketed by
     their LOCAL calendar day (DST-aware — an epoch-math `div 86400000`
@@ -177,34 +181,6 @@ def events_local_daily_rollup_oracle() -> str:
     """
 
 
-def registry():
-    """Driver-contract entries: name -> (query fn, oracle SQL)."""
-    return {
-        "events_gapfill_locf": (events_gapfill_locf, events_gapfill_locf_oracle()),
-        "events_sliding_rollup": (
-            events_sliding_rollup,
-            events_sliding_rollup_oracle(),
-        ),
-        "events_local_daily_rollup": (
-            events_local_daily_rollup,
-            events_local_daily_rollup_oracle(),
-        ),
-        "events_rollup_merge": (
-            events_rollup_merge,
-            events_rollup_merge_oracle(),
-        ),
-        "events_value_percentiles_hist": (
-            events_value_percentiles_hist,
-            events_value_percentiles_hist_oracle(),
-        ),
-        "events_hourly_acf": (events_hourly_acf, events_hourly_acf_oracle()),
-        "events_ewma_hourly": (
-            events_ewma_hourly,
-            events_ewma_hourly_oracle(),
-        ),
-    }
-
-
 #: EWMA smoothing factor for the hourly event-rate monitor: s_h =
 #: EWMA_ALPHA*c_h + (1-EWMA_ALPHA)*s_{h-1}, seeded s_0 = c_0. 0.5 is a
 #: standard choice for hourly monitors (half-life = 1 hour) AND makes the
@@ -217,6 +193,7 @@ def registry():
 EWMA_ALPHA = 0.5
 
 
+@query
 def events_ewma_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of the hourly event rate per
     (event_type, UTC day) — the smoothing step under every ops-style
@@ -351,6 +328,7 @@ def events_ewma_hourly_oracle() -> str:
 DAY_MS = 86_400_000
 
 
+@query
 def events_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily statistics assembled by MERGING hourly partial aggregates —
     the incremental-rollup lifecycle at 100 TB: each hour's scan persists a
@@ -584,6 +562,7 @@ def percentiles_from_partials(partials: DataFrame) -> DataFrame:
     ).orderBy("event_type")
 
 
+@query
 def events_value_percentiles_hist(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -666,6 +645,7 @@ def events_value_percentiles_hist_oracle() -> str:
 ACF_LAGS = (1, 2, 24)
 
 
+@query
 def events_hourly_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation of each event type's HOURLY mean value at lags
     1/2/24 hours — the diagnostic that separates a persistent level

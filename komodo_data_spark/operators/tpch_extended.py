@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.operators.relational import _dbl, dec
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
 _D1 = "CAST(1 AS DECIMAL(20,4))"
@@ -41,6 +42,7 @@ def _rev_col():
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q2_oracle")
 def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: per-part correlated MIN, pick the argmin suppliers.
 
@@ -102,6 +104,7 @@ def q2_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q4_oracle")
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: EXISTS(lineitem …) → left_semi join, count by priority.
 
@@ -145,6 +148,7 @@ def q4_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q7_oracle")
 def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7: revenue flows between two nations (supplier↔customer), by
     ship year. Both nation dims broadcast; the symmetric pair predicate is a
@@ -205,6 +209,7 @@ def q7_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q8_oracle")
 def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8: one nation's share of PROMO-part revenue into region ASIA,
     per order year. The share is a conditional-sum / total-sum ratio — both
@@ -272,6 +277,7 @@ def q8_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q9_oracle")
 def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9: profit by supplier nation × order year over a part-name
     subset. Adaptation: no ps_supplycost — cost is 0.9·p_retailprice·qty.
@@ -317,6 +323,7 @@ def q9_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q11_oracle")
 def q11_important_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape: per-supplier revenue exceeding a fixed fraction of
     the global total. Adaptation: no partsupp — "stock value" is lineitem
@@ -365,6 +372,7 @@ def q11_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q12_oracle")
 def q12_priority_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape: per-group CASE-sum of high/low order priority.
     Adaptation: no l_shipmode/commitdate — group by l_linestatus over lines
@@ -404,6 +412,7 @@ def q12_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q13_oracle")
 def q13_customer_order_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13: distribution of orders-per-customer, keeping 0-order
     customers via a left outer join whose extra ON-predicate (priority <>
@@ -447,6 +456,7 @@ def q13_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q14_oracle")
 def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14: PROMO revenue share in one month. Part side broadcast;
     single aggregate computes both conditional and total DECIMAL sums."""
@@ -482,6 +492,7 @@ def q14_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q15_oracle")
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: supplier(s) with the maximum quarterly revenue. The
     ``revenue0`` view is one aggregate; the scalar MAX is broadcast and
@@ -529,6 +540,7 @@ def q15_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q16_oracle")
 def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape: distinct suppliers per (brand, type, size), with a
     NOT IN supplier exclusion. Adaptation: no partsupp — supplier↔part pairs
@@ -566,6 +578,7 @@ def q16_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q17_oracle")
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17: revenue from lines with quantity below 20% of the part's
     average. The correlated ``(SELECT 0.2*avg(l_quantity) …)`` becomes a
@@ -606,6 +619,7 @@ def q17_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q18_oracle")
 def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18: orders whose total quantity exceeds 200. The HAVING gate
     runs once on lineitem (map-side partial agg), and the surviving ~1% of
@@ -658,6 +672,7 @@ def q18_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q19_oracle")
 def q19_banded_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19: revenue under an OR of three (brand, size-band, qty-band)
     conjunctions. The common join key + per-band residual predicate is the
@@ -690,6 +705,7 @@ def q19_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q20_oracle")
 def q20_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape: suppliers qualified by a nested quantity aggregate.
     Adaptation: no partsupp/availqty — a supplier qualifies if for some
@@ -746,6 +762,7 @@ def q20_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q21_oracle")
 def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape: suppliers who were the ONLY late supplier on a
     multi-supplier order. Adaptation: 'late' is l_shipdate > o_orderdate +
@@ -815,6 +832,7 @@ def q21_oracle() -> str:
 # --------------------------------------------------------------------------
 
 
+@query(oracle="q22_oracle")
 def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape: customers with above-average balance and no RECENT
     orders, grouped by nation band. Adaptation: no c_phone — the 'country
@@ -867,37 +885,6 @@ def q22_oracle() -> str:
     ORDER BY cntry
     """
 
-def registry():
-    """name -> (query fn, oracle SQL) for the driver contract."""
-    return {
-        "q2_min_cost_supplier": (q2_min_cost_supplier, q2_oracle()),
-        "part_skyline": (part_skyline, part_skyline_oracle()),
-        "parts_market_basket": (
-            parts_market_basket,
-            parts_market_basket_oracle(),
-        ),
-        "customer_rfm_segments": (
-            customer_rfm_segments,
-            customer_rfm_segments_oracle(),
-        ),
-        "q4_order_priority": (q4_order_priority, q4_oracle()),
-        "q7_volume_shipping": (q7_volume_shipping, q7_oracle()),
-        "q8_market_share": (q8_market_share, q8_oracle()),
-        "q9_product_profit": (q9_product_profit, q9_oracle()),
-        "q11_important_suppliers": (q11_important_suppliers, q11_oracle()),
-        "q12_priority_by_status": (q12_priority_by_status, q12_oracle()),
-        "q13_customer_order_histogram": (q13_customer_order_histogram, q13_oracle()),
-        "q14_promo_revenue": (q14_promo_revenue, q14_oracle()),
-        "q15_top_supplier": (q15_top_supplier, q15_oracle()),
-        "q16_supplier_part_counts": (q16_supplier_part_counts, q16_oracle()),
-        "q17_small_quantity_revenue": (q17_small_quantity_revenue, q17_oracle()),
-        "q18_large_volume_customers": (q18_large_volume_customers, q18_oracle()),
-        "q19_banded_revenue": (q19_banded_revenue, q19_oracle()),
-        "q20_dominant_suppliers": (q20_dominant_suppliers, q20_oracle()),
-        "q21_sole_late_supplier": (q21_sole_late_supplier, q21_oracle()),
-        "q22_dormant_customers": (q22_dormant_customers, q22_oracle()),
-    }
-
 
 # --------------------------------------------------------------------------
 # skyline (Pareto front) — the classic "not dominated by anyone" operator
@@ -910,6 +897,7 @@ def registry():
 SKYLINE_BUCKET_WIDTH = 10.0
 
 
+@query
 def part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pareto-optimal parts minimizing (p_retailprice, p_size) — the
     skyline operator from the OLAP literature (Börzsönyi et al.'s
@@ -988,6 +976,7 @@ def part_skyline_oracle() -> str:
 MIN_PAIR_SUPPORT = 3
 
 
+@query
 def parts_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent part PAIRS across order baskets with the three association
     measures (support count, confidence a→b, lift) — the first Apriori
@@ -1106,6 +1095,7 @@ def parts_market_basket_oracle() -> str:
 RFM_CUTS = [(1, 5), (2, 5), (3, 5), (4, 5)]
 
 
+@query
 def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation: each customer's last-order recency, order count,
     and exact-decimal revenue, scored 1–5 against the GLOBAL quintiles of

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.operators.relational import _dbl, dec
+from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events
 
 NTILES = 4
@@ -29,6 +30,7 @@ MOVING_ROWS = 4  # current + 4 preceding = 5-row window
 RANGE_MS = 600_000  # 10-minute trailing time frame
 
 
+@query
 def events_analytic_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type user leaderboard: total value with percent_rank,
     cume_dist, and quartile (ntile). Ranking key is (total DESC, user_id)
@@ -66,6 +68,7 @@ def events_analytic_ranks_oracle() -> str:
     """
 
 
+@query
 def events_moving_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 5-row moving average of value plus the delta to the
     previous event — the rows-frame + navigation combo."""
@@ -97,6 +100,7 @@ def events_moving_agg_oracle() -> str:
     """
 
 
+@query
 def events_range_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user trailing 10-minute value sum: a value-based RANGE frame on
     epoch millis — peers (equal timestamps) are all in-frame, so the result
@@ -124,15 +128,3 @@ def events_range_sum_oracle() -> str:
                 AS DOUBLE) AS trailing_10m_sum
     FROM events
     """
-
-
-def registry():
-    """name -> (query fn, oracle SQL) for the driver contract."""
-    return {
-        "events_analytic_ranks": (
-            events_analytic_ranks,
-            events_analytic_ranks_oracle(),
-        ),
-        "events_moving_agg": (events_moving_agg, events_moving_agg_oracle()),
-        "events_range_sum": (events_range_sum, events_range_sum_oracle()),
-    }

@@ -17,7 +17,7 @@ must not hide behind the noise floor (review finding). Writes
 BENCH_SCALING.json; exits non-zero if any query is flagged, so the
 artifact doubles as a CI gate.
 
-Method notes: both scales run in ONE Spark session (local[32]), sf0.01
+Method notes: both scales run in ONE Spark session (local[SPARK_GRAFT_CPUS]), sf0.01
 first, after bench.py's footer/worker/codegen warm-ups — so one-time JIT
 is mostly absorbed before any timed run and the sf0.1 pass is
 codegen-warm (which can only shrink ratios of innocent queries, never
@@ -346,7 +346,7 @@ SF10_EXCLUDE = {
 def main() -> int:
     from komodo_data_spark.session import get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark(
         app_name="komodo-bench-scaling",
         master=f"local[{cpus}]",

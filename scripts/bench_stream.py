@@ -116,7 +116,10 @@ def main(argv: list[str] | None = None) -> int:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--batches", type=int, default=8)
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_STREAM.json"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument(
+        "--cpus",
+        default=os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))),
+    )
     args = ap.parse_args(argv)
 
     from komodo_data_spark.session import get_spark

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate the registry-count block in SURVEY.md, BASELINE.md and
-README.md from the single source of truth (`__spark_entry__._registry()`),
-so the docs can never drift from the code (round-2 finding; recurred in
+README.md from the single source of truth, the ``@query`` declarations
+(read through `__spark_entry__._registry()`), so the docs can never drift from the code (round-2 finding; recurred in
 miniature in round 3).
 
 Run from the repo root in the same commit as any registry/_PRIORITY edit:
@@ -76,14 +76,16 @@ def block() -> str:
         witnessed |= set(json.load(open(path)))
     return (
         f"{BEGIN}\n"
-        f"**Driver contract totals (single source of truth = "
-        f"`__spark_entry__.queries()`, count asserted by `scripts/check.py`): "
+        f"**Registry totals (single source of truth = the `@query` "
+        f"declarations, read through `__spark_entry__.queries()`; count "
+        f"asserted by `scripts/check.py`): "
         f"{len(qs)} queries, {len(osql)} oracle-paired, {len(rows_only)} "
         f"rows-only** ({', '.join(f'`{n}`' for n in rows_only)} — sketches "
         f"whose exact twins are oracle-checked, plus zlib scoring whose "
         f"exact twin is the CPython-zlib pytest pin). "
         f"All pass `scripts/check.py` at sf0.01; "
-        f"bench at sf0.1 runs all of them on local[32] (compact line in "
+        f"bench at sf0.1 runs all of them on local[N], N the usable cores "
+        f"(compact line in "
         f"BENCH_r*.json, per-query map in BENCH_DETAIL.json with per-round "
         f"archives BENCH_DETAIL_r*.json). The driver's CORRECTNESS window is "
         f"the first 50 registry entries, rotated each round via "

@@ -3,7 +3,7 @@
 Usage: python scripts/plans.py <round> before|after query [query ...]
 Example: python scripts/plans.py r13 after graph_components
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (local[N] width, default 32).
+SPARK_GRAFT_CPUS (local[N] width, default the usable core count).
 
 Writes a ``<query>_before.txt`` / ``<query>_after.txt`` pair for every
 query an optimization round touches, captured at the bench scale so the
@@ -27,7 +27,7 @@ def main(argv: list[str]) -> int:
         return 2
     rnd, suffix, names = argv[0], argv[1], argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from komodo_data_spark.plans.audit import formatted_plan
     from komodo_data_spark.session import get_spark

@@ -23,7 +23,7 @@ CAPS = [8, 16, 32, 64, 128, 256, 1024]
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     from komodo_data_spark.session import get_spark
 

@@ -242,28 +242,64 @@ def test_decode_image_stub_raises():
 
 
 #: Rows-only entries pinned by a non-SQL check instead of a twin:
-#: text_compression_ratio is pinned against CPython zlib in pytest.
-PINNED_ROWS_ONLY = {"text_compression_ratio"}
+#: text_compression_ratio is pinned against CPython zlib in pytest, and
+#: events_distinct_sketch_union by test_hll_sketch_union_close_to_exact.
+PINNED_ROWS_ONLY = {"text_compression_ratio", "events_distinct_sketch_union"}
 
 
 def test_registries_expose_oracles():
-    """Every entry carries oracle SQL, except a rows-only (``None``) entry
-    that is an ``*_approx`` whose exact twin (same name without
-    ``_approx``) is oracle-paired, or one in PINNED_ROWS_ONLY."""
-    for mod in (text_analysis, dedup, similarity, multimodal_ops):
-        reg = mod.registry()
-        assert reg
-        for name, (fn, sql) in reg.items():
-            assert callable(fn), name
-            if sql is None:
-                exact = reg.get(name.removesuffix("_approx"))
-                assert name in PINNED_ROWS_ONLY or (
-                    name.endswith("_approx")
-                    and exact is not None
-                    and isinstance(exact[1], str)
-                ), f"{name}: rows-only without an oracle-paired exact twin"
-            else:
-                assert isinstance(sql, str) and "SELECT" in sql.upper(), name
+    """Every registered entry carries oracle SQL, except a rows-only
+    (``None``) entry whose exact twin (the name without ``_approx``, or
+    with ``_approx`` replaced by ``_exact``) is oracle-paired, or one in
+    PINNED_ROWS_ONLY."""
+    from komodo_data_spark.registry import registered
+
+    reg = registered()
+    for name, (fn, sql) in reg.items():
+        assert callable(fn), name
+        if sql is None:
+            twins = (name.removesuffix("_approx"), name.replace("_approx", "_exact"))
+            assert name in PINNED_ROWS_ONLY or (
+                name.endswith("_approx")
+                and any(t in reg and isinstance(reg[t][1], str) for t in twins)
+            ), f"{name}: rows-only without an oracle-paired exact twin"
+        else:
+            assert isinstance(sql, str) and "SELECT" in sql.upper(), name
+
+
+def test_every_pack_oracle_is_registered():
+    """A public no-argument ``*_oracle`` in a pack is some registered
+    query's oracle: an oracle left over is a query whose ``@query`` was
+    forgotten."""
+    import importlib
+    import inspect
+
+    from komodo_data_spark.registry import PACKS, registered
+
+    paired = {sql for _fn, sql in registered().values() if sql is not None}
+    for pack in PACKS:
+        mod = importlib.import_module(f"komodo_data_spark.{pack}")
+        for name, fn in inspect.getmembers(mod, inspect.isfunction):
+            if (
+                name.endswith("_oracle")
+                and not name.startswith("_")
+                and not inspect.signature(fn).parameters
+            ):
+                assert fn() in paired, f"{pack}.{name} is no query's oracle"
+
+
+def test_query_declared_twice_raises():
+    from komodo_data_spark.registry import query, registered
+
+    def q1_pricing_summary(spark, sf_dir):
+        return None
+
+    with pytest.raises(ValueError, match="already declared"):
+        query(q1_pricing_summary)
+    with pytest.raises(ValueError, match="already declared"):
+        query(oracle=None)(q1_pricing_summary)
+    fn, _sql = registered()["q1_pricing_summary"]
+    assert fn.__module__.endswith("operators.relational")
 
 
 def test_avro_round_trip_if_available(spark, sf_dir, tmp_path):
