@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.operators.similarity import (
+    ANN_K,
     _SQL_COS,
     _cos_pre,
     _vectors,
@@ -61,9 +62,6 @@ RRF_QVEC = 0
 #: Per-ranker candidate pool: the BM25 top-20 and the dense top-20.
 RRF_POOL = 20
 RRF_TOPK = 20
-
-#: knn_ivf returns its top-3 per query (single-probe cell search).
-IVF_K = 3
 
 
 @query
@@ -297,7 +295,7 @@ def retrieval_label_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = _label_metrics(
         knn_brute_force(spark, sf_dir), labels, TOP_K, "brute"
     )
-    ivf = _label_metrics(knn_ivf(spark, sf_dir), labels, IVF_K, "ivf")
+    ivf = _label_metrics(knn_ivf(spark, sf_dir), labels, ANN_K, "ivf")
     return brute.unionByName(ivf).orderBy("method", "query_id")
 
 
@@ -306,6 +304,6 @@ def retrieval_label_metrics_oracle() -> str:
     SELECT * FROM (
       {_label_metrics_sql(knn_brute_force_oracle(), TOP_K, 'brute')}
       UNION ALL
-      {_label_metrics_sql(knn_ivf_oracle(), IVF_K, 'ivf')}
+      {_label_metrics_sql(knn_ivf_oracle(), ANN_K, 'ivf')}
     ) u ORDER BY method, query_id
     """

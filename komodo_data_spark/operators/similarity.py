@@ -1,27 +1,28 @@
-"""Approximate-nearest-neighbor search over ``embeddings`` (north-star
-extension; SURVEY.md §2.12).
+"""Nearest-neighbour search over ``embeddings`` (north-star extension;
+SURVEY.md §2.12): the exact baseline, the approximate rungs of the ANN
+ladder (sign-bit LSH, IVF cells, int8, PQ, IVF-PQ), their recall evals,
+and the k-means / PQ fits the rungs build on.
 
-Two paths, same output shape (query_id, neighbor_id, cosine, rnk):
-
-- ``knn_brute_force`` — exact baseline: broadcast the (small) query set
-  against every vector, score with JVM higher-order functions, rank with a
-  window partitioned by query. At 100 TB the scored frame shuffles only
-  |Q|×k rows after a map-side TakeOrdered; the scan side never shuffles.
-- ``knn_lsh_signbits`` — scale path: sign-bit (random-hyperplane-style) LSH
-  with axis-aligned planes. Bucketing is a pure projection; candidate
-  scoring touches only same-bucket pairs (2^bits-fold candidate reduction)
-  and the bucket id is an equi-join key, so Catalyst plans a hash join
-  instead of a nested loop.
-
-Plus two recall/coverage variants: ``knn_ivf`` (coarse-quantize to centroid
-cells, search the query's cell) and ``knn_lsh_multiprobe`` (probe the home
-bucket and all one-bit-flip buckets — the standard recall dial).
+The search contract, written once in ``_knn`` (Spark) and ``_sql_knn``
+(its DuckDB twin): the query set (vec_id < N_QUERIES unless a query says
+otherwise) is broadcast and joined to its candidates; cosine is scored on
+norms computed once per vector; each query keeps its top K by
+``(score desc, neighbor_id asc)`` — one ``row_number`` window (``_top_k``
+/ ``_sql_top_k``), which the IVF cell ranking and the IVF-PQ query probe
+reuse. Catalyst puts a partial group limit under the window, so each
+task ships at most K rows per query to the ranking exchange; the
+candidate pairs never shuffle. A query keeps only what differs: its
+vector form, its candidate rule (an equi-key wherever the rule allows,
+so Catalyst plans a broadcast hash join, not a nested loop), K and its
+score name.
 
 Cosine math runs in double on both engines; the driver's value hash rounds
 to 9 significant digits, absorbing fold-order differences.
 """
 
 from __future__ import annotations
+
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -32,6 +33,7 @@ from komodo_data_spark.sources.tables import load_table
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 5
+ANN_K = 3  # top-K of the approximate LSH / IVF rungs
 LSH_BITS = 4  # sign bits of the first 4 dims -> 16 buckets
 
 
@@ -56,11 +58,18 @@ def _cos_pre(e_a: Column, e_b: Column, n_a: Column, n_b: Column) -> Column:
     return _dot(e_a, e_b) / (n_a * n_b)
 
 
-_SQL_COS = (
-    "list_sum(list_transform(range(1, len(q.e)+1), i -> q.e[i] * v.e[i]))"
-    " / (sqrt(list_sum(list_transform(q.e, x -> x * x)))"
-    " * sqrt(list_sum(list_transform(v.e, x -> x * x))))"
-)
+def _sql_cos(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(range(1, len({a})+1), i -> {a}[i] * {b}[i]))"
+        f" / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
+        f" * sqrt(list_sum(list_transform({b}, x -> x * x))))"
+    )
+
+
+_SQL_COS = _sql_cos("q.e", "v.e")
+_SQL_V = "v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)"
+_SQL_Q = f"q AS (SELECT vec_id AS query_id, e FROM v WHERE vec_id < {N_QUERIES})"
+_SQL_NOT_SELF = "v.vec_id <> q.query_id"
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,49 +83,101 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query
-def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-5 cosine neighbors for each query vector (vec_id < 10)."""
-    v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
+def _top_k(
+    df: DataFrame, by: str, order: Sequence[Column], k: int, rnk: str = "rnk"
+) -> DataFrame:
+    """The rows ranked 1..k within each ``by`` group under ``order``."""
+    w = Window.partitionBy(by).orderBy(*order)
+    return df.withColumn(rnk, F.row_number().over(w)).filter(F.col(rnk) <= k)
+
+
+def _sql_top_k(src: str, by: str, order: str, k: int, rnk: str = "rnk") -> str:
+    return f"""SELECT * FROM (
+      SELECT *, row_number() OVER (PARTITION BY {by} ORDER BY {order}) AS {rnk}
+      FROM {src}) WHERE {rnk} <= {k}"""
+
+
+def _as_queries(
+    v: DataFrame, *extra: Column, where: Column | None = None
+) -> DataFrame:
+    """The query side of a search over ``v``: the rows passing ``where``
+    (default vec_id < N_QUERIES) as (query_id, qe, qnrm, *extra)."""
+    where = F.col("vec_id") < N_QUERIES if where is None else where
+    return v.filter(where).select(
         F.col("vec_id").alias("query_id"),
         F.col("e").alias("qe"),
         F.col("nrm").alias("qnrm"),
+        *extra,
     )
-    scored = (
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos_pre(
-                F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
+
+
+def _others(rule: Column | None = None) -> Column:
+    """Candidate condition: every vector but the query itself, narrowed by
+    ``rule``."""
+    not_self = F.col("vec_id") != F.col("query_id")
+    return not_self if rule is None else rule & not_self
+
+
+def _knn(
+    v: DataFrame,
+    q: DataFrame,
+    on: Column,
+    k: int,
+    score: str = "cosine",
+    cols: Sequence[str] = ("query_id", "neighbor_id"),
+) -> DataFrame:
+    """THE search (module docstring): vectors ``v`` (vec_id, e, nrm, …)
+    joined to the broadcast queries ``q`` (query_id, qe, qnrm, …) on
+    ``on``, top ``k`` per query as (*cols, <score>, rnk). ``cols`` names
+    columns of the joined pair; ``neighbor_id`` is the vector's vec_id."""
+    scored = v.join(F.broadcast(q), on).select(
+        *[
+            F.col("vec_id").alias(c) if c == "neighbor_id" else F.col(c)
+            for c in cols
+        ],
+        _cos_pre(F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")).alias(
+            score
+        ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+    order = [F.desc(score), F.asc("neighbor_id")]
+    return _top_k(scored, "query_id", order, k).select(*cols, score, "rnk")
+
+
+def _sql_knn(
+    q: str,
+    v: str,
+    on: str,
+    k: int,
+    score: str = "cosine",
+    cols: Sequence[str] = ("query_id", "neighbor_id"),
+) -> str:
+    """DuckDB twin of ``_knn``: the scored / ranked / final-select tail
+    over query CTE ``q`` (query_id, e, …) and vector CTE ``v`` (vec_id,
+    e, …)."""
+    items = ", ".join(
+        "v.vec_id AS neighbor_id" if c == "neighbor_id" else c for c in cols
     )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    order = f"{score} DESC, neighbor_id ASC"
+    return f"""scored AS (
+      SELECT {items}, {_SQL_COS} AS {score}
+      FROM {q} q JOIN {v} v ON {on}
+    ),
+    ranked AS ({_sql_top_k("scored", "query_id", order, k)})
+    SELECT {", ".join(cols)}, {score}, rnk FROM ranked"""
+
+
+@query
+def knn_brute_force(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-TOP_K: every other vector is a candidate."""
+    v = _vectors(spark, sf_dir)
+    return _knn(v, _as_queries(v), _others(), TOP_K)
 
 
 def knn_brute_force_oracle() -> str:
     return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    q AS (SELECT vec_id AS query_id, e FROM v WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine
-      FROM q JOIN v ON v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= {TOP_K}
+    WITH {_SQL_V},
+    {_SQL_Q},
+    {_sql_knn("q", "v", _SQL_NOT_SELF, TOP_K)}
     """
 
 
@@ -138,169 +199,102 @@ def _sql_bucket(alias: str) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
+def _lsh_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _vectors(spark, sf_dir).withColumn("bucket", _bucket(F.col("e")))
+
+
+_SQL_LSH_V = f"""v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    v AS (SELECT vec_id, e, {_sql_bucket("v0")} AS bucket FROM v0)"""
+_SQL_SAME_BUCKET = f"v.bucket = q.qbucket AND {_SQL_NOT_SELF}"
+
+
+def _knn_lsh(v: DataFrame, k: int) -> DataFrame:
+    """Top-k within the query's own bucket over a (vec_id, e, nrm,
+    bucket) frame — shared with the streaming index
+    (``ann_incremental.knn_from_store``)."""
+    q = _as_queries(v, F.col("bucket").alias("qbucket"))
+    return _knn(v, q, _others(F.col("bucket") == F.col("qbucket")), k)
+
+
 @query
 def knn_lsh_signbits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-3 neighbors per query, restricted to the query's LSH
-    bucket — the equi-join-keyed scale variant of knn_brute_force."""
-    v = _vectors(spark, sf_dir).withColumn("bucket", _bucket(F.col("e")))
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = (
-        v.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos_pre(
-                F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    """Approximate top-ANN_K: candidates are the query's sign-bit LSH
+    bucket, an equi-join key (2^LSH_BITS-fold candidate reduction)."""
+    return _knn_lsh(_lsh_vectors(spark, sf_dir), ANN_K)
 
 
 def knn_lsh_signbits_oracle() -> str:
     return f"""
-    WITH v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    v AS (SELECT vec_id, e, {_sql_bucket("v0")} AS bucket FROM v0),
+    WITH {_SQL_LSH_V},
     q AS (SELECT vec_id AS query_id, e, bucket AS qbucket
           FROM v WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine
-      FROM q JOIN v ON v.bucket = q.qbucket AND v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= 3
+    {_sql_knn("q", "v", _SQL_SAME_BUCKET, ANN_K)}
     """
 
 
 N_CELLS = 8  # IVF coarse cells (centroids = first N_CELLS vectors)
+_SQL_SAME_CELL = f"v.cell_id = q.qcell AND {_SQL_NOT_SELF}"
 
 
-@query
-def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-style ANN: coarse-quantize every vector to its nearest "centroid"
-    (deterministically, the first N_CELLS vectors stand in for k-means
-    centroids), then search only the query's cell.
-
-    This is the production ANN shape at 100 TB: cell assignment is one
-    broadcast join + per-row argmax (map-side); the search join is
-    equi-keyed on cell_id so it hash-partitions instead of nested-looping.
-    Recall improves with multi-cell probing (assign queries to p nearest
-    cells) — single-probe here keeps the oracle a plain SQL mirror.
-    """
+def _knn_ivf(spark: SparkSession, sf_dir: str, probes: int) -> DataFrame:
+    """Top-ANN_K over the members of the query's ``probes`` nearest cells.
+    Every vector is assigned to its nearest cell by cosine (ties to the
+    lower cell_id); the first N_CELLS vectors stand in for the cell
+    centroids, deterministically. Cells partition the vectors, so probe
+    results are disjoint and need no dedup."""
     v = _vectors(spark, sf_dir)
     cents = v.filter(F.col("vec_id") < N_CELLS).select(
         F.col("vec_id").alias("cell_id"),
         F.col("e").alias("ce"),
         F.col("nrm").alias("cnrm"),
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("csim"), F.asc("cell_id")
+    sim = v.join(F.broadcast(cents)).withColumn(
+        "csim", _cos_pre(F.col("e"), F.col("ce"), F.col("nrm"), F.col("cnrm"))
     )
-    assigned = (
-        v.join(F.broadcast(cents))
-        .withColumn(
-            "csim",
-            _cos_pre(F.col("e"), F.col("ce"), F.col("nrm"), F.col("cnrm")),
-        )
-        .withColumn("crnk", F.row_number().over(w_assign))
-        .filter(F.col("crnk") == 1)
-        .select("vec_id", "e", "nrm", "cell_id")
+    order = [F.desc("csim"), F.asc("cell_id")]
+    ranked = _top_k(sim, "vec_id", order, probes, "crnk")
+    assigned = ranked.filter(F.col("crnk") == 1).select(
+        "vec_id", "e", "nrm", "cell_id"
     )
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("cell_id").alias("qcell"),
-    )
-    scored = (
-        assigned.join(
-            F.broadcast(q),
-            (F.col("cell_id") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos_pre(
-                F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    q = _as_queries(ranked, F.col("cell_id").alias("qcell"))
+    return _knn(assigned, q, _others(F.col("cell_id") == F.col("qcell")), ANN_K)
 
 
-def knn_ivf_oracle() -> str:
-    cos_cv = (
-        "list_sum(list_transform(range(1, len(v.e)+1), i -> v.e[i] * c.ce[i]))"
-        " / (sqrt(list_sum(list_transform(v.e, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(c.ce, x -> x * x))))"
-    )
+def _sql_knn_ivf(probes: int) -> str:
     return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    WITH {_SQL_V},
     c AS (SELECT vec_id AS cell_id, e AS ce FROM v WHERE vec_id < {N_CELLS}),
     sim AS (
-      SELECT v.vec_id, v.e, c.cell_id, {cos_cv} AS csim,
-        row_number() OVER (
-          PARTITION BY v.vec_id ORDER BY {cos_cv} DESC, c.cell_id ASC
-        ) AS crnk
+      SELECT v.vec_id, v.e, c.cell_id, {_sql_cos("v.e", "c.ce")} AS csim
       FROM v CROSS JOIN c
     ),
-    assigned AS (SELECT vec_id, e, cell_id FROM sim WHERE crnk = 1),
+    cells AS ({_sql_top_k("sim", "vec_id", "csim DESC, cell_id ASC", probes, "crnk")}),
+    assigned AS (SELECT vec_id, e, cell_id FROM cells WHERE crnk = 1),
     q AS (SELECT vec_id AS query_id, e, cell_id AS qcell
-          FROM assigned WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine
-      FROM q JOIN assigned v
-        ON v.cell_id = q.qcell AND v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= 3
+          FROM cells WHERE vec_id < {N_QUERIES}),
+    {_sql_knn("q", "assigned", _SQL_SAME_CELL, ANN_K)}
     """
 
 
 @query
-def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-probe sign-bit LSH: each query searches its own bucket plus the
-    LSH_BITS single-bit-flip neighbor buckets (5 probes at 4 bits).
+def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-style ANN: candidates are the members of the query's own cell,
+    an equi-join key on cell_id (~1/N_CELLS of the corpus)."""
+    return _knn_ivf(spark, sf_dir, 1)
 
-    Recall rises toward brute-force while candidate volume stays
-    ~(probes/2^bits) of the corpus; probes explode map-side into equi-join
-    keys, so the plan stays a hash join — the standard recall/cost dial for
-    LSH at scale. Buckets partition the space, so probe sets are disjoint
-    and no pair-dedup is needed.
-    """
-    v = _vectors(spark, sf_dir).withColumn("bucket", _bucket(F.col("e")))
+
+def knn_ivf_oracle() -> str:
+    return _sql_knn_ivf(1)
+
+
+@query
+def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-probe sign-bit LSH: candidates are the query's own bucket
+    plus the LSH_BITS single-bit-flip buckets (5 probes at 4 bits), the
+    recall dial of LSH. Probes explode on the query side into equi-join
+    keys; buckets partition the space, so probe sets are disjoint and no
+    pair-dedup is needed."""
+    v = _lsh_vectors(spark, sf_dir)
     probes = F.array(
         F.col("qbucket"),
         *[
@@ -308,38 +302,10 @@ def knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(LSH_BITS)
         ],
     )
-    q = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.col("bucket").alias("qbucket"),
-        )
-        .withColumn("probe", F.explode(probes))
+    q = _as_queries(v, F.col("bucket").alias("qbucket")).withColumn(
+        "probe", F.explode(probes)
     )
-    scored = (
-        v.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos_pre(
-                F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return _knn(v, q, _others(F.col("bucket") == F.col("probe")), ANN_K)
 
 
 def knn_lsh_multiprobe_oracle() -> str:
@@ -347,21 +313,11 @@ def knn_lsh_multiprobe_oracle() -> str:
         f", xor(qbucket, {1 << i})" for i in range(LSH_BITS)
     ) + "]"
     return f"""
-    WITH v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    v AS (SELECT vec_id, e, {_sql_bucket("v0")} AS bucket FROM v0),
+    WITH {_SQL_LSH_V},
     q0 AS (SELECT vec_id AS query_id, e, bucket AS qbucket
            FROM v WHERE vec_id < {N_QUERIES}),
     q AS (SELECT query_id, e, unnest({probe_list}) AS probe FROM q0),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine
-      FROM q JOIN v ON v.bucket = q.probe AND v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= 3
+    {_sql_knn("q", "v", f"v.bucket = q.probe AND {_SQL_NOT_SELF}", ANN_K)}
     """
 
 
@@ -370,101 +326,18 @@ IVF_PROBES = 2  # search the query's 2 nearest cells
 
 @query
 def knn_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF with multi-cell probing: queries search their IVF_PROBES nearest
-    cells instead of one — the IVF recall dial (same role as bit-flip
-    probing for LSH). Candidate volume scales with probes/N_CELLS of the
-    corpus; every join stays equi-keyed on cell_id. Cells partition the
-    vectors, so probe results are disjoint and need no dedup."""
-    v = _vectors(spark, sf_dir)
-    cents = v.filter(F.col("vec_id") < N_CELLS).select(
-        F.col("vec_id").alias("cell_id"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cnrm"),
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("csim"), F.asc("cell_id")
-    )
-    ranked = (
-        v.join(F.broadcast(cents))
-        .withColumn(
-            "csim",
-            _cos_pre(F.col("e"), F.col("ce"), F.col("nrm"), F.col("cnrm")),
-        )
-        .withColumn("crnk", F.row_number().over(w_assign))
-    )
-    assigned = ranked.filter(F.col("crnk") == 1).select(
-        "vec_id", "e", "nrm", "cell_id"
-    )
-    q = (
-        ranked.filter(
-            (F.col("vec_id") < N_QUERIES) & (F.col("crnk") <= IVF_PROBES)
-        )
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.col("cell_id").alias("qcell"),
-        )
-    )
-    scored = (
-        assigned.join(
-            F.broadcast(q),
-            (F.col("cell_id") == F.col("qcell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _cos_pre(
-                F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    """IVF with multi-cell probing: candidates are the members of the
+    query's IVF_PROBES nearest cells, the IVF recall dial (the role
+    bit-flip probing plays for LSH)."""
+    return _knn_ivf(spark, sf_dir, IVF_PROBES)
 
 
 def knn_ivf_multiprobe_oracle() -> str:
-    cos_cv = (
-        "list_sum(list_transform(range(1, len(v.e)+1), i -> v.e[i] * c.ce[i]))"
-        " / (sqrt(list_sum(list_transform(v.e, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(c.ce, x -> x * x))))"
-    )
-    return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    c AS (SELECT vec_id AS cell_id, e AS ce FROM v WHERE vec_id < {N_CELLS}),
-    sim AS (
-      SELECT v.vec_id, v.e, c.cell_id, {cos_cv} AS csim,
-        row_number() OVER (
-          PARTITION BY v.vec_id ORDER BY {cos_cv} DESC, c.cell_id ASC
-        ) AS crnk
-      FROM v CROSS JOIN c
-    ),
-    assigned AS (SELECT vec_id, e, cell_id FROM sim WHERE crnk = 1),
-    q AS (SELECT vec_id AS query_id, e, cell_id AS qcell
-          FROM sim WHERE vec_id < {N_QUERIES} AND crnk <= {IVF_PROBES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS cosine
-      FROM q JOIN assigned v
-        ON v.cell_id = q.qcell AND v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, cosine, rnk FROM ranked WHERE rnk <= 3
-    """
+    return _sql_knn_ivf(IVF_PROBES)
 
 
 # --------------------------------------------------------------------------
-# ANN quality evaluation: recall@K of the LSH index vs exact ground truth
+# ANN quality evaluation: recall@K of an approximate search vs exact truth
 # --------------------------------------------------------------------------
 
 
@@ -547,12 +420,9 @@ def knn_lsh_recall_oracle() -> str:
 
 @query
 def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of single-probe IVF against the exact brute-force top-K —
-    completes the eval ladder: every approximate search path (sign-bit
-    LSH, IVF cells, int8 quantization) ships with a measured-recall twin.
-    The single-probe figure is the one the multiprobe dial improves; read
-    both this and ``knn_ivf_multiprobe`` to price the recall/latency
-    trade."""
+    """Recall@K of single-probe IVF against the exact brute-force top-K;
+    read it next to ``knn_ivf_multiprobe`` to price the recall/latency
+    trade of the probe dial."""
     return _recall_vs_bruteforce(
         knn_brute_force(spark, sf_dir), knn_ivf(spark, sf_dir)
     )
@@ -562,42 +432,29 @@ def knn_ivf_recall_oracle() -> str:
     return _recall_oracle(knn_ivf_oracle())
 
 
-#: Query budget for the SAMPLED-truth recall eval (round-11 verdict ask
-#: #5): ~this many query vectors at ANY corpus size, drawn by a
-#: deterministic md5 hash gate over vec_id — the production eval mode.
-#: The fixed ``vec_id < N_QUERIES`` probe reads the same 10 vectors at
-#: every scale; the sampled mode stratifies the query draw uniformly
-#: across the id space and keeps the exact-truth cost at
-#: O(budget · corpus) — linear per decade — so the recall evidence
-#: extends to sf10 without a quadratic truth side.
+#: Query budget for the SAMPLED-truth recall eval: ~this many query
+#: vectors at ANY corpus size, drawn by a deterministic md5 hash gate over
+#: vec_id. The fixed ``vec_id < N_QUERIES`` probe reads the same 10
+#: vectors at every scale; the sampled mode stratifies the query draw
+#: uniformly across the id space and keeps the exact-truth cost at
+#: O(budget · corpus) — linear per decade, never quadratic.
 KNN_RECALL_SAMPLE_QUERIES = 32
 
 #: Modulus of the query-sampling hash gate. The shared corpus gate
 #: (pipeline_ops._bucket_col) uses % 100, whose granularity floors a
 #: slice at 1%% of the corpus — fine for document slices, but a 1%% floor
 #: on QUERIES would turn the truth side quadratic again past 100× the
-#: budget (the finer-modulus form the dedup sampling docstring points
-#: production at). Same md5 construction, wider modulus.
+#: budget. Same md5 construction, wider modulus.
 _KNN_SAMPLE_MOD = 100_000
 
 
 @query
 def knn_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``knn_lsh_recall`` with a SAMPLED query set — the production form
-    of the ANN eval loop at corpus scale: ~KNN_RECALL_SAMPLE_QUERIES
-    query vectors drawn by the deterministic md5 gate (stratified
-    uniformly over the id space, identical draw in the oracle), exact
-    top-K truth computed for THOSE queries over the FULL corpus (one
-    broadcast-query scan, linear in the corpus at any scale), and the
-    sign-bit LSH search restricted to the same queries. Per-query rows
-    (query_id, n_hit, recall), ordered.
-
-    Scale: the fixed ``vec_id < N_QUERIES`` eval probes the same 10
-    vectors at every sf; this one keeps a constant-size but
-    corpus-representative query draw, so the recall figure is measured
-    at sf1/sf10 in BENCH_SCALING where the fixed probe says nothing —
-    truth cost O(budget · corpus), never quadratic.
-    """
+    """``knn_lsh_recall`` over a SAMPLED query set: ~KNN_RECALL_SAMPLE_QUERIES
+    query vectors drawn by the deterministic md5 gate (identical draw in
+    the oracle); exact truth and the same-bucket search both run for
+    those queries over the full corpus. Per-query rows (query_id, n_hit,
+    recall), ordered."""
     from komodo_data_spark.operators.dedup import _recall_sample_buckets
     from komodo_data_spark.operators.pipeline_ops import _bucket_col
 
@@ -605,47 +462,13 @@ def knn_lsh_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate = _bucket_col(F.col("vec_id"), mod=_KNN_SAMPLE_MOD) < (
         _recall_sample_buckets(n_vecs, KNN_RECALL_SAMPLE_QUERIES, _KNN_SAMPLE_MOD)
     )
-    v = _vectors(spark, sf_dir).withColumn("bucket", _bucket(F.col("e")))
+    v = _lsh_vectors(spark, sf_dir)
     # small frame (≈ the budget), consumed by the truth and detector
     # subtrees — materialize once, GC-released
-    q = (
-        v.filter(gate)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-            F.col("bucket").alias("qbucket"),
-        )
-        .localCheckpoint(eager=False)
-    )
-
-    def topk(candidates: DataFrame, k: int) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine"), F.asc("neighbor_id")
-        )
-        return (
-            candidates.select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                _cos_pre(
-                    F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")
-                ).alias("cosine"),
-            )
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-        )
-
-    bf = topk(
-        v.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")), TOP_K
-    )
-    det = topk(
-        v.join(
-            F.broadcast(q),
-            (F.col("bucket") == F.col("qbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        ),
-        3,
-    )
+    q = _as_queries(v, F.col("bucket").alias("qbucket"), where=gate)
+    q = q.localCheckpoint(eager=False)
+    bf = _knn(v, q, _others(), TOP_K)
+    det = _knn(v, q, _others(F.col("bucket") == F.col("qbucket")), ANN_K)
     return _recall_vs_bruteforce(bf, det)
 
 
@@ -655,25 +478,12 @@ def knn_lsh_recall_sampled_oracle() -> str:
     gate = _sql_sample_gate(
         "embeddings", KNN_RECALL_SAMPLE_QUERIES, "vec_id", _KNN_SAMPLE_MOD
     )
-
-    def topk(on: str, k: int) -> str:
-        return f"""
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.query_id, v.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.query_id ORDER BY {_SQL_COS} DESC,
-                 v.vec_id ASC
-               ) AS rnk
-        FROM qq q JOIN vv v ON {on}
-      ) WHERE rnk <= {k}"""
-
     return _recall_oracle(
-        topk("v.bucket = q.qbucket AND v.vec_id <> q.query_id", 3),
-        truth_sql=topk("v.vec_id <> q.query_id", TOP_K),
-        prelude=f"""v0 AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    vv AS (SELECT vec_id, e, {_sql_bucket("v0")} AS bucket FROM v0),
-    qq AS (SELECT vec_id AS query_id, e, bucket AS qbucket
-           FROM vv WHERE {gate})""",
+        f"WITH {_sql_knn('q', 'v', _SQL_SAME_BUCKET, ANN_K)}",
+        truth_sql=f"WITH {_sql_knn('q', 'v', _SQL_NOT_SELF, TOP_K)}",
+        prelude=f"""{_SQL_LSH_V},
+    q AS (SELECT vec_id AS query_id, e, bucket AS qbucket
+          FROM v WHERE {gate})""",
     )
 
 
@@ -694,20 +504,18 @@ def _sqdist(e_a, e_b):
 
 
 def _kmeans_assign(v: DataFrame, cents: DataFrame) -> DataFrame:
-    """Nearest-centroid assignment of a (vec_id, e) frame — the ONE
-    assignment expression shared by the Lloyd fit, the published-model
-    apply (``kmeans_apply_published``), and the streaming PQ encoder's
-    coarse step, so a frozen centroid frame assigns every vector to the
-    identical cell the fit did (published≡refit rides on this).
+    """Nearest-centroid assignment of a (vec_id, e) frame as (vec_id,
+    cid, e) — the ONE assignment expression shared by the Lloyd fit, the
+    published-model apply (``kmeans_apply_published``), and the streaming
+    IVF-PQ encoder's coarse step (``ann_pq_incremental.encode_batch``), so
+    a frozen centroid frame assigns every vector to the identical cell the
+    fit did (published≡refit rides on this).
 
-    Shape (r13, guide §2.4): the K centroids are folded into ONE array
-    row and broadcast; the argmin is a map-side ``array_min`` over the
-    per-centroid (d, cid) structs — the lexicographic (d, cid) minimum
-    the old crossJoin + groupBy ``F.min(struct)`` computed, WITHOUT
-    shuffling the corpus vectors through a K-fanned exchange. Every
-    Lloyd iteration and every encode pass loses one corpus-sized
-    shuffle; at 100 TB the assignment never leaves the scan tasks.
-    An empty centroid frame assigns nothing (zero rows, like
+    Shape (guide §2.4): the K centroids are folded into ONE array row and
+    broadcast; the argmin is a map-side ``array_min`` over the
+    per-centroid (d, cid) structs (the lexicographic (d, cid) minimum), so
+    the assignment never shuffles the corpus and never leaves the scan
+    tasks. An empty centroid frame assigns nothing (zero rows, like
     ``_pq_assign``), never a NULL cid."""
     cands = cents.agg(
         F.collect_list(F.struct(F.col("cid"), F.col("ce"))).alias("_cands")
@@ -861,18 +669,21 @@ def dedup_semantic_published(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup_semantic_from(assigned)
 
 
+def _sql_sqdist(a: str, b: str) -> str:
+    return (
+        f"list_sum(list_transform(range(1, len({a})+1),"
+        f" i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))"
+    )
+
+
 def _kmeans_cte_prefix() -> str:
     """DuckDB CTE chain fitting the same 2-iteration Lloyd unroll: exposes
     ``c2`` (final centroids) and ``af`` (final assignment: vec_id, e, cid)."""
-    sqd = (
-        "list_sum(list_transform(range(1, len(v.e)+1),"
-        " i -> (v.e[i] - c.ce[i]) * (v.e[i] - c.ce[i])))"
-    )
 
     def assign(vecs: str, cents: str) -> str:
         return f"""
       SELECT v.vec_id, v.e,
-             min([{sqd}, c.cid::DOUBLE])[2]::BIGINT AS cid
+             min([{_sql_sqdist("v.e", "c.ce")}, c.cid::DOUBLE])[2]::BIGINT AS cid
       FROM {vecs} v CROSS JOIN {cents} c
       GROUP BY v.vec_id, v.e
     """
@@ -887,7 +698,7 @@ def _kmeans_cte_prefix() -> str:
     """
 
     return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    WITH {_SQL_V},
     c0 AS (SELECT vec_id AS cid, e AS ce FROM v WHERE vec_id < {KMEANS_K}),
     a1 AS ({assign("v", "c0")}),
     c1 AS ({update("a1")}),
@@ -971,16 +782,12 @@ def _dedup_semantic_from(assigned: DataFrame) -> DataFrame:
 
 
 def dedup_semantic_oracle() -> str:
-    dot = "list_sum(list_transform(range(1, len(a.e)+1), i -> a.e[i] * b.e[i]))"
-    na = "list_sum(list_transform(a.e, x -> x * x))"
-    nb = "list_sum(list_transform(b.e, x -> x * x))"
-    cos = f"{dot} / (sqrt({na}) * sqrt({nb}))"
     return f"""
     {_kmeans_cte_prefix()},
     pruned AS (
       SELECT DISTINCT b.vec_id
       FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
-      WHERE {cos} >= {SEMDEDUP_COSINE}
+      WHERE {_sql_cos("a.e", "b.e")} >= {SEMDEDUP_COSINE}
     )
     SELECT af.vec_id, af.cid,
            af.vec_id IN (SELECT vec_id FROM pruned) AS is_pruned
@@ -1037,35 +844,14 @@ QUANT_LEVELS = 127  # symmetric int8
 @query
 def knn_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@K of per-vector symmetric int8 quantization against the exact
-    float top-K — the evaluation for the OTHER standard ANN trade: 4×
-    memory reduction (and SIMD int8 dot products on real hardware) at the
-    cost of rounding noise in the ranking. Quantization is a pure map-side
-    projection (scale = max |x| per vector, q = round(127·x/scale));
-    search and evaluation reuse the brute-force + semi-join shapes, so the
-    only new cost at 100 TB is the cheaper representation itself.
-    """
+    float top-K: the exact search over quantized vectors (scale = max |x|
+    per vector, q = round(127·x/scale), a map-side projection), scored as
+    ``qcos``. Prices the 4× memory reduction in ranking noise."""
     v = _vectors(spark, sf_dir)
     s = F.array_max(F.transform("e", F.abs))
     qe = F.transform("e", lambda x: F.round(F.lit(float(QUANT_LEVELS)) * x / s))
     vq = v.select("vec_id", qe.alias("e")).withColumn("nrm", _nrm(F.col("e")))
-    q = vq.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = vq.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cos_pre(F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")).alias(
-            "qcos"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qcos"), F.asc("neighbor_id")
-    )
-    quant = scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= TOP_K
-    )
+    quant = _knn(vq, _as_queries(vq), _others(), TOP_K, score="qcos")
     return _recall_vs_bruteforce(knn_brute_force(spark, sf_dir), quant)
 
 
@@ -1075,19 +861,10 @@ def knn_quantized_recall_oracle() -> str:
         " list_aggregate(list_transform(e, y -> abs(y)), 'max')))"
     )
     return _recall_oracle(f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    WITH {_SQL_V},
     vq AS (SELECT vec_id, {qe} AS e FROM v),
     q AS (SELECT vec_id AS query_id, e FROM vq WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS qcos
-      FROM q JOIN vq v ON v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY qcos DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id FROM ranked WHERE rnk <= {TOP_K}
+    {_sql_knn("q", "vq", _SQL_NOT_SELF, TOP_K, "qcos")}
     """)
 
 
@@ -1286,21 +1063,20 @@ PQ_K = 4  # codebook centroids per subspace (codes fit in 2 bits here)
 PQ_ITERS = 2  # fixed Lloyd unroll per codebook (same trade as kmeans_clusters)
 
 
-def _pq_subvectors(v: DataFrame, col: str = "e") -> DataFrame:
-    """Map-side posexplode of a (vec_id, <col>) vector frame into the
-    (vec_id, m, s) subvector frame the Lloyd fit consumes — n·M rows, no
-    shuffle."""
-    return v.select(
-        "vec_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.slice(col, m * PQ_SUBDIM + 1, PQ_SUBDIM)
-                    for m in range(PQ_M)
-                ]
-            )
-        ).alias("m", "s"),
+def _pq_split(e: Column) -> Column:
+    """A vector's PQ_M subvectors, ascending m."""
+    return F.array(
+        *[F.slice(e, m * PQ_SUBDIM + 1, PQ_SUBDIM) for m in range(PQ_M)]
     )
+
+
+def _pq_subvectors(
+    v: DataFrame, col: str = "e", keys: Sequence[str] = ("vec_id",)
+) -> DataFrame:
+    """Map-side posexplode of a (*keys, <col>) vector frame into the
+    (*keys, m, s) subvector frame ``_pq_assign`` encodes — n·M rows, no
+    shuffle."""
+    return v.select(*keys, F.posexplode(_pq_split(F.col(col))).alias("m", "s"))
 
 
 def _pq_lloyd(sub: DataFrame, k: int = PQ_K):
@@ -1348,23 +1124,21 @@ def _pq_lloyd(sub: DataFrame, k: int = PQ_K):
 
 
 def _pq_assign(sub: DataFrame, cents: DataFrame) -> DataFrame:
-    """Encode a (vec_id, m, s) subvector frame against an M·K-row
-    codebook — the ONE encoding expression shared by the Lloyd fit and
-    the published-model apply (``knn_pq_apply_published``), so a frozen
-    codebook encodes a vector to the identical codes the fit assigned
-    (no drift; the published≡refit pin rides on this).
+    """Encode a (…, m, s) subvector frame against an M·K-row
+    codebook, as (…, m, cid, s) — the ONE encoding expression shared by the Lloyd fit, the
+    streaming IVF-PQ encoder (``ann_pq_incremental.encode_batch``) and,
+    term for term, ``_pq_reconstruct_inline``, so a frozen codebook
+    encodes a vector to the identical codes the fit assigned.
 
-    Shape (r13, guide §2.4): the per-subspace codewords fold into an
-    M-row broadcast of candidate arrays; the argmin is a map-side
-    ``array_min`` over (d, cid) structs — the same lexicographic
-    minimum the old join + groupBy ``F.min(struct)`` computed, without
-    shuffling the n·M subvector rows through a K-fanned exchange (one
-    corpus-sized shuffle saved per Lloyd iteration and per encode)."""
+    Shape (guide §2.4): the per-subspace codewords fold into an M-row
+    broadcast of candidate arrays; the argmin is a map-side ``array_min``
+    over (d, cid) structs (the lexicographic minimum), so the n·M
+    subvector rows never shuffle through a K-fanned exchange."""
     cands = cents.groupBy("m").agg(
         F.collect_list(F.struct(F.col("cid"), F.col("ce"))).alias("_cands")
     )
     return sub.join(F.broadcast(cands), "m").select(
-        "vec_id",
+        *[c for c in sub.columns if c not in ("m", "s")],
         "m",
         F.array_min(
             F.transform(
@@ -1394,65 +1168,59 @@ def _pq_codebook_row(cents: DataFrame) -> DataFrame:
 
 
 def _pq_reconstruct_inline(v: DataFrame, cents: DataFrame) -> DataFrame:
-    """Encode + reconstruct in ONE map-side pass against a broadcast
-    codebook (r13, guide §2.4): per vector and subspace, pick the
+    """Encode + reconstruct a (vec_id, e) frame in ONE map-side pass
+    against a broadcast codebook, as (vec_id, e, nrm): per subspace, the
     lexicographic (d, cid)-minimum codeword (the ``_pq_assign`` argmin —
-    cid is unique per subspace, so attaching ce to the struct never
-    changes the winner) and concatenate the winning centroids ascending
-    m (the ``_pq_reconstruct`` assembly order). The published-model
-    search path (``knn_pq_apply_published``) uses this to lose both the
-    subvector explode->code rows and the (vec_id)-keyed reassembly
-    shuffle: scan -> reconstructed vector, nothing leaves the scan task.
-    Arithmetic is term-identical to _pq_assign + _pq_reconstruct, so
-    published ≡ refit still hash-checks against the refit oracle. An
-    empty codebook reconstructs nothing (zero rows), never ``re=[]``."""
+    cid is unique per subspace, so carrying ce never changes the winner),
+    concatenated ascending m (the ``_pq_decode`` order). Each subvector
+    is sliced once and zipped against its subspace's candidates. The
+    arithmetic is term-identical to ``_pq_assign`` + ``_pq_decode``, so
+    published ≡ refit; nothing leaves the scan task. An empty codebook
+    reconstructs nothing (zero rows), never ``e=[]``."""
     one = _pq_codebook_row(cents).filter(F.size("cb") > 0)
 
-    def winner(mc):
+    def winner(mc: Column, s: Column) -> Column:
         return F.array_min(
             F.transform(
                 mc["cands"],
                 lambda c: F.struct(
-                    _sqdist(
-                        F.slice(
-                            F.col("e"), mc["m"] * PQ_SUBDIM + 1, PQ_SUBDIM
-                        ),
-                        c["ce"],
-                    ).alias("d"),
+                    _sqdist(s, c["ce"]).alias("d"),
                     c["cid"].alias("cid"),
                     c["ce"].alias("ce"),
                 ),
             )
-        )
+        )["ce"]
 
     return (
         v.crossJoin(F.broadcast(one))
         .select(
             "vec_id",
-            F.flatten(
-                F.transform(F.col("cb"), lambda mc: winner(mc)["ce"])
-            ).alias("re"),
+            F.flatten(F.zip_with("cb", _pq_split(F.col("e")), winner)).alias("e"),
         )
-        .withColumn("rnrm", _nrm(F.col("re")))
+        .withColumn("nrm", _nrm(F.col("e")))
     )
 
 
-def _pq_reconstruct(codes: DataFrame, cents: DataFrame) -> DataFrame:
-    """PQ-reconstructed vectors (vec_id, re, rnrm) from a (vec_id, m,
-    cid) code frame: broadcast codebook join + per-vector reassembly —
-    never a corpus shuffle wider than the (vec_id)-keyed collect."""
+def _pq_decode(
+    codes: DataFrame,
+    cents: DataFrame,
+    keys: Sequence[str] = ("vec_id",),
+    out: str = "e",
+) -> DataFrame:
+    """Decode a (…, m, cid) code frame: broadcast codebook join, then each
+    ``keys`` group's codewords concatenated ascending m as ``out`` — the
+    one (keys)-keyed shuffle of a PQ reconstruction."""
     return (
         codes.join(F.broadcast(cents), ["m", "cid"])
-        .groupBy("vec_id")
+        .groupBy(*keys)
         .agg(
             F.flatten(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("m", "ce"))),
                     lambda x: x["ce"],
                 )
-            ).alias("re")
+            ).alias(out)
         )
-        .withColumn("rnrm", _nrm(F.col("re")))
     )
 
 
@@ -1467,58 +1235,25 @@ def _pq_fit_shared(spark: SparkSession, sf_dir: str):
 
 @query
 def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN search (Jégou et al. 2011, re-expressed
-    Spark-first): each corpus vector is stored as PQ_M codebook codes
-    (here 4 × 2 bits vs 64 × 64-bit floats — a 256× storage reduction);
-    queries stay exact floats and score against the RECONSTRUCTED
-    vectors, which is exactly asymmetric distance computation (ADC: the
-    per-subspace lookup-table sum equals the dot product against the
-    concatenated assigned centroids). Top-TOP_K per query by ADC cosine.
-
-    Scale design: encoding is the broadcast-codebook argmin (map-side;
-    the codebook is M·K rows no matter the corpus size); reconstruction
-    is a broadcast equi-join + per-vector reassembly, never a corpus
-    shuffle wider than the (vec_id)-keyed collect; scoring reuses the
-    brute-force broadcast-query shape but reads the 4-code representation
-    — at 100 TB the scan side is 256× smaller than the float corpus,
-    which is the entire point of PQ. Recall twin: knn_pq_recall.
-    """
+    """Product-quantization ANN search (Jégou et al. 2011): every vector
+    is a candidate, stored as PQ_M codebook codes (4 × 2 bits vs 64
+    doubles); queries stay exact floats and score ``adc_cosine`` against
+    the reconstructed vectors, which is exactly asymmetric distance
+    computation (the per-subspace lookup-table sum equals the dot product
+    against the concatenated codewords). Recall twin: knn_pq_recall."""
     cents, codes = _pq_fit_shared(spark, sf_dir)
-    return _pq_adc_topk(spark, sf_dir, _pq_reconstruct(codes, cents))
+    rec = _pq_decode(codes, cents).withColumn("nrm", _nrm(F.col("e")))
+    return _pq_adc_topk(spark, sf_dir, rec)
 
 
 def _pq_adc_topk(
     spark: SparkSession, sf_dir: str, rec: DataFrame
 ) -> DataFrame:
-    """Top-TOP_K per exact-float query by ADC cosine against a
-    reconstructed-vector frame (vec_id, re, rnrm) — the scoring tail
-    shared by the in-session and published-codebook ADC paths."""
-    q = (
-        _vectors(spark, sf_dir)
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-    )
-    scored = rec.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cos_pre(F.col("qe"), F.col("re"), F.col("qnrm"), F.col("rnrm")).alias(
-            "adc_cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_cosine", "rnk")
-    )
+    """Top-TOP_K per exact-float query by ADC cosine against reconstructed
+    vectors (vec_id, e, nrm) — shared by the in-session and
+    published-codebook paths."""
+    q = _as_queries(_vectors(spark, sf_dir))
+    return _knn(rec, q, _others(), TOP_K, score="adc_cosine")
 
 
 def _pq_codebooks_path(model_path: str) -> str:
@@ -1551,20 +1286,16 @@ def knn_pq_apply_published(
     spark: SparkSession, sf_dir: str, model_path: str
 ) -> DataFrame:
     """``knn_pq_adc``'s output against a PUBLISHED frozen codebook — the
-    cross-session production form: no Lloyd fit, one corpus scan to
-    encode (``_pq_assign``, the fit's own argmin expression), broadcast
-    reconstruction, ADC top-k. Fails fast with the store-precondition
-    error when the model was never published (``require_store``, same
-    contract as the BPE merge table and the IVFPQ store)."""
+    cross-session production form: no Lloyd fit, one corpus scan that
+    encodes and reconstructs map-side (``_pq_reconstruct_inline``), then
+    the ADC top-k. Fails fast with the store-precondition error when the
+    model was never published (``require_store``, same contract as the
+    BPE merge table and the IVFPQ store)."""
     from komodo_data_spark.streaming.stores import require_store
 
     require_store(spark, _pq_codebooks_path(model_path), "flat-PQ codebook")
     cents = read_pq_model(spark, model_path)
     v = _vectors(spark, sf_dir).select("vec_id", "e")
-    # one corpus scan: encode and reconstruct fused map-side against the
-    # broadcast codebook (r13) — the old explode -> _pq_assign ->
-    # _pq_reconstruct chain paid a (vec_id)-keyed reassembly shuffle of
-    # n·M code rows for the same values
     return _pq_adc_topk(spark, sf_dir, _pq_reconstruct_inline(v, cents))
 
 
@@ -1598,15 +1329,11 @@ def _pq_sql_chain(k: int = PQ_K) -> str:
     ``_pq_lloyd`` (PQ_ITERS == 2 unrolled literally, like
     _kmeans_cte_prefix) over an existing ``sub`` CTE; emits
     ``pc0..pc2`` (codebooks) and ``paf`` (final code assignment)."""
-    sqd = (
-        "list_sum(list_transform(range(1, len(s.s)+1),"
-        " i -> (s.s[i] - c.ce[i]) * (s.s[i] - c.ce[i])))"
-    )
 
     def assign(subs: str, cents: str) -> str:
         return f"""
       SELECT s.vec_id, s.m, s.s,
-             min([{sqd}, c.cid::DOUBLE])[2]::BIGINT AS cid
+             min([{_sql_sqdist("s.s", "c.ce")}, c.cid::DOUBLE])[2]::BIGINT AS cid
       FROM {subs} s JOIN {cents} c ON c.m = s.m
       GROUP BY s.vec_id, s.m, s.s
     """
@@ -1629,34 +1356,29 @@ def _pq_sql_chain(k: int = PQ_K) -> str:
     paf AS ({assign("sub", "pc2")})"""
 
 
+def _pq_sql_decode(out: str) -> str:
+    """DuckDB twin of ``_pq_decode`` over the ``paf`` codes and the final
+    ``pc2`` codebook."""
+    return f"""
+      SELECT a.vec_id, flatten(list(c.ce ORDER BY a.m)) AS {out}
+      FROM paf a JOIN pc2 c ON c.m = a.m AND c.cid = a.cid
+      GROUP BY a.vec_id"""
+
+
 def _pq_cte_prefix() -> str:
     """DuckDB CTE chain for flat PQ: exposes ``v`` (float vectors) and
     ``rec`` (PQ-reconstructed vectors)."""
     return f"""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+    WITH {_SQL_V},
     sub AS ({_pq_sql_subvectors("v", "e")}),{_pq_sql_chain()},
-    rec AS (
-      SELECT a.vec_id, flatten(list(c.ce ORDER BY a.m)) AS e
-      FROM paf a JOIN pc2 c ON c.m = a.m AND c.cid = a.cid
-      GROUP BY a.vec_id
-    )"""
+    rec AS ({_pq_sql_decode("e")})"""
 
 
 def knn_pq_adc_oracle() -> str:
     return f"""
     {_pq_cte_prefix()},
-    q AS (SELECT vec_id AS query_id, e FROM v WHERE vec_id < {N_QUERIES}),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS adc_cosine
-      FROM q JOIN rec v ON v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, adc_cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {_SQL_Q},
+    {_sql_knn("q", "rec", _SQL_NOT_SELF, TOP_K, "adc_cosine")}
     """
 
 
@@ -1688,6 +1410,18 @@ def knn_pq_recall_oracle() -> str:
 IVFPQ_K = 16
 
 
+def _ivfpq_residuals(assigned: DataFrame, cells: DataFrame) -> DataFrame:
+    """(vec_id, cell_id, r): each vector of a (vec_id, cid, e) cell
+    assignment minus its cell centroid — the residual the IVF-PQ
+    codebooks encode, shared by the batch fit and the streaming encoder
+    (``ann_pq_incremental.encode_batch``)."""
+    return assigned.join(F.broadcast(cells), "cid").select(
+        "vec_id",
+        F.col("cid").alias("cell_id"),
+        F.zip_with("e", "ce", lambda x, c: x - c).alias("r"),
+    )
+
+
 def _ivfpq_fit(spark: SparkSession, sf_dir: str):
     """The IVFPQ index build (Jégou et al. 2011, §IV — the composition
     FAISS ships as IndexIVFPQ): coarse-quantize every vector to its
@@ -1699,29 +1433,16 @@ def _ivfpq_fit(spark: SparkSession, sf_dir: str):
     Lloyd kernel at IVFPQ_K codewords.
 
     Returns (cells(cid, ce), picked(vec_id, cell_id), codebooks, codes).
-    Scale design: the coarse centroids localCheckpoint (KMEANS_K rows;
-    three consumers — residual join, reconstruction, query probing —
-    must not each re-run the Lloyd chain); coarse assignment is a
-    broadcast crossJoin + map-side-combinable min-struct argmin, never a
-    corpus shuffle; the residual explode is map-side; the residual
+    The shared k-means fit's final assignment IS the coarse quantization
+    (same argmin over the same fitted cells), so the corpus argmin is not
+    re-run here; the residual explode is map-side and the residual
     codebook rounds inherit ``_pq_lloyd``'s broadcast shape.
     """
-    # the shared fit's final assignment IS the coarse quantization this
-    # index needs (same argmin expression over the same fitted cells), so
-    # the corpus crossJoin+argmin is not re-run here
     cells, assigned = _kmeans_fit_shared(spark, sf_dir)
-    picked = assigned.select(
-        "vec_id", F.col("cid").alias("cell_id"), "e"
-    )
-    resid = picked.join(
-        F.broadcast(cells), F.col("cell_id") == F.col("cid")
-    ).select(
-        "vec_id",
-        "cell_id",
-        F.zip_with("e", "ce", lambda x, c: x - c).alias("r"),
-    )
+    resid = _ivfpq_residuals(assigned, cells)
     cents, codes = _pq_lloyd(_pq_subvectors(resid, "r"), k=IVFPQ_K)
-    return cells, picked.select("vec_id", "cell_id"), cents, codes
+    picked = assigned.select("vec_id", F.col("cid").alias("cell_id"))
+    return cells, picked, cents, codes
 
 
 @shared_fit("ivfpq")
@@ -1732,87 +1453,47 @@ def _ivfpq_fit_shared(spark: SparkSession, sf_dir: str):
     return _ivfpq_fit(spark, sf_dir)
 
 
-@query
-def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ ANN search — the production-standard composed index: probe
-    the query's IVF_PROBES nearest coarse cells, ADC-score only their
-    members against (cell centroid + PQ-reconstructed residual), top-TOP_K
-    per query. Composes the two existing rungs exactly the way FAISS
-    IndexIVFPQ does: the inverted lists bound WHICH vectors are scored
-    (candidate generation stays an equi-join on cell_id) and the residual
-    codes bound WHAT is read per candidate (PQ_M codes instead of the
-    float vector).
-
-    Scale design: at 100 TB the scan side of the search join carries only
-    (vec_id, cell_id, 4 codes) — the 256× PQ compression — and the probe
-    restriction cuts candidates to ~probes/KMEANS_K of the corpus (dial
-    KMEANS_K up with corpus size: FAISS guidance is ~sqrt(n) cells); both
-    dials (probes, IVFPQ_K) trade recall for cost with the measured twin
-    ``knn_ivfpq_recall`` pricing the composition against brute force.
-    Reconstruction joins are broadcast (codebook is M·K rows; cells are
-    N_CELLS rows); nothing corpus-sized shuffles except the (vec_id)-keyed
-    code reassembly that any PQ store pays once at build time.
-    """
-    cells, assigned, cents, codes = _ivfpq_fit_shared(spark, sf_dir)
-    rrec = (
-        codes.join(F.broadcast(cents), ["m", "cid"])
-        .groupBy("vec_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "ce"))),
-                    lambda x: x["ce"],
-                )
-            ).alias("rr")
-        )
-    )
+def _ivfpq_knn(
+    rr: DataFrame, q: DataFrame, cells: DataFrame, k: int
+) -> DataFrame:
+    """The IVF-PQ search, shared with the streaming code store
+    (``ann_pq_incremental.knn_from_pq_store``): candidates are the members
+    of each query's IVF_PROBES nearest coarse cells, ranked by the coarse
+    quantizer's own metric (squared Euclidean, ties to the lower cid);
+    each candidate is its cell centroid plus its decoded residual ``rr``
+    (vec_id, cell_id, rr). ``q`` is (query_id, qe, qnrm), exact floats."""
     rec = (
-        assigned.join(rrec, "vec_id")
-        .join(F.broadcast(cells), F.col("cell_id") == F.col("cid"))
+        rr.join(F.broadcast(cells), F.col("cell_id") == F.col("cid"))
         .select(
             "vec_id",
             "cell_id",
-            F.zip_with("ce", "rr", lambda c, r: c + r).alias("re"),
+            F.zip_with("ce", "rr", lambda c, r: c + r).alias("e"),
         )
-        .withColumn("rnrm", _nrm(F.col("re")))
+        .withColumn("nrm", _nrm(F.col("e")))
     )
-    # queries stay exact floats; probe the IVF_PROBES nearest cells by the
-    # coarse quantizer's own metric (Euclidean — the assignment metric);
-    # the query frame is N_QUERIES×KMEANS_K rows, so the window cost is nil
-    wq = Window.partitionBy("query_id").orderBy(F.asc("qd"), F.asc("cid"))
-    q = (
-        _vectors(spark, sf_dir)
-        .filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("e").alias("qe"),
-            F.col("nrm").alias("qnrm"),
-        )
-        .crossJoin(F.broadcast(cells))
-        .withColumn("qd", _sqdist(F.col("qe"), F.col("ce")))
-        .withColumn("crnk", F.row_number().over(wq))
-        .filter(F.col("crnk") <= IVF_PROBES)
-        .select("query_id", "qe", "qnrm", F.col("cid").alias("qcell"))
+    qd = q.crossJoin(F.broadcast(cells)).withColumn(
+        "qd", _sqdist(F.col("qe"), F.col("ce"))
     )
-    scored = rec.join(
-        F.broadcast(q),
-        (F.col("cell_id") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cos_pre(F.col("qe"), F.col("re"), F.col("qnrm"), F.col("rnrm")).alias(
-            "adc_cosine"
-        ),
+    order = [F.asc("qd"), F.asc("cid")]
+    probed = _top_k(qd, "query_id", order, IVF_PROBES, "crnk").select(
+        "query_id", "qe", "qnrm", F.col("cid").alias("qcell")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select("query_id", "neighbor_id", "adc_cosine", "rnk")
-    )
+    on = _others(F.col("cell_id") == F.col("qcell"))
+    return _knn(rec, probed, on, k, score="adc_cosine")
+
+
+@query
+def knn_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-PQ ANN search, the composed index FAISS ships as IndexIVFPQ:
+    the inverted lists bound WHICH vectors are scored (the members of the
+    query's IVF_PROBES nearest k-means cells, an equi-join on cell_id) and
+    the residual codes bound WHAT is read per candidate (PQ_M codes, not
+    the float vector); top-TOP_K by ``adc_cosine``. Recall twin:
+    ``knn_ivfpq_recall``."""
+    cells, assigned, cents, codes = _ivfpq_fit_shared(spark, sf_dir)
+    rr = assigned.join(_pq_decode(codes, cents, out="rr"), "vec_id")
+    q = _as_queries(_vectors(spark, sf_dir))
+    return _ivfpq_knn(rr, q, cells, TOP_K)
 
 
 def _ivfpq_cte_prefix() -> str:
@@ -1830,11 +1511,7 @@ def _ivfpq_cte_prefix() -> str:
       FROM af a JOIN c2 c USING (cid)
     ),
     sub AS ({_pq_sql_subvectors("rsd", "r")}),{_pq_sql_chain(k=IVFPQ_K)},
-    rrec AS (
-      SELECT a.vec_id, flatten(list(c.ce ORDER BY a.m)) AS rr
-      FROM paf a JOIN pc2 c ON c.m = a.m AND c.cid = a.cid
-      GROUP BY a.vec_id
-    ),
+    rrec AS ({_pq_sql_decode("rr")}),
     rec AS (
       SELECT r.vec_id, r.cell_id,
              list_transform(range(1, len(c.ce)+1),
@@ -1845,33 +1522,15 @@ def _ivfpq_cte_prefix() -> str:
 
 
 def knn_ivfpq_adc_oracle() -> str:
-    qsqd = (
-        "list_sum(list_transform(range(1, len(q.e)+1),"
-        " i -> (q.e[i] - c.ce[i]) * (q.e[i] - c.ce[i])))"
-    )
     return f"""
     {_ivfpq_cte_prefix()},
-    qprobe AS (
-      SELECT * FROM (
-        SELECT q.vec_id AS query_id, q.e, c.cid AS qcell,
-               row_number() OVER (
-                 PARTITION BY q.vec_id ORDER BY {qsqd} ASC, c.cid ASC
-               ) AS crnk
-        FROM v q CROSS JOIN c2 c WHERE q.vec_id < {N_QUERIES}
-      ) WHERE crnk <= {IVF_PROBES}
+    qc AS (
+      SELECT q.vec_id AS query_id, q.e, c.cid AS qcell,
+             {_sql_sqdist("q.e", "c.ce")} AS qd
+      FROM v q CROSS JOIN c2 c WHERE q.vec_id < {N_QUERIES}
     ),
-    scored AS (
-      SELECT q.query_id, v.vec_id AS neighbor_id, {_SQL_COS} AS adc_cosine
-      FROM qprobe q JOIN rec v
-        ON v.cell_id = q.qcell AND v.vec_id <> q.query_id
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY adc_cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, neighbor_id, adc_cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    q AS ({_sql_top_k("qc", "query_id", "qd ASC, qcell ASC", IVF_PROBES, "crnk")}),
+    {_sql_knn("q", "rec", _SQL_SAME_CELL, TOP_K, "adc_cosine")}
     """
 
 
@@ -1898,83 +1557,35 @@ def knn_ivfpq_recall_oracle() -> str:
 
 @query
 def embeddings_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-K most-similar vectors under a DIFFERENT label for each query
-    vector — hard-negative mining for contrastive/embedding training: the
-    negatives worth training on are the ones the current embedding space
-    already confuses with the anchor, and those are exactly the
-    highest-cosine cross-label neighbors. Same output shape as the ANN
-    ladder (query_id, neighbor_id, label pair, cosine, rnk) so mined pairs
-    feed the existing export path unchanged.
-
-    Scale design: identical plan skeleton to ``knn_brute_force`` — the
-    query set broadcasts against the scan side, cosine runs on
-    pre-hoisted norms (``_cos_pre``), and the per-query window reduces to
-    a map-side TakeOrdered before |Q|·K rows shuffle. The label predicate
-    is applied IN the join condition, so mismatched-label pairs are
-    dropped before any scoring work. At 100 TB the cross-label
-    restriction composes with any ladder rung — e.g. IVF-cell candidates
-    (``knn_ivf``) filtered to ``label <> query label`` — trading the
-    exact guarantee for cell-bounded cost with measured recall; this
-    exact form is the oracle-anchored baseline of that family.
-    """
-    v = _vectors(spark, sf_dir)
-    lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    vl = v.join(lab, "vec_id")
-    q = vl.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
+    """Top-TOP_K most-similar vectors under a DIFFERENT label for each
+    query vector — hard-negative mining for contrastive training: the
+    negatives worth training on are the ones the embedding space already
+    confuses with the anchor, i.e. the highest-cosine cross-label
+    neighbours. The label rule is the join condition, so same-label pairs
+    are dropped before any scoring. Output (query_id, query_label,
+    neighbor_id, neighbor_label, cosine, rnk)."""
+    labels = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("label").alias("neighbor_label")
     )
-    scored = vl.join(
-        F.broadcast(q), F.col("label") != F.col("query_label")
-    ).select(
-        "query_id",
-        "query_label",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        _cos_pre(F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")).alias(
-            "cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= TOP_K)
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            "cosine",
-            "rnk",
-        )
-    )
+    v = _vectors(spark, sf_dir).join(labels, "vec_id")
+    q = _as_queries(v, F.col("neighbor_label").alias("query_label"))
+    cols = ("query_id", "query_label", "neighbor_id", "neighbor_label")
+    on = F.col("neighbor_label") != F.col("query_label")
+    return _knn(v, q, on, TOP_K, cols=cols)
 
 
 def embeddings_hard_negatives_oracle() -> str:
+    cols = ("query_id", "query_label", "neighbor_id", "neighbor_label")
     return f"""
     WITH v AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS e FROM embeddings
+      SELECT vec_id, label AS neighbor_label, embedding::DOUBLE[] AS e
+      FROM embeddings
     ),
     q AS (
-      SELECT vec_id AS query_id, label AS query_label, e
+      SELECT vec_id AS query_id, neighbor_label AS query_label, e
       FROM v WHERE vec_id < {N_QUERIES}
     ),
-    scored AS (
-      SELECT q.query_id, q.query_label, v.vec_id AS neighbor_id,
-             v.label AS neighbor_label, {_SQL_COS} AS cosine
-      FROM q JOIN v ON v.label <> q.query_label
-    ),
-    ranked AS (
-      SELECT *, row_number() OVER (
-        PARTITION BY query_id ORDER BY cosine DESC, neighbor_id ASC
-      ) AS rnk FROM scored
-    )
-    SELECT query_id, query_label, neighbor_id, neighbor_label, cosine, rnk
-    FROM ranked WHERE rnk <= {TOP_K}
+    {_sql_knn("q", "v", "v.neighbor_label <> q.query_label", TOP_K, cols=cols)}
     """
 
 

@@ -44,6 +44,22 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """The local-mode heap when neither ``driver_memory`` nor
+    ``$SPARK_GRAFT_DRIVER_MEM`` is given: half the host's ``MemTotal``
+    (/proc/meminfo), in whole GiB, at least ``1g`` (also the answer where
+    /proc/meminfo cannot be read)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{max(1, kib // (2 * 1024 * 1024))}g"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "1g"
+
+
 def get_spark(
     app_name: str = "komodo-data-spark",
     master: str | None = None,
@@ -59,9 +75,10 @@ def get_spark(
     ``driver_memory`` sizes the single local-mode JVM (driver AND all
     executor threads share one heap there — Spark's 1g default OOMs hash
     aggregates already at the repo-generated sf1, ~6M lineitem rows).
-    Default from ``$SPARK_GRAFT_DRIVER_MEM``, else 12g on the 128 GiB
-    rig. Only effective for the session that launches the JVM; a
-    pre-existing session keeps its heap (getOrCreate semantics).
+    Default from ``$SPARK_GRAFT_DRIVER_MEM``, else
+    ``default_driver_memory()``. Only effective for the session that
+    launches the JVM; a pre-existing session keeps its heap (getOrCreate
+    semantics).
     """
     import os
 
@@ -71,7 +88,9 @@ def get_spark(
     builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     builder = builder.config(
         "spark.driver.memory",
-        driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
+        driver_memory
+        or os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+        or default_driver_memory(),
     )
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)

@@ -14,11 +14,10 @@ bucket-postings store, per micro-batch:
    partition (the epoch-store protocol, ``streaming/stores.py``).
 
 This is the IVF storage layout (cell key + vector payload co-located), so
-reads never re-join the base embeddings table: ``knn_from_store`` is one
-bucket equi-join between the (broadcast) query side and the store, exact
-cosine inside the bucket, per-query top-k — identical semantics to the
-batch ``knn_lsh_signbits`` over the same accumulated corpus (pinned by the
-stream==batch test).
+reads never re-join the base embeddings table: ``knn_from_store`` runs
+the batch ``knn_lsh_signbits`` search itself (``similarity._knn_lsh``)
+over the store, so it answers exactly what the batch query answers over
+the same accumulated corpus (pinned by the stream==batch test).
 
 Scale (100 TB of vectors): the store is O(corpus) rows but append-only and
 epoch-partitioned; probes are equi-joins keyed by bucket with the QUERY
@@ -35,15 +34,16 @@ before compaction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from komodo_data_spark.operators.similarity import (
-    N_QUERIES,
+    ANN_K,
     _bucket,
-    _cos_pre,
+    _knn_lsh,
     _nrm,
+    _top_k,
 )
 from komodo_data_spark.streaming.stores import (
     compact_distinct_store,
@@ -100,12 +100,7 @@ def _latest_per_vec(
     store = read_store(spark, store_path)
     if store is None:
         return None
-    w = Window.partitionBy("vec_id").orderBy(F.desc("epoch_id"))
-    return (
-        store.withColumn("rn_", F.row_number().over(w))
-        .filter(F.col("rn_") == 1)
-        .select(*cols)
-    )
+    return _top_k(store, "vec_id", [F.desc("epoch_id")], 1, "rn_").select(*cols)
 
 
 def read_index(spark: SparkSession, store_path: str) -> DataFrame | None:
@@ -114,39 +109,14 @@ def read_index(spark: SparkSession, store_path: str) -> DataFrame | None:
 
 
 def knn_from_store(
-    spark: SparkSession, store_path: str, top_k: int = 3
+    spark: SparkSession, store_path: str, top_k: int = ANN_K
 ) -> DataFrame | None:
     """Approximate top-k neighbors per query (vec_id < N_QUERIES),
-    restricted to the query's bucket — ``knn_lsh_signbits`` over the
-    indexed corpus, served from the store alone."""
+    restricted to the query's bucket — ``knn_lsh_signbits``'s search
+    (``similarity._knn_lsh``) over the indexed corpus, served from the
+    store alone."""
     v = read_index(spark, store_path)
-    if v is None:
-        return None
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("qbucket"),
-    )
-    scored = v.join(
-        F.broadcast(q),
-        (F.col("bucket") == F.col("qbucket"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cos_pre(F.col("qe"), F.col("e"), F.col("qnrm"), F.col("nrm")).alias(
-            "cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    return None if v is None else _knn_lsh(v, top_k)
 
 
 def compact_ann_store(spark: SparkSession, store_path: str) -> int:

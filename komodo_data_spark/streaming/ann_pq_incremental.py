@@ -2,9 +2,9 @@
 
 The float store (``ann_incremental.py``) carries each indexed vector as 64
 raw doubles — fine as the oracle-anchored baseline, wrong at 100 TB of
-vectors (round-7 verdict #3): the corpus-sized side of an ANN index should
-carry PQ codes, the layout the batch ``knn_ivfpq_adc`` rung already
-computes. This module is that upgrade:
+vectors: the corpus-sized side of an ANN index should carry PQ codes, the
+layout the batch ``knn_ivfpq_adc`` rung already computes. This module is
+that upgrade:
 
 1. ``publish_ivfpq_model`` freezes the index GEOMETRY from a training
    corpus: the k-means coarse cells and the per-subspace residual
@@ -13,17 +13,15 @@ computes. This module is that upgrade:
    between refreshes it is immutable, which is what makes streaming
    encoding embarrassingly parallel.
 2. ``encode_batch`` encodes each micro-batch of arrivals against the
-   frozen model — nearest coarse cell (broadcast argmin, the exact
-   expression the batch fit uses), residual, per-subspace code argmin —
-   and appends (vec_id, cell_id, codes) rows to the batch's own
-   ``epoch_id=N`` partition (the epoch-store protocol,
-   ``streaming/stores.py``).
-3. ``knn_from_pq_store`` serves ADC top-k from the store alone: candidate
-   generation is the cell_id equi-join against the probed cells,
-   reconstruction is a broadcast codebook join, queries stay exact
-   floats. Identical results to batch ``knn_ivfpq_adc`` over the same
-   accumulated rows when the model was fit on that corpus (pinned by the
-   stream==batch test).
+   frozen model through the batch fit's own expressions (nearest coarse
+   cell, residual, per-subspace code argmin) and appends (vec_id,
+   cell_id, codes) rows to the batch's own ``epoch_id=N`` partition (the
+   epoch-store protocol, ``streaming/stores.py``).
+3. ``knn_from_pq_store`` serves ADC top-k from the store alone through
+   the batch search itself (``similarity._ivfpq_knn``: probed cells,
+   broadcast codebook reconstruction, exact-float queries). Identical
+   results to batch ``knn_ivfpq_adc`` over the same accumulated rows when
+   the model was fit on that corpus (pinned by the stream==batch test).
 
 Store width: a row is (vec_id, cell_id, PQ_M=4 small-int codes) instead of
 (vec_id, bucket, 64 doubles, norm) — 4 codes vs 512 bytes of floats
@@ -46,18 +44,20 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from komodo_data_spark.operators.similarity import (
-    IVF_PROBES,
     TOP_K,
-    _cos_pre,
     _ivfpq_fit_shared,
+    _ivfpq_knn,
+    _ivfpq_residuals,
+    _kmeans_assign,
     _nrm,
+    _pq_assign,
+    _pq_decode,
     _pq_subvectors,
-    _sqdist,
 )
 from komodo_data_spark.streaming.ann_incremental import _latest_per_vec
 from komodo_data_spark.streaming.stores import (
@@ -108,48 +108,20 @@ def encode_batch(
     """Encode one micro-batch of embeddings (vec_id, embedding) against
     the frozen model into (vec_id, cell_id, codes) rows. Every step is the
     batch fit's own expression run against the published frames: nearest
-    cell = broadcast crossJoin + min-struct argmin, residual = zip_with
-    subtraction, codes = per-subspace broadcast argmin over the codebook —
-    so a vector encodes to the identical row in the stream and in batch
-    ``knn_ivfpq_adc``'s build (the stream==batch parity pin)."""
+    cell ``_kmeans_assign``, residual ``_ivfpq_residuals``, codes
+    ``_pq_assign`` — so a vector encodes to the identical row in the
+    stream and in batch ``knn_ivfpq_adc``'s build (the stream==batch
+    parity pin)."""
     spark = batch_df.sparkSession
     cells, cents = read_ivfpq_model(spark, model_path)
     v = batch_df.filter(F.col("embedding").isNotNull()).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
-    picked = (
-        v.crossJoin(F.broadcast(cells))
-        .groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    _sqdist(F.col("e"), F.col("ce")).alias("d"),
-                    F.col("cid").alias("cid"),
-                )
-            )["cid"].alias("cell_id"),
-            F.first("e").alias("e"),
-        )
-    )
-    resid = picked.join(
-        F.broadcast(cells), F.col("cell_id") == F.col("cid")
-    ).select(
-        "vec_id",
-        "cell_id",
-        F.zip_with("e", "ce", lambda x, c: x - c).alias("r"),
-    )
-    codes = (
-        _pq_subvectors(resid, "r")
-        .join(F.broadcast(cents), "m")
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min(
-                F.struct(
-                    _sqdist(F.col("s"), F.col("ce")).alias("d"),
-                    F.col("cid").alias("cid"),
-                )
-            )["cid"].alias("cid")
-        )
-        .groupBy("vec_id")
+    resid = _ivfpq_residuals(_kmeans_assign(v, cells), cells)
+    sub = _pq_subvectors(resid, "r", keys=("vec_id", "cell_id"))
+    rows = (
+        _pq_assign(sub, cents)
+        .groupBy("vec_id", "cell_id")
         .agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("m", "cid"))),
@@ -157,7 +129,6 @@ def encode_batch(
             ).alias("codes")
         )
     )
-    rows = resid.select("vec_id", "cell_id").join(codes, "vec_id")
     overwrite_partitions(
         rows.select(*PQ_STORE_COLS).withColumn("epoch_id", F.lit(int(epoch_id))),
         store_path,
@@ -202,41 +173,19 @@ def knn_from_pq_store(
     top_k: int = TOP_K,
 ) -> DataFrame | None:
     """ADC top-k per query served from the code store alone — batch
-    ``knn_ivfpq_adc`` over the accumulated corpus. ``queries`` is an
-    exact-float (vec_id, embedding) frame (queries are never quantized;
-    that is the A in ADC). Candidates = members of the IVF_PROBES nearest
-    coarse cells via a cell_id equi-join; each candidate is reconstructed
-    as cell centroid + codebook residual through broadcast joins; the
-    store side never shuffles."""
+    ``knn_ivfpq_adc``'s search (``similarity._ivfpq_knn``) over the
+    accumulated corpus. ``queries`` is an exact-float (vec_id, embedding)
+    frame (queries are never quantized; that is the A in ADC); each
+    stored row decodes through the broadcast codebook, and the store
+    side never shuffles."""
     idx = read_pq_index(spark, store_path)
     if idx is None:
         return None
     cells, cents = read_ivfpq_model(spark, model_path)
-    rrec = (
-        idx.select(
-            "vec_id", "cell_id", F.posexplode("codes").alias("m", "cid")
-        )
-        .join(F.broadcast(cents), ["m", "cid"])
-        .groupBy("vec_id", "cell_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("m", "ce"))),
-                    lambda x: x["ce"],
-                )
-            ).alias("rr")
-        )
+    codes = idx.select(
+        "vec_id", "cell_id", F.posexplode("codes").alias("m", "cid")
     )
-    rec = (
-        rrec.join(F.broadcast(cells), F.col("cell_id") == F.col("cid"))
-        .select(
-            "vec_id",
-            "cell_id",
-            F.zip_with("ce", "rr", lambda c, r: c + r).alias("re"),
-        )
-        .withColumn("rnrm", _nrm(F.col("re")))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("qd"), F.asc("cid"))
+    rr = _pq_decode(codes, cents, keys=("vec_id", "cell_id"), out="rr")
     q = (
         queries.filter(F.col("embedding").isNotNull())
         .select(
@@ -244,31 +193,8 @@ def knn_from_pq_store(
             F.col("embedding").cast("array<double>").alias("qe"),
         )
         .withColumn("qnrm", _nrm(F.col("qe")))
-        .crossJoin(F.broadcast(cells))
-        .withColumn("qd", _sqdist(F.col("qe"), F.col("ce")))
-        .withColumn("crnk", F.row_number().over(wq))
-        .filter(F.col("crnk") <= IVF_PROBES)
-        .select("query_id", "qe", "qnrm", F.col("cid").alias("qcell"))
     )
-    scored = rec.join(
-        F.broadcast(q),
-        (F.col("cell_id") == F.col("qcell"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        _cos_pre(F.col("qe"), F.col("re"), F.col("qnrm"), F.col("rnrm")).alias(
-            "adc_cosine"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc_cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= top_k)
-        .select("query_id", "neighbor_id", "adc_cosine", "rnk")
-    )
+    return _ivfpq_knn(rr, q, cells, top_k)
 
 
 def compact_pq_store(spark: SparkSession, store_path: str) -> int:

@@ -29,7 +29,7 @@ def main() -> int:
     log_dir = tempfile.mkdtemp(prefix="jobprof_")
     from pyspark.sql import SparkSession
 
-    from komodo_data_spark.session import ENGINE_CONFS
+    from komodo_data_spark.session import ENGINE_CONFS, default_driver_memory
 
     builder = (
         SparkSession.builder.appName("job-profile")
@@ -37,7 +37,7 @@ def main() -> int:
         .config("spark.sql.shuffle.partitions", cpus)
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", log_dir)

@@ -12,6 +12,8 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
+
 from komodo_data_spark.operators import dedup, relational, similarity, text_analysis
 
 SF = "/root/testdata/sf0.001"
@@ -77,9 +79,22 @@ def test_simhash_uses_equi_joins_only(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_knn_lsh_is_hash_join(spark):
-    plan = plan_of(similarity.knn_lsh_signbits(spark, SF))
+@pytest.mark.parametrize(
+    "name",
+    [
+        "knn_lsh_signbits",
+        "knn_lsh_multiprobe",
+        "knn_ivf",
+        "knn_ivf_multiprobe",
+        "knn_ivfpq_adc",
+    ],
+)
+def test_knn_lsh_is_hash_join(spark, name):
+    """Every candidate-restricted search keeps its candidate rule an
+    equi-keyed broadcast hash join — never a filter over a cross join."""
+    plan = plan_of(getattr(similarity, name)(spark, SF))
     assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_text_token_stats_is_shuffle_free(spark):
