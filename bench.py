@@ -142,10 +142,10 @@ def _timed_sweep(spark, qs, sf_dir: str) -> tuple[dict[str, float], dict]:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
+    from komodo_data_spark.session import default_cores, get_spark
 
-    from komodo_data_spark.session import get_spark
+    cpus = default_cores()
+    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     spark = get_spark(
         app_name="komodo-bench",

@@ -18,10 +18,16 @@ Commands:
                                          iteration drains new capture
                                          files into the data table, then
                                          dispatches new request files to
-                                         CSV; checkpoints make both
+                                         CSV, one Spark plan per
+                                         aggregation function per
+                                         micro-batch, each request's CSV
+                                         named <prefix>_req<id>.csv;
+                                         checkpoints make both
                                          exactly-once per file across
                                          restarts, fulfillments append to
-                                         S/fulfillments.
+                                         S/fulfillments as one-row parquet
+                                         files.
+--cores defaults to $SPARK_GRAFT_CPUS, else the usable cores.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ import argparse
 import os
 import sys
 import time
+import uuid
 
 
 def _engine(sf_dir: str, cores: int):
@@ -52,6 +59,9 @@ def serve(args) -> int:
     drain of both streams, so the loop structure mirrors the reference
     exactly while the checkpoints replace the `processed` /
     `is_it_fulfilled` flags with exactly-once file offsets."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from komodo_data_spark.session import get_spark
     from komodo_data_spark.streaming.dispatch import start_request_stream
     from komodo_data_spark.streaming.ingest import start_capture_stream
@@ -62,12 +72,21 @@ def serve(args) -> int:
     )
     spark.sparkContext.setLogLevel("ERROR")
     fulfill_path = os.path.join(args.state_dir, "fulfillments")
+    os.makedirs(fulfill_path, exist_ok=True)
 
     def on_fulfilled(rid: int, path: str) -> None:
-        spark.createDataFrame(
-            [(int(rid), path, int(time.time()))],
-            "request_id int, file_location string, fulfilled_at long",
-        ).write.mode("append").parquet(fulfill_path)
+        # one-row parquet (request_id int, file_location string,
+        # fulfilled_at long) written without a Spark job, under a dot name
+        # Spark's reader skips, then renamed into place: the record is
+        # durable before the dispatch epoch commits
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(fulfill_path, "." + name)
+        pq.write_table(pa.table({
+            "request_id": pa.array([int(rid)], pa.int32()),
+            "file_location": pa.array([path], pa.string()),
+            "fulfilled_at": pa.array([int(time.time())], pa.int64()),
+        }), tmp)
+        os.replace(tmp, os.path.join(fulfill_path, name))
 
     iterations = 1 if args.available_now else args.iterations
     i = 0
@@ -101,6 +120,8 @@ def serve(args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from komodo_data_spark.session import default_cores
+
     p = argparse.ArgumentParser(prog="komodo_data_spark")
     p.add_argument(
         "command",
@@ -108,7 +129,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument("target", nargs="?", help="query name or SQL text")
     p.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    p.add_argument("--cores", type=int, default=8)
+    p.add_argument("--cores", type=int, default=default_cores())
     p.add_argument("--limit", type=int, default=20)
     p.add_argument("--captures-dir")
     p.add_argument("--requests-dir")

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from komodo_data_spark.session import configure, get_spark
+from komodo_data_spark.session import configure, default_cores, get_spark
 from komodo_data_spark.sources.tables import TABLE_NAMES, load_events, load_table
 
 
@@ -33,8 +33,11 @@ class KomodoEngine:
 
     @classmethod
     def local(
-        cls, cores: int = 8, sf_dir: str | None = None
+        cls, cores: int | None = None, sf_dir: str | None = None
     ) -> "KomodoEngine":
+        """A local[cores] engine, ``cores`` defaulting to
+        ``session.default_cores()``."""
+        cores = cores or default_cores()
         return cls(
             get_spark(
                 "komodo-engine",

@@ -5,9 +5,15 @@ is expressed as one declarative Spark plan: no staging tables, no in-place
 UPDATEs, no double execution (the reference re-runs drawing_pattern and
 user_proximity twice, process.py:399-402/:438-441 — eliminated here).
 
+The three request analytics (the ones ``data_requests`` dispatches,
+process.py:351-366) are each defined once, keyed by ``request_id`` over a
+small request frame ``(request_id, session_id, <params>)``: a micro-batch of
+requests is one plan (streaming/dispatch.py), and the per-request function
+is the one-row case of the same definition.
+
 Scale design (100 TB): the `data` table is expected partitioned by
 ``session_id`` (see sources.capture.append_to_data_table), so every
-``session_id = :x`` filter prunes partitions at scan time. Window functions
+session filter prunes partitions at scan time. Window functions
 are partitioned on the same keys the reference's WHERE clause pins to
 constants — identical results at any scale, no single-task global sorts
 except where the reference's semantics genuinely are global (user_proximity
@@ -16,16 +22,98 @@ parity mode; a partitioned variant is provided for scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.json_compat import decode_entity, jget, jget_num
 
 
-def aggregate_interaction_type(
-    data: DataFrame, session_id: int, interaction_type: int
-) -> DataFrame:
-    """Interactions per client for one session + interaction type.
+def _by_request(*params: str):
+    """Declare a keyed analytic: ``fn(data, requests)`` reads a request frame
+    ``(request_id long, <params>)``, each param a ``"name type"`` pair, and
+    returns one result per request, tagged with its ``request_id``."""
+
+    def declare(fn):
+        fn.request_params = tuple(tuple(p.split()) for p in params)
+        return fn
+
+    return declare
+
+
+def _long(value) -> int:
+    v = int(value)
+    if not -(2**63) <= v < 2**63:
+        raise OverflowError(f"{value} is out of range for a long")
+    return v
+
+
+def request_row(keyed, request_id: int, *values) -> tuple:
+    """One row of ``keyed``'s request frame. Each value is coerced the way
+    the analytic compares it: ``int`` for the session id, ``float`` for a
+    JSON number (MySQL's numeric coercion of ``->``). Raises on a value that
+    does not coerce, e.g. ``None`` for a missing ``entityType`` or a session
+    id outside Spark's long range, so the dispatcher skips that request
+    alone instead of failing the whole frame."""
+    coerce = {"long": _long, "double": float}
+    return (
+        _long(request_id),
+        *(coerce[t](v) for (_, t), v in zip(keyed.request_params, values, strict=True)),
+    )
+
+
+def request_frame(spark: SparkSession, keyed, rows) -> DataFrame:
+    """``keyed``'s request frame holding ``rows`` (from :func:`request_row`).
+    It is an inline ``VALUES`` table, i.e. a local relation: Spark reads and
+    broadcasts it without a job (a frame made by ``createDataFrame`` is an
+    RDD and costs one)."""
+    cols = (("request_id", "long"), *keyed.request_params)
+    values = ", ".join(
+        "(" + ", ".join(f":p{i}_{j}" for j in range(len(cols))) + ")"
+        for i in range(len(rows))
+    )
+    return spark.sql(
+        f"SELECT {', '.join(f'CAST({n} AS {t}) AS {n}' for n, t in cols)} "
+        f"FROM VALUES {values} AS t({', '.join(n for n, _ in cols)})",
+        args={f"p{i}_{j}": v for i, row in enumerate(rows) for j, v in enumerate(row)},
+    )
+
+
+def _one(keyed, data: DataFrame, *values, **kw) -> DataFrame:
+    """A keyed analytic's one-request case: its result for a one-row request
+    frame, without the key."""
+    requests = request_frame(data.sparkSession, keyed, [request_row(keyed, 0, *values)])
+    return keyed(data, requests, **kw).drop("request_id")
+
+
+def _named_rows(data: DataFrame, requests: DataFrame, path: str, param: str) -> DataFrame:
+    """The ``data`` rows each request names: its session, and the message's
+    number at ``path`` equal to the request's ``param``. A row named by two
+    requests appears once per request, tagged with the request's columns as
+    ``req_<name>``.
+
+    The request frame is broadcast and joined on ``session_id`` plus the
+    extracted number as equi-keys, so each row's JSON is parsed once however
+    many requests name its session. The scan is pruned to the requests'
+    sessions by an explicit ``session_id IN (...)``: dynamic partition
+    pruning does not fire with a local relation on the build side."""
+    sessions = sorted({r[0] for r in requests.select("session_id").collect()})
+    req = F.broadcast(requests.select(
+        "request_id",
+        *[F.col(c).alias(f"req_{c}") for c in requests.columns if c != "request_id"],
+    ))
+    rows = data.filter(F.col("session_id").isin(sessions)).withColumn(
+        "_key", jget_num("message", path)
+    )
+    return rows.join(
+        req,
+        (F.col("session_id") == F.col("req_session_id"))
+        & (F.col("_key") == F.col(f"req_{param}")),
+    ).drop("_key")
+
+
+@_by_request("session_id long", "interaction_type double")
+def aggregate_interaction_type_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
+    """Interactions per client for each request's session + interaction type.
 
     Reference: process.py:79-88 (INSERT…SELECT into `aggregate_interaction`).
     ``count(message)`` is a non-NULL count of the message column — kept as-is.
@@ -33,17 +121,23 @@ def aggregate_interaction_type(
     double-cast compare here.
     """
     return (
-        data.filter(
-            (F.col("session_id") == F.lit(int(session_id)))
-            & (jget_num("message", "$.interactionType") == F.lit(float(interaction_type)))
-        )
-        .groupBy("client_id")
+        _named_rows(data, requests, "$.interactionType", "interaction_type")
+        .groupBy("request_id", "client_id")
         .agg(F.count("message").alias("interaction_count"))
     )
 
 
-def aggregate_user(data: DataFrame, session_id: int, client_id: int) -> DataFrame:
-    """Per-entity-type activity count for one client in one session.
+def aggregate_interaction_type(
+    data: DataFrame, session_id: int, interaction_type: int
+) -> DataFrame:
+    """:func:`aggregate_interaction_type_by_request` for one request:
+    (client_id, interaction_count)."""
+    return _one(aggregate_interaction_type_by_request, data, session_id, interaction_type)
+
+
+@_by_request("session_id long", "client_id double")
+def aggregate_user_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
+    """Per-entity-type activity count for each request's client and session.
 
     Reference: process.py:144-173 — aggregate into `aggregate_user`, then an
     in-place UPDATE decodes entity codes to names (process.py:159-164). Here
@@ -51,23 +145,22 @@ def aggregate_user(data: DataFrame, session_id: int, client_id: int) -> DataFram
     reference's final SELECT * : (entity_type, user_count).
     """
     return (
-        data.filter(
-            (jget_num("message", "$.clientId") == F.lit(float(client_id)))
-            & (F.col("session_id") == F.lit(int(session_id)))
-            & (F.col("type") == "sync")
-        )
-        .groupBy(jget("message", "$.entityType").alias("entity_type"))
+        _named_rows(data.filter(F.col("type") == "sync"), requests, "$.clientId", "client_id")
+        .groupBy("request_id", jget("message", "$.entityType").alias("entity_type"))
         .agg(F.count(F.lit(1)).alias("user_count"))
-        .select(decode_entity("entity_type").alias("entity_type"), "user_count")
+        .select("request_id", decode_entity("entity_type").alias("entity_type"), "user_count")
     )
 
 
-def user_energy(
-    data: DataFrame,
-    session_id: int,
-    client_id: int,
-    entity_type: int | str,
-    partition_parity: bool = False,
+def aggregate_user(data: DataFrame, session_id: int, client_id: int) -> DataFrame:
+    """:func:`aggregate_user_by_request` for one request:
+    (entity_type, user_count)."""
+    return _one(aggregate_user_by_request, data, session_id, client_id)
+
+
+@_by_request("session_id long", "client_id double", "entity_type double")
+def user_energy_by_request(
+    data: DataFrame, requests: DataFrame, partition_parity: bool = False
 ) -> DataFrame:
     """Movement "energy" per sync message: √(Δx²+Δy²+Δz²) / Δts.
 
@@ -80,49 +173,73 @@ def user_energy(
     - ``entity_type`` is projected as the raw JSON text (``'0'``), numeric
       only in the predicate (MySQL coercion);
     - output: (client_id, session_id, timestamp, entity_type, energy),
-      ORDER BY entity_type, energy DESC (process.py:198,210).
+      ORDER BY entity_type, energy DESC (process.py:198,210) within each
+      request.
 
     Window partitioning: the reference's window is globally ordered, but its
-    WHERE pins (session_id, clientId) to constants, so partitioning by those
-    keys yields the identical frame while staying parallel at scale. Pass
-    ``partition_parity=True`` to force the reference's literal single-task
-    global window.
-    """
-    filtered = data.filter(
-        (jget_num("message", "$.clientId") == F.lit(float(client_id)))
-        & (F.col("session_id") == F.lit(int(session_id)))
-        & (F.col("type") == "sync")
-    )
-    if partition_parity:
-        w = Window.orderBy("seq")
-    else:
-        # session_id and the message clientId are constants under the filter;
-        # partitioning by the physical stream keys gives the same frame.
-        w = Window.partitionBy("session_id", "client_id").orderBy("seq")
+    WHERE pins (session_id, clientId) to constants, so partitioning each
+    request's rows by those keys yields the identical frame while staying
+    parallel at scale. Pass ``partition_parity=True`` to force the
+    reference's literal global window, one per request.
 
-    def delta(path: str):
-        c = jget_num("message", path)
-        return c - F.lag(c, 1).over(w)
+    The positions are extracted as doubles before the window, so the window
+    shuffle carries three numbers instead of the ``message`` text.
+    """
+    rows = _named_rows(
+        data.filter(F.col("type") == "sync"), requests, "$.clientId", "client_id"
+    ).select(
+        "request_id",
+        "client_id",
+        "session_id",
+        "ts",
+        "seq",
+        "req_entity_type",
+        jget("message", "$.entityType").alias("entity_type"),
+        *[jget_num("message", f"$.pos.{c}").alias(f"_{c}") for c in "xyz"],
+    )
+    keys = ["request_id"] if partition_parity else ["request_id", "session_id", "client_id"]
+    w = Window.partitionBy(*keys).orderBy("seq")
+
+    def delta(c: str):
+        return F.col(c) - F.lag(c, 1).over(w)
 
     energy = F.sqrt(
-        F.pow(delta("$.pos.x"), F.lit(2))
-        + F.pow(delta("$.pos.y"), F.lit(2))
-        + F.pow(delta("$.pos.z"), F.lit(2))
-    ) / (F.col("ts") - F.lag("ts", 1).over(w))
+        F.pow(delta("_x"), F.lit(2))
+        + F.pow(delta("_y"), F.lit(2))
+        + F.pow(delta("_z"), F.lit(2))
+    ) / delta("ts")
 
     return (
-        filtered.select(
+        rows.select(
+            "request_id",
             "client_id",
             "session_id",
             F.col("ts").alias("timestamp"),
-            jget("message", "$.entityType").alias("entity_type"),
+            "entity_type",
             energy.alias("energy"),
+            "req_entity_type",
         )
         .filter(
             F.col("energy").isNotNull()
-            & (F.col("entity_type").cast("double") == F.lit(float(entity_type)))
+            & (F.col("entity_type").cast("double") == F.col("req_entity_type"))
         )
-        .orderBy("entity_type", F.desc("energy"))
+        .drop("req_entity_type")
+        .orderBy("request_id", "entity_type", F.desc("energy"))
+    )
+
+
+def user_energy(
+    data: DataFrame,
+    session_id: int,
+    client_id: int,
+    entity_type: int | str,
+    partition_parity: bool = False,
+) -> DataFrame:
+    """:func:`user_energy_by_request` for one request: (client_id,
+    session_id, timestamp, entity_type, energy)."""
+    return _one(
+        user_energy_by_request, data, session_id, client_id, entity_type,
+        partition_parity=partition_parity,
     )
 
 

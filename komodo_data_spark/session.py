@@ -11,6 +11,8 @@ Parity notes (reference: /root/reference/process.py):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
 
 # Session-level confs applied to every session this engine touches. These are
@@ -60,6 +62,12 @@ def default_driver_memory() -> str:
     return "1g"
 
 
+def default_cores() -> int:
+    """The local-mode core count when none is given: ``$SPARK_GRAFT_CPUS``,
+    else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app_name: str = "komodo-data-spark",
     master: str | None = None,
@@ -80,8 +88,6 @@ def get_spark(
     launches the JVM; a pre-existing session keeps its heap (getOrCreate
     semantics).
     """
-    import os
-
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)

@@ -344,9 +344,9 @@ SF10_EXCLUDE = {
 
 
 def main() -> int:
-    from komodo_data_spark.session import get_spark
+    from komodo_data_spark.session import default_cores, get_spark
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    cpus = default_cores()
     spark = get_spark(
         app_name="komodo-bench-scaling",
         master=f"local[{cpus}]",

@@ -166,15 +166,14 @@ def build_skew_dir(sf_dir: str, skew_dir: str) -> None:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from komodo_data_spark.session import default_cores, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_SKEW.json"))
     ap.add_argument("--regen", action="store_true")
-    ap.add_argument(
-        "--cpus",
-        default=os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))),
-    )
+    ap.add_argument("--cpus", type=int, default=default_cores())
     args = ap.parse_args(argv)
 
     tag = os.path.basename(args.sf_dir.rstrip("/"))
@@ -188,8 +187,6 @@ def main(argv: list[str] | None = None) -> int:
         print(f"building skewed tables: {args.sf_dir} -> {skew_dir}")
         build_skew_dir(args.sf_dir, skew_dir)
         open(marker, "w").close()
-
-    from komodo_data_spark.session import get_spark
 
     spark = get_spark(
         app_name="komodo-bench-skew",

@@ -111,18 +111,16 @@ def flat_check(batches: list[dict]) -> dict:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from komodo_data_spark.session import default_cores, get_spark
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--batches", type=int, default=8)
     ap.add_argument("--out", default=os.path.join(REPO, "BENCH_STREAM.json"))
-    ap.add_argument(
-        "--cpus",
-        default=os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0)))),
-    )
+    ap.add_argument("--cpus", type=int, default=default_cores())
     args = ap.parse_args(argv)
 
-    from komodo_data_spark.session import get_spark
     from komodo_data_spark.sources.tables import load_events, load_table
     from komodo_data_spark.streaming.dedup_incremental import (
         start_incremental_dedup,

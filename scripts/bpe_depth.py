@@ -34,9 +34,9 @@ TOPC = 32
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata_local/sf1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    from komodo_data_spark.session import default_cores, get_spark
 
-    from komodo_data_spark.session import get_spark
+    cpus = default_cores()
 
     spark = get_spark(
         app_name="bpe-depth",

@@ -81,9 +81,10 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from komodo_data_spark.session import get_spark
+    from komodo_data_spark.session import default_cores, get_spark
 
-    spark = get_spark(master="local[8]", shuffle_partitions=8)
+    cores = default_cores()
+    spark = get_spark(master=f"local[{cores}]", shuffle_partitions=cores)
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as e

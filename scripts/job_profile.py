@@ -23,18 +23,18 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    from komodo_data_spark.session import ENGINE_CONFS, default_cores, default_driver_memory
+
+    cpus = default_cores()
     names = sys.argv[1:]
 
     log_dir = tempfile.mkdtemp(prefix="jobprof_")
     from pyspark.sql import SparkSession
 
-    from komodo_data_spark.session import ENGINE_CONFS, default_driver_memory
-
     builder = (
         SparkSession.builder.appName("job-profile")
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),

@@ -27,10 +27,11 @@ def main(argv: list[str]) -> int:
         return 2
     rnd, suffix, names = argv[0], argv[1], argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
     from komodo_data_spark.plans.audit import formatted_plan
-    from komodo_data_spark.session import get_spark
+    from komodo_data_spark.session import default_cores, get_spark
+
+    cpus = default_cores()
 
     spark = get_spark(
         app_name=f"plans-{rnd}", master=f"local[{cpus}]", shuffle_partitions=cpus

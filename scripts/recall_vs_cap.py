@@ -23,9 +23,9 @@ CAPS = [8, 16, 32, 64, 128, 256, 1024]
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    from komodo_data_spark.session import default_cores, get_spark
 
-    from komodo_data_spark.session import get_spark
+    cpus = default_cores()
 
     spark = get_spark(
         app_name="recall-vs-cap",

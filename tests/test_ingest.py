@@ -9,7 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from komodo_data_spark.schemas import CAPTURES_SCHEMA, DATA_REQUESTS_SCHEMA
+from komodo_data_spark.schemas import CAPTURE_FILE_SCHEMA, CAPTURES_SCHEMA, DATA_REQUESTS_SCHEMA
 from komodo_data_spark.sources import capture, control
 from komodo_data_spark.streaming import dispatch
 from komodo_data_spark.streaming.ingest import start_capture_stream
@@ -757,3 +757,184 @@ def test_capturefs_dead_letters_schema_violations(spark, tmp_path):
     df = spark.read.format("capturefs").option("path", str(root)).load()
     assert df.count() == 1
     assert df.first()["capture_id"] == "1_10"
+
+
+# --------------------------------------------------------------------------
+# batched dispatch: one plan per aggregation function per micro-batch
+# --------------------------------------------------------------------------
+
+#: Two or more requests per function over sessions 126 and 127, plus
+#: session 999, which has no rows (header-only CSVs).
+BATCH_REQUESTS = [
+    (11, "aggregate_interaction_type", '{"sessionId": 126, "interactionType": 1}'),
+    (12, "aggregate_user", '{"sessionId": 126, "clientId": 5}'),
+    (13, "user_energy", '{"sessionId": 126, "clientId": 5, "entityType": 0}'),
+    (14, "aggregate_interaction_type", '{"sessionId": 127, "interactionType": 1}'),
+    (15, "aggregate_user", '{"sessionId": 127, "clientId": 2}'),
+    (16, "user_energy", '{"sessionId": 127, "clientId": 5, "entityType": 1}'),
+    (17, "aggregate_interaction_type", '{"sessionId": 999, "interactionType": 2}'),
+    (18, "aggregate_user", '{"sessionId": 999, "clientId": 1}'),
+    # JSON-null sessionId: user_energy does not check it, so it coerces to
+    # session 0, exports a header-only CSV and is fulfilled (dispatch._as_int)
+    (19, "user_energy", '{"sessionId": null, "clientId": 5, "entityType": 0}'),
+    # no entityType key: its coercion raises, so it alone is skipped
+    (20, "user_energy", '{"sessionId": 126, "clientId": 5}'),
+    # a session id outside the long range: skipped alone, as is the
+    # per-request path's literal
+    (21, "aggregate_user", '{"sessionId": 1e30, "clientId": 5}'),
+]
+BATCH_SERVED = [11, 12, 13, 14, 15, 16, 17, 18, 19]
+PREFIX = {"aggregate_interaction_type": "aggregate_interaction",
+          "aggregate_user": "aggregate_user", "user_energy": "user_energy"}
+
+
+def _request_frame(spark, requests):
+    return spark.createDataFrame(
+        [
+            dict(request_id=rid, processed_capture_id="126_1630443513898",
+                 who_requested=2, aggregation_function=fn, is_it_fulfilled=0,
+                 url=None, message=msg, file_location=None)
+            for rid, fn, msg in requests
+        ],
+        schema=DATA_REQUESTS_SCHEMA,
+    )
+
+
+@pytest.fixture(scope="module")
+def batch_table(spark, tmp_path_factory, data_pdf):
+    """The fixture rows as a session-partitioned parquet table, plus rows
+    with a NULL client_id in session 127: two sync rows of client 5 (their
+    own energy window, so one energy row) and one interaction row."""
+    start = 1630450000000
+    extra = pd.DataFrame([
+        dict(capture_id=f"127_{start}", session_id=127, client_id=None, type="sync",
+             ts=start + 10_000 + 50 * i, seq=90_000 + i,
+             message=json.dumps({"clientId": 5, "entityType": 1,
+                                 "pos": {"x": 0.1 * i, "y": 0.2, "z": 0.3 + i}}))
+        for i in range(2)
+    ] + [
+        dict(capture_id=f"127_{start}", session_id=127, client_id=None, type="interaction",
+             ts=start + 10_000, seq=90_002,
+             message=json.dumps({"clientId": 5, "interactionType": 1}))
+    ])
+    rows = pd.concat([data_pdf, extra], ignore_index=True)
+    rows["client_id"] = rows["client_id"].astype("Int64")
+    path = str(tmp_path_factory.mktemp("batch") / "data")
+    spark.createDataFrame(rows, schema=CAPTURE_FILE_SCHEMA).write.partitionBy(
+        "session_id").parquet(path)
+    return path
+
+
+def _lines(path):
+    with open(path) as fh:
+        return fh.read().splitlines()
+
+
+def test_batched_dispatch_matches_per_request_csvs(spark, batch_table, tmp_path):
+    """A micro-batch gives the CSVs the per-request path gives: user_energy
+    byte for byte up to tied energies, the aggregates as sorted rows. A NULL
+    client_id in one request's rows widens only that request's integers."""
+    from komodo_data_spark.operators import analytics as A
+
+    data = spark.read.parquet(batch_table)
+    fulfilled = []
+    done = dispatch.aggregation_file_download(
+        spark, _request_frame(spark, BATCH_REQUESTS), data, str(tmp_path / "batch"),
+        on_fulfilled=lambda rid, p: fulfilled.append(rid),
+    )
+    assert [rid for rid, _, _ in done] == BATCH_SERVED
+    assert sorted(fulfilled) == BATCH_SERVED
+    paths = {rid: path for rid, _, path in done}
+    for rid, fn, path in done:
+        assert os.path.basename(path) == f"{PREFIX[fn]}_req{rid}.csv"
+
+    per_request = {
+        "aggregate_interaction_type":
+            lambda p: A.aggregate_interaction_type(data, p["sessionId"], p["interactionType"]),
+        "aggregate_user": lambda p: A.aggregate_user(data, p["sessionId"], p["clientId"]),
+        "user_energy": lambda p: A.user_energy(
+            data, p["sessionId"] or 0, p["clientId"], p["entityType"]),
+    }
+    for rid, fn, msg in BATCH_REQUESTS:
+        if rid not in paths:
+            continue
+        exp = _lines(dispatch.export_csv(
+            per_request[fn](json.loads(msg)), str(tmp_path / "single"), PREFIX[fn],
+            filename=f"{rid}.csv",
+        ))
+        got = _lines(paths[rid])
+        assert got[0] == exp[0] and sorted(got) == sorted(exp), rid
+        if fn == "user_energy":  # rows differ in order only among ties
+            keys = [line.rsplit(",", 2)[1:] for line in got]
+            assert keys == [line.rsplit(",", 2)[1:] for line in exp], rid
+
+    assert all(len(_lines(paths[rid])) == 1 for rid in (17, 18, 19))  # header only
+    # session 127's NULL client_id: its own CSVs print floats and an empty
+    # field; session 126's integers stay integral
+    for rid in (14, 16):
+        rows = _lines(paths[rid])[1:]
+        assert any(r.startswith(",") for r in rows)
+        assert all(r.split(",")[0] in ("", "1.0", "2.0", "5.0") for r in rows)
+    for rid in (11, 13):
+        rows = _lines(paths[rid])[1:]
+        assert rows and all(r.split(",")[0] in ("1", "2", "5") for r in rows)
+
+
+def test_batched_dispatch_isolates_a_failing_session(spark, batch_table, tmp_path):
+    """A corrupt file under one session's partition fails each function's
+    batched plan; its requests are replayed one at a time, so the requests
+    on the other session are still fulfilled."""
+    import glob
+    import shutil
+
+    table = str(tmp_path / "data")
+    shutil.copytree(batch_table, table)
+    data = spark.read.parquet(table)
+    bad = sorted(glob.glob(os.path.join(table, "session_id=127", "*.parquet")))[0]
+    with open(bad, "wb") as fh:
+        fh.write(b"not a parquet file")
+
+    requests = [r for r in BATCH_REQUESTS if json.loads(r[2]).get("sessionId") in (126, 127)]
+    fulfilled = []
+    done = dispatch.aggregation_file_download(
+        spark, _request_frame(spark, requests), data, str(tmp_path / "out"),
+        on_fulfilled=lambda rid, p: fulfilled.append(rid),
+    )
+    assert [rid for rid, _, _ in done] == [11, 12, 13]
+    assert fulfilled == [11, 12, 13]
+    assert not glob.glob(str(tmp_path / "out" / "*_req1[456].csv"))
+
+
+def test_batched_plans_prune_to_the_batch_sessions(spark, batch_table, tmp_path, monkeypatch):
+    """Every batched plan's parquet scan carries a ``session_id IN (...)``
+    partition filter: the request frame is a local relation, so dynamic
+    partition pruning does not fire and the filter must be explicit."""
+    import functools
+    import re
+
+    plans = []
+
+    def recording(keyed):
+        @functools.wraps(keyed)
+        def run(data, requests):
+            df = keyed(data, requests)
+            plans.append(df)
+            return df
+
+        return run
+
+    monkeypatch.setattr(dispatch, "_ANALYTICS", {
+        fn: (prefix, checked, recording(keyed), params)
+        for fn, (prefix, checked, keyed, params) in dispatch._ANALYTICS.items()
+    })
+    data = spark.read.parquet(batch_table)
+    dispatch.aggregation_file_download(
+        spark, _request_frame(spark, BATCH_REQUESTS), data, str(tmp_path / "out"))
+    assert len(plans) == 3  # one plan per function
+    for df in plans:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        scans = [line for line in plan.splitlines() if "FileScan" in line]
+        assert scans, plan
+        for scan in scans:
+            filters = re.search(r"PartitionFilters: \[([^\]]*)\]", scan).group(1)
+            assert re.search(r"session_id#\d+ IN \(", filters), scan
