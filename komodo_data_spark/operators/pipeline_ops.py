@@ -1081,32 +1081,24 @@ PACK_CAPACITY = 2048
 _PACK_PARTITIONS = 8
 
 
-@query
-def token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pack documents into fixed token-budget bins per language: docs are
-    laid end-to-end in doc_id order and cut every PACK_CAPACITY tokens
-    (bin = floor(start_offset / capacity)), fully deterministic.
+def _doc_starts(counts: DataFrame, n: str) -> DataFrame:
+    """Each document's start offset ``s`` in its language's stream:
+    ``counts`` is one row per (lang, doc_id) with a length column ``n``;
+    docs lie end-to-end in doc_id order within a lang, so ``s`` is the
+    exclusive prefix sum of ``n``. Returns (lang, doc_id, n, s).
 
-    Scale design: the naive form — ``sum() OVER (PARTITION BY lang ORDER BY
-    doc_id)`` — is a single-task-per-language sort: parallelism is capped at
-    |langs|, and the English partition of a 100 TB corpus runs on ONE
-    executor. This runs the :func:`docs_surrogate_keys` technique on a SUM
-    instead of a COUNT: range-partition on (lang, doc_id) — so within a
-    lang, every doc of partition p precedes every doc of partition p+1 —
-    aggregate token sums per (lang, pid) into a tiny |langs|×|pids| frame,
-    prefix-sum that frame with a window (tiny), broadcast the offsets back,
-    and cumsum within each (pid, lang) — a PARTITIONED window over 1/Nth of
-    the corpus. Exact because (lang, pid, doc_id) order refines
-    (lang, doc_id) order under range partitioning on (lang, doc_id).
-
-    The range-partitioned frame is checkpointed eagerly: partition ids must
-    be identical in the sum pass and the cumsum pass (two plan branches
-    would re-sample range boundaries independently).
-    """
-    d = load_table(spark, sf_dir, "documents")
-    toks = (
-        d.select("lang", "doc_id", F.size(tokens()).alias("n_tokens"))
-        .repartitionByRange(_PACK_PARTITIONS, "lang", "doc_id")
+    The naive form — ``sum() OVER (PARTITION BY lang ORDER BY doc_id)`` —
+    is a single-task-per-language sort. This is the two-stage shape of
+    :func:`docs_surrogate_keys` on a SUM: range-partition on
+    (lang, doc_id), so within a lang every doc of partition p precedes
+    every doc of partition p+1; prefix-sum the tiny |langs|×|pids|
+    frame of per-(lang, pid) sums; broadcast those offsets back and
+    cumsum within each (pid, lang). The range-partitioned frame is
+    checkpointed eagerly: partition ids must be identical in the sum
+    pass and the cumsum pass (two plan branches would re-sample range
+    boundaries independently)."""
+    counts = (
+        counts.repartitionByRange(_PACK_PARTITIONS, "lang", "doc_id")
         .withColumn("pid", F.spark_partition_id())
         .localCheckpoint(eager=True)
     )
@@ -1116,8 +1108,8 @@ def token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = (
-        toks.groupBy("lang", "pid")
-        .agg(F.sum("n_tokens").alias("p_sum"))
+        counts.groupBy("lang", "pid")
+        .agg(F.sum(n).alias("p_sum"))
         .withColumn("offset", F.coalesce(F.sum("p_sum").over(wo), F.lit(0)))
         .select("lang", "pid", "offset")
     )
@@ -1126,15 +1118,34 @@ def token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    binned = toks.join(F.broadcast(offsets), ["lang", "pid"]).withColumn(
-        "bin",
-        (
-            (F.col("offset") + F.coalesce(F.sum("n_tokens").over(wd), F.lit(0)))
-            / F.lit(PACK_CAPACITY)
-        ).cast("long"),
+    return counts.join(F.broadcast(offsets), ["lang", "pid"]).select(
+        "lang",
+        "doc_id",
+        n,
+        (F.col("offset") + F.coalesce(F.sum(n).over(wd), F.lit(0))).alias("s"),
+    )
+
+
+@query
+def token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pack documents into fixed token-budget bins per language: docs are
+    laid end-to-end in doc_id order and cut every PACK_CAPACITY tokens
+    (bin = floor(start_offset / capacity)), fully deterministic.
+
+    Scale design: the start offsets come from :func:`_doc_starts`, a
+    two-stage range-partitioned prefix sum (no per-language single-task
+    sort at any size); the binning is map-side arithmetic on ``s``.
+    """
+    d = load_table(spark, sf_dir, "documents")
+    started = _doc_starts(
+        d.select("lang", "doc_id", F.size(tokens()).alias("n_tokens")),
+        "n_tokens",
     )
     return (
-        binned.groupBy("lang", "bin")
+        started.withColumn(
+            "bin", (F.col("s") / F.lit(PACK_CAPACITY)).cast("long")
+        )
+        .groupBy("lang", "bin")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_tokens").alias("bin_tokens"),
@@ -1268,11 +1279,10 @@ def token_packing_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact token run. All integer arithmetic; zero-token docs emit
     nothing.
 
-    Scale design: the doc start offsets come from the same two-stage
-    range-partitioned prefix sum as :func:`token_packing` (per-(lang,pid)
-    partials + a tiny broadcast offsets frame — no per-language
-    single-task sort at any size); the sequence fan-out is a map-side
-    ``explode(sequence(...))`` adding ~total_tokens/L + n_docs rows. No
+    Scale design: the doc start offsets come from :func:`_doc_starts`
+    (per-(lang,pid) partials + a tiny broadcast offsets frame — no
+    per-language single-task sort at any size); the sequence fan-out is
+    a map-side ``explode(sequence(...))`` adding ~total_tokens/L + n_docs rows. No
     shuffle after the offsets window; the output is written
     sequence-ordered per partition, which is exactly the order an
     assembler reads.
@@ -1280,38 +1290,11 @@ def token_packing_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
     )
-    toks = (
-        d.select("lang", "doc_id", F.size(tokens()).alias("n_tokens"))
-        .repartitionByRange(_PACK_PARTITIONS, "lang", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wo = (
-        Window.partitionBy("lang")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        toks.groupBy("lang", "pid")
-        .agg(F.sum("n_tokens").alias("p_sum"))
-        .withColumn("offset", F.coalesce(F.sum("p_sum").over(wo), F.lit(0)))
-        .select("lang", "pid", "offset")
-    )
-    wd = (
-        Window.partitionBy("pid", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     L = PACK_SEQ_LEN
-    started = (
-        toks.join(F.broadcast(offsets), ["lang", "pid"])
-        .withColumn(
-            "s",
-            F.col("offset")
-            + F.coalesce(F.sum("n_tokens").over(wd), F.lit(0)),
-        )
-        .filter(F.col("n_tokens") > 0)
-    )
+    started = _doc_starts(
+        d.select("lang", "doc_id", F.size(tokens()).alias("n_tokens")),
+        "n_tokens",
+    ).filter(F.col("n_tokens") > 0)
     lo = F.greatest(F.col("seq_id") * L, F.col("s"))
     hi = F.least((F.col("seq_id") + 1) * L, F.col("s") + F.col("n_tokens"))
     return (

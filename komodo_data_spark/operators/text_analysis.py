@@ -687,7 +687,7 @@ def _bpe_corpus_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 @shared_fit("bpe_vocab")
 def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The weighted word vocabulary (word, cnt) — a shared fit of the
-    exact trainer, the batched trainer, and the published-model appliers.
+    trainer at every geometry and of the published-model applier.
     Materialized because the unrolled rounds would otherwise re-run the
     corpus explode per round (measured 15 s → 1.3 s at sf0.1)."""
     return (
@@ -697,14 +697,30 @@ def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_corpus_vocab(spark: SparkSession, sf_dir: str):
-    """The one corpus-sized BPE stage, shared by the exact and batched
-    trainers: the exploded tokens and the weighted word vocabulary
-    (``_bpe_vocab``) with each word wrapped into its symbol-string form.
-    Returns (toks, cur)."""
-    return _bpe_corpus_tokens(spark, sf_dir), _bpe_vocab(
-        spark, sf_dir
-    ).withColumn("w", _bpe_wrapped(F.col("word")))
+def _bpe_wrapped_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Round 0 of the trainer and of the published-merge fold: the
+    weighted vocabulary (``_bpe_vocab``) with each word wrapped into its
+    symbol-string form (word, cnt, w)."""
+    return _bpe_vocab(spark, sf_dir).withColumn(
+        "w", _bpe_wrapped(F.col("word"))
+    )
+
+
+def _bpe_apply(spark: SparkSession, sf_dir: str, cur: DataFrame) -> DataFrame:
+    """Per-document word and post-merge token counts (doc_id, n_words,
+    n_bpe_tokens) under a fitted vocabulary ``cur`` (word, w): a
+    broadcast join of the (word → n_symbols) table onto the corpus word
+    stream, then a per-doc count and sum."""
+    fitted = cur.select("word", F.size(_bpe_syms("w")).alias("n_syms"))
+    return (
+        _bpe_corpus_tokens(spark, sf_dir)
+        .join(F.broadcast(fitted), "word")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_words"),
+            F.sum("n_syms").alias("n_bpe_tokens"),
+        )
+    )
 
 
 def _bpe_pair_weights(cur) -> DataFrame:
@@ -727,53 +743,6 @@ def _bpe_pair_weights(cur) -> DataFrame:
     )
 
 
-@shared_fit("bpe_exact")
-def _bpe_fit(spark: SparkSession, sf_dir: str):
-    """Shared BPE trainer: returns (fitted vocabulary with final wrapped
-    symbol strings, learned merge table (rank, a, b)). See
-    ``text_bpe_train_apply`` for the algorithm and scale notes.
-
-    A shared fit of ``text_bpe_train_apply`` and ``text_bpe_merges``
-    (pinned by the published≡refit tests). The corpus token stream is
-    NOT part of it — it is data-scale, rebuilt lazily per caller."""
-    _toks, base = _bpe_corpus_vocab(spark, sf_dir)
-    sep = _BPE_SEP
-    # One TakeOrdered job per round, nothing else: the winning merge is
-    # ONE bounded row (its size is fixed by the algorithm, not the corpus
-    # — the same driver-scalar class as the candidate-volume guards'
-    # .first()), so collecting it and folding it back as a LITERAL
-    # replace keeps the loop-carried vocabulary a chain of narrow string
-    # maps over the one checkpointed vocab. The old shape paid per round
-    # a broadcast build + crossJoin AND an eager vocab checkpoint job
-    # (2 scheduler waves + a materialization, ~16 jobs for the 8-round
-    # fit); measured at sf0.1 the fit fell ~2x. A missing row (vocabulary
-    # out of pairs before BPE_MERGES rounds) records the ('', '')
-    # sentinel and applies as a no-op, exactly like the old sentinel
-    # union.
-    merge_rows = []
-    w_expr = F.col("w")
-    for r in range(BPE_MERGES):
-        cur = base.select("cnt", w_expr.alias("w"))
-        row = (
-            _bpe_pair_weights(cur)
-            .orderBy(F.desc("wt"), F.asc("a"), F.asc("b"))
-            .select("a", "b")
-            .first()
-        )
-        a, b = (row["a"], row["b"]) if row is not None else ("", "")
-        merge_rows.append((a, b, r))
-        if a != "" or b != "":
-            w_expr = F.replace(
-                w_expr,
-                F.lit(sep + a + sep * 2 + b + sep),
-                F.lit(sep + a + b + sep),
-            )
-    # BPE_MERGES driver rows — a Scan ExistingRDD (LogicalRDD), which the
-    # memo reads as-is; the vocab-sized ``cur`` is the materialized part
-    merges = spark.createDataFrame(merge_rows, "a string, b string, rank int")
-    return base.select("word", "cnt", w_expr.alias("w")), merges
-
-
 @query
 def text_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train a real byte-pair encoder on the corpus and apply it: learn the
@@ -783,46 +752,26 @@ def text_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrade of the regex proxy in ``text_bpe_token_estimate``, feeding
     ``token_packing_stats`` with real tokenizer economics.
 
-    Scale design: classic BPE trains on the **weighted word vocabulary**,
-    not the corpus — one corpus-sized explode+groupBy builds
-    (word, count), and every training round after that is vocab-bounded
-    (web-scale vocabs are millions of rows vs billions of documents).
-    Each round is: adjacent-pair explode over the symbol arrays →
-    groupBy(pair) weighted count → top-1 (TakeOrdered, deterministic
-    tie-break) collected as ONE bounded row (driver-scalar class — its
-    size is fixed by the algorithm, never by the corpus) and folded back
-    as a literal string replace (see ``_bpe_wrapped``). The loop-carried
-    vocabulary stays a chain of narrow replaces over the one
-    checkpointed weighted vocabulary, so round r+1 re-applies rounds
-    0..r as cheap string maps instead of re-materializing the vocab per
-    round.
-    Application to documents is a broadcast join of the fitted
-    (word → n_symbols) table onto the exploded corpus tokens, then a
-    per-doc sum.
+    The fit is the batched trainer at one candidate per round
+    (``_bpe_fit_shared(rounds=BPE_MERGES, topc=1)``): with a one-row
+    window there is nothing to conflict with, and the pair counts are
+    refreshed between every merge — Sennrich's trainer, one TakeOrdered
+    job per merge over the vocab-bounded weighted vocabulary (see
+    ``_bpe_fit_batched`` for the scale design). The DuckDB oracle is the
+    literal top-1 chain. Application is ``_bpe_apply``.
     """
-    cur, _merges = _bpe_fit(spark, sf_dir)
-    toks = _bpe_corpus_tokens(spark, sf_dir)
-    fitted = cur.select("word", F.size(_bpe_syms("w")).alias("n_syms"))
-    return (
-        toks.join(F.broadcast(fitted), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_syms").alias("n_bpe_tokens"),
-        )
-    )
+    cur, _merges = _bpe_fit_shared(spark, sf_dir, BPE_MERGES, 1)
+    return _bpe_apply(spark, sf_dir, cur)
 
 
 @query
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table itself — (rank, a, b) in training order, the
     inspectable artifact of ``text_bpe_train_apply``'s fit (what ships to
-    the tokenizer at inference time). Sentinel no-op rounds (vocabulary
-    exhausted before ``BPE_MERGES`` merges) are excluded."""
-    _cur, merges = _bpe_fit(spark, sf_dir)
-    return merges.filter(
-        (F.col("a") != "") | (F.col("b") != "")
-    ).select("rank", "a", "b").orderBy("rank")
+    the tokenizer at inference time). A vocabulary exhausted before
+    ``BPE_MERGES`` merges ends the table early: ranks stay dense from 0."""
+    _cur, merges = _bpe_fit_shared(spark, sf_dir, BPE_MERGES, 1)
+    return merges.orderBy("rank")
 
 
 def text_bpe_merges_oracle() -> str:
@@ -892,10 +841,10 @@ def text_bpe_train_apply_oracle() -> str:
 
 
 #: Batched-BPE geometry: rounds of training, the per-round candidate
-#: window, and the accept-wave count. The exact trainer is one Spark
-#: round PER MERGE (BPE_MERGES=8); real tokenizers need ~32k merges,
+#: window, and the accept-wave count. The exact geometry (topc=1) is one
+#: Spark round PER MERGE (BPE_MERGES=8); real tokenizers need ~32k merges,
 #: which that shape cannot reach (round-9 verdict ask #4). The batched
-#: trainer selects a pairwise-DISJOINT subset of the top-BPE_BATCH_TOPC
+#: geometry selects a pairwise-DISJOINT subset of the top-BPE_BATCH_TOPC
 #: weighted candidates each round (BPE_BATCH_WAVES passes of the
 #: disjoint-from-all-higher-ranked rule — wave 2+ re-admits candidates
 #: whose only conflicts were themselves rejected, approaching the greedy
@@ -955,7 +904,9 @@ def _bpe_fit_batched(
     """Batched BPE trainer: per round take the top-``topc`` weighted pair
     candidates, select a pairwise-DISJOINT subset (see below), and apply
     all survivors in one replace pass. Returns
-    (toks, cur, merges(rank, a, b)).
+    (cur, merges(rank, a, b)). With ``topc=1`` this is the exact trainer:
+    a one-row window has no conflicts, and the counts refresh between
+    every merge.
 
     Why conflict-free is exact PER ROUND: a merge (a, b) → ``ab`` rewrites
     the wrapped form ``·a··b·`` → ``·ab·``. A replace can interact with
@@ -973,7 +924,7 @@ def _bpe_fit_batched(
     and one combined pass equals any sequential order. Belt-and-braces,
     the apply fold below still sorts the accepted merges by rank before
     folding so Spark and the oracle fold in the same deterministic order.
-    What batching trades away vs the exact trainer is only the COUNT
+    What batching trades away vs ``topc=1`` is only the COUNT
     REFRESH between accepted merges: candidate k's weight was computed
     before candidates 1..k-1 applied (the standard batched-tokenizer
     trade, cf. the tokenizers library's train batching).
@@ -1002,7 +953,7 @@ def _bpe_fit_batched(
     cost stay bounded while the default 8-round fit pays no extra
     materialization at all.
     """
-    toks, base = _bpe_corpus_vocab(spark, sf_dir)
+    base = _bpe_wrapped_vocab(spark, sf_dir)
     sep = _BPE_SEP
 
     merge_rows = []  # (rank, a, b) across rounds, rank dense from 0
@@ -1059,25 +1010,29 @@ def _bpe_fit_batched(
     merges = spark.createDataFrame(
         merge_rows, "rank int, a string, b string"
     ).select("rank", "a", "b")
-    return toks, cur, merges
+    return cur, merges
 
 
-@shared_fit("bpe_batched")
+@shared_fit("bpe")
 def _bpe_fit_shared(
     spark: SparkSession,
     sf_dir: str,
     rounds: int = BPE_BATCH_ROUNDS,
     topc: int = BPE_BATCH_TOPC,
 ):
-    """(cur, merges) of the batched fit, a shared fit of the four
-    registry consumers (merge table, train_apply, encode, packed
-    sequences). ``cur`` (vocab-sized fitted symbol strings) is the
-    materialized part; ``merges`` is ≤ rounds·topc driver rows (a Scan
-    ExistingRDD — a ``LogicalRDD`` — read as-is). Cross-session sharing
-    is the parquet form: :func:`text_bpe_publish` /
-    :func:`text_bpe_apply_published`."""
-    _toks, cur, merges = _bpe_fit_batched(spark, sf_dir, rounds, topc)
-    return cur, merges
+    """(cur, merges) of :func:`_bpe_fit_batched`, the session-shared fit
+    of every BPE consumer: the exact geometry (``BPE_MERGES`` rounds,
+    ``topc=1``) behind ``text_bpe_train_apply`` and ``text_bpe_merges``;
+    the default geometry behind ``text_bpe_merges_batched``,
+    ``text_bpe_batched_train_apply``, ``text_bpe_publish`` and the
+    encode/packed-sequence queries. The memo keys by the bound params
+    but keeps one fit per family and sf_dir, so the registry order
+    (exact geometry first) pays each geometry once. ``cur`` (vocab-sized
+    fitted symbol strings) is the materialized part; ``merges`` is
+    ≤ rounds·topc driver rows (a Scan ExistingRDD — a ``LogicalRDD`` —
+    read as-is). Cross-session sharing is the parquet form:
+    :func:`text_bpe_publish` / :func:`text_bpe_apply_published`."""
+    return _bpe_fit_batched(spark, sf_dir, rounds, topc)
 
 
 def _bpe_merges_store_path(model_path: str) -> str:
@@ -1158,17 +1113,8 @@ def text_bpe_apply_published(
         spark, _bpe_merges_store_path(model_path), "BPE merge table"
     )
     merges = read_bpe_model(spark, model_path)
-    toks, vocab = _bpe_corpus_vocab(spark, sf_dir)
-    cur = _bpe_apply_merge_table(vocab, merges)
-    fitted = cur.select("word", F.size(_bpe_syms("w")).alias("n_syms"))
-    return (
-        toks.join(F.broadcast(fitted), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_syms").alias("n_bpe_tokens"),
-        )
-    )
+    vocab = _bpe_wrapped_vocab(spark, sf_dir)
+    return _bpe_apply(spark, sf_dir, _bpe_apply_merge_table(vocab, merges))
 
 
 # published ≡ refit: the store roundtrip must hash-match the
@@ -1193,10 +1139,10 @@ def text_bpe_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The batched trainer's merge table — (rank, a, b) in acceptance
     order. Same artifact shape as ``text_bpe_merges`` but learned at
     ~BPE_BATCH_TOPC merges per Spark round (the scale-depth form: 32k
-    merges in hundreds of rounds, not 32k). With ``topc=1`` the batched
-    trainer IS the exact trainer (one candidate, no conflicts, count
-    refresh between every merge) — pinned by
-    tests/test_round10_ops equivalence."""
+    merges in hundreds of rounds, not 32k). ``text_bpe_merges`` is the
+    same trainer at ``topc=1`` (one candidate, no conflicts, count
+    refresh between every merge) — pinned against its DuckDB top-1 chain
+    by tests/test_round10_ops."""
     _cur, merges = _bpe_fit_shared(spark, sf_dir)
     return merges.orderBy("rank")
 
@@ -1209,21 +1155,11 @@ def text_bpe_batched_train_apply(
     and post-merge token counts under the ~10-merges-per-round vocabulary
     (77 merges at sf0.01 vs the exact trainer's 8) — the tokenizer-
     economics twin of ``text_bpe_train_apply`` at realistic merge depth.
-    Application is the same broadcast join of the fitted
-    (word → n_symbols) table onto the exploded corpus tokens; only the
-    fit differs (``_bpe_fit_shared`` — one fit per session, shared with
-    the merge-table/encode/packed consumers)."""
-    toks = _bpe_corpus_tokens(spark, sf_dir)
+    Application is the same ``_bpe_apply``; only the fit's geometry
+    differs (``_bpe_fit_shared`` at its defaults — one fit per session,
+    shared with the merge-table/encode/packed consumers)."""
     cur, _merges = _bpe_fit_shared(spark, sf_dir)
-    fitted = cur.select("word", F.size(_bpe_syms("w")).alias("n_syms"))
-    return (
-        toks.join(F.broadcast(fitted), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_syms").alias("n_bpe_tokens"),
-        )
-    )
+    return _bpe_apply(spark, sf_dir, cur)
 
 
 def text_bpe_batched_train_apply_oracle() -> str:
@@ -1249,6 +1185,32 @@ def text_bpe_batched_train_apply_oracle() -> str:
     """
 
 
+def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus's token stream under the batched-trained vocabulary,
+    one row per token (lang, doc_id, pos, sym_pos, token): the
+    positional word stream (separator-byte words excluded), a broadcast
+    join of the fitted (word → symbol array) table, then one
+    posexplode."""
+    cur, _merges = _bpe_fit_shared(spark, sf_dir)
+    fitted = cur.select("word", _bpe_syms("w").alias("syms"))
+    return (
+        _docs(spark, sf_dir)
+        .select(
+            "lang", "doc_id", F.posexplode(tokens()).alias("pos", "word")
+        )
+        .filter(
+            (F.length("word") > 0) & ~F.col("word").contains(_BPE_SEP)
+        )
+        .join(F.broadcast(fitted), "word")
+        .select(
+            "lang",
+            "doc_id",
+            "pos",
+            F.posexplode("syms").alias("sym_pos", "token"),
+        )
+    )
+
+
 @query
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The actual TOKEN STREAM under the batched-trained BPE vocabulary:
@@ -1258,32 +1220,16 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing; this materializes the sequences they price), and joined to
     ``token_packing_sequences``'s offsets it becomes real packed input.
 
-    Scale design: the fit is ``_bpe_fit_shared`` (vocab-bounded rounds,
-    one fit per session shared across the BPE family); encoding is a
-    broadcast join of the fitted (word → symbol array) table onto the
-    position-preserving corpus explode, then one more posexplode — all
-    map-side after the join, ordering carried by explicit
-    (pos, sym_pos) columns rather than any sort. Words containing the
-    separator byte are excluded from training AND encoding (the
-    documented ``_BPE_SEP`` contract).
+    Scale design (``_bpe_encoded``): the fit is ``_bpe_fit_shared``
+    (vocab-bounded rounds, one fit per session shared across the BPE
+    family); encoding is a broadcast join of the fitted
+    (word → symbol array) table onto the position-preserving corpus
+    explode, then one more posexplode — all map-side after the join,
+    ordering carried by explicit (pos, sym_pos) columns rather than any
+    sort. Words containing the separator byte are excluded from training
+    AND encoding (the documented ``_BPE_SEP`` contract).
     """
-    cur, _merges = _bpe_fit_shared(spark, sf_dir)
-    fitted = cur.select("word", _bpe_syms("w").alias("syms"))
-    d = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.posexplode(tokens()).alias("pos", "word"))
-        .filter(
-            (F.length("word") > 0) & ~F.col("word").contains(_BPE_SEP)
-        )
-    )
-    return (
-        d.join(F.broadcast(fitted), "word")
-        .select(
-            "doc_id",
-            "pos",
-            F.posexplode("syms").alias("sym_pos", "token"),
-        )
-    )
+    return _bpe_encoded(spark, sf_dir).drop("lang")
 
 
 def text_bpe_encode_oracle() -> str:
@@ -1329,11 +1275,10 @@ def text_bpe_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose language-stream start offset is s sits at
     seq_id = (s+i) div L, seq_pos = (s+i) mod L. All integer arithmetic.
 
-    Scale design: the fit is vocab-bounded (``_bpe_fit_shared`` — one
-    fit per session shared across the BPE family);
-    encoding is a broadcast join + posexplode; the per-doc token index
-    is a window PARTITIONED BY doc_id (parallel — never a global sort);
-    doc start offsets use ``token_packing_sequences``'s two-stage
+    Scale design: the token stream is ``_bpe_encoded``'s (vocab-bounded
+    fit, broadcast join + posexplode); the per-doc token index is a
+    window PARTITIONED BY doc_id (parallel — never a global sort); doc
+    start offsets are ``pipeline_ops._doc_starts``'s two-stage
     range-partitioned prefix sum (per-(lang, pid) partials + a broadcast
     offsets frame — no per-language single-task window at any corpus
     size; the oracle's plain per-lang window sum is value-identical).
@@ -1342,63 +1287,17 @@ def text_bpe_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from komodo_data_spark.operators.pipeline_ops import (
-        _PACK_PARTITIONS,
         PACK_SEQ_LEN,
+        _doc_starts,
     )
 
-    cur, _merges = _bpe_fit_shared(spark, sf_dir)
-    fitted = cur.select("word", _bpe_syms("w").alias("syms"))
-    d = (
-        _docs(spark, sf_dir)
-        .select(
-            "lang", "doc_id", F.posexplode(tokens()).alias("pos", "word")
-        )
-        .filter(
-            (F.length("word") > 0) & ~F.col("word").contains(_BPE_SEP)
-        )
-        .join(F.broadcast(fitted), "word")
-    )
-    stream = d.select(
-        "lang",
-        "doc_id",
-        "pos",
-        F.posexplode("syms").alias("sym_pos", "token"),
-    )
+    enc = _bpe_encoded(spark, sf_dir)
     w_tok = Window.partitionBy("doc_id").orderBy("pos", "sym_pos")
-    stream = stream.withColumn("tok_idx", F.row_number().over(w_tok) - 1)
-    counts = (
-        d.select("lang", "doc_id", F.size("syms").alias("n_syms"))
-        .groupBy("lang", "doc_id")
-        .agg(F.sum("n_syms").alias("n_toks"))
-        .repartitionByRange(_PACK_PARTITIONS, "lang", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    stream = enc.withColumn("tok_idx", F.row_number().over(w_tok) - 1)
+    counts = enc.groupBy("lang", "doc_id").agg(
+        F.count(F.lit(1)).alias("n_toks")
     )
-    wo = (
-        Window.partitionBy("lang")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        counts.groupBy("lang", "pid")
-        .agg(F.sum("n_toks").alias("p_sum"))
-        .withColumn("offset", F.coalesce(F.sum("p_sum").over(wo), F.lit(0)))
-        .select("lang", "pid", "offset")
-    )
-    wd = (
-        Window.partitionBy("pid", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    started = (
-        counts.join(F.broadcast(offsets), ["lang", "pid"])
-        .withColumn(
-            "s",
-            F.col("offset")
-            + F.coalesce(F.sum("n_toks").over(wd), F.lit(0)),
-        )
-        .select("doc_id", "s")
-    )
+    started = _doc_starts(counts, "n_toks").select("doc_id", "s")
     L = PACK_SEQ_LEN
     return (
         stream.join(started, "doc_id")
@@ -4171,7 +4070,7 @@ UNI_NEG = -(10**15)
 @shared_fit("uni_words")
 def _uni_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-weighted word vocabulary for the unigram fit — the same
-    'train on (word, count), never on raw docs' move as ``_bpe_fit``; a
+    'train on (word, count), never on raw docs' move as ``_bpe_vocab``; a
     vocab-bounded shared fit that every EM round reads, so the fit and
     the apply op share one corpus fold."""
     d = _docs(spark, sf_dir).select("doc_id", tokens().alias("toks"))
@@ -4254,7 +4153,7 @@ def _uni_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     table (piece, n_uses, score_q): usage counts from the last E-step,
     quantized log-probs from the last M-step.
 
-    Scale design (the ``_bpe_fit`` discipline): ONE corpus-sized
+    Scale design (the ``_bpe_fit_batched`` discipline): ONE corpus-sized
     explode+groupBy builds the weighted vocabulary; everything after is
     vocab-bounded. Per EM round: broadcast the piece table into a
     per-word score MAP (one vocab-sized join + collect_list — pieces a

@@ -136,7 +136,9 @@ def _serve(spark, data, fn, keyed, rows) -> dict[int, pd.DataFrame]:
     try:
         return _collect(spark, data, keyed, rows)
     except Exception as e:  # per-request failure isolation
-        print(f"request(s) {[r[0] for r in rows]} ({fn}) failed: {e}")
+        # one line: a Py4JJavaError's str is the whole JVM stack trace
+        first = next(iter(str(e).strip().splitlines()), "")
+        print(f"request(s) {[r[0] for r in rows]} ({fn}) failed: {type(e).__name__}: {first}")
         if len(rows) == 1:
             return {}
     return {rid: pdf for row in rows for rid, pdf in _serve(spark, data, fn, keyed, [row]).items()}

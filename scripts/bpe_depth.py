@@ -48,17 +48,17 @@ def main() -> int:
     from komodo_data_spark.operators.text_analysis import _bpe_fit_batched
 
     # codegen warm-up at the smallest sf (same class identities)
-    _toks, _cur, m = _bpe_fit_batched(
+    _cur, m = _bpe_fit_batched(
         spark, "/root/testdata/sf0.001", rounds=2, topc=TOPC
     )
     m.count()
-    del _toks, _cur, m
+    del _cur, m
     gc.collect()
 
     runs = []
     for rounds in DEPTHS:
         t0 = time.time()
-        _toks, cur, merges = _bpe_fit_batched(
+        cur, merges = _bpe_fit_batched(
             spark, sf_dir, rounds=rounds, topc=TOPC
         )
         n_merges = merges.count()
@@ -76,7 +76,7 @@ def main() -> int:
             }
         )
         print(runs[-1], flush=True)
-        del _toks, cur, merges
+        del cur, merges
         gc.collect()
         spark.catalog.clearCache()
 

@@ -880,10 +880,11 @@ def test_batched_dispatch_matches_per_request_csvs(spark, batch_table, tmp_path)
         assert rows and all(r.split(",")[0] in ("1", "2", "5") for r in rows)
 
 
-def test_batched_dispatch_isolates_a_failing_session(spark, batch_table, tmp_path):
+def test_batched_dispatch_isolates_a_failing_session(spark, batch_table, tmp_path, capsys):
     """A corrupt file under one session's partition fails each function's
     batched plan; its requests are replayed one at a time, so the requests
-    on the other session are still fulfilled."""
+    on the other session are still fulfilled. Each failure is reported on
+    one short line that names the failing requests."""
     import glob
     import shutil
 
@@ -903,6 +904,13 @@ def test_batched_dispatch_isolates_a_failing_session(spark, batch_table, tmp_pat
     assert [rid for rid, _, _ in done] == [11, 12, 13]
     assert fulfilled == [11, 12, 13]
     assert not glob.glob(str(tmp_path / "out" / "*_req1[456].csv"))
+    printed = capsys.readouterr().out.splitlines()
+    # one short line per failure report: no message continues on a next line
+    assert printed and all(
+        line.startswith("request") and len(line) < 500 for line in printed
+    ), printed[:3]
+    for rid in (14, 15, 16):
+        assert any(line.startswith(f"request(s) [{rid}] ") for line in printed), printed
 
 
 def test_batched_plans_prune_to_the_batch_sessions(spark, batch_table, tmp_path, monkeypatch):

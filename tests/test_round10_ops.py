@@ -207,17 +207,22 @@ def test_dp_mean_sum_sensitivity_covers_negative_lower_bound():
 def test_bpe_batched_topc1_equals_exact_trainer(spark, sf_dir):
     """With a 1-candidate window there are no conflicts and the count
     refresh runs between every merge — the batched trainer IS the exact
-    trainer. Pins the batching against silent semantic drift."""
+    trainer: its merge list equals DuckDB's literal top-1 chain
+    (``text_bpe_merges_oracle``). Pins the batching against silent
+    semantic drift."""
     from komodo_data_spark.operators.text_analysis import (
         _bpe_fit_batched,
-        text_bpe_merges,
+        text_bpe_merges_oracle,
     )
+    from scripts.check import oracle_connection
 
-    exact = [
-        (r["a"], r["b"])
-        for r in text_bpe_merges(spark, sf_dir).orderBy("rank").collect()
-    ]
-    _t, _c, merges = _bpe_fit_batched(spark, sf_dir, rounds=8, topc=1)
+    con = oracle_connection(sf_dir)
+    try:
+        rows = con.execute(text_bpe_merges_oracle()).fetchall()
+    finally:
+        con.close()
+    exact = [(a, b) for _rank, a, b in rows]
+    _c, merges = _bpe_fit_batched(spark, sf_dir, rounds=8, topc=1)
     batched = [
         (r["a"], r["b"]) for r in merges.orderBy("rank").collect()
     ]
@@ -234,7 +239,7 @@ def test_bpe_batched_reaches_depth_and_is_disjoint_per_round(spark, sf_dir):
         _bpe_fit_batched,
     )
 
-    _t, _c, merges = _bpe_fit_batched(spark, sf_dir)
+    _c, merges = _bpe_fit_batched(spark, sf_dir)
     rows = merges.orderBy("rank").collect()
     assert len(rows) >= 8 * BPE_MERGES  # ≥ 64 merges in the same 8 rounds
     # rank is dense from 0

@@ -110,12 +110,12 @@ def test_bpe_merge_fold_reproduces_trainer_vocab(spark, sf_dir):
     complete model (and what the cascade-conflict predicate protects)."""
     from komodo_data_spark.operators.text_analysis import (
         _bpe_apply_merge_table,
-        _bpe_corpus_vocab,
         _bpe_fit_shared,
+        _bpe_wrapped_vocab,
     )
 
     cur, merges = _bpe_fit_shared(spark, sf_dir)
-    _toks, vocab = _bpe_corpus_vocab(spark, sf_dir)
+    vocab = _bpe_wrapped_vocab(spark, sf_dir)
     folded = _bpe_apply_merge_table(vocab, merges)
     a = sorted((r["word"], r["w"]) for r in cur.select("word", "w").collect())
     b = sorted(
@@ -280,8 +280,8 @@ def test_bpe_batched_depth_grows_linearly_in_rounds(spark, tmp_path):
     from komodo_data_spark.operators.text_analysis import _bpe_fit_batched
 
     topc = 8
-    _t, _c, m3 = _bpe_fit_batched(spark, sf, rounds=3, topc=topc)
-    _t, _c, m6 = _bpe_fit_batched(spark, sf, rounds=6, topc=topc)
+    _c, m3 = _bpe_fit_batched(spark, sf, rounds=3, topc=topc)
+    _c, m6 = _bpe_fit_batched(spark, sf, rounds=6, topc=topc)
     n3, n6 = m3.count(), m6.count()
     # ≥ 4× the exact trainer's depth per round, and near-linear growth
     # (per-round acceptance does not collapse as the vocabulary evolves)

@@ -431,7 +431,7 @@ def test_bpe_batched_driver_waves_match_oracle_geometry(spark, sf_dir):
         _bpe_fit_batched,
     )
 
-    _t, _c, merges = _bpe_fit_batched(spark, sf_dir, rounds=3, topc=8)
+    _c, merges = _bpe_fit_batched(spark, sf_dir, rounds=3, topc=8)
     rows = [(r["rank"], r["a"], r["b"]) for r in merges.orderBy("rank").collect()]
     assert [r[0] for r in rows] == list(range(len(rows)))
     assert len(rows) >= 3  # at least one accept per round on this corpus
