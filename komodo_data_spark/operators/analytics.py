@@ -78,11 +78,11 @@ def request_frame(spark: SparkSession, keyed, rows) -> DataFrame:
     )
 
 
-def _one(keyed, data: DataFrame, *values, **kw) -> DataFrame:
+def _one(keyed, data: DataFrame, *values) -> DataFrame:
     """A keyed analytic's one-request case: its result for a one-row request
     frame, without the key."""
     requests = request_frame(data.sparkSession, keyed, [request_row(keyed, 0, *values)])
-    return keyed(data, requests, **kw).drop("request_id")
+    return keyed(data, requests).drop("request_id")
 
 
 def _named_rows(data: DataFrame, requests: DataFrame, path: str, param: str) -> DataFrame:
@@ -159,9 +159,7 @@ def aggregate_user(data: DataFrame, session_id: int, client_id: int) -> DataFram
 
 
 @_by_request("session_id long", "client_id double", "entity_type double")
-def user_energy_by_request(
-    data: DataFrame, requests: DataFrame, partition_parity: bool = False
-) -> DataFrame:
+def user_energy_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
     """Movement "energy" per sync message: √(Δx²+Δy²+Δz²) / Δts.
 
     Reference: process.py:196-213. Semantics preserved exactly:
@@ -176,11 +174,14 @@ def user_energy_by_request(
       ORDER BY entity_type, energy DESC (process.py:198,210) within each
       request.
 
-    Window partitioning: the reference's window is globally ordered, but its
-    WHERE pins (session_id, clientId) to constants, so partitioning each
-    request's rows by those keys yields the identical frame while staying
-    parallel at scale. Pass ``partition_parity=True`` to force the
-    reference's literal global window, one per request.
+    Window partitioning: the reference's window is globally ordered over
+    the rows its WHERE keeps, one session and one ``message.clientId``.
+    One request names exactly that stream, so the window is partitioned by
+    ``request_id`` alone: the ``client_id`` column is not the message's
+    ``clientId`` (it can be NULL where the message's matches), and
+    partitioning by it would change which row is "previous". Requests lag
+    in parallel; each request's rows are sorted within their partition, so
+    no global range sort runs.
 
     The positions are extracted as doubles before the window, so the window
     shuffle carries three numbers instead of the ``message`` text.
@@ -197,8 +198,7 @@ def user_energy_by_request(
         jget("message", "$.entityType").alias("entity_type"),
         *[jget_num("message", f"$.pos.{c}").alias(f"_{c}") for c in "xyz"],
     )
-    keys = ["request_id"] if partition_parity else ["request_id", "session_id", "client_id"]
-    w = Window.partitionBy(*keys).orderBy("seq")
+    w = Window.partitionBy("request_id").orderBy("seq")
 
     def delta(c: str):
         return F.col(c) - F.lag(c, 1).over(w)
@@ -224,23 +224,16 @@ def user_energy_by_request(
             & (F.col("entity_type").cast("double") == F.col("req_entity_type"))
         )
         .drop("req_entity_type")
-        .orderBy("request_id", "entity_type", F.desc("energy"))
+        .sortWithinPartitions("request_id", "entity_type", F.desc("energy"))
     )
 
 
 def user_energy(
-    data: DataFrame,
-    session_id: int,
-    client_id: int,
-    entity_type: int | str,
-    partition_parity: bool = False,
+    data: DataFrame, session_id: int, client_id: int, entity_type: int | str
 ) -> DataFrame:
     """:func:`user_energy_by_request` for one request: (client_id,
     session_id, timestamp, entity_type, energy)."""
-    return _one(
-        user_energy_by_request, data, session_id, client_id, entity_type,
-        partition_parity=partition_parity,
-    )
+    return _one(user_energy_by_request, data, session_id, client_id, entity_type)
 
 
 def drawing_pattern(data: DataFrame) -> DataFrame:

@@ -17,10 +17,12 @@ frames. The whole contract:
   params with defaults applied). A new session never reads a dead
   session's blocks: keys of other applications are evicted on first
   touch.
-- **Superseded fits are evicted.** A refit of the same family over the
-  same paths (rewritten files) drops the old entry, so its checkpointed
-  blocks are released by the ContextCleaner; fits over different paths
-  (a warm-up scale and the bench scale) coexist.
+- **Stale fits are evicted.** A refit of the same family over the same
+  paths whose files were rewritten drops every entry over the old files,
+  so their checkpointed blocks are released by the ContextCleaner. Fits
+  over the same files with other params (the two BPE trainer
+  geometries), and fits over different paths (a warm-up scale and the
+  bench scale), coexist.
 - **What is materialized.** Every returned DataFrame whose plan is not
   already a ``LogicalRDD`` is eager-``localCheckpoint``ed, so its blocks
   need no recomputation lineage. Frames that already scan an existing
@@ -75,6 +77,11 @@ def _dir_fingerprint(path: str) -> tuple:
     return tuple(out)
 
 
+def _dirs(key: tuple) -> tuple:
+    """The (path, fingerprint) pairs of a memo key's directory params."""
+    return tuple(p for p in key[2:] if isinstance(p, tuple))
+
+
 def session_model(
     spark: SparkSession, family: str, params: tuple, fit: Callable[[], Any]
 ) -> Any:
@@ -91,16 +98,18 @@ def session_model(
         for p in params
     )
     if key not in _MEMO:
-        # drop superseded fits of the same family over the same paths
-        # (rewritten dir => new fingerprint) so their checkpointed blocks
-        # are GC-released instead of accumulating; DIFFERENT paths (e.g.
-        # the warm-up sf and the bench sf) still coexist
-        paths = tuple(p[0] for p in key[2:] if isinstance(p, tuple))
+        # drop the family's fits over stale files (same paths, rewritten
+        # => new fingerprints) so their checkpointed blocks are GC-released
+        # instead of accumulating; fits over the same files with other
+        # params, and over DIFFERENT paths (e.g. the warm-up sf and the
+        # bench sf), still coexist
+        dirs = _dirs(key)
         for k in [
             k
             for k in _MEMO
             if k[:2] == key[:2]
-            and tuple(p[0] for p in k[2:] if isinstance(p, tuple)) == paths
+            and [p for p, _ in _dirs(k)] == [p for p, _ in dirs]
+            and _dirs(k) != dirs
         ]:
             del _MEMO[k]
         _MEMO[key] = fit()

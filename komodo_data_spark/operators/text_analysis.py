@@ -120,27 +120,13 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline), so the top-k selection and rank ties are decided on
     integers and the cross-engine comparison never rides a float ulp.
     """
-    from pyspark.sql import Window
-
-    from komodo_data_spark.operators.dedup import _positional_grams
-
-    d = _docs(spark, sf_dir).withColumn("toks", tokens())
     stop = list(QUALITY_STOPWORDS)
-    pairs = (
-        d.select(_positional_grams(F.col("toks"), 2).alias("grams"))
-        .select(F.explode_outer("grams").alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select(
-            F.substring_index("g", " ", 1).alias("u"),
-            F.substring_index("g", " ", -1).alias("w"),
-        )
-        .filter(
-            (F.col("u") != F.col("w"))
-            & (F.col("u") != "")
-            & (F.col("w") != "")
-            & ~F.col("u").isin(stop)
-            & ~F.col("w").isin(stop)
-        )
+    pairs = _grams(_docs(spark, sf_dir)).filter(
+        (F.col("u") != F.col("w"))
+        & (F.col("u") != "")
+        & (F.col("w") != "")
+        & ~F.col("u").isin(stop)
+        & ~F.col("w").isin(stop)
     )
     und = (
         pairs.select(
@@ -295,70 +281,22 @@ def text_kneser_ney_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((N1+(.,w) + a) / (T + a*(V+1))), so every bigram gets positive mass
     with exactly V+1 outcomes sharing the denominator.
 
-    Scale design: identical to the fit-on-self op (three model frames,
-    never collected; scoring joins are now LEFT joins) plus the split
-    predicate pushed to the fit's scan — a 100 TB score pass against a
-    frozen model reads the model frames, not the train corpus.
+    Scale design: the fit-on-self op's fold and scorer
+    (:func:`_kn_score` with ``KN_OOV_ALPHA``) plus the split predicate
+    pushed to the fit's scan — a 100 TB score pass against a frozen model
+    reads the model frames, not the train corpus.
     """
-    from komodo_data_spark.operators.dedup import _positional_grams
     from komodo_data_spark.operators.pipeline_ops import _split_col
     from komodo_data_spark.sources.tables import load_spread
 
-    d = load_spread(spark, sf_dir, "documents")
-    grams = (
-        d.select(
-            "doc_id",
-            _split_col().alias("split"),
-            _positional_grams(tokens(), 2).alias("grams"),
-        )
-        .select("doc_id", "split", F.explode_outer("grams").alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select(
-            "doc_id",
-            "split",
-            F.substring_index("g", " ", 1).alias("u"),
-            F.substring_index("g", " ", -1).alias("w"),
-        )
+    d = load_spread(spark, sf_dir, "documents").withColumn("split", _split_col())
+    # type-bounded frozen model, read by every model frame and the scoring
+    # joins — one eager localCheckpoint = one train-split corpus fold
+    counts = _gram_counts(d.filter(F.col("split") == "train")).localCheckpoint(
+        eager=True
     )
-    fit = grams.filter(F.col("split") == "train")
-    # type-bounded frozen model, read four times (ctx, cont, totals,
-    # scoring join) — one eager localCheckpoint replaces four train-split
-    # corpus folds (same shape as text_kneser_ney_logprob)
-    model = (
-        fit.groupBy("u", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    ctx = model.groupBy("u").agg(
-        F.sum("c").alias("c_u"), F.count(F.lit(1)).alias("n1p_u")
-    )
-    cont = model.groupBy("w").agg(F.count(F.lit(1)).alias("n1p_w"))
-    totals = model.agg(
-        F.count(F.lit(1)).alias("t_types"),
-    ).crossJoin(cont.agg(F.count(F.lit(1)).alias("v_types")))
-    a = F.lit(KN_OOV_ALPHA)
-    pcont = (F.coalesce("n1p_w", F.lit(0)) + a) / (
-        F.col("t_types") + a * (F.col("v_types") + 1)
-    )
-    p = F.when(
-        F.col("c_u").isNotNull(),
-        F.greatest(
-            F.coalesce("c", F.lit(0)) - F.lit(KN_DISCOUNT), F.lit(0.0)
-        )
-        / F.col("c_u")
-        + F.lit(KN_DISCOUNT) * F.col("n1p_u") / F.col("c_u") * pcont,
-    ).otherwise(pcont)
-    return (
-        grams.join(model, ["u", "w"], "left")
-        .join(ctx, "u", "left")
-        .join(cont, "w", "left")
-        .crossJoin(F.broadcast(totals))
-        .groupBy("doc_id", "split")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.avg(F.log(p)).alias("avg_logprob_kn"),
-        )
-    )
+    keys = ["doc_id", "split"]
+    return _kn_score(_grams(d, carry=keys), counts, 2, KN_OOV_ALPHA, keys)
 
 
 def text_kneser_ney_apply_oracle() -> str:
@@ -1848,6 +1786,136 @@ def text_quality_classifier_oracle() -> str:
 
 
 # --------------------------------------------------------------------------
+# n-gram language models: one gram explode, one count fold, one KN scorer
+# --------------------------------------------------------------------------
+
+#: The count fold's order tag, also the ``kind`` column of the streaming
+#: trigram store (streaming/kn3_incremental.py).
+_KINDS = {2: "bi", 3: "tri"}
+
+
+def _grams(d: DataFrame, orders=(2,), carry=()) -> DataFrame:
+    """Positional n-grams of each document's whitespace tokens, one row
+    per occurrence (duplicates kept: each occurrence scores): the
+    ``carry`` columns, the gram string ``g`` and its
+    :func:`_gram_tokens`. All ``orders`` come from one tokenize in one
+    explode; a token column a caller does not read is never computed."""
+    from komodo_data_spark.operators.dedup import _positional_grams
+
+    grams = F.concat(*(_positional_grams(F.col("toks"), n) for n in orders))
+    return _gram_tokens(
+        # two-step select: every order reads "toks", and CollapseProject
+        # keeps the non-cheap split() single-evaluated. The explode takes
+        # the gram array as an expression, not a column: a column would be
+        # serialized into a row first (measured slower at sf0.1, 4 cores).
+        d.select(*carry, tokens().alias("toks")).select(
+            *carry, F.explode(grams).alias("g")
+        )
+    )
+
+
+def _gram_tokens(df: DataFrame) -> DataFrame:
+    """``df`` plus its gram ``g``'s order tag ``kind`` and tokens ``u``,
+    ``v``, ``w`` (``v`` NULL for bigrams). Whitespace tokens never contain
+    the separator, so splitting at it is exact, and a trigram is the gram
+    with a second one."""
+    g = F.col("g")
+    tri = F.substring_index(g, " ", 2) != g
+    return df.withColumns(
+        {
+            "kind": F.when(tri, _KINDS[3]).otherwise(_KINDS[2]),
+            "u": F.substring_index(g, " ", 1),
+            "v": F.when(tri, F.substring_index(F.substring_index(g, " ", 2), " ", -1)),
+            "w": F.substring_index(g, " ", -1),
+        }
+    )
+
+
+def _gram_counts(d: DataFrame, orders=(2,)) -> DataFrame:
+    """The n-gram models' only corpus-sized aggregate: occurrence counts
+    ``n`` per gram ``g``, every order through one exchange, split into
+    its tokens per type, not per occurrence. Counts are additive across
+    document batches, so the streaming trigram store folds per-batch
+    partials of this frame into the batch model."""
+    counts = _grams(d, orders).groupBy("g").agg(F.count(F.lit(1)).alias("n"))
+    return _gram_tokens(counts)
+
+
+def _kn_score(
+    grams: DataFrame, counts: DataFrame, order: int, alpha: float, by: list
+) -> DataFrame:
+    """Count and average natural-log probability, per ``by`` group, of
+    the order-``order`` ``grams`` under the interpolated Kneser-Ney model
+    of ``counts`` (a :func:`_gram_counts` frame with the bigram kind and,
+    for order 3, the trigram kind):
+
+      P3(w|u,v) = max(c(uvw)-D,0)/c(uv·) + D·N1+(uv·)/c(uv·) · P2(w|v)
+      P2(w|v)   = max(c2(vw)-D,0)/c2(v·) + D·N1+(v·)/c2(v·) · P1(w)
+      P1(w)     = (N1+(·w) + a) / (T + a·(V+1))
+
+    A bigram model's top level is P2, its context named u and c2 the
+    bigram count; in a trigram model c2 is the continuation count
+    N1+(·vw) over trigram types. The bottom level is always the bigram
+    types: N1+(·w) distinct left contexts of w, T bigram types, V
+    continuation types. An unseen context scores the level below alone
+    (``when(context seen)``), and ``alpha`` is the add-a OOV mass. Fit
+    on the scored corpus itself, every event is seen: the LEFT joins act
+    as inner joins, and with ``alpha`` 0 the floor is N1+(·w)/T.
+
+    Every model frame is a type-level aggregate over ``counts``; the
+    one-row totals ride a broadcast. The arithmetic is left-to-right, as
+    in the oracle SQL."""
+    d_, a = F.lit(KN_DISCOUNT), F.lit(alpha)
+
+    def kind(k: str) -> DataFrame:
+        return counts.filter(F.col("kind") == k).withColumnRenamed("n", "c")
+
+    bi = kind(_KINDS[2]).select("u", "w", "c")
+    if order == 2:
+        levels = [(["u"], bi)]
+    else:
+        tri = kind(_KINDS[3]).select("u", "v", "w", "c")
+        mid = tri.groupBy("v", "w").agg(F.count(F.lit(1)).alias("c"))
+        levels = [(["u", "v"], tri), (["v"], mid)]
+    cont = bi.groupBy("w").agg(F.count(F.lit(1)).alias("n1p_w"))
+    # the null filter the cont join infers: the totals then reuse the
+    # join's continuation shuffle instead of running their own
+    totals = cont.filter(F.col("w").isNotNull()).agg(
+        F.coalesce(F.sum("n1p_w"), F.lit(0)).alias("t_types"),
+        F.count(F.lit(1)).alias("v_types"),
+    )
+    scored = grams
+    for i, (ctx, m) in enumerate(levels):
+        m = m.withColumnRenamed("c", f"c{i}")
+        ctx_totals = m.groupBy(*ctx).agg(
+            F.sum(f"c{i}").alias(f"t{i}"), F.count(F.lit(1)).alias(f"f{i}")
+        )
+        scored = scored.join(m, [*ctx, "w"], "left").join(ctx_totals, ctx, "left")
+    # try_divide: a model with no bigram (T = 0, alpha 0) scores NULL
+    # instead of raising
+    p = F.try_divide(
+        F.coalesce("n1p_w", F.lit(0)) + a,
+        F.col("t_types") + a * (F.col("v_types") + 1),
+    )
+    for i in reversed(range(len(levels))):
+        c, t, f = (F.col(f"{x}{i}") for x in "ctf")
+        p = F.when(
+            t.isNotNull(),
+            F.greatest(F.coalesce(c, F.lit(0)) - d_, F.lit(0.0)) / t
+            + d_ * f / t * p,
+        ).otherwise(p)
+    return (
+        scored.join(cont, "w", "left")
+        .crossJoin(F.broadcast(totals))
+        .groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias(f"n_{_KINDS[order]}grams"),
+            F.avg(F.log(p)).alias("avg_logprob_kn" + ("3" if order == 3 else "")),
+        )
+    )
+
+
+# --------------------------------------------------------------------------
 # corpus-fit bigram LM scoring (the perplexity-filter shape)
 # --------------------------------------------------------------------------
 
@@ -1861,8 +1929,8 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide (boilerplate noise, wrong language, mangled encodings)
     scores low; the filter keeps the head of the distribution.
 
-    Two stages, both distributed: (1) fit — one aggregation over exploded
-    bigrams produces the count table (the "model" is a DataFrame, never
+    Two stages, both distributed: (1) fit — the :func:`_gram_counts`
+    bigram fold produces the count table (the "model" is a DataFrame, never
     driver-collected; at 100 TB the vocab² table can itself be large, which
     is exactly why it must stay distributed); (2) score — an equi-join of
     each doc's bigrams against the model plus a per-doc average of
@@ -1880,33 +1948,19 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     from komodo_data_spark.sources.tables import load_spread
 
     d = load_spread(spark, sf_dir, "documents")
-    # positional bigrams (duplicates KEPT — each occurrence scores)
-    from komodo_data_spark.operators.dedup import _positional_grams
-
-    grams = (
-        d.select(
-            "doc_id",
-            _positional_grams(tokens(), 2).alias("grams"),
-        )
-        .select("doc_id", F.explode_outer("grams").alias("g"))
-        .filter(F.col("g").isNotNull())
-    )
     # vocab²-bounded count table, read twice (total + scoring join) —
     # eager localCheckpoint so the corpus explode+fold runs once, not
     # once per consumer (GC-released, never session-lifetime)
-    model = (
-        grams.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    total = model.agg(F.sum("c").alias("n_total"))
+    model = _gram_counts(d).select("g", "n").localCheckpoint(eager=True)
+    total = model.agg(F.sum("n").alias("n_total"))
     scored = (
-        grams.join(model, "g")
+        _grams(d, carry=["doc_id"])
+        .join(model, "g")
         .crossJoin(F.broadcast(total))
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
-            F.avg(F.log(F.col("c") / F.col("n_total"))).alias("avg_logprob"),
+            F.avg(F.log(F.col("n") / F.col("n_total"))).alias("avg_logprob"),
         )
     )
     return scored.select(
@@ -1967,71 +2021,25 @@ def text_kneser_ney_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     P(w|u) = max(c(u,w) - D, 0)/c(u) + D·N1+(u,·)/c(u) · N1+(·,w)/N1+(·,·)
 
-    Scale design: the model is three DataFrames, never driver-collected —
-    bigram counts (one map-side-combinable aggregate over the positional
-    bigram explode), per-context totals c(u) and fan-outs N1+(u,·) (one
-    aggregate OVER THE MODEL, i.e. over types not tokens), and
-    continuation counts N1+(·,w) (same). Scoring is three equi-joins of
-    the doc bigrams against those frames plus a broadcast of the one-row
-    type total; every bigram exists in the model by construction (the fit
-    saw every doc) so the joins are inner with no back-off floor. All
-    arithmetic is codegen'd; the oracle mirrors it with identical
-    left-to-right operation order.
+    Scale design: the model is never driver-collected — bigram counts
+    (the map-side-combinable :func:`_gram_counts` fold), then per-context
+    totals c(u) and fan-outs N1+(u,·) and continuation counts N1+(·,w),
+    each an aggregate OVER THE MODEL, i.e. over types not tokens. Scoring
+    is :func:`_kn_score` with no OOV mass: every bigram exists in the
+    model by construction (the fit saw every doc), so no back-off fires
+    and the floor is N1+(·,w)/N1+(·,·). All arithmetic is codegen'd; the
+    oracle mirrors it with the same left-to-right operation order.
     """
-    from komodo_data_spark.operators.dedup import _positional_grams
     from komodo_data_spark.sources.tables import load_spread
 
     d = load_spread(spark, sf_dir, "documents")
-    grams = (
-        d.select("doc_id", _positional_grams(tokens(), 2).alias("grams"))
-        .select("doc_id", F.explode_outer("grams").alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select(
-            "doc_id",
-            F.substring_index("g", " ", 1).alias("u"),
-            F.substring_index("g", " ", -1).alias("w"),
-        )
-    )
-    # bigram-type count table — the model every other frame derives from.
-    # Read FOUR times (ctx, cont, types, scoring join); un-checkpointed,
-    # each read re-ran the corpus tokenize+explode+fold (5 corpus passes
-    # in the unrolled plan, 34 Exchanges). Eager localCheckpoint = one
-    # corpus fold, type-bounded blocks, GC-released.
-    model = (
-        grams.groupBy("u", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    ctx = model.groupBy("u").agg(
-        F.sum("c").alias("c_u"), F.count(F.lit(1)).alias("n1p_u")
-    )
-    cont = model.groupBy("w").agg(F.count(F.lit(1)).alias("n1p_w"))
-    types = model.agg(F.count(F.lit(1)).alias("t_types"))
-    p = (
-        F.greatest(F.col("c") - F.lit(KN_DISCOUNT), F.lit(0.0)) / F.col("c_u")
-        + F.lit(KN_DISCOUNT)
-        * F.col("n1p_u")
-        / F.col("c_u")
-        * F.col("n1p_w")
-        / F.col("t_types")
-    )
-    scored = (
-        grams.join(model, ["u", "w"])
-        .join(ctx, "u")
-        .join(cont, "w")
-        .crossJoin(F.broadcast(types))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_bigrams"),
-            F.avg(F.log(p)).alias("avg_logprob_kn"),
-        )
-    )
-    return scored.select(
-        "doc_id",
-        "n_bigrams",
-        "avg_logprob_kn",
-        (F.col("avg_logprob_kn") >= KN_LOGPROB_MIN).alias("keep"),
-    )
+    # the count fold is read by every model frame and the scoring joins;
+    # un-checkpointed, each read re-ran the corpus tokenize+explode+fold
+    # (5 corpus passes in the unrolled plan, 34 Exchanges). One eager
+    # localCheckpoint = one corpus fold, type-bounded blocks, GC-released.
+    counts = _gram_counts(d).localCheckpoint(eager=True)
+    scored = _kn_score(_grams(d, carry=["doc_id"]), counts, 2, 0.0, ["doc_id"])
+    return scored.withColumn("keep", F.col("avg_logprob_kn") >= KN_LOGPROB_MIN)
 
 
 def text_kneser_ney_logprob_oracle() -> str:
@@ -2073,97 +2081,6 @@ def text_kneser_ney_logprob_oracle() -> str:
 KN3_LOGPROB_MIN = -4.25
 
 
-def _grams3(d) -> DataFrame:
-    """Positional trigram explode: (doc_id [, split], u, v, w)."""
-    from komodo_data_spark.operators.dedup import _positional_grams
-
-    keep = [c for c in ("doc_id", "split") if c in d.columns]
-    return (
-        d.select(*keep, _positional_grams(tokens(), 3).alias("grams"))
-        .select(*keep, F.explode_outer("grams").alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select(
-            *keep,
-            F.substring_index("g", " ", 1).alias("u"),
-            F.substring_index(
-                F.substring_index("g", " ", 2), " ", -1
-            ).alias("v"),
-            F.substring_index("g", " ", -1).alias("w"),
-        )
-    )
-
-
-def _kn3_count_frames(d: DataFrame):
-    """The two TOKEN-count frames the trigram-KN model derives from — m3
-    = c(u,v,w) trigram counts, m2 = c2(u2,w) bigram counts — from a
-    documents frame. These are the ONLY corpus-sized aggregates in the
-    model, and they are ADDITIVE (sum-mergeable across document
-    batches), which is what makes the incremental counter-store twin
-    (streaming/kn3_incremental.py) exact: fold per-batch counts, derive
-    the same model."""
-    from komodo_data_spark.operators.dedup import _positional_grams
-
-    g3 = _grams3(d)
-    m3 = g3.groupBy("u", "v", "w").agg(F.count(F.lit(1)).alias("c"))
-    g2 = (
-        d.select(_positional_grams(tokens(), 2).alias("grams"))
-        .select(F.explode_outer("grams").alias("g"))
-        .filter(F.col("g").isNotNull())
-        .select(
-            F.substring_index("g", " ", 1).alias("u2"),
-            F.substring_index("g", " ", -1).alias("w"),
-        )
-    )
-    m2 = g2.groupBy("u2", "w").agg(F.count(F.lit(1)).alias("c2"))
-    return m3, m2
-
-
-def _kn3_score(g3: DataFrame, m3: DataFrame, m2: DataFrame) -> DataFrame:
-    """Score a doc-trigram frame (doc_id, u, v, w) under the interpolated
-    trigram-KN model derived from the (m3, m2) count frames — the shared
-    kernel of the batch fit-on-self op and the streaming counter-store
-    read path. All derived frames are TYPE-level aggregates over the
-    model; joins are inner (callers guarantee every scored event was
-    counted)."""
-    ctx3 = m3.groupBy("u", "v").agg(
-        F.sum("c").alias("c_uv"), F.count(F.lit(1)).alias("n1p_uv")
-    )
-    m2c = m3.groupBy("v", "w").agg(F.count(F.lit(1)).alias("n1p_vw"))
-    ctx2 = m2c.groupBy("v").agg(
-        F.sum("n1p_vw").alias("t_v"), F.count(F.lit(1)).alias("n1p_v")
-    )
-    cont = m2.groupBy("w").agg(F.count(F.lit(1)).alias("n1p_w"))
-    types = m2.agg(F.count(F.lit(1)).alias("t_types"))
-    d_ = F.lit(KN_DISCOUNT)
-    # fully left-associative like the oracle SQL (same ulp discipline as
-    # the bigram op): ...*n1p_w/t_types, NOT ...*(n1p_w/t_types)
-    p2 = (
-        F.greatest(F.col("n1p_vw") - d_, F.lit(0.0)) / F.col("t_v")
-        + d_
-        * F.col("n1p_v")
-        / F.col("t_v")
-        * F.col("n1p_w")
-        / F.col("t_types")
-    )
-    p3 = (
-        F.greatest(F.col("c") - d_, F.lit(0.0)) / F.col("c_uv")
-        + d_ * F.col("n1p_uv") / F.col("c_uv") * p2
-    )
-    return (
-        g3.join(m3, ["u", "v", "w"])
-        .join(ctx3, ["u", "v"])
-        .join(m2c, ["v", "w"])
-        .join(ctx2, "v")
-        .join(cont, "w")
-        .crossJoin(F.broadcast(types))
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_trigrams"),
-            F.avg(F.log(p3)).alias("avg_logprob_kn3"),
-        )
-    )
-
-
 @query
 def text_kneser_ney3_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score each document under an interpolated TRIGRAM Kneser-Ney LM fit
@@ -2188,75 +2105,23 @@ def text_kneser_ney3_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     document edges, and it keeps the two ladder rungs sharing one
     distribution — mirrored identically in the oracle).
 
-    Scale design: the model is five aggregates, never collected — trigram
-    counts (the only corpus-sized shuffle), then ctx/continuation frames
-    computed over TYPES, not tokens (each strictly smaller than the
-    model). Scoring is equi-joins of the doc trigrams against those
-    frames plus one broadcast scalar; all joins inner (fit-on-self sees
-    every event). Arithmetic is codegen'd with left-to-right order
+    Scale design: the model is never collected — the trigram and bigram
+    counts of one :func:`_gram_counts` fold (the only corpus-sized
+    shuffle), then ctx/continuation frames computed over TYPES, not
+    tokens (each strictly smaller than the model). Scoring is
+    :func:`_kn_score` with no OOV mass; fit-on-self sees every event, so
+    no back-off fires. Arithmetic is codegen'd with left-to-right order
     mirrored in the oracle.
     """
-    from komodo_data_spark.operators.dedup import _positional_grams
     from komodo_data_spark.sources.tables import load_spread
 
     d = load_spread(spark, sf_dir, "documents")
-    # The model's only corpus-sized aggregates are the trigram and bigram
-    # token counts, and both derive from ONE tokenize of the same corpus:
-    # explode both gram orders in a single pass (order-tagged structs) and
-    # aggregate through a single exchange, instead of paying a separate
-    # tokenize + explode + shuffle per order (r13, guide §2.1). The
-    # combined frame is read by several type-level derivations in
-    # _kn3_score plus the scoring joins — ONE eager localCheckpoint = one
-    # corpus fold total instead of one per order per consumer. Done HERE,
-    # not in _kn3_count_frames (whose two-frame form the streaming
-    # counter-store twin folds additively per micro-batch): m3/m2 below
-    # are checkpoint-sized filters, bit-identical to the per-order
-    # aggregates because tokens are whitespace-split (never contain the
-    # gram separator), so gram-string counts ARE (u,v,w)-triple counts.
-    counts = (
-        # two-step select: "toks" is referenced by BOTH gram orders, and
-        # CollapseProject keeps the non-cheap split() single-evaluated
-        d.select(tokens().alias("toks"))
-        .select(
-            F.explode(
-                F.concat(
-                    F.transform(
-                        _positional_grams(F.col("toks"), 3),
-                        lambda g: F.struct(
-                            F.lit(3).alias("o"), g.alias("g")
-                        ),
-                    ),
-                    F.transform(
-                        _positional_grams(F.col("toks"), 2),
-                        lambda g: F.struct(
-                            F.lit(2).alias("o"), g.alias("g")
-                        ),
-                    ),
-                )
-            ).alias("og")
-        )
-        .groupBy(F.col("og.o").alias("o"), F.col("og.g").alias("g"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
-    )
-    m3 = counts.filter(F.col("o") == 3).select(
-        F.substring_index("g", " ", 1).alias("u"),
-        F.substring_index(F.substring_index("g", " ", 2), " ", -1).alias("v"),
-        F.substring_index("g", " ", -1).alias("w"),
-        "c",
-    )
-    m2 = counts.filter(F.col("o") == 2).select(
-        F.substring_index("g", " ", 1).alias("u2"),
-        F.substring_index("g", " ", -1).alias("w"),
-        F.col("c").alias("c2"),
-    )
-    scored = _kn3_score(_grams3(d), m3, m2)
-    return scored.select(
-        "doc_id",
-        "n_trigrams",
-        "avg_logprob_kn3",
-        (F.col("avg_logprob_kn3") >= KN3_LOGPROB_MIN).alias("keep"),
-    )
+    # both orders' counts from one tokenize and one exchange, read by the
+    # type-level model frames and the scoring joins — one eager
+    # localCheckpoint = one corpus fold total instead of one per consumer
+    counts = _gram_counts(d, (3, 2)).localCheckpoint(eager=True)
+    scored = _kn_score(_grams(d, (3,), ["doc_id"]), counts, 3, 0.0, ["doc_id"])
+    return scored.withColumn("keep", F.col("avg_logprob_kn3") >= KN3_LOGPROB_MIN)
 
 
 def text_kneser_ney3_logprob_oracle() -> str:
@@ -2322,78 +2187,22 @@ def text_kneser_ney3_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     add-alpha smoothed over seen types plus one shared OOV bucket
     ((N1+(·w)+a)/(T + a·(V+1))), so every trigram gets positive mass.
 
-    Scale design: identical to the fit-on-self op plus the split
-    predicate pushed to the fit's scan — a 100 TB score pass against a
-    frozen model reads the model frames, not the train corpus.
+    Scale design: the fit-on-self op's fold and scorer
+    (:func:`_kn_score` with ``KN_OOV_ALPHA``) plus the split predicate
+    pushed to the fit's scan — a 100 TB score pass against a frozen model
+    reads the model frames, not the train corpus.
     """
-    from komodo_data_spark.operators.dedup import _positional_grams
     from komodo_data_spark.operators.pipeline_ops import _split_col
     from komodo_data_spark.sources.tables import load_spread
 
-    d = load_spread(spark, sf_dir, "documents").withColumn(
-        "split", _split_col()
-    )
-    g3 = _grams3(d)
-    fit3 = g3.filter(F.col("split") == "train")
-    # NOT checkpointed (unlike text_kneser_ney3_logprob): here all reads
-    # of m3/m2 live under ONE action, so exchange reuse already runs the
-    # train-split fold once — measured A/B, eager checkpoints cost +1.1 s
-    m3 = fit3.groupBy("u", "v", "w").agg(F.count(F.lit(1)).alias("c"))
-    ctx3 = m3.groupBy("u", "v").agg(
-        F.sum("c").alias("c_uv"), F.count(F.lit(1)).alias("n1p_uv")
-    )
-    m2c = m3.groupBy("v", "w").agg(F.count(F.lit(1)).alias("n1p_vw"))
-    ctx2 = m2c.groupBy("v").agg(
-        F.sum("n1p_vw").alias("t_v"), F.count(F.lit(1)).alias("n1p_v")
-    )
-    g2 = (
-        d.select(
-            "split", _positional_grams(tokens(), 2).alias("grams")
-        )
-        .select("split", F.explode_outer("grams").alias("g"))
-        .filter((F.col("g").isNotNull()) & (F.col("split") == "train"))
-        .select(
-            F.substring_index("g", " ", 1).alias("u2"),
-            F.substring_index("g", " ", -1).alias("w"),
-        )
-    )
-    m2 = g2.groupBy("u2", "w").agg(F.count(F.lit(1)).alias("c2"))
-    cont = m2.groupBy("w").agg(F.count(F.lit(1)).alias("n1p_w"))
-    totals = m2.agg(F.count(F.lit(1)).alias("t_types")).crossJoin(
-        cont.agg(F.count(F.lit(1)).alias("v_types"))
-    )
-    d_ = F.lit(KN_DISCOUNT)
-    a = F.lit(KN_OOV_ALPHA)
-    p1 = (F.coalesce("n1p_w", F.lit(0)) + a) / (
-        F.col("t_types") + a * (F.col("v_types") + 1)
-    )
-    p2 = F.when(
-        F.col("t_v").isNotNull(),
-        F.greatest(
-            F.coalesce("n1p_vw", F.lit(0)) - d_, F.lit(0.0)
-        )
-        / F.col("t_v")
-        + d_ * F.col("n1p_v") / F.col("t_v") * p1,
-    ).otherwise(p1)
-    p3 = F.when(
-        F.col("c_uv").isNotNull(),
-        F.greatest(F.coalesce("c", F.lit(0)) - d_, F.lit(0.0))
-        / F.col("c_uv")
-        + d_ * F.col("n1p_uv") / F.col("c_uv") * p2,
-    ).otherwise(p2)
-    return (
-        g3.join(m3, ["u", "v", "w"], "left")
-        .join(ctx3, ["u", "v"], "left")
-        .join(m2c, ["v", "w"], "left")
-        .join(ctx2, "v", "left")
-        .join(cont, "w", "left")
-        .crossJoin(F.broadcast(totals))
-        .groupBy("doc_id", "split")
-        .agg(
-            F.count(F.lit(1)).alias("n_trigrams"),
-            F.avg(F.log(p3)).alias("avg_logprob_kn3"),
-        )
-    )
+    d = load_spread(spark, sf_dir, "documents").withColumn("split", _split_col())
+    # NOT checkpointed (unlike text_kneser_ney3_logprob): measured A/B,
+    # eager checkpoints cost +1.1 s here. Each model frame still re-runs
+    # the train-split fold: the null filters its join infers are pushed
+    # below the fold's aggregate, so no fold exchange is reused.
+    counts = _gram_counts(d.filter(F.col("split") == "train"), (3, 2))
+    keys = ["doc_id", "split"]
+    return _kn_score(_grams(d, (3,), keys), counts, 3, KN_OOV_ALPHA, keys)
 
 
 def text_kneser_ney3_apply_oracle() -> str:

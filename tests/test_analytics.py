@@ -3,9 +3,11 @@ MySQL SQL on the same reference-shaped fixture (SURVEY.md §5 rebuild plan)."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 
 from komodo_data_spark.operators import analytics as A
+from komodo_data_spark.schemas import DATA_SCHEMA
 from tests.conftest import assert_frames_match
 
 JX = "CAST(json_extract_string(message,'{p}') AS DOUBLE)"
@@ -50,9 +52,22 @@ def test_aggregate_user(spark, data_df, oracle):
     assert names == {"head", "left_hand", "right_hand", "spawned_entity"}
 
 
-@pytest.mark.parametrize("parity", [False, True])
-def test_user_energy(spark, data_df, oracle, parity):
-    got = A.user_energy(data_df, 126, 5, 0, partition_parity=parity)
+@pytest.mark.parametrize("null_client_id", [False, True])
+def test_user_energy(spark, data_pdf, data_df, oracle, null_client_id):
+    """The reference lags over the rows its filter on session and
+    ``message.clientId`` keeps; with ``null_client_id`` every third of
+    those rows has a NULL ``client_id`` column, which must not change
+    which row is "previous"."""
+    if null_client_id:
+        pdf = data_pdf.astype({"client_id": object})
+        named = pdf.index[
+            (pdf["session_id"] == 126) & (pdf["type"] == "sync") & (pdf["client_id"] == 5)
+        ]
+        pdf.loc[named[::3], "client_id"] = None
+        data_df = spark.createDataFrame(pdf, schema=DATA_SCHEMA)
+        oracle = duckdb.connect()
+        oracle.register("data", pdf)
+    got = A.user_energy(data_df, 126, 5, 0)
     exp = oracle.execute(
         f"""
         SELECT client_id, session_id, timestamp, entity_type, energy

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -67,10 +68,23 @@ def test_oph_uses_equi_joins_and_hashes_once(spark):
 
 
 def test_kneser_ney_is_aggregate_join_shaped(spark):
-    plan = plan_of(text_analysis.text_kneser_ney_logprob(spark, SF))
-    assert "CartesianProduct" not in plan
-    # the one-row type total rides a broadcast, never a shuffle
-    assert "BroadcastExchange" in plan
+    """All four Kneser-Ney queries score through one scorer: equi-joins
+    against type-level model frames, and the one-row type totals ride a
+    broadcast (IdentityBroadcastMode: a global aggregate, not hashed),
+    never a shuffle."""
+    for name in (
+        "text_kneser_ney_logprob",
+        "text_kneser_ney_apply",
+        "text_kneser_ney3_logprob",
+        "text_kneser_ney3_apply",
+    ):
+        plan = plan_of(getattr(text_analysis, name)(spark, SF))
+        assert "CartesianProduct" not in plan, name
+        assert re.search(
+            r"BroadcastExchange\nInput \[2\]: \[t_types#\d+L, v_types#\d+L\]\n"
+            r"Arguments: IdentityBroadcastMode",
+            plan,
+        ), name
 
 
 def test_simhash_uses_equi_joins_only(spark):

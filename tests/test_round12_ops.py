@@ -286,6 +286,33 @@ def test_shared_fit_materializes_and_memoizes(spark, tmp_path):
     assert guarded(spark, str(d)) is ready
 
 
+def test_shared_fit_evicts_only_stale_files(spark, tmp_path):
+    """Fits of one family over the same files with other params coexist
+    (the two BPE trainer geometries alternate without refitting); a file
+    rewritten under the dir makes every entry over the old files stale."""
+    from komodo_data_spark.operators import model_memo
+    from komodo_data_spark.operators.model_memo import shared_fit
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    (d / "t.parquet").write_bytes(b"v1")
+    calls = []
+
+    @shared_fit("test_shared_fit_stale")
+    def fit(spark, sf_dir, topc):
+        calls.append(topc)
+        return topc
+
+    for topc in (1, 32, 1):
+        fit(spark, str(d), topc)
+    assert calls == [1, 32]
+    (d / "t.parquet").write_bytes(b"v22")
+    fit(spark, str(d), 1)
+    assert calls == [1, 32, 1]
+    family = [k for k in model_memo._MEMO if k[1] == "test_shared_fit_stale"]
+    assert len(family) == 1
+
+
 def test_shared_fit_rejects_a_redeclared_family():
     """Two fits declaring one family would share its memo key and
     silently serve each other's frames: the second declaration raises."""
