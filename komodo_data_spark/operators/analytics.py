@@ -63,9 +63,10 @@ def request_row(keyed, request_id: int, *values) -> tuple:
 
 def request_frame(spark: SparkSession, keyed, rows) -> DataFrame:
     """``keyed``'s request frame holding ``rows`` (from :func:`request_row`).
-    It is an inline ``VALUES`` table, i.e. a local relation: Spark reads and
-    broadcasts it without a job (a frame made by ``createDataFrame`` is an
-    RDD and costs one)."""
+    It is an inline ``VALUES`` table, i.e. a local relation, so the driver
+    reads its rows without a job. Broadcasting it is not free: each plan
+    that joins it runs one small job to collect it for the broadcast, one
+    task per request row and no input bytes."""
     cols = (("request_id", "long"), *keyed.request_params)
     values = ", ".join(
         "(" + ", ".join(f":p{i}_{j}" for j in range(len(cols))) + ")"

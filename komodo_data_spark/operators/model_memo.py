@@ -11,8 +11,9 @@ frames. The whole contract:
 - **Deterministic in the files under ``sf_dir``.** A fit must return the
   same frames for the same input files and params, so a memo hit is
   frame-identical to a refit (pinned per family in tests). Directory
-  params are keyed by their file fingerprint (name, size, mtime), not
-  their path string: a table rewritten in place misses the memo.
+  params are keyed by ``sources.tables.files_fingerprint`` (name, size,
+  mtime of each file), not their path string: a table rewritten in place
+  misses the memo, as it misses ``load_table``'s schema cache.
 - **Per-application keys.** The key is (applicationId, family, bound
   params with defaults applied). A new session never reads a dead
   session's blocks: keys of other applications are evicted on first
@@ -42,39 +43,11 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from komodo_data_spark.sources.tables import files_fingerprint
+
 _MEMO: dict[tuple, Any] = {}
 #: family -> qualified name of the fit that declared it
 _FAMILIES: dict[str, str] = {}
-
-
-def _dir_fingerprint(path: str) -> tuple:
-    """(name, size, mtime_ns) of every data file under ``path`` (one level
-    of table-directory nesting). 'Deterministic in sf_dir' really means
-    deterministic in the sf_dir's FILES: a caller that overwrites a table
-    in place (the hand-computed tests do exactly that) must miss the memo,
-    not read the previous corpus's model. O(file count) driver-side stat
-    calls — a few entries per scale dir, never data-sized."""
-    out = []
-    try:
-        with os.scandir(path) as it:
-            for e in sorted(it, key=lambda e: e.name):
-                if e.name.startswith("."):
-                    continue
-                if e.is_dir(follow_symlinks=False):
-                    with os.scandir(e.path) as sub:
-                        for s in sorted(sub, key=lambda s: s.name):
-                            if s.name.startswith("."):
-                                continue
-                            st = s.stat(follow_symlinks=False)
-                            out.append(
-                                (e.name + "/" + s.name, st.st_size, st.st_mtime_ns)
-                            )
-                else:
-                    st = e.stat(follow_symlinks=False)
-                    out.append((e.name, st.st_size, st.st_mtime_ns))
-    except OSError:
-        pass
-    return tuple(out)
 
 
 def _dirs(key: tuple) -> tuple:
@@ -92,7 +65,7 @@ def session_model(
     for k in [k for k in _MEMO if k[0] != app]:
         del _MEMO[k]
     key = (app, family) + tuple(
-        (os.path.abspath(p), _dir_fingerprint(os.path.abspath(p)))
+        (os.path.abspath(p), files_fingerprint(os.path.abspath(p)))
         if isinstance(p, str) and os.path.isdir(p)
         else p
         for p in params

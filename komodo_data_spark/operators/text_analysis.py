@@ -2196,11 +2196,12 @@ def text_kneser_ney3_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     from komodo_data_spark.sources.tables import load_spread
 
     d = load_spread(spark, sf_dir, "documents").withColumn("split", _split_col())
-    # NOT checkpointed (unlike text_kneser_ney3_logprob): measured A/B,
-    # eager checkpoints cost +1.1 s here. Each model frame still re-runs
-    # the train-split fold: the null filters its join infers are pushed
-    # below the fold's aggregate, so no fold exchange is reused.
-    counts = _gram_counts(d.filter(F.col("split") == "train"), (3, 2))
+    # one eager localCheckpoint = one train-split fold: un-checkpointed,
+    # the null filters each model frame's join infers are pushed below the
+    # fold's aggregate, and every model frame re-runs the fold
+    counts = _gram_counts(d.filter(F.col("split") == "train"), (3, 2)).localCheckpoint(
+        eager=True
+    )
     keys = ["doc_id", "split"]
     return _kn_score(_grams(d, (3,), keys), counts, 3, KN_OOV_ALPHA, keys)
 

@@ -42,9 +42,73 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def files_fingerprint(path: str) -> tuple:
+    """(name, size, mtime_ns) of each data file at ``path``: the file
+    itself, or every file under a directory (one level of nesting, so a
+    partitioned table's part files count). A table rewritten in place
+    gets a new fingerprint, so the caches keyed by it (the schema cache
+    below, ``model_memo``) miss instead of serving the old files' result.
+    O(file count) driver-side stat calls, never data-sized; a path that
+    cannot be listed fingerprints as ``()``."""
+    def entry(e, name):
+        st = e.stat(follow_symlinks=False)
+        return (name, st.st_size, st.st_mtime_ns)
+
+    out = []
+    try:
+        if not os.path.isdir(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        with os.scandir(path) as it:
+            for e in sorted(it, key=lambda e: e.name):
+                if e.name.startswith("."):
+                    continue
+                if not e.is_dir(follow_symlinks=False):
+                    out.append(entry(e, e.name))
+                    continue
+                with os.scandir(e.path) as sub:
+                    out.extend(
+                        entry(s, e.name + "/" + s.name)
+                        for s in sorted(sub, key=lambda s: s.name)
+                        if not s.name.startswith(".")
+                    )
+    except OSError:
+        pass
+    return tuple(out)
+
+
+#: (applicationId, absolute table path) -> (files_fingerprint, the schema
+#: Spark inferred from those files)
+_SCHEMAS: dict[tuple, tuple] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``name``'s parquet table under ``sf_dir``, its schema inferred once
+    per application and table files.
+
+    Inferring a parquet schema runs a footer-read Spark job on every read;
+    a read given the schema builds the same scan with none. The cache is
+    keyed by (applicationId, absolute path) and holds the inferred schema
+    with the :func:`files_fingerprint` it was inferred from: a table
+    rewritten in place (new size or mtime of any file) misses and is
+    re-inferred, and entries of other applications are evicted on first
+    touch. A path the driver cannot see (a remote URI, a missing path,
+    which raises ``PATH_NOT_FOUND``) is read uncached. The schema depends
+    on the parquet inference confs as well; :func:`configure` sets them
+    before the first read, and nothing changes them mid-application."""
     configure(spark)
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    if not os.path.exists(path):
+        return spark.read.parquet(path)
+    app = spark.sparkContext.applicationId
+    for k in [k for k in _SCHEMAS if k[0] != app]:
+        del _SCHEMAS[k]
+    key, fp = (app, os.path.abspath(path)), files_fingerprint(path)
+    if key in _SCHEMAS and _SCHEMAS[key][0] == fp:
+        return spark.read.schema(_SCHEMAS[key][1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fp, df.schema)
+    return df
 
 
 def _size_bytes(v: str) -> int:

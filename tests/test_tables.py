@@ -8,6 +8,7 @@ from __future__ import annotations
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from komodo_data_spark.sources.tables import normalize_events
 
@@ -45,6 +46,62 @@ def test_normalize_events_identical_across_physical_ts_types(spark, tmp_path):
     assert list(pda["ts"]) == NANOS
     assert list(pda["ts_ms"]) == [t // 1_000_000 for t in NANOS]
     assert pda["ts_ts"].dt.floor("ms").iloc[0] == pd.Timestamp(NANOS[0] // 1_000_000, unit="ms")
+
+
+# --------------------------------------------------------------------------
+# load_table's session schema cache
+# --------------------------------------------------------------------------
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_load_table_reuses_the_inferred_schema(spark, tmp_path):
+    """A second read of an unchanged table starts no Spark job and gives
+    the same schema and rows; a table rewritten in place with an added
+    column is re-inferred and shows it."""
+    from komodo_data_spark.sources.tables import load_table
+
+    pq.write_table(pa.table({"a": [1, 2, 3]}), str(tmp_path / "t.parquet"))
+    first = load_table(spark, str(tmp_path), "t")
+    jobs = _next_job_id(spark)
+    again = load_table(spark, str(tmp_path), "t")
+    assert _next_job_id(spark) == jobs
+    assert again.schema == first.schema
+    assert again.count() == first.count() == 3
+
+    pq.write_table(
+        pa.table({"a": [1, 2], "b": ["x", "y"]}), str(tmp_path / "t.parquet")
+    )
+    rewritten = load_table(spark, str(tmp_path), "t")
+    assert rewritten.columns == ["a", "b"]
+    assert sorted(rewritten.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_load_table_missing_path_is_not_cached(spark, tmp_path):
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    from komodo_data_spark.sources import tables
+
+    with pytest.raises(AnalysisException) as err:
+        tables.load_table(spark, str(tmp_path), "missing")
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
+    missing = os.path.abspath(tables.table_path(str(tmp_path), "missing"))
+    assert all(path != missing for _, path in tables._SCHEMAS)
+
+
+def test_load_table_evicts_other_applications(spark, tmp_path):
+    from komodo_data_spark.sources import tables
+
+    pq.write_table(pa.table({"a": [1]}), str(tmp_path / "t.parquet"))
+    stale = ("app-of-a-stopped-session", str(tmp_path / "t.parquet"))
+    tables._SCHEMAS[stale] = ((), None)
+    tables.load_table(spark, str(tmp_path), "t")
+    assert stale not in tables._SCHEMAS
+    assert {app for app, _ in tables._SCHEMAS} == {spark.sparkContext.applicationId}
 
 
 # --------------------------------------------------------------------------
