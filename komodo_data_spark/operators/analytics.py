@@ -6,10 +6,10 @@ UPDATEs, no double execution (the reference re-runs drawing_pattern and
 user_proximity twice, process.py:399-402/:438-441 — eliminated here).
 
 The three request analytics (the ones ``data_requests`` dispatches,
-process.py:351-366) are each defined once, keyed by ``request_id`` over a
-small request frame ``(request_id, session_id, <params>)``: a micro-batch of
-requests is one plan (streaming/dispatch.py), and the per-request function
-is the one-row case of the same definition.
+process.py:351-366) are each defined once, keyed by ``request_id`` over the
+driver's request rows ``(request_id, session_id, <params>)``: a micro-batch
+of requests is one plan (streaming/dispatch.py), and the per-request
+function is the one-row case of the same definition.
 
 Scale design (100 TB): the `data` table is expected partitioned by
 ``session_id`` (see sources.capture.append_to_data_table), so every
@@ -22,16 +22,17 @@ parity mode; a partitioned variant is provided for scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.json_compat import decode_entity, jget, jget_num
 
 
 def _by_request(*params: str):
-    """Declare a keyed analytic: ``fn(data, requests)`` reads a request frame
-    ``(request_id long, <params>)``, each param a ``"name type"`` pair, and
-    returns one result per request, tagged with its ``request_id``."""
+    """Declare a keyed analytic: ``fn(data, requests)`` reads request rows
+    ``(request_id, <params>)`` (from :func:`request_row`), each param a
+    ``"name type"`` pair, and returns one result per request, tagged with
+    its ``request_id``."""
 
     def declare(fn):
         fn.request_params = tuple(tuple(p.split()) for p in params)
@@ -48,7 +49,7 @@ def _long(value) -> int:
 
 
 def request_row(keyed, request_id: int, *values) -> tuple:
-    """One row of ``keyed``'s request frame. Each value is coerced the way
+    """One request row for ``keyed``. Each value is coerced the way
     the analytic compares it: ``int`` for the session id, ``float`` for a
     JSON number (MySQL's numeric coercion of ``->``). Raises on a value that
     does not coerce, e.g. ``None`` for a missing ``entityType`` or a session
@@ -61,59 +62,61 @@ def request_row(keyed, request_id: int, *values) -> tuple:
     )
 
 
-def request_frame(spark: SparkSession, keyed, rows) -> DataFrame:
-    """``keyed``'s request frame holding ``rows`` (from :func:`request_row`).
-    It is an inline ``VALUES`` table, i.e. a local relation, so the driver
-    reads its rows without a job. Broadcasting it is not free: each plan
-    that joins it runs one small job to collect it for the broadcast, one
-    task per request row and no input bytes."""
-    cols = (("request_id", "long"), *keyed.request_params)
-    values = ", ".join(
-        "(" + ", ".join(f":p{i}_{j}" for j in range(len(cols))) + ")"
-        for i in range(len(rows))
-    )
-    return spark.sql(
-        f"SELECT {', '.join(f'CAST({n} AS {t}) AS {n}' for n, t in cols)} "
-        f"FROM VALUES {values} AS t({', '.join(n for n, _ in cols)})",
-        args={f"p{i}_{j}": v for i, row in enumerate(rows) for j, v in enumerate(row)},
-    )
-
-
 def _one(keyed, data: DataFrame, *values) -> DataFrame:
-    """A keyed analytic's one-request case: its result for a one-row request
-    frame, without the key."""
-    requests = request_frame(data.sparkSession, keyed, [request_row(keyed, 0, *values)])
-    return keyed(data, requests).drop("request_id")
+    """A keyed analytic's one-request case: its result for one request row,
+    without the key."""
+    return keyed(data, [request_row(keyed, 0, *values)]).drop("request_id")
 
 
-def _named_rows(data: DataFrame, requests: DataFrame, path: str, param: str) -> DataFrame:
+#: Doubles below this magnitude cast to a long exactly on the driver and in
+#: Spark; larger ones, NaN and the infinities take request slot 0.
+_EXACT_LONG = 2**52
+
+
+def _named_rows(data: DataFrame, keyed, requests: list, path: str, param: str) -> DataFrame:
     """The ``data`` rows each request names: its session, and the message's
-    number at ``path`` equal to the request's ``param``. A row named by two
-    requests appears once per request, tagged with the request's columns as
-    ``req_<name>``.
+    number at ``path`` equal to the request's ``param`` under Spark's double
+    equality. A row named by two requests appears once per request, tagged
+    with the request's columns as ``req_<name>``.
 
-    The request frame is broadcast and joined on ``session_id`` plus the
-    extracted number as equi-keys, so each row's JSON is parsed once however
-    many requests name its session. The scan is pruned to the requests'
-    sessions by an explicit ``session_id IN (...)``: dynamic partition
-    pruning does not fire with a local relation on the build side."""
-    sessions = sorted({r[0] for r in requests.select("session_id").collect()})
-    req = F.broadcast(requests.select(
-        "request_id",
-        *[F.col(c).alias(f"req_{c}") for c in requests.columns if c != "request_id"],
-    ))
-    rows = data.filter(F.col("session_id").isin(sessions)).withColumn(
-        "_key", jget_num("message", path)
+    The requests are literals of the plan, so no request frame is broadcast
+    (a broadcast costs one job per plan). They sit in a literal array of
+    slots indexed by (session_id XOR the number's integral part) modulo a
+    power of two >= the batch; each row parses its JSON once and scans only
+    its own slot, so its cost does not grow with the batch (a literal map
+    lookup would scan every key). The scan is pruned to the requests'
+    sessions by an explicit ``session_id IN (...)``."""
+    cols = [("request_id", "long"), *keyed.request_params]
+    k = [n for n, _ in cols].index(param)
+    m = 1 << (len(requests) - 1).bit_length()
+    slots = [[] for _ in range(m)]
+    for row in requests:
+        num = int(row[k]) if abs(row[k]) < _EXACT_LONG else 0
+        slots[(row[1] ^ num) & (m - 1)].append(F.struct(*[
+            F.lit(v).cast(t).alias(n if n == "request_id" else f"req_{n}")
+            for v, (n, t) in zip(row, cols)
+        ]))
+    slot = F.expr(
+        f"CAST((session_id ^ CASE WHEN abs(_key) < {_EXACT_LONG}"
+        f" THEN CAST(_key AS BIGINT) ELSE 0 END) & {m - 1} AS INT) + 1"
     )
-    return rows.join(
-        req,
-        (F.col("session_id") == F.col("req_session_id"))
-        & (F.col("_key") == F.col(f"req_{param}")),
-    ).drop("_key")
+    named = F.filter(
+        F.element_at(F.array(*[F.array(*s) for s in slots]), slot),
+        lambda r: (r["req_session_id"] == F.col("session_id"))
+        & (r[f"req_{param}"] == F.col("_key")),
+    )
+    sessions = sorted({row[1] for row in requests})
+    return (
+        data.filter(F.col("session_id").isin(sessions))
+        .withColumn("_key", jget_num("message", path))
+        .select("*", F.inline_outer(named))
+        .filter(F.col("request_id").isNotNull())
+        .drop("_key")
+    )
 
 
 @_by_request("session_id long", "interaction_type double")
-def aggregate_interaction_type_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
+def aggregate_interaction_type_by_request(data: DataFrame, requests: list) -> DataFrame:
     """Interactions per client for each request's session + interaction type.
 
     Reference: process.py:79-88 (INSERT…SELECT into `aggregate_interaction`).
@@ -122,7 +125,10 @@ def aggregate_interaction_type_by_request(data: DataFrame, requests: DataFrame) 
     double-cast compare here.
     """
     return (
-        _named_rows(data, requests, "$.interactionType", "interaction_type")
+        _named_rows(
+            data, aggregate_interaction_type_by_request, requests,
+            "$.interactionType", "interaction_type",
+        )
         .groupBy("request_id", "client_id")
         .agg(F.count("message").alias("interaction_count"))
     )
@@ -137,7 +143,7 @@ def aggregate_interaction_type(
 
 
 @_by_request("session_id long", "client_id double")
-def aggregate_user_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
+def aggregate_user_by_request(data: DataFrame, requests: list) -> DataFrame:
     """Per-entity-type activity count for each request's client and session.
 
     Reference: process.py:144-173 — aggregate into `aggregate_user`, then an
@@ -146,7 +152,10 @@ def aggregate_user_by_request(data: DataFrame, requests: DataFrame) -> DataFrame
     reference's final SELECT * : (entity_type, user_count).
     """
     return (
-        _named_rows(data.filter(F.col("type") == "sync"), requests, "$.clientId", "client_id")
+        _named_rows(
+            data.filter(F.col("type") == "sync"), aggregate_user_by_request, requests,
+            "$.clientId", "client_id",
+        )
         .groupBy("request_id", jget("message", "$.entityType").alias("entity_type"))
         .agg(F.count(F.lit(1)).alias("user_count"))
         .select("request_id", decode_entity("entity_type").alias("entity_type"), "user_count")
@@ -160,7 +169,7 @@ def aggregate_user(data: DataFrame, session_id: int, client_id: int) -> DataFram
 
 
 @_by_request("session_id long", "client_id double", "entity_type double")
-def user_energy_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
+def user_energy_by_request(data: DataFrame, requests: list) -> DataFrame:
     """Movement "energy" per sync message: √(Δx²+Δy²+Δz²) / Δts.
 
     Reference: process.py:196-213. Semantics preserved exactly:
@@ -188,7 +197,8 @@ def user_energy_by_request(data: DataFrame, requests: DataFrame) -> DataFrame:
     shuffle carries three numbers instead of the ``message`` text.
     """
     rows = _named_rows(
-        data.filter(F.col("type") == "sync"), requests, "$.clientId", "client_id"
+        data.filter(F.col("type") == "sync"), user_energy_by_request, requests,
+        "$.clientId", "client_id",
     ).select(
         "request_id",
         "client_id",

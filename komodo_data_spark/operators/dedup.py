@@ -6,7 +6,7 @@ extension; SURVEY.md §2.12). Five dedup families, each with a DuckDB oracle:
 3. MinHash+LSH  — k=12 signatures, b=4 bands × r=3: band-bucket join prunes
                   the candidate space, then exact-Jaccard verification
 4. SimHash      — 64-bit shingle-feature signature + Hamming-distance pairs
-                  via pigeonhole segment equi-join (never all-pairs)
+                  via a multi-index segment equi-join (never all-pairs)
 5. embedding    — cosine near-dup pairs over ``array<float>`` vectors
 
 Scale strategy (100 TB): the *n-gram self-join* is the quadratic trap — its
@@ -22,6 +22,9 @@ computations are pure Catalyst expressions — no UDFs, fully codegen'd.
 """
 
 from __future__ import annotations
+
+import functools
+import itertools
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -50,16 +53,14 @@ COSINE_THRESHOLD = 0.45
 
 #: Text SimHash geometry: 64-bit signatures over the doc's DISTINCT 3-gram
 #: shingles (the exact truth's own feature modality), pairs at Hamming
-#: distance <= 7 via 8 pigeonhole segments of 8 bits. Sized empirically
+#: distance <= 7 via the r = 1 multi-index segment join. Sized empirically
 #: against the exact shingle-Jaccard truth on the recall slices
 #: (sf0.001/0.01/0.1): the round-8 32-bit UNIGRAM signature at radius 2
 #: measured 0.50 recall with 157k emitted pairs at sf0.1 — on this corpus
 #: docs share nearly all unigrams, so unigram signatures collapse while
 #: edits in rare tokens flip >2 bits. Shingle features + 64 bits + radius 7
 #: measure 0.89/1.00/0.89 recall with 62 emitted pairs (vs 70 true) at
-#: sf0.1 — 2500× fewer emitted pairs at materially higher recall; candidate
-#: volume (Σ bucket² over 8-bit segment values) stays in the same band as
-#: the old 3×11-bit layout.
+#: sf0.1 — 2500× fewer emitted pairs at materially higher recall.
 SIMHASH_BITS = 64
 HAMMING_MAX = 7
 
@@ -82,6 +83,12 @@ def bands_of(posts: DataFrame) -> DataFrame:
             for i in range(MINHASH_K)
         ]
     )
+    return _bands_from_sig(sig)
+
+
+def _bands_from_sig(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_hash) from a (doc_id, h0..h{K-1}) signature
+    frame — the band assembly shared by the classic and OPH detectors."""
     band_cols = []
     for b in range(LSH_BANDS):
         parts = [f"h{b * LSH_ROWS + r}" for r in range(LSH_ROWS)]
@@ -208,25 +215,6 @@ def _prefix_postings(posts: DataFrame, num: int, den: int) -> DataFrame:
     )
 
 
-def prefix_candidate_volume(pref: DataFrame) -> int:
-    """Σ df_pref² over a prefix-postings frame — the exact row count the
-    prefix equi-join would produce (ordered pairs incl. self), i.e. the
-    cost the saturation guard must bound. One hash aggregate over rows
-    the plan already materializes; the scalar is control-plane (same
-    class as the recall evals' slice sizing)."""
-    row = (
-        pref.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("c"))
-        # double, not bigint: one hot key with >~3e9 rows per side would
-        # wrap a bigint product under non-ANSI Spark and fail the guard
-        # OPEN on exactly the degenerate input it exists for; this is a
-        # threshold check, so double precision (exact to 2^53) is fine
-        .agg(F.sum(F.col("c").cast("double") * F.col("c")).alias("v"))
-        .first()
-    )
-    return int(row["v"] or 0)
-
-
 class CandidateVolumeError(RuntimeError):
     """Generalized form of :class:`VocabularySaturationError` for every
     candidate-generating equi-join detector (round-9 verdict ask #3): the
@@ -253,10 +241,9 @@ def join_candidate_volume(
 ) -> int:
     """EXACT output row count of the equi-join of ``a`` with ``b`` (self-
     join when ``b`` is None) on ``keys``: Σ over key values of
-    c_a(k)·c_b(k). The generalized form of :func:`prefix_candidate_volume`
-    — per-side key histograms (map-side-combinable counts over frames the
-    detector's plan already builds) joined on the key and folded into one
-    scalar. Linear in the join INPUT, which is the whole point: the guard
+    c_a(k)·c_b(k) — per-side key histograms (map-side-combinable counts
+    over frames the detector's plan already builds) joined on the key and
+    folded into one scalar. Linear in the join INPUT, which is the whole point: the guard
     pays O(n) to decide whether the join would pay O(n²)."""
     row = _candidate_volume_frame(a, keys, b).first()
     return int(row["v"] or 0)
@@ -293,8 +280,8 @@ def _candidate_volume_frame(
     return c.agg(F.sum(F.col("ca") * F.col("cb")).alias("v"))
 
 
-#: Candidate-volume budget for the SimHash segment equi-joins (both the
-#: pigeonhole and the multi-index-probe form). Same 2e9-row ceiling as
+#: Candidate-volume budget for the SimHash segment equi-join
+#: (simhash_pairs at any probe radius). Same 2e9-row ceiling as
 #: PREFIX_CANDIDATE_BUDGET: comfortably above every measured benign
 #: landscape (the sf10 text detector's probe join emits ~4·17·n²/2¹⁷ ≈
 #: 3e8 candidates at 500k docs) and far below a shuffle-disk-filling
@@ -385,7 +372,7 @@ def prefix_filtered_jaccard_pairs(
     # pay no extra blocking job; the guarded estimate materializes it.
     pref = _prefix_postings(posts, num, den).localCheckpoint(eager=False)
     if budget is not None:
-        est = prefix_candidate_volume(pref)
+        est = join_candidate_volume(pref, ["g"])
         if est > budget:
             if fallback == "df_cap":
                 return _df_capped_pairs(posts, num / den)
@@ -880,23 +867,6 @@ def _oph_signature(posts: DataFrame) -> DataFrame:
     return doc_map.selectExpr("doc_id", *slots)
 
 
-def _bands_from_sig(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_hash) from a (doc_id, h0..h{K-1}) signature
-    frame — the band assembly shared by the classic and OPH detectors."""
-    band_cols = []
-    for b in range(LSH_BANDS):
-        parts = [f"h{b * LSH_ROWS + r}" for r in range(LSH_ROWS)]
-        band_cols.append(
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(F.concat_ws("|", *parts)).alias("band_hash"),
-            )
-        )
-    return sig.select(
-        "doc_id", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc_id", "band.band_id", "band.band_hash")
-
-
 @query
 def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via ONE-PERMUTATION MinHash banding, verified with
@@ -972,483 +942,200 @@ def dedup_minhash_oph_oracle() -> str:
 # 4. SimHash
 # --------------------------------------------------------------------------
 
+#: The join key of SimHash segment rows (doc_id, simhash, seg_id, seg_val).
+SEG_KEYS = ["seg_id", "seg_val"]
 
-def _simhash_signatures(d: DataFrame) -> DataFrame:
-    """32-bit (doc_id, simhash) from a ``toks`` array column — value-identical
-    to functions.text_features.simhash but restructured for throughput:
-    explode distinct tokens, md5 each token ONCE, pack its 32 hex-digit
-    parities into one long, then a single codegen'd groupBy sums the per-bit
-    votes. The expression-form simhash re-evaluates md5 per token *per bit*
-    (32×) inside interpreted higher-order aggregates — measured 8 s vs <1 s
-    at sf0.1. Consumer: the MEDIA detector (multimodal_ops), whose dense
-    byte-4-gram features keep 32 bits at radius 2 at 0.89+ measured recall;
-    the text detector uses the 64-bit shingle form below."""
-    tok = exploded(d, F.array_distinct("toks"), "t", "doc_id").repartition(
-        # repartition BEFORE the md5 projection so the hash compute (the
-        # expensive part) runs on every core, not the single scan task
-        d.sparkSession.sparkContext.defaultParallelism
+#: Per signature width, the long whose bit k is one feature's vote for
+#: signature bit k, from the feature's md5 hex digest ``m``. 32 bits: the
+#: parity of hex digit k+1 (functions.text_features.simhash / sql_simhash).
+#: 64 bits: bit k%4 of hex digit k//4+1 (_sql_simhash64_sig), read as two
+#: 8-digit halves so no conv() result reaches 2^63.
+_SIMHASH_VOTE_BITS = {
+    32: "CAST(conv(reverse(translate(m, '0123456789abcdef',"
+    " '0101010101010101')), 2, 10) AS BIGINT)",
+    64: "shiftleft(CAST(conv(reverse(substr(m, 9, 8)), 16, 10) AS BIGINT), 32)"
+    " | CAST(conv(reverse(substr(m, 1, 8)), 16, 10) AS BIGINT)",
+}
+
+
+def simhash_sig(posts: DataFrame, col: str, bits: int) -> DataFrame:
+    """(doc_id, simhash): the ``bits``-bit SimHash of flat DISTINCT
+    (doc_id, ``col``) feature postings. Bit k is set when more than half of
+    the doc's features vote for it (``_SIMHASH_VOTE_BITS``); a doc without
+    postings has no row.
+
+    One md5 per posting, packed into one long; one aggregate sums the votes
+    in two 32-bit lanes per column (bit j low, bit j + bits/2 high — a lane
+    counts at most the doc's postings, < 2^31); one parsed expression ORs
+    the majority bits."""
+    half = bits // 2
+    votes = (
+        posts.withColumn("m", F.md5(col))
+        .withColumn("v", F.expr(_SIMHASH_VOTE_BITS[bits]))
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            *[
+                F.expr(f"sum(((v >> {j}) & 1) | (((v >> {j + half}) & 1) << 32))")
+                .alias(f"p{j}")
+                for j in range(half)
+            ],
+        )
     )
-    return _simhash32_from_postings(tok, "t")
-
-
-def _simhash32_from_postings(tok: DataFrame, col: str) -> DataFrame:
-    """The md5→parity-pack→vote core of :func:`_simhash_signatures`, over
-    flat DISTINCT (doc_id, ``col``) token postings — reusable when the
-    caller already materialized the exploded postings (the media recall
-    twin shares ONE gram pass between its exact-Jaccard truth and this
-    signature instead of re-extracting grams per consumer)."""
-    tok = tok.withColumn("m", F.md5(col))
-    # Pack the 32 hex-digit parities in ONE string pass: translate maps each
-    # hex digit to its parity char ('0'/'1'), reverse puts digit 0 at the
-    # least-significant end, conv(..., 2, 10) reads the binary string. Value-
-    # identical to summing 32 conv(substr(m,i,1))%2 terms and ~3× faster
-    # (one translate vs 32 substring+conv evaluations per token).
-    parity = "translate(substr(m, 1, 32), '0123456789abcdef', '0101010101010101')"
-    bits = tok.withColumn(
-        "tok_bits", F.expr(f"CAST(conv(reverse({parity}), 2, 10) AS BIGINT)")
+    lane = lambda k: (  # noqa: E731
+        f"(p{k - half} >> 32)" if k >= half else f"(p{k} & 4294967295)"
     )
-    # Packed vote counters — two 32-bit lanes per aggregate column (bit j
-    # in the low lane, bit j+16 in the high lane), so the groupBy carries
-    # 16 sums instead of 32. Lanes cannot interfere: each row contributes
-    # 0/1 per lane, so a lane is an exact count bounded by the doc's
-    # posting count (< 2^31 by any physical corpus; past that the ANSI
-    # sum overflows LOUDLY rather than corrupting). Measured on the
-    # 64-bit sibling: the packed aggregate halves steady-state agg time
-    # and cuts its first-run codegen ~2.6x (less generated code).
-    votes = bits.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.expr(
-                    f"((tok_bits >> {j}) & 1)"
-                    f" | (((tok_bits >> {j + 16}) & 1) << 32)"
-                )
-            ).alias(f"p{j}")
-            for j in range(16)
-        ],
-    )
-
-    # ONE parsed expression instead of a 32-round Column-method chain:
-    # building the chain cost ~0.5 s of py4j round-trips PER INVOCATION
-    # (measured; the 64-bit sibling's chain cost ~1.2 s) — pure driver
-    # overhead the executor never sees. Arithmetic is identical term by
-    # term (lane extract, majority compare, power-of-two addend), so
-    # signatures are bit-identical.
-    def lane(k: int) -> str:
-        p = f"p{k % 16}"
-        return f"({p} >> 32)" if k >= 16 else f"({p} & 4294967295)"
-
-    sig = " + ".join(
-        f"(CASE WHEN {lane(k)} * 2 > n THEN CAST({2**k} AS BIGINT)"
-        " ELSE CAST(0 AS BIGINT) END)"
-        for k in range(32)
-    )
-    return votes.select("doc_id", F.expr(sig).alias("simhash"))
-
-
-def _simhash_signatures64(posts: DataFrame) -> DataFrame:
-    """64-bit (doc_id, simhash) from flat (doc_id, g) feature postings.
-
-    Per posting, md5 is computed ONCE and its first 16 hex digits are
-    packed into one 64-bit long (bit k = bit (k mod 4) of hex digit
-    (k div 4 + 1)); one codegen'd groupBy then sums the 64 per-bit votes
-    and majority-votes the signature. The two conv() halves avoid the
-    ANSI overflow a single 16-digit CAST would risk (values >= 2^63);
-    shiftleft/bitwiseOR reassemble exactly. Input is the same cached
-    postings frame the exact-Jaccard truth and the MinHash detector read,
-    so the signature costs one aggregate over rows that already exist —
-    no second tokenize/shingle pass."""
-    tok = posts.withColumn("m", F.md5("g"))
-    # digit 1 least-significant after reverse(); each half is < 2^32 so the
-    # BIGINT cast is overflow-safe, and hi<<32 | lo is the full 64-bit word
-    lo = F.expr("CAST(conv(reverse(substr(m, 1, 8)), 16, 10) AS BIGINT)")
-    hi = F.expr("CAST(conv(reverse(substr(m, 9, 8)), 16, 10) AS BIGINT)")
-    bits = tok.withColumn("tok_bits", F.shiftleft(hi, 32).bitwiseOR(lo))
-    # Packed vote counters — two 32-bit lanes per aggregate column (bit j
-    # low, bit j+32 high): 32 sums instead of 64. Lanes are exact counts
-    # bounded by postings-per-doc (< 2^31 on any physical corpus; past
-    # that the ANSI sum overflows loudly, never silently). Measured at
-    # sf0.1: steady-state aggregate 1.9 s -> 0.9 s and first-run codegen
-    # 4.5 s -> 1.7 s vs the 64-column form (half the generated code).
-    half = SIMHASH_BITS // 2
-    votes = bits.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.sum(
-                F.expr(
-                    f"((tok_bits >> {j}) & 1)"
-                    f" | (((tok_bits >> {j + half}) & 1) << 32)"
-                )
-            ).alias(f"p{j}")
-            for j in range(half)
-        ],
-    )
-    # ONE parsed expression instead of a 64-round Column-method chain:
-    # the chain cost ~1.2 s of py4j round-trips PER INVOCATION (measured
-    # at sf0.1 — driver-side construction, not executor work). Terms are
-    # arithmetic-identical (lane extract, majority compare, shifted bit),
-    # so signatures are bit-identical.
-    def lane(k: int) -> str:
-        p = f"p{k % half}"
-        return f"({p} >> 32)" if k >= half else f"({p} & 4294967295)"
-
     sig = " | ".join(
-        f"(CASE WHEN {lane(k)} * 2 > n"
-        f" THEN shiftleft(CAST(1 AS BIGINT), {k})"
+        f"(CASE WHEN {lane(k)} * 2 > n THEN shiftleft(CAST(1 AS BIGINT), {k})"
         " ELSE CAST(0 AS BIGINT) END)"
-        for k in range(SIMHASH_BITS)
+        for k in range(bits)
     )
     return votes.select("doc_id", F.expr(sig).alias("simhash"))
 
 
-def _simhash_multiprobe_frames(sig: DataFrame, bits: int, hmax: int):
-    """The multi-index-probe join's two sides: ``exact`` (one row per
-    (doc, segment) at the segment's exact value) and ``probes`` (exact
-    value + every 1-bit flip per segment). Shared by the join itself and
-    the candidate-volume estimate (operator guard + BENCH_SCALING
-    evidence), so the guard measures exactly the join it protects."""
-    n_seg = (hmax + 2) // 2
-    widths = [bits // n_seg] * n_seg
-    widths[-1] += bits % n_seg
-    # expression STRINGS, one parse per frame: the Column-form struct
-    # grid (~(bits + n_seg) structs × several calls each) cost ~0.5 s of
-    # py4j round-trips per invocation; values are unchanged
-    exact_cols, probe_cols, off = [], [], 0
-    for sid, w in enumerate(widths):
-        seg = f"(shiftright(simhash, {off}) & {(1 << w) - 1})"
-        exact_cols.append(
-            f"named_struct('seg_id', {sid}, 'seg_val', {seg})"
-        )
-        # the probe set: the exact value (0 differing bits in this
-        # segment) plus every 1-bit flip of it
-        probe_cols.append(
-            f"named_struct('seg_id', {sid}, 'seg_val', {seg})"
-        )
-        probe_cols.extend(
-            f"named_struct('seg_id', {sid}, 'seg_val', ({seg} ^ {1 << j}))"
-            for j in range(w)
-        )
-        off += w
-    exact = sig.select(
-        "doc_id",
-        "simhash",
-        F.expr(f"explode(array({', '.join(exact_cols)}))").alias("s"),
-    ).select("doc_id", "simhash", "s.seg_id", "s.seg_val")
-    probes = sig.select(
-        "doc_id",
-        "simhash",
-        F.expr(f"explode(array({', '.join(probe_cols)}))").alias("s"),
-    ).select("doc_id", "simhash", "s.seg_id", "s.seg_val")
-    return exact, probes
+def simhash_segments(sig: DataFrame, bits: int, hmax: int, r: int) -> tuple:
+    """(exact, probes) segment rows (doc_id, simhash, seg_id, seg_val) of a
+    (doc_id, simhash) frame, cut into ``hmax // (r + 1) + 1`` segments (the
+    last takes the remainder bits). ``exact`` holds each segment's value;
+    ``probes`` holds that value XOR every mask of at most ``r`` bits, and is
+    ``exact`` itself at r = 0.
+
+    Completeness: n_seg·(r + 1) > hmax, so two signatures within Hamming
+    distance hmax differ in at most r bits of some segment, where the
+    exact value of one meets a probe of the other on SEG_KEYS."""
+    n_seg = hmax // (r + 1) + 1
+    w = bits // n_seg
+    exact, probes = [], []
+    for sid in range(n_seg):
+        width = w if sid < n_seg - 1 else bits - sid * w
+        seg = f"(shiftright(simhash, {sid * w}) & {(1 << width) - 1})"
+        exact.append(f"named_struct('seg_id', {sid}, 'seg_val', {seg})")
+        probes += [
+            f"named_struct('seg_id', {sid}, 'seg_val', "
+            f"{seg} ^ {sum(1 << b for b in flip)})"
+            for k in range(1, r + 1)
+            for flip in itertools.combinations(range(width), k)
+        ]
+
+    def rows(structs: list) -> DataFrame:
+        return sig.select(
+            "doc_id",
+            "simhash",
+            F.expr(f"explode(array({', '.join(structs)}))").alias("s"),
+        ).select("doc_id", "simhash", "s.seg_id", "s.seg_val")
+
+    e = rows(exact)
+    return e, (rows(exact + probes) if r else e)
 
 
-def simhash_multiprobe_candidate_volume(
-    sig: DataFrame, bits: int = SIMHASH_BITS, hmax: int = HAMMING_MAX
-) -> int:
-    """Σ_key c_exact·c_probe for the multi-index probe join — the number
-    the operator guard compares against SIMHASH_CANDIDATE_BUDGET, exposed
-    for BENCH_SCALING's saturation-evidence block."""
-    exact, probes = _simhash_multiprobe_frames(sig, bits, hmax)
-    return join_candidate_volume(exact, ["seg_id", "seg_val"], probes)
-
-
-def simhash_multiprobe_pairs(
-    sig: DataFrame,
-    bits: int = SIMHASH_BITS,
-    hmax: int = HAMMING_MAX,
-    budget: int | None = SIMHASH_CANDIDATE_BUDGET,
-) -> DataFrame:
-    """All (doc_i, doc_j, hamming<=hmax) pairs via MULTI-INDEX PROBING
-    (Manku et al., WWW 2007 — the production SimHash lookup): split the
-    signature into ceil((hmax+1)/2) WIDE segments; by pigeonhole some
-    segment of a qualifying pair carries <= 1 differing bit, so joining
-    one side's EXACT segment values against the other side's probe set
-    (exact value + every 1-bit flip) on (seg_id, seg_val) is complete.
-
-    Same output as :func:`simhash_pigeonhole_pairs`, different cost
-    geometry: 0-error pigeonholing needs hmax+1 NARROW segments (8 bits
-    at 64/7), whose random-collision floor is Σ bucket² ≈ 8·n²/2⁹ — the
-    reason the round-9 text detector stayed out of the sf10 decade. With
-    1-bit correction the segments widen to 16 bits: the probe side fans
-    out ~4·17 rows per doc (linear, shuffled once) while candidate
-    volume drops to ~4·17·n²/2¹⁷ — 15× fewer bit_count evaluations, and
-    the exact-hamming filter runs BEFORE the pair dedup so the distinct
-    shuffle only ever sees true pairs. Measured: the full detector runs
-    sf10 (500k docs) in 18.2 s on local[16] (2,686 truth-sized pairs,
-    sf1→sf10 time ratio 3.3), which put dedup_simhash back INSIDE the
-    third scaling decade the narrow-segment candidate floor had excluded
-    it from.
-
-    VALIDITY BOUNDARY: segment selectivity assumes signature entropy. On
-    a degenerate corpus (near-identical documents ⇒ identical signatures
-    ⇒ one hot (seg_id, seg_val) bucket) the equi-join degrades toward
-    all-pairs×probe-fanout. When ``budget`` is set the EXACT join volume
-    Σ_key c_exact·c_probe is measured first (:func:`join_candidate_volume`
-    — the segment histograms are over the frames this plan builds anyway;
-    ``sig`` is cached so the signature aggregate is not paid twice) and
-    the detector refuses with :class:`CandidateVolumeError` instead of
-    filling the shuffle disk — the same refuse-predictably contract as
-    ``prefix_filtered_jaccard_pairs``.
-    """
-    if budget is not None:
-        # eager localCheckpoint, not cache(): the estimate and both join
-        # sides read the materialized signatures, and the blocks are
-        # released by the ContextCleaner when the frame is GC'd — a
-        # cache() here outlived every successful invocation in a
-        # long-lived session (round-10 ADVICE)
-        sig = sig.localCheckpoint(eager=True)
-    exact, probes = _simhash_multiprobe_frames(sig, bits, hmax)
-    if budget is not None:
-        est = join_candidate_volume(
-            exact, ["seg_id", "seg_val"], probes
-        )
-        if est > budget:
-            raise CandidateVolumeError(
-                "simhash_multiprobe_pairs",
-                est,
-                budget,
-                "the signature space is degenerate (near-identical "
-                "documents); run exact dedup first or raise the budget",
+def simhash_verified_pairs(sides: list, hmax: int) -> DataFrame:
+    """(doc_i, doc_j, hamming <= hmax) pairs from (a, b) segment-row frame
+    pairs: each ``a`` joined to its ``b`` on SEG_KEYS with
+    a.doc_id < b.doc_id, the exact Hamming filter, then ONE pair dedup (a
+    pair agreeing on several segments arrives once per agreement; the
+    filter runs first, so the dedup shuffle sees only true pairs)."""
+    cand = functools.reduce(
+        DataFrame.unionByName,
+        [
+            a.alias("a")
+            .join(b.alias("b"), SEG_KEYS)
+            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+            .select(
+                F.col("a.doc_id").alias("doc_i"),
+                F.col("b.doc_id").alias("doc_j"),
+                F.bit_count(
+                    F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                ).alias("hamming"),
             )
+            for a, b in sides
+        ],
+    )
     return (
-        exact.alias("a")
-        .join(probes.alias("b"), ["seg_id", "seg_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))),
-        )
-        # exact filter FIRST: the pair-dedup shuffle sees only true pairs
-        .filter(F.col("hamming") <= hmax)
-        .groupBy(
-            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
-        )
+        cand.filter(F.col("hamming") <= hmax)
+        .groupBy("doc_i", "doc_j")
         .agg(F.min("hamming").alias("hamming"))
     )
+
+
+def simhash_pairs(
+    sig: DataFrame,
+    bits: int,
+    hmax: int,
+    r: int,
+    key_cap: int | None = None,
+    budget: int | None = SIMHASH_CANDIDATE_BUDGET,
+) -> DataFrame:
+    """All (doc_i, doc_j, hamming <= hmax) pairs of a (doc_id, simhash)
+    frame without an all-pairs join: the multi-index scheme of Manku et
+    al. (WWW 2007) at per-segment probe radius ``r`` (simhash_segments;
+    r = 0 is the pigeonhole join). A wider probe buys wider segments: at
+    64 bits and hmax 7, r = 1 joins 4 segments of 16 bits (candidate floor
+    ~4·17·n²/2¹⁷) where r = 0 needs 8 of 8 bits (~8·n²/2⁹).
+
+    Cap: with ``key_cap``, segment keys holding more than ``key_cap`` exact
+    rows are dropped before the join, bounding candidates at
+    key_cap·n_seg·n. Survivors are verified exactly, so the output is the
+    subset of the exact pairs that some kept key emits.
+
+    Guard: with ``budget``, the volume of the join about to run,
+    Σ_key c_exact·c_probe (join_candidate_volume), is measured first, and a
+    degenerate signature space (near-identical inputs, one hot key) raises
+    CandidateVolumeError instead of filling the shuffle disk."""
+    if budget is not None:
+        # the estimate and both join sides read the signatures; an eager
+        # localCheckpoint is GC-released, unlike a cache()
+        sig = sig.localCheckpoint(eager=True)
+    exact, probes = simhash_segments(sig, bits, hmax, r)
+    if key_cap is not None:
+        exact = exact.localCheckpoint(eager=True)
+        ok = (
+            exact.groupBy(*SEG_KEYS)
+            .agg(F.count(F.lit(1)).alias("c"))
+            .filter(F.col("c") <= key_cap)
+            .select(*SEG_KEYS)
+        )
+        probes = (probes if r else exact).join(ok, SEG_KEYS, "left_semi")
+        exact = exact.join(ok, SEG_KEYS, "left_semi")
+    if budget is not None:
+        est = join_candidate_volume(exact, SEG_KEYS, probes if r else None)
+        if est > budget:
+            name, inputs = (
+                ("simhash_pigeonhole_pairs", "payloads")
+                if r == 0
+                else ("simhash_multiprobe_pairs", "documents")
+            )
+            raise CandidateVolumeError(
+                name,
+                est,
+                budget,
+                f"the signature space is degenerate (near-identical "
+                f"{inputs}); run exact dedup first or raise the budget",
+            )
+    return simhash_verified_pairs([(exact, probes)], hmax)
 
 
 @query
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs within Hamming distance <= HAMMING_MAX of the 64-bit
-    shingle-feature SimHash (see the SIMHASH_BITS note for the empirical
-    sizing: recall vs the exact shingle-Jaccard truth went 0.50 -> 0.89+
-    while emitted pairs fell 2500× when the round-8 32-bit unigram
-    signature was replaced).
-
-    Signature is one md5-per-posting map stage + one vote aggregate over
-    the same shingle postings every other text-dedup detector reads; pairs
-    come from the multi-index probe join (``simhash_multiprobe_pairs``,
-    16-bit segments + 1-bit-correction probes — never all-pairs, and the
-    candidate floor is n²/2¹⁷-scaled rather than the narrow-segment
-    pigeonhole's n²/2⁹), so output is truth-sized (the old unigram
-    signature emitted ~n²-dense pair lists: 64.6M rows at sf1) and the
-    detector stays inside the sf10 scaling decade.
-    """
-    sig = _simhash_signatures64(_doc_postings(spark, sf_dir))
-    return simhash_multiprobe_pairs(sig)
-
-
-def pigeonhole_widths(bits: int, hmax: int) -> list:
-    """The hmax+1 segment widths of a ``bits``-bit signature (pigeonhole:
-    <= hmax differing bits cannot touch every segment) — shared by the
-    batch joins, the capped twin, and the incremental streaming
-    detector so all three split signatures identically."""
-    n_seg = hmax + 1
-    widths = [bits // n_seg] * n_seg
-    widths[-1] += bits % n_seg
-    return widths
-
-
-def _simhash_pigeonhole_segs(sig: DataFrame, widths: list) -> DataFrame:
-    """The pigeonhole join's segment frame — one (doc_id, simhash,
-    seg_id, seg_val) row per segment. Shared by the join and its
-    candidate-volume estimate (operator guard + BENCH_SCALING
-    evidence)."""
-    seg_cols, off = [], 0
-    for sid, w in enumerate(widths):
-        seg_cols.append(
-            F.struct(
-                F.lit(sid).alias("seg_id"),
-                F.shiftright(F.col("simhash"), off)
-                .bitwiseAND(F.lit((1 << w) - 1))
-                .alias("seg_val"),
-            )
-        )
-        off += w
-    return sig.select(
-        "doc_id", "simhash", F.explode(F.array(*seg_cols)).alias("s")
-    ).select("doc_id", "simhash", "s.seg_id", "s.seg_val")
-
-
-def simhash_pigeonhole_candidate_volume(
-    sig: DataFrame, bits: int = SIMHASH_BITS, hmax: int = HAMMING_MAX
-) -> int:
-    """Σ_key c(k)² for the pigeonhole segment self-join — the number the
-    operator guard compares against SIMHASH_CANDIDATE_BUDGET, exposed
-    for BENCH_SCALING's saturation-evidence block."""
-    widths = pigeonhole_widths(bits, hmax)
-    return join_candidate_volume(
-        _simhash_pigeonhole_segs(sig, widths), ["seg_id", "seg_val"]
-    )
-
-
-def simhash_pigeonhole_pairs(
-    sig: DataFrame,
-    bits: int = SIMHASH_BITS,
-    hmax: int = HAMMING_MAX,
-    budget: int | None = SIMHASH_CANDIDATE_BUDGET,
-) -> DataFrame:
-    """All (doc_i, doc_j, hamming<=hmax) pairs from a (doc_id, simhash)
-    frame WITHOUT an all-pairs join — the 0-error pigeonhole form, used
-    by the media detector (multimodal_ops.media_simhash_pairs: 32 bits at
-    radius 2 → 3 segments of 10-11 bits, selectivity ≥ 2¹⁰). The 64-bit
-    radius-7 TEXT detector uses :func:`simhash_multiprobe_pairs` instead:
-    at hmax=7 this form's segments narrow to 8 bits and its candidate
-    floor grows 2⁸× worse than the 1-bit-correction probe join.
-
-    When ``budget`` is set, the segment self-join's EXACT output volume
-    Σ_key c(k)² is measured first (one aggregate over the segs frame the
-    plan builds anyway; ``sig`` cached so the signature aggregate is paid
-    once) and the detector refuses with :class:`CandidateVolumeError` on
-    a degenerate signature distribution — all signatures agreeing on one
-    segment value turns this join all-pairs, the same failure mode the
-    prefix join's saturation guard classifies."""
-    # Pigeonhole candidate generation: split the signature into
-    # HAMMING_MAX+1 segments — ≤ HAMMING_MAX differing bits cannot touch all
-    # segments, so every qualifying pair agrees on ≥ 1 segment. That turns
-    # the quadratic nested-loop into an equi-join on (segment_id, value),
-    # which Catalyst plans as a shuffled hash join: linear scan + one
-    # shuffle, candidates verified with the exact Hamming distance.
-    widths = pigeonhole_widths(bits, hmax)
-    if budget is not None:
-        # eager localCheckpoint, not cache(): estimate + join read the
-        # materialized signatures; blocks are GC-released (no cache left
-        # behind by successful runs — round-10 ADVICE)
-        sig = sig.localCheckpoint(eager=True)
-    segs = _simhash_pigeonhole_segs(sig, widths)
-    if budget is not None:
-        est = join_candidate_volume(segs, ["seg_id", "seg_val"])
-        if est > budget:
-            raise CandidateVolumeError(
-                "simhash_pigeonhole_pairs",
-                est,
-                budget,
-                "the signature space is degenerate (near-identical "
-                "payloads); run exact dedup first or raise the budget",
-            )
-    cand = (
-        segs.alias("a")
-        .join(segs.alias("b"), ["seg_id", "seg_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            "seg_id",
-            F.col("a.doc_id").alias("doc_i"),
-            F.col("b.doc_id").alias("doc_j"),
-            F.col("a.simhash").alias("sig_i"),
-            F.col("b.simhash").alias("sig_j"),
-        )
-    )
-
-    # A pair agreeing on several segments would emit once per agreement;
-    # instead of a distinct() (extra shuffle on the full candidate set), keep
-    # only the row from the FIRST agreeing segment — a pure filter computed
-    # from the signatures already on the row.
-    def seg_val(sig_col, sid):
-        return F.shiftright(sig_col, sum(widths[:sid])).bitwiseAND(
-            F.lit((1 << widths[sid]) - 1)
-        )
-
-    first_agree = F.lit(False)
-    for sid in range(len(widths)):
-        earlier_all_differ = F.lit(True)
-        for s in range(sid):
-            earlier_all_differ = earlier_all_differ & (
-                seg_val(F.col("sig_i"), s) != seg_val(F.col("sig_j"), s)
-            )
-        first_agree = first_agree | (
-            (F.col("seg_id") == sid) & earlier_all_differ
-        )
-    return (
-        cand.filter(first_agree)
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sig_i").bitwiseXOR(F.col("sig_j"))),
-        )
-        .filter(F.col("hamming") <= hmax)
-        .select("doc_i", "doc_j", "hamming")
-    )
-
-
-#: Per-(seg_id, seg_val) bucket occupancy cap for the DEGRADED-BUT-RUNNING
-#: pigeonhole twin. Σ over kept buckets of c² ≤ cap·Σc = cap·n_seg·n — a
-#: LINEAR candidate bound at any corpus size, so the capped form runs the
-#: decades where the exact form's guard refuses (round-10 verdict ask #2).
-SIMHASH_SEG_CAP = 256
-
-
-def simhash_pigeonhole_pairs_capped(
-    sig: DataFrame,
-    bits: int = SIMHASH_BITS,
-    hmax: int = HAMMING_MAX,
-    key_cap: int = SIMHASH_SEG_CAP,
-) -> DataFrame:
-    """Degraded-but-running twin of :func:`simhash_pigeonhole_pairs`
-    (round-10 verdict ask #2): segment buckets holding more than
-    ``key_cap`` signatures are DROPPED before the self-join, bounding
-    candidate volume at cap·n_seg·n (linear) instead of Σc² (quadratic
-    on a degenerate signature distribution) — so this form runs at sf10
-    where the exact form refuses with `CandidateVolumeError`, returning
-    the high-confidence subset (`dedup_ngram_pairs_capped` semantics).
-
-    What the cap costs: pairs whose ONLY agreeing segments are hot
-    buckets. Survivors are verified with the exact Hamming distance, so
-    precision is unchanged — every emitted pair is a true
-    hamming<=hmax pair and the capped output is a SUBSET of the exact
-    detector's (the recall twin measures the gap). Pair dedup is the
-    min-hamming aggregate (not the first-agree filter: a pair's first
-    agreeing segment may be a dropped hot bucket while a later rare
-    one emitted it)."""
-    widths = pigeonhole_widths(bits, hmax)
-    # checkpoint: the bucket histogram + both join sides read the segs
-    segs = _simhash_pigeonhole_segs(sig, widths).localCheckpoint(eager=True)
-    ok = (
-        segs.groupBy("seg_id", "seg_val")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .filter(F.col("c") <= key_cap)
-        .select("seg_id", "seg_val")
-    )
-    sr = segs.join(ok, ["seg_id", "seg_val"], "left_semi")
-    return (
-        sr.alias("a")
-        .join(sr.alias("b"), ["seg_id", "seg_val"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))),
-        )
-        .filter(F.col("hamming") <= hmax)
-        .groupBy(
-            F.col("a.doc_id").alias("doc_i"),
-            F.col("b.doc_id").alias("doc_j"),
-        )
-        .agg(F.min("hamming").alias("hamming"))
-    )
+    """Near-dup pairs within Hamming distance HAMMING_MAX of the 64-bit
+    SimHash of each doc's 3-gram shingles (sizing: the SIMHASH_BITS note),
+    from the r = 1 multi-index join — 16-bit segments, so the candidate
+    volume stays truth-sized through the sf10 decade."""
+    sig = simhash_sig(_doc_postings(spark, sf_dir), "g", SIMHASH_BITS)
+    return simhash_pairs(sig, SIMHASH_BITS, HAMMING_MAX, 1)
 
 
 def sql_pigeonhole_capped_pairs(
     sig_cte: str, bits: int, hmax: int, key_cap: int
 ) -> str:
-    """DuckDB twin of :func:`simhash_pigeonhole_pairs_capped` over a CTE
-    named ``sig_cte`` with (doc_id, simhash): unrolled segment VALUES,
-    bucket-occupancy filter, self-join, exact-Hamming verify, min-hamming
-    pair dedup."""
-    widths = pigeonhole_widths(bits, hmax)
-    offs, off = [], 0
-    for w in widths:
-        offs.append(off)
-        off += w
+    """DuckDB reference for ``simhash_pairs(r=0, key_cap=...)`` over a CTE
+    named ``sig_cte`` with (doc_id, simhash): hmax+1 segments from
+    unrolled VALUES (the last takes the remainder bits), bucket-occupancy
+    filter, self-join, exact-Hamming verify, min-hamming pair dedup."""
+    n_seg = hmax + 1
+    w = bits // n_seg
     vals = ", ".join(
-        f"({sid}, {offs[sid]}, {widths[sid]})" for sid in range(len(widths))
+        f"({sid}, {sid * w}, {w if sid < n_seg - 1 else bits - sid * w})"
+        for sid in range(n_seg)
     )
     return f"""
     seg AS (
@@ -1476,7 +1163,7 @@ def sql_pigeonhole_capped_pairs(
 
 
 def _sql_simhash64_sig() -> str:
-    """DuckDB twin of :func:`_simhash_signatures64` over the 3-gram shingle
+    """DuckDB twin of ``simhash_sig(..., 64)`` over the 3-gram shingle
     postings: one md5 per (doc, shingle), 64 per-bit vote sums, majority
     vote. Bit k's weight for k=63 is the BIGINT min (the sign bit) so the
     signature is the same two's-complement long Spark produces."""
@@ -3068,31 +2755,14 @@ def _text_slice_recall_oracle(det_sql: str, det_col: str) -> str:
 
 @query
 def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall of the SimHash near-dup detector (hamming <= HAMMING_MAX over
-    the 64-bit shingle-feature signatures) against the SAME exact
-    3-gram-Jaccard ground truth ``dedup_minhash_recall`` uses — the twin
-    that caught the round-8 design's weakness (32-bit UNIGRAM signatures
-    at radius 2: recall 0.50, 157k emitted pairs at sf0.1) and sized its
-    replacement.
-
-    Unlike MinHash-LSH (whose loss is banding: signatures that never
-    collide), the pigeonhole join is COMPLETE for hamming <= HAMMING_MAX,
-    so the measured loss here is purely representational: true near-dup
-    pairs whose signatures differ in more than HAMMING_MAX bits.
-
-    Runs on the deterministic hash-bucket slice of
-    ``dedup_minhash_recall_sampled`` (fixed ~RECALL_SAMPLE_TARGET_DOCS doc
-    budget at any corpus size — the quadratic truth stays constant across
-    the scaling decades); the sliced postings and the truth come from the
-    session memo shared by all three text recall twins
-    (``_recall_slice_shared`` — the signature is an aggregate over the
-    same shingle postings the truth self-joins; the unigram detector
-    needed its own tokenize pass).
-
-    Measured with the 64-bit shingle signature at radius 7: recall
-    0.89/1.00/0.89 at sf0.001/0.01/0.1 with 62 emitted pairs vs 70 true
-    on the sf0.1 slice — against 0.50 and 157,521 for the unigram design
-    on the same truth (the ask of round-8 verdict #1).
+    """Recall of ``dedup_simhash`` against the exact 3-gram-Jaccard truth
+    on the deterministic eval slice all text recall twins share
+    (``_recall_slice_shared``). The segment join is complete for hamming
+    <= HAMMING_MAX, so the loss measured is the signature's: true near-dup
+    pairs whose signatures differ in more bits. Measured: recall
+    0.89/1.00/0.89 at sf0.001/0.01/0.1, 62 emitted pairs against 70 true
+    on the sf0.1 slice (the round-8 32-bit unigram signature: 0.50 and
+    157,521).
     """
     posts, truth = _recall_slice_shared(spark, sf_dir)
     det = (
@@ -3100,7 +2770,13 @@ def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         # docs), so the volume guard would only add an estimate pass and
         # an internal sig cache this twin never releases; the guard has
         # its own trip tests and runs on the production detector
-        simhash_multiprobe_pairs(_simhash_signatures64(posts), budget=None)
+        simhash_pairs(
+            simhash_sig(posts, "g", SIMHASH_BITS),
+            SIMHASH_BITS,
+            HAMMING_MAX,
+            1,
+            budget=None,
+        )
         .select("doc_i", "doc_j")
         .cache()
     )

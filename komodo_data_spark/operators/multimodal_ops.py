@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.plans import exploded
 from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
 
@@ -494,37 +495,41 @@ MEDIA_HAMMING_MAX = 2
 MEDIA_SEG_CAP = 256
 
 
+def media_gram_postings(docs: DataFrame) -> DataFrame:
+    """Flat DISTINCT (doc_id, g) byte-4-gram postings of the non-empty
+    ``text`` payloads of ``docs`` (``_media_gram_toks``), spread over the
+    default parallelism so the per-posting md5 of the signature runs on
+    every core — the one feature base of every media SimHash signature
+    and of the media recall truth."""
+    d = docs.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+    return exploded(
+        d, F.array_distinct(_media_gram_toks()), "g", "doc_id"
+    ).repartition(docs.sparkSession.sparkContext.defaultParallelism)
+
+
 @shared_fit("media_simhash_sigs")
 def _media_sigs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-corpus (doc_id, simhash) frame-gram signature frame, ONE
-    vote aggregate per session: the expensive part of every media
-    SimHash query is the md5-per-gram exploded-vote aggregate over the
-    whole corpus, shared by three registry queries (exact pairs, capped
-    pairs, the capped-recall eval)."""
-    from komodo_data_spark.operators.dedup import _simhash_signatures
+    """Full-corpus (doc_id, simhash) media signatures, one vote aggregate
+    per session, shared by the exact pairs, the capped pairs and the
+    capped-recall eval."""
+    from komodo_data_spark.operators.dedup import simhash_sig
 
-    d = load_table(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    return _simhash_signatures(
-        d.withColumn("toks", _media_gram_toks()).filter(F.size("toks") > 0)
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    return simhash_sig(media_gram_postings(docs), "g", MEDIA_SIMHASH_BITS)
 
 
 @shared_fit("media_simhash_exact_pairs")
 def _media_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact pigeonhole pair list (doc_i, doc_j, hamming), ONE join
-    per session — read by ``media_simhash_pairs`` and as the truth side
-    of ``media_simhash_capped_recall`` (a real pipeline evaluates the
-    detection it ran, it does not re-detect for the eval). The guard
-    (candidate-volume budget) runs inside the fit, so whichever consumer
-    triggers the detection gets the registry refusal semantics."""
-    from komodo_data_spark.operators.dedup import simhash_pigeonhole_pairs
+    """The exact pair list (doc_i, doc_j, hamming), one guarded r = 0
+    segment join per session — ``media_simhash_pairs`` and the truth side
+    of ``media_simhash_capped_recall``."""
+    from komodo_data_spark.operators.dedup import simhash_pairs
 
-    return simhash_pigeonhole_pairs(
+    return simhash_pairs(
         _media_sigs_shared(spark, sf_dir),
-        bits=MEDIA_SIMHASH_BITS,
-        hmax=MEDIA_HAMMING_MAX,
+        MEDIA_SIMHASH_BITS,
+        MEDIA_HAMMING_MAX,
+        0,
     )
 
 
@@ -532,18 +537,19 @@ def _media_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _media_capped_pairs_shared(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The capped pigeonhole pair list, ONE join per session — read by
-    ``media_simhash_pairs_capped`` and as the detector side of
-    ``media_simhash_capped_recall``."""
-    from komodo_data_spark.operators.dedup import (
-        simhash_pigeonhole_pairs_capped,
-    )
+    """The capped pair list, one r = 0 segment join per session —
+    ``media_simhash_pairs_capped`` and the detector side of
+    ``media_simhash_capped_recall``. No volume guard: the cap bounds the
+    join at MEDIA_SEG_CAP·n_seg·n."""
+    from komodo_data_spark.operators.dedup import simhash_pairs
 
-    return simhash_pigeonhole_pairs_capped(
+    return simhash_pairs(
         _media_sigs_shared(spark, sf_dir),
-        bits=MEDIA_SIMHASH_BITS,
-        hmax=MEDIA_HAMMING_MAX,
+        MEDIA_SIMHASH_BITS,
+        MEDIA_HAMMING_MAX,
+        0,
         key_cap=MEDIA_SEG_CAP,
+        budget=None,
     )
 
 
@@ -556,20 +562,13 @@ def media_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAMPLED frames (same frame grid as ``media_frame_samples``: 64-byte
     chunks, every FRAME_STRIDEth), so payloads sharing most local byte
     content land within Hamming distance MEDIA_HAMMING_MAX even when bytes
-    shift or a few frames differ; pairs come from the shared pigeonhole
-    segment join (``dedup.simhash_pigeonhole_pairs``) — an equi-join on
-    (segment, value), never all-pairs.
+    shift or a few frames differ; pairs come from the r = 0 segment join
+    (``dedup.simhash_pairs``), never all-pairs.
 
-    Byte/char note: payloads here are UTF-8 of ASCII text (module
-    docstring), so byte 4-grams are exactly char 4-grams and the DuckDB
-    oracle mirrors the byte math with substr. Scale design: gram
-    extraction and the per-bit votes are one map stage over the scan
-    (the ``_simhash_signatures`` exploded-vote form, md5 computed once
-    per gram); the only shuffles are the vote aggregate and the
-    segment-key candidate join — the text detector's plan, pointed at
-    frame bytes. Signatures and the pair join are read through the
-    session memo (``_media_exact_pairs_shared``), so the detection runs
-    once however many of its three consumers execute in a session.
+    Payloads here are UTF-8 of ASCII text (module docstring), so byte
+    4-grams are char 4-grams and the DuckDB oracle mirrors the byte math
+    with substr. Signatures and pairs are read through the session memo
+    (``_media_exact_pairs_shared``).
     """
     return _media_exact_pairs_shared(spark, sf_dir)
 
@@ -640,16 +639,12 @@ def media_simhash_pairs_oracle() -> str:
 
 @query
 def media_simhash_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degraded-but-running twin of ``media_simhash_pairs`` (round-10
-    verdict ask #2): same 32-bit frame-gram signatures, pairs from the
-    CAPPED pigeonhole join (`dedup.simhash_pigeonhole_pairs_capped`) —
-    segment buckets above MEDIA_SEG_CAP occupancy are dropped, bounding
-    candidates at cap·3n (linear) where the exact form's guard refuses
-    at sf10 (3.5e9 estimated candidates on this corpus). Survivors are
-    verified with the exact Hamming distance, so the output is a subset
-    of the exact detector's; ``media_simhash_capped_recall`` measures
-    the gap. Signatures and the capped join are read through the session
-    memo (``_media_capped_pairs_shared``)."""
+    """Degraded-but-running twin of ``media_simhash_pairs``: the same
+    signatures through the segment join with buckets above MEDIA_SEG_CAP
+    dropped (``dedup.simhash_pairs(key_cap=...)``), so it runs at sf10
+    where the exact form's guard refuses (3.5e9 estimated candidates on
+    this corpus). The output is a subset of the exact detector's;
+    ``media_simhash_capped_recall`` measures the gap."""
     return _media_capped_pairs_shared(spark, sf_dir)
 
 
@@ -669,24 +664,12 @@ def media_simhash_pairs_capped_oracle() -> str:
 def media_simhash_capped_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """What the media segment-bucket cap costs, measured: the capped
-    detector's pairs are a subset of the exact pigeonhole detector's
-    (same signatures, same Hamming verify), so
-    recall = |capped| / |exact| prices the cap directly. An EVAL op —
-    it runs the exact form too, so it lives in the decades where the
-    exact form still runs; the capped detector alone is the sf10 path.
-    The cap-sweep artifact (scripts/recall_vs_cap.py →
-    RECALL_VS_CAP.json) extends this point to the full curve.
-
-    Cost: both pair sets are read through the session memo
-    (``_media_exact_pairs_shared`` / ``_media_capped_pairs_shared``) —
-    the eval scores the detections the registry queries already ran
-    instead of re-running signature aggregate and both joins itself; the
-    memoized frames are eager checkpoints, so the three recall counts
-    are output-sized scans. The exact side's candidate-volume guard runs
-    inside the shared fit, so this eval inherits the registry refusal
-    semantics (it previously skipped the guard; at any scale where the
-    guard trips, the exact join underneath was never runnable anyway)."""
+    """What the media segment-bucket cap costs: the capped pairs are a
+    subset of the exact pairs (same signatures, same verify), so recall =
+    |capped| / |exact| prices the cap. Both pair sets come from the
+    session memo, so the eval scores the detections the registry queries
+    ran, and inherits the exact side's volume guard.
+    ``scripts/recall_vs_cap.py`` sweeps the cap (RECALL_VS_CAP.json)."""
     from komodo_data_spark.operators.dedup import _detector_recall_counts
 
     truth = _media_exact_pairs_shared(spark, sf_dir).select("doc_i", "doc_j")
@@ -725,91 +708,59 @@ MEDIA_RECALL_TARGET_DOCS = 1250
 @query
 def media_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall of the media SimHash detector against exact byte-4-gram
-    Jaccard ground truth — the media counterpart of
-    ``dedup_simhash_recall``, closing the repo's symmetry rule (every
-    approximate detector ships with a measured recall; the two SimHash
-    detectors were the last without one). Truth and detector share ONE
-    gram definition (``_media_gram_toks``): the pigeonhole join is
-    complete at hamming <= MEDIA_HAMMING_MAX, so the measured loss is
-    purely the 32-bit signature's — true near-dup payloads whose gram
-    sets hash more than MEDIA_HAMMING_MAX bits apart.
+    Jaccard truth (MEDIA_JACCARD_Q) on the deterministic hash-bucket slice
+    of ~MEDIA_RECALL_TARGET_DOCS docs. Truth and detector read the same
+    gram postings (``media_gram_postings``) and the r = 0 segment join is
+    complete at hamming <= MEDIA_HAMMING_MAX, so the loss measured is the
+    32-bit signature's. The truth is prefix-filtered
+    (``dedup.prefix_filtered_jaccard_pairs``): byte 4-grams share hot grams
+    like ' the', so a plain postings self-join is Σdf²-quadratic.
 
-    Runs on the deterministic hash-bucket slice with the fixed
-    ~RECALL_SAMPLE_TARGET_DOCS budget (``dedup._recall_sample_buckets``),
-    so the exact truth stays CONSTANT across the scaling decades while
-    the detector side remains the linear production plan. The truth is
-    PREFIX-FILTERED (``dedup.prefix_filtered_jaccard_pairs``): byte
-    4-grams are dense — every doc shares hot grams like ' the' — so the
-    naive postings self-join is Σdf²-quadratic in the slice (measured
-    17.4 s at sf0.1); the prefix filter joins only each doc's rarest
-    grams and verifies candidates exactly (same 70 pairs, ~2 s). The
-    sliced gram frame is cached: truth postings and detector signatures
-    both read it (one gram-extraction pass, slice-sized).
-
-    Measured: recall 0.93/0.92/0.89 at sf0.001/0.01/0.1 with near-truth
-    pair volumes (e.g. 40 emitted vs 19 true on the sf0.1 slice) — the
-    dense byte-4-gram sets give the 32-bit signature far more stable
-    bits than the unigram text variant (cf. ``dedup_simhash_recall``'s
-    0.50).
+    Measured: recall 0.93/0.92/0.89 at sf0.001/0.01/0.1.
     """
     from komodo_data_spark.operators.dedup import (
         EVAL_SLICE_PARTITIONS,
         _detector_recall_counts,
         _recall_sample_buckets,
-        _simhash32_from_postings,
         prefix_filtered_jaccard_pairs,
-        simhash_pigeonhole_pairs,
+        simhash_pairs,
+        simhash_sig,
     )
     from komodo_data_spark.operators.pipeline_ops import _bucket_col
-    from komodo_data_spark.plans.shape import exploded
 
     n_docs = load_table(spark, sf_dir, "documents").count()
     gate = _bucket_col() < _recall_sample_buckets(
         n_docs, target=MEDIA_RECALL_TARGET_DOCS
     )
+    # spread the slice BEFORE the gram expression so extraction runs on
+    # every core, not the scan task
     d = (
         load_table(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
         .filter(gate)
-        # spread the slice BEFORE the gram expression so extraction runs
-        # on every core, not the scan task
         .repartition(spark.sparkContext.defaultParallelism)
-        .select("doc_id", _media_gram_toks().alias("toks"))
     )
-    # ONE gram-extraction pass, materialized EAGERLY: truth postings and
-    # detector signatures both read this frame, and under a lazy cache()
-    # the concurrent AQE stage jobs of the final action raced on the
-    # unpopulated cache and re-ran the extraction ~5x (measured: job-time
-    # sum 17.8 s vs 11.3 s wall; 5 near-identical 2-3 s jobs). Docs whose
-    # gram array is empty vanish in the explode exactly as the old
-    # size(toks) > 0 filter dropped them (they produce no postings and no
-    # votes, hence no signature row).
+    # eager: truth and signature both read the postings, and a lazy cache()
+    # raced the final action's concurrent stage jobs into re-running the
+    # extraction (measured ~5x); the slice is budget-fixed, so O(slice)
+    # tasks downstream (dedup.EVAL_SLICE_PARTITIONS)
     posts = (
-        exploded(d, F.array_distinct("toks"), "g", "doc_id")
-        # the slice is budget-fixed: O(slice) tasks downstream, not the
-        # corpus scan width the extraction above runs at (r13; see
-        # dedup.EVAL_SLICE_PARTITIONS) — the 8-vs-32-core ratio of 0.65
-        # on this eval was 32-task waves over ~1250 docs of postings
+        media_gram_postings(d)
         .repartition(EVAL_SLICE_PARTITIONS)
         .localCheckpoint(eager=True)
     )
+    # budget=None on both sides: the eval slice is fixed-size, so a guard
+    # would only add an estimate job per invocation
     truth = (
-        # budget=None: the eval slice is fixed-size (~MEDIA_RECALL_TARGET
-        # docs), so the saturation guard would only add an eager prefix
-        # checkpoint and an estimate job per invocation — the same
-        # fixed-slice convention as dedup_simhash_recall's detector side;
-        # the guard runs (and is evidence-tested) on the production-path
-        # consumers of the prefix join
         prefix_filtered_jaccard_pairs(posts, *MEDIA_JACCARD_Q, budget=None)
         .select("doc_i", "doc_j")
         .cache()
     )
     det = (
-        # budget=None: fixed-size eval slice — see dedup_simhash_recall
-        simhash_pigeonhole_pairs(
-            _simhash32_from_postings(posts, "g"),
-            bits=MEDIA_SIMHASH_BITS,
-            hmax=MEDIA_HAMMING_MAX,
+        simhash_pairs(
+            simhash_sig(posts, "g", MEDIA_SIMHASH_BITS),
+            MEDIA_SIMHASH_BITS,
+            MEDIA_HAMMING_MAX,
+            0,
             budget=None,
         )
         .select("doc_i", "doc_j")

@@ -113,7 +113,7 @@ def _collect(spark, data, keyed, rows) -> dict[int, pd.DataFrame]:
     Each slice keeps the dtypes the request's own ``toPandas()`` gives: an
     integer column that some other request's NULL widened to float is
     integral again."""
-    result = keyed(data, analytics.request_frame(spark, keyed, rows))
+    result = keyed(data, rows)
     pdf = result.toPandas()
     ints = {
         f.name: to_arrow_type(f.dataType).to_pandas_dtype()

@@ -11,14 +11,15 @@ persistent segment-key store whose per-key occupancy GROWS with
 history; per micro-batch:
 
 1. 32-bit SimHash signatures of the batch over the shared media byte
-   4-gram features (``_media_gram_toks`` + ``_simhash_signatures`` —
+   4-gram postings (``media_gram_postings`` + ``dedup.simhash_sig`` —
    one feature definition with the batch detector, no drift),
 2. the batch's (doc_id, simhash, seg_id, seg_val) segment rows
-   (``pigeonhole_widths`` — the same signature split as batch),
+   (``dedup.simhash_segments`` at r = 0 — the batch detector's split),
 3. occupancy per key over store + batch; keys above ``key_cap`` are
    SKIPPED for candidate generation this epoch,
-4. candidates = batch×batch plus batch×store on the kept keys, each
-   verified with the exact Hamming distance before emission,
+4. candidates = batch×batch plus batch×store on the kept keys, through
+   the batch detector's verify and pair dedup
+   (``dedup.simhash_verified_pairs``),
 5. the batch's segment rows append to the store UNFILTERED (occupancy
    must keep accumulating for hot buckets even while they are skipped).
 
@@ -53,15 +54,16 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from komodo_data_spark.operators.dedup import (
-    _simhash_pigeonhole_segs,
-    _simhash_signatures,
-    pigeonhole_widths,
+    SEG_KEYS,
+    simhash_segments,
+    simhash_sig,
+    simhash_verified_pairs,
 )
 from komodo_data_spark.operators.multimodal_ops import (
     MEDIA_HAMMING_MAX,
     MEDIA_SEG_CAP,
     MEDIA_SIMHASH_BITS,
-    _media_gram_toks,
+    media_gram_postings,
 )
 from komodo_data_spark.streaming.stores import (
     compact_distinct_store,
@@ -74,25 +76,6 @@ from komodo_data_spark.streaming.stores import (
 SEG_STORE_COLS = ("doc_id", "simhash", "seg_id", "seg_val")
 
 
-def _verified_pairs(left: DataFrame, right: DataFrame, hmax: int) -> DataFrame:
-    """Exact-Hamming-verified ordered pairs from two segment frames
-    joined on the segment key (both carry simhash on the row)."""
-    return (
-        left.alias("a")
-        .join(right.alias("b"), ["seg_id", "seg_val"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_i"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_j"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= hmax)
-        .distinct()
-    )
-
-
 def detect_batch(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -102,13 +85,11 @@ def detect_batch(
     key_cap: int = MEDIA_SEG_CAP,
 ) -> None:
     """Process one micro-batch of documents (doc_id, text)."""
-    d = batch_df.filter(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    ).withColumn("toks", _media_gram_toks())
-    sig = _simhash_signatures(d.filter(F.size("toks") > 0))
-    segs = _simhash_pigeonhole_segs(
-        sig, pigeonhole_widths(MEDIA_SIMHASH_BITS, MEDIA_HAMMING_MAX)
-    ).localCheckpoint()  # occupancy count + both joins + store write
+    sig = simhash_sig(
+        media_gram_postings(batch_df), "g", MEDIA_SIMHASH_BITS
+    )
+    segs, _ = simhash_segments(sig, MEDIA_SIMHASH_BITS, MEDIA_HAMMING_MAX, 0)
+    segs = segs.localCheckpoint()  # occupancy count + both joins + store write
     # None = no history yet; any other read failure raises so the epoch
     # retries instead of silently dropping new-vs-history pairs.
     store = read_store(spark, store_path)
@@ -124,26 +105,23 @@ def detect_batch(
         store = store.filter(F.col("epoch_id") < int(epoch_id)).select(
             *SEG_STORE_COLS
         )
-    occ_src = (
-        segs.select("seg_id", "seg_val")
-        if store is None
-        else segs.select("seg_id", "seg_val").unionByName(
-            store.select("seg_id", "seg_val")
-        )
-    )
+    occ_src = segs.select(*SEG_KEYS)
+    if store is not None:
+        occ_src = occ_src.unionByName(store.select(*SEG_KEYS))
     ok = (
-        occ_src.groupBy("seg_id", "seg_val")
+        occ_src.groupBy(*SEG_KEYS)
         .agg(F.count(F.lit(1)).alias("c"))
         .filter(F.col("c") <= key_cap)
-        .select("seg_id", "seg_val")
+        .select(*SEG_KEYS)
     )
-    segs_ok = segs.join(ok, ["seg_id", "seg_val"], "left_semi")
-    cand = _verified_pairs(segs_ok, segs_ok, MEDIA_HAMMING_MAX)
+    segs_ok = segs.join(ok, SEG_KEYS, "left_semi")
+    sides = [(segs_ok, segs_ok)]
     if store is not None:
-        store_ok = store.join(ok, ["seg_id", "seg_val"], "left_semi")
-        cand = cand.union(
-            _verified_pairs(segs_ok, store_ok, MEDIA_HAMMING_MAX)
-        ).distinct()
+        # history pairs in both id orders: simhash_verified_pairs keeps
+        # doc_i < doc_j per side
+        store_ok = store.join(ok, SEG_KEYS, "left_semi")
+        sides += [(segs_ok, store_ok), (store_ok, segs_ok)]
+    cand = simhash_verified_pairs(sides, MEDIA_HAMMING_MAX)
     epoch = F.lit(int(epoch_id))
     overwrite_partitions(cand.withColumn("epoch_id", epoch), pairs_path, "epoch_id")
     overwrite_partitions(

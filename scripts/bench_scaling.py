@@ -106,7 +106,7 @@ NORM_RATIO_GATE = 10.0
 #: estimates — which must stay decade-flat; on healthy data it strictly
 #: DEFLATES (per-candidate cost amortizes). The volumes are measured by
 #: the same one-aggregate estimate the guard runs
-#: (dedup.prefix_candidate_volume) and recorded next to the times.
+#: (dedup.join_candidate_volume) and recorded next to the times.
 CANDIDATE_COST_BY_DATA = {
     "dedup_ngram_pairs_prefix": "candidate volume (Σ df_prefix², the"
     " guard's own estimate) grows ~126x per decade on the saturated"
@@ -443,8 +443,8 @@ def main() -> int:
         from komodo_data_spark.operators import dedup
 
         posts = dedup._doc_postings(spark, SF_XXL).cache()
-        est = dedup.prefix_candidate_volume(
-            dedup._prefix_postings(posts, 7, 10)
+        est = dedup.join_candidate_volume(
+            dedup._prefix_postings(posts, 7, 10), ["g"]
         )
         saturation_evidence["dedup_ngram_pairs_prefix"] = {
             "sf10_candidate_volume_estimate": est,
@@ -461,10 +461,13 @@ def main() -> int:
         # boundary sits).
         from komodo_data_spark.operators import dedup
 
-        sig = dedup._simhash_signatures64(
-            dedup._doc_postings(spark, SF_XXL)
+        sig = dedup.simhash_sig(
+            dedup._doc_postings(spark, SF_XXL), "g", dedup.SIMHASH_BITS
         ).localCheckpoint(eager=True)
-        est_sh = dedup.simhash_multiprobe_candidate_volume(sig)
+        exact, probes = dedup.simhash_segments(
+            sig, dedup.SIMHASH_BITS, dedup.HAMMING_MAX, 1
+        )
+        est_sh = dedup.join_candidate_volume(exact, dedup.SEG_KEYS, probes)
         saturation_evidence["dedup_simhash"] = {
             "sf10_candidate_volume_estimate": est_sh,
             "guard_budget": dedup.SIMHASH_CANDIDATE_BUDGET,
@@ -478,17 +481,16 @@ def main() -> int:
         }
         from komodo_data_spark.operators import multimodal_ops as mm
         from komodo_data_spark.sources.tables import load_table
-        from pyspark.sql import functions as F
 
-        media_sig = dedup._simhash_signatures(
-            load_table(spark, SF_XXL, "documents")
-            .filter(F.col("text").isNotNull() & (F.length("text") > 0))
-            .withColumn("toks", mm._media_gram_toks())
-            .filter(F.size("toks") > 0)
+        media_sig = dedup.simhash_sig(
+            mm.media_gram_postings(load_table(spark, SF_XXL, "documents")),
+            "g",
+            mm.MEDIA_SIMHASH_BITS,
         )
-        est_mp = dedup.simhash_pigeonhole_candidate_volume(
-            media_sig, bits=mm.MEDIA_SIMHASH_BITS, hmax=mm.MEDIA_HAMMING_MAX
+        segs, _ = dedup.simhash_segments(
+            media_sig, mm.MEDIA_SIMHASH_BITS, mm.MEDIA_HAMMING_MAX, 0
         )
+        est_mp = dedup.join_candidate_volume(segs, dedup.SEG_KEYS)
         saturation_evidence["media_simhash_pairs"] = {
             "sf10_candidate_volume_estimate": est_mp,
             "guard_budget": dedup.SIMHASH_CANDIDATE_BUDGET,
@@ -504,8 +506,8 @@ def main() -> int:
 
         for sfd, key in ((SF_LARGE, "sf0.1"), (SF_XL, "sf1")):
             posts = _dd._doc_postings(spark, sfd).cache()
-            cand_vol[key] = _dd.prefix_candidate_volume(
-                _dd._prefix_postings(posts, 7, 10)
+            cand_vol[key] = _dd.join_candidate_volume(
+                _dd._prefix_postings(posts, 7, 10), ["g"]
             )
             posts.unpersist()
         spark.catalog.clearCache()

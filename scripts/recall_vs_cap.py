@@ -35,19 +35,18 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     from komodo_data_spark.operators.dedup import (
-        _simhash_signatures,
         dedup_fuzzy_prefix,
         dedup_fuzzy_prefix_capped,
-        simhash_pigeonhole_pairs_capped,
+        simhash_pairs,
+        simhash_sig,
     )
     from komodo_data_spark.operators.multimodal_ops import (
         MEDIA_HAMMING_MAX,
         MEDIA_SIMHASH_BITS,
-        _media_gram_toks,
+        media_gram_postings,
         media_simhash_pairs,
     )
     from komodo_data_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
 
     out: dict = {"sf_dir": sf_dir, "caps": CAPS, "detectors": {}}
 
@@ -71,26 +70,22 @@ def main() -> int:
         "sweep": rows,
     }
 
-    # ---- media pigeonhole ----
+    # ---- media pigeonhole (r = 0 segment join) ----
     def media_sig():
-        d = load_table(spark, sf_dir, "documents").filter(
-            F.col("text").isNotNull() & (F.length("text") > 0)
-        )
-        return _simhash_signatures(
-            d.withColumn("toks", _media_gram_toks()).filter(
-                F.size("toks") > 0
-            )
-        )
+        docs = load_table(spark, sf_dir, "documents")
+        return simhash_sig(media_gram_postings(docs), "g", MEDIA_SIMHASH_BITS)
 
     n_exact_m = media_simhash_pairs(spark, sf_dir).count()
     rows = []
     for cap in CAPS:
         t0 = time.time()
-        n = simhash_pigeonhole_pairs_capped(
+        n = simhash_pairs(
             media_sig(),
-            bits=MEDIA_SIMHASH_BITS,
-            hmax=MEDIA_HAMMING_MAX,
+            MEDIA_SIMHASH_BITS,
+            MEDIA_HAMMING_MAX,
+            0,
             key_cap=cap,
+            budget=None,
         ).count()
         rows.append(
             {

@@ -302,6 +302,55 @@ def test_query_declared_twice_raises():
     assert fn.__module__.endswith("operators.relational")
 
 
+def test_script_imports_resolve():
+    """Every name the scripts (scripts/*.py and the repo-root *.py) import
+    from the package, and every attribute they read through an imported
+    package module, exists: a deleted or renamed helper fails here, not on
+    the script's next run. Parses the scripts; runs none of them."""
+    import ast
+    import importlib
+    import inspect
+    import pathlib
+
+    def resolve(module: str, name: str):
+        mod = importlib.import_module(module)
+        if hasattr(mod, name):
+            return getattr(mod, name)
+        return importlib.import_module(f"{module}.{name}")
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    missing = []
+    for path in sorted([*root.glob("*.py"), *root.glob("scripts/*.py")]):
+        tree = ast.parse(path.read_text())
+        modules = {}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (
+                node.module or ""
+            ).startswith("komodo_data_spark"):
+                for a in node.names:
+                    try:
+                        obj = resolve(node.module, a.name)
+                    except ImportError:
+                        missing.append(f"{path.name}:{node.lineno} {a.name}")
+                        continue
+                    if inspect.ismodule(obj):
+                        modules[a.asname or a.name] = obj
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.name.startswith("komodo_data_spark.") and a.asname:
+                        modules[a.asname] = importlib.import_module(a.name)
+        missing += [
+            f"{path.name}:{node.lineno} {node.value.id}.{node.attr}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and isinstance(node.ctx, ast.Load)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in modules
+            and not hasattr(modules[node.value.id], node.attr)
+        ]
+    assert not missing, missing
+
+
 def test_avro_round_trip_if_available(spark, sf_dir, tmp_path):
     """Environment-gated: spark-avro is an external module not on this
     container's classpath; where it IS deployed, the same single-file

@@ -82,6 +82,19 @@ def test_shingle_minhash_simhash_match_python(spark, batch):
         assert r["mh"] == py_minhash(py_shingles(toks), 7)
         assert r["simh"] == py_simhash(toks, 16)
 
+    # the batch SimHash kernel at 32 bits over the same distinct tokens;
+    # a doc without tokens has no signature row
+    from komodo_data_spark.operators.dedup import simhash_sig
+    from komodo_data_spark.plans import exploded
+
+    docs = spark.createDataFrame(list(enumerate(batch)), "doc_id long, text string")
+    posts = exploded(docs, F.array_distinct(TF.tokens()), "t", "doc_id")
+    got = {r["doc_id"]: r["simhash"] for r in simhash_sig(posts, "t", 32).collect()}
+    want = {
+        i: py_simhash(py_tokens(t), 32) for i, t in enumerate(batch) if py_tokens(t)
+    }
+    assert got == want
+
 
 @given(st.lists(texts, min_size=1, max_size=8))
 @settings(

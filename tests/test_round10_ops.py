@@ -27,12 +27,12 @@ def _degenerate_sigs(spark, n=100, value=0x0F0F0F0F):
 def test_simhash_pigeonhole_guard_trips(spark):
     from komodo_data_spark.operators.dedup import (
         CandidateVolumeError,
-        simhash_pigeonhole_pairs,
+        simhash_pairs,
     )
 
     sig = _degenerate_sigs(spark)
     with pytest.raises(CandidateVolumeError) as exc:
-        simhash_pigeonhole_pairs(sig, bits=32, hmax=2, budget=1000)
+        simhash_pairs(sig, bits=32, hmax=2, r=0, budget=1000)
     # 3 segments x 100^2 identical-signature collisions
     assert exc.value.estimate == 3 * 100 * 100
     assert exc.value.budget == 1000
@@ -42,12 +42,12 @@ def test_simhash_pigeonhole_guard_trips(spark):
 def test_simhash_multiprobe_guard_trips(spark):
     from komodo_data_spark.operators.dedup import (
         CandidateVolumeError,
-        simhash_multiprobe_pairs,
+        simhash_pairs,
     )
 
     sig = _degenerate_sigs(spark)
     with pytest.raises(CandidateVolumeError) as exc:
-        simhash_multiprobe_pairs(sig, bits=64, hmax=7, budget=1000)
+        simhash_pairs(sig, bits=64, hmax=7, r=1, budget=1000)
     # 4 segments; per segment the exact bucket (100 rows) meets the
     # identical exact-probe bucket (100 rows) plus nothing from the flip
     # probes (they all land on values with no exact-side rows)
@@ -59,23 +59,21 @@ def test_simhash_guards_stay_open_and_match_unguarded(spark):
     """Diverse signatures sail through the default budget, and the guarded
     result equals budget=None exactly (the guard is an estimate + refusal,
     never a semantics change)."""
-    from komodo_data_spark.operators.dedup import (
-        simhash_multiprobe_pairs,
-        simhash_pigeonhole_pairs,
-    )
+    from komodo_data_spark.operators.dedup import simhash_pairs
 
     rows = [(i, (i * 0x9E3779B97F4A7C15) & 0x7FFFFFFFFFFFFFFF)
             for i in range(50)]
     # plant one near pair: doc 1000/1001 differ in exactly 1 bit
     rows += [(1000, 0x123456789ABCDEF0), (1001, 0x123456789ABCDEF1)]
     sig = spark.createDataFrame(rows, "doc_id long, simhash long")
-    for fn in (simhash_pigeonhole_pairs, simhash_multiprobe_pairs):
+    for radius in (0, 1):
         guarded = sorted(
-            (r["doc_i"], r["doc_j"], r["hamming"]) for r in fn(sig).collect()
+            (r["doc_i"], r["doc_j"], r["hamming"])
+            for r in simhash_pairs(sig, 64, 7, radius).collect()
         )
         open_ = sorted(
             (r["doc_i"], r["doc_j"], r["hamming"])
-            for r in fn(sig, budget=None).collect()
+            for r in simhash_pairs(sig, 64, 7, radius, budget=None).collect()
         )
         assert guarded == open_
         assert (1000, 1001, 1) in guarded

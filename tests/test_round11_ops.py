@@ -145,8 +145,7 @@ def test_pigeonhole_capped_runs_where_exact_refuses(spark):
     is one hot key — instead of melting down."""
     from komodo_data_spark.operators.dedup import (
         CandidateVolumeError,
-        simhash_pigeonhole_pairs,
-        simhash_pigeonhole_pairs_capped,
+        simhash_pairs,
     )
 
     sig = spark.createDataFrame(
@@ -154,9 +153,9 @@ def test_pigeonhole_capped_runs_where_exact_refuses(spark):
         "doc_id long, simhash long",
     )
     with pytest.raises(CandidateVolumeError):
-        simhash_pigeonhole_pairs(sig, bits=32, hmax=2, budget=1000)
-    out = simhash_pigeonhole_pairs_capped(
-        sig, bits=32, hmax=2, key_cap=50
+        simhash_pairs(sig, bits=32, hmax=2, r=0, budget=1000)
+    out = simhash_pairs(
+        sig, bits=32, hmax=2, r=0, key_cap=50, budget=None
     ).collect()
     assert out == []
 
@@ -164,26 +163,23 @@ def test_pigeonhole_capped_runs_where_exact_refuses(spark):
 def test_pigeonhole_capped_subset_and_equal_below_cap(spark):
     """Below the cap the capped twin equals the exact form exactly; the
     capped output is always a subset."""
-    from komodo_data_spark.operators.dedup import (
-        simhash_pigeonhole_pairs,
-        simhash_pigeonhole_pairs_capped,
-    )
+    from komodo_data_spark.operators.dedup import simhash_pairs
 
     rows = [(i, 0b1010 << (i % 3)) for i in range(12)]
     sig = spark.createDataFrame(rows, "doc_id long, simhash long")
     exact = sorted(
         map(
             tuple,
-            simhash_pigeonhole_pairs(
-                sig, bits=32, hmax=2, budget=None
+            simhash_pairs(
+                sig, bits=32, hmax=2, r=0, budget=None
             ).collect(),
         )
     )
     capped = sorted(
         map(
             tuple,
-            simhash_pigeonhole_pairs_capped(
-                sig, bits=32, hmax=2, key_cap=1000
+            simhash_pairs(
+                sig, bits=32, hmax=2, r=0, key_cap=1000, budget=None
             ).collect(),
         )
     )

@@ -22,12 +22,12 @@ def test_prefix_saturation_guard_trips(spark):
     from komodo_data_spark.operators.dedup import (
         VocabularySaturationError,
         _prefix_postings,
-        prefix_candidate_volume,
+        join_candidate_volume,
         prefix_filtered_jaccard_pairs,
     )
 
     posts = _saturated_posts(spark)
-    est = prefix_candidate_volume(_prefix_postings(posts, 7, 10))
+    est = join_candidate_volume(_prefix_postings(posts, 7, 10), ["g"])
     assert est > 1000  # genuinely saturated: ~hot-df² candidate volume
     with pytest.raises(VocabularySaturationError) as exc:
         prefix_filtered_jaccard_pairs(posts, 7, 10, budget=1000)
@@ -227,13 +227,13 @@ def test_simhash64_signature_matches_python(spark):
     the DuckDB oracle relies on."""
     import hashlib
 
-    from komodo_data_spark.operators.dedup import _simhash_signatures64
+    from komodo_data_spark.operators.dedup import simhash_sig
 
     features = [f"tok{i}" for i in range(9)]
     posts = spark.createDataFrame(
         [(1, g) for g in features], ["doc_id", "g"]
     )
-    got = _simhash_signatures64(posts).collect()[0]["simhash"]
+    got = simhash_sig(posts, "g", 64).collect()[0]["simhash"]
 
     votes = [0] * 64
     for g in features:
@@ -254,7 +254,7 @@ def test_simhash_pigeonhole_complete_at_radius7(spark):
     """Pairs within Hamming<=7 of planted 64-bit signatures must ALL be
     found by the 8x8-bit pigeonhole join (completeness is structural:
     <=7 differing bits cannot touch all 8 segments)."""
-    from komodo_data_spark.operators.dedup import simhash_pigeonhole_pairs
+    from komodo_data_spark.operators.dedup import simhash_pairs
 
     base = 0x0123_4567_89AB_CDEF
     sigs = [
@@ -270,7 +270,7 @@ def test_simhash_pigeonhole_complete_at_radius7(spark):
     sig = spark.createDataFrame(rows, "doc_id long, simhash long")
     got = {
         (r["doc_i"], r["doc_j"]): r["hamming"]
-        for r in simhash_pigeonhole_pairs(sig).collect()
+        for r in simhash_pairs(sig, 64, 7, 0).collect()
     }
     # exact expectations, computed from the planted signatures
     import itertools
@@ -285,11 +285,9 @@ def test_simhash_pigeonhole_complete_at_radius7(spark):
 
     # the multi-index probe join (the production text path: 16-bit
     # segments + 1-bit-correction probes) must find the SAME pairs
-    from komodo_data_spark.operators.dedup import simhash_multiprobe_pairs
-
     got_mp = {
         (r["doc_i"], r["doc_j"]): r["hamming"]
-        for r in simhash_multiprobe_pairs(sig).collect()
+        for r in simhash_pairs(sig, 64, 7, 1).collect()
     }
     assert got_mp == want
 

@@ -2973,13 +2973,12 @@ def test_incremental_simhash_hot_bucket_is_monotone(spark, tmp_path):
     never retracted by a template later going viral (whereas the batch
     capped detector over the final corpus returns nothing: its global
     occupancy is over the cap)."""
-    from komodo_data_spark.operators.multimodal_ops import _media_gram_toks
-    from komodo_data_spark.operators.dedup import _simhash_signatures
+    from komodo_data_spark.operators.multimodal_ops import media_gram_postings
+    from komodo_data_spark.operators.dedup import simhash_sig
     from komodo_data_spark.streaming.simhash_incremental import (
         detect_batch,
         pairs_from_store,
     )
-    from pyspark.sql import functions as F
 
     text = "the same viral template payload body repeated " * 4
     store = str(tmp_path / "seg_store")
@@ -3000,23 +2999,21 @@ def test_incremental_simhash_hot_bucket_is_monotone(spark, tmp_path):
     }
     assert got == {(1, 2, 0)}
     # and the batch capped detector over the SAME final corpus is empty
-    from komodo_data_spark.operators.dedup import (
-        simhash_pigeonhole_pairs_capped,
-    )
+    from komodo_data_spark.operators.dedup import simhash_pairs
     from komodo_data_spark.operators.multimodal_ops import (
         MEDIA_HAMMING_MAX,
         MEDIA_SIMHASH_BITS,
     )
 
-    all_docs = batch([1, 2] + list(range(100, 110))).withColumn(
-        "toks", _media_gram_toks()
-    )
+    all_docs = batch([1, 2] + list(range(100, 110)))
     assert (
-        simhash_pigeonhole_pairs_capped(
-            _simhash_signatures(all_docs),
+        simhash_pairs(
+            simhash_sig(media_gram_postings(all_docs), "g", MEDIA_SIMHASH_BITS),
             bits=MEDIA_SIMHASH_BITS,
             hmax=MEDIA_HAMMING_MAX,
+            r=0,
             key_cap=4,
+            budget=None,
         ).count()
         == 0
     )
