@@ -256,28 +256,12 @@ def main() -> int:
         "attempts": attempts,
         "queries": timings,
     }
+    # One mutable per-query map, overwritten every run; a run worth keeping
+    # is archived by copying it under a new name, never by this script.
     repo = os.path.dirname(os.path.abspath(__file__))
-    # The mutable copy is overwritten every run; the per-round archive
-    # (BENCH_DETAIL_r{N}.json, N inferred from the driver's BENCH_r*.json
-    # history) survives, so round-over-round deltas can always cover the
-    # FULL query set (round-3 verdict: r2's numbers survived only in the
-    # driver's 2000-char tail, limiting the comparison to 63 of 130).
-    import glob
-    import re as _re
-
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "BENCH_r*.json"))
-        if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
-    ]
-    this_round = (max(rounds) + 1) if rounds else 1
-    for path in (
-        os.path.join(repo, "BENCH_DETAIL.json"),
-        os.path.join(repo, f"BENCH_DETAIL_r{this_round:02d}.json"),
-    ):
-        with open(path, "w") as fh:
-            json.dump(detail, fh, indent=1, sort_keys=True)
-            fh.write("\n")
+    with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as fh:
+        json.dump(detail, fh, indent=1, sort_keys=True)
+        fh.write("\n")
 
     # ONE compact line (driver keeps only the output tail): totals + the
     # top-10 slowest queries; full map in BENCH_DETAIL.json.

@@ -19,6 +19,18 @@ carry no dedup signal) and salt residual skew; AQE skew-join handles the
 tail. SimHash (4) is cheaper still: signature is map-side, and near-dup
 lookup is b-bit multi-probe on a clustered signature column. All signature
 computations are pure Catalyst expressions — no UDFs, fully codegen'd.
+
+Every shingle-set pair detector (n-gram prefix and df-capped, MinHash,
+OPH, containment, their recall twins, the incremental band store) is
+*candidates → one verify*. Candidate generation is the detector: a band
+or rare-gram equi-join (``_key_pairs`` / ``_band_candidates``) or the
+prefix join. The verify is shared: ``_verify_jaccard`` counts each
+candidate's common shingles with one ``array_intersect`` and returns
+(doc_i, doc_j, c, n_i, n_j). Jaccard callers accept in integers
+(``_jaccard_accept``); containment reads c/n_i and c/n_j. The exact
+all-pairs truth is one postings self-join (``_truth_pairs_from``), and
+every recall twin scores its pair sets with one tail
+(``_detector_recall_counts``).
 """
 
 from __future__ import annotations
@@ -48,7 +60,10 @@ MINHASH_K = 12
 LSH_BANDS = 4
 LSH_ROWS = 3
 
-JACCARD_THRESHOLD = 0.7
+#: Shingle-Jaccard near-dup threshold as an exact rational (num, den): the
+#: verify accepts c·den >= num·|A ∪ B| in integers.
+JACCARD_Q = (7, 10)
+JACCARD_THRESHOLD = JACCARD_Q[0] / JACCARD_Q[1]
 COSINE_THRESHOLD = 0.45
 
 #: Text SimHash geometry: 64-bit signatures over the doc's DISTINCT 3-gram
@@ -120,43 +135,57 @@ def _doc_postings(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     return exploded(_doc_shingles(spark, sf_dir, n), F.col("sh"), "g", "doc_id")
 
 
-def _verify_jaccard(
-    posts: DataFrame, cand: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """Exact Jaccard for candidate (doc_i, doc_j) pairs from flat postings.
+def _doc_sizes(posts: DataFrame) -> DataFrame:
+    """(doc_id, n): each doc's set size from flat DISTINCT postings."""
+    return posts.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
 
-    common(i,j) via a postings equi-join restricted to candidate docs, set
-    sizes via one tiny per-doc aggregate; Jaccard = c / (|A|+|B|-c). No
-    array columns cross a shuffle — at scale the arrays are the wide thing,
-    the postings are the narrow thing. Pairs with zero common shingles drop
-    out of the count join, which is correct (their Jaccard is 0).
-    """
-    sizes = posts.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        posts.select(F.col("doc_id").alias("doc_i"), "g")
-        .join(cand, "doc_i")
-        .join(posts.select(F.col("doc_id").alias("doc_j"), "g"), ["doc_j", "g"])
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("common"))
+
+def _pair_join(pairs: DataFrame, per_doc: DataFrame) -> DataFrame:
+    """``pairs`` (doc_i, doc_j, ...) with every column ``x`` of the
+    one-row-per-doc frame ``per_doc`` (doc_id, x, ...) attached as ``x_i``
+    for doc_i and ``x_j`` for doc_j."""
+
+    def side(s: str) -> DataFrame:
+        return per_doc.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in per_doc.columns if c != "doc_id"],
+        )
+
+    return pairs.join(side("i"), "doc_i").join(side("j"), "doc_j")
+
+
+def _verify_jaccard(posts: DataFrame, cand: DataFrame) -> DataFrame:
+    """(doc_i, doc_j, c, n_i, n_j) for candidate pairs over flat DISTINCT
+    (doc_id, g) postings: c common grams, n_i and n_j the set sizes.
+
+    Verification is per CANDIDATE: one ``array_intersect`` on the two
+    docs' gram arrays. A postings equi-join would instead re-multiply
+    every candidate by its |set| postings (measured 5.8 s vs ~2 s on the
+    media-gram truth's 827k candidates at sf0.1). The caller accepts:
+    :func:`_jaccard_accept` for Jaccard, c/n_i and c/n_j for
+    containment."""
+    arrs = posts.groupBy("doc_id").agg(
+        F.collect_list("g").alias("g"), F.count(F.lit(1)).alias("n")
     )
-    return (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i")),
-            "doc_i",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j")),
-            "doc_j",
-        )
-        .select(
-            "doc_i",
-            "doc_j",
-            (
-                F.col("common").cast("double")
-                / (F.col("n_i") + F.col("n_j") - F.col("common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return _pair_join(cand, arrs).select(
+        "doc_i",
+        "doc_j",
+        F.size(F.array_intersect("g_i", "g_j")).alias("c"),
+        "n_i",
+        "n_j",
+    )
+
+
+def _jaccard_accept(v: DataFrame, q: tuple = JACCARD_Q) -> DataFrame:
+    """(doc_i, doc_j, jaccard) of the (doc_i, doc_j, c, n_i, n_j) rows
+    whose Jaccard c / (n_i + n_j − c) reaches q = (num, den). The accept is
+    integer cross-multiplication, c·den >= num·(n_i + n_j − c), so the
+    contract is rational end to end; the double ``jaccard`` is output
+    only."""
+    num, den = q
+    union = F.col("n_i") + F.col("n_j") - F.col("c")
+    return v.filter(F.col("c") * den >= union * num).select(
+        "doc_i", "doc_j", (F.col("c").cast("double") / union).alias("jaccard")
     )
 
 
@@ -177,13 +206,14 @@ class VocabularySaturationError(RuntimeError):
             f"prefix-join candidate volume estimate {estimate:,} exceeds "
             f"budget {budget:,}: the gram space is saturated relative to "
             f"the corpus, so prefix filtering would degrade toward "
-            f"all-pairs; use fallback='df_cap' or dedup_minhash_lsh"
+            f"all-pairs; use dedup_ngram_pairs_capped (rare-gram "
+            f"candidates) or dedup_minhash_lsh (banded candidates)"
         )
 
 
 #: Candidate-volume budget (Σ df_prefix² — an upper bound on the prefix
 #: equi-join's output rows) above which prefix_filtered_jaccard_pairs
-#: refuses or falls back. Measured landscape on the synthetic corpus
+#: refuses. Measured landscape on the synthetic corpus
 #: (3-gram shingles at 7/10): 5.0e5 at sf0.1, 6.3e7 at sf1, 6.8e9 at
 #: sf10 (the round-8 disk-filler's configuration; the exact estimate is
 #: now recorded in BENCH_SCALING's sf10_saturation_evidence block, where
@@ -200,12 +230,11 @@ def _prefix_postings(posts: DataFrame, num: int, den: int) -> DataFrame:
     prefix_filtered_jaccard_pairs). Keeps the order key (df), the
     posting's position (rn) and the set size (n): the length and
     positional filters read them off the join rows."""
-    sizes = posts.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     dfreq = posts.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     wp = Window.partitionBy("doc_id").orderBy("df", "g")
     return (
         posts.join(dfreq, "g")
-        .join(sizes, "doc_id")
+        .join(_doc_sizes(posts), "doc_id")
         .withColumn("rn", F.row_number().over(wp))
         .filter(
             F.col("rn")
@@ -301,7 +330,6 @@ def prefix_filtered_jaccard_pairs(
     num: int,
     den: int,
     budget: int | None = PREFIX_CANDIDATE_BUDGET,
-    fallback: str = "error",
 ) -> DataFrame:
     """EXACT Jaccard >= num/den pairs from flat DISTINCT (doc_id, g)
     postings via PREFIX FILTERING (Chaudhuri et al. 2006; Xiao et al.
@@ -339,12 +367,9 @@ def prefix_filtered_jaccard_pairs(
     doc_id-partitioned window over each doc's ~|set| postings; the
     candidate join's cost is Σ df_prefix² — prefixes hold each doc's
     RAREST grams, so a hot key never generates candidates. Verification
-    is per-CANDIDATE (one ``array_intersect`` on the two reassembled
-    gram arrays — candidate-bounded work, where the flat common-count
-    join would re-multiply every candidate by its |set| postings:
-    measured 5.8 s vs ~2 s on the media-gram truth's 827k candidates at
-    sf0.1). Callers cache ``posts`` (consumed by df, sizes, prefix, and
-    the array reassembly); the prefix frame is lazily localCheckpointed
+    is the shared per-candidate :func:`_verify_jaccard`. Callers
+    checkpoint ``posts`` (consumed by df, sizes, prefix, and the verify's
+    array reassembly); the prefix frame is lazily localCheckpointed
     unconditionally (the candidate self-join reads it from both sides,
     and the guard's estimate reads it once more when budget is set) —
     blocks are GC-released when the result frame dies, never a
@@ -359,10 +384,9 @@ def prefix_filtered_jaccard_pairs(
     candidate join degrades toward all-pairs — so when ``budget`` is set,
     the exact join volume Σ df_prefix² is measured first (one aggregate)
     and the operator refuses with :class:`VocabularySaturationError`
-    (``fallback='error'``) or returns the df-capped contract
-    (``fallback='df_cap'`` — rare-gram candidates at NGRAM_DF_CAP,
-    exact-verified, i.e. ``dedup_ngram_pairs_capped`` semantics) instead
-    of filling the shuffle disk mid-join.
+    instead of filling the shuffle disk mid-join; the error names the
+    detectors that run there (``dedup_ngram_pairs_capped``,
+    ``dedup_minhash_lsh``).
     """
     # lazy localCheckpoint ALWAYS (r12): the candidate self-join references
     # pref from BOTH sides (plus the guard's estimate when budget is set) —
@@ -374,8 +398,6 @@ def prefix_filtered_jaccard_pairs(
     if budget is not None:
         est = join_candidate_volume(pref, ["g"])
         if est > budget:
-            if fallback == "df_cap":
-                return _df_capped_pairs(posts, num / den)
             raise VocabularySaturationError(est, budget)
     # required overlap and the positional upper bound, both integer-exact
     minov = F.expr(
@@ -422,46 +444,7 @@ def prefix_filtered_jaccard_pairs(
         )
         .select("doc_i", "doc_j")
     )
-    arrs = posts.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("g")).alias("gs"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    c = F.size(F.array_intersect("g_i", "g_j"))
-    return (
-        cand.join(
-            arrs.select(
-                F.col("doc_id").alias("doc_i"),
-                F.col("gs").alias("g_i"),
-                F.col("n").alias("n_i"),
-            ),
-            "doc_i",
-        )
-        .join(
-            arrs.select(
-                F.col("doc_id").alias("doc_j"),
-                F.col("gs").alias("g_j"),
-                F.col("n").alias("n_j"),
-            ),
-            "doc_j",
-        )
-        .withColumn("c", c)
-        # accept/reject in INTEGERS (c·den >= num·(|i|+|j|-c)) — the same
-        # cross-multiplication the prefix length uses, so the contract is
-        # rational end-to-end; the double `jaccard` is output-only. (The
-        # float compare was value-identical at realistic set sizes — the
-        # rational gap dwarfs an ulp — but inconsistent with the docstring.)
-        .filter(
-            F.col("c") * den >= num * (F.col("n_i") + F.col("n_j") - F.col("c"))
-        )
-        .select(
-            "doc_i",
-            "doc_j",
-            (
-                F.col("c").cast("double")
-                / (F.col("n_i") + F.col("n_j") - F.col("c"))
-            ).alias("jaccard"),
-        )
-    )
+    return _jaccard_accept(_verify_jaccard(posts, cand), (num, den))
 
 
 def _sql_doc_shingles(n: int = 3) -> str:
@@ -470,6 +453,48 @@ def _sql_doc_shingles(n: int = 3) -> str:
         f"SELECT doc_id, {sql_shingles('toks', n)} AS sh "
         f"FROM (SELECT doc_id, {t} AS toks FROM documents)"
     )
+
+
+def _sql_shingle_prelude() -> str:
+    """The CTEs every shingle-set oracle starts from: ``s`` (doc_id, sh),
+    its ``nonempty`` rows, and their flat postings ``e`` (doc_id, g)."""
+    return f"""s AS ({_sql_doc_shingles()}),
+    nonempty AS (SELECT * FROM s WHERE len(sh) > 0),
+    e AS (SELECT doc_id, unnest(sh) AS g FROM nonempty)"""
+
+
+def _sql_key_pairs(rel: str, keys: tuple) -> str:
+    """DuckDB twin of :func:`_key_pairs` (self-join form): CTE ``cand`` of
+    the distinct doc pairs of ``rel`` sharing every column in ``keys``."""
+    on = " AND ".join(f"a.{k} = b.{k}" for k in keys)
+    return f"""cand AS (
+      SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
+      FROM {rel} a JOIN {rel} b ON {on} AND a.doc_id < b.doc_id
+    )"""
+
+
+def _sql_verified_pairs(
+    cand_ctes: str,
+    out: str = "c::DOUBLE / (n_i + n_j - c) AS jaccard",
+    accept: str = f"c::DOUBLE / (n_i + n_j - c) >= {JACCARD_THRESHOLD}",
+) -> str:
+    """DuckDB twin of :func:`_verify_jaccard` plus its caller's accept:
+    the shingle prelude, ``cand_ctes`` (ending in ``cand`` (doc_i,
+    doc_j)), then one list intersection per candidate giving (c, n_i,
+    n_j), projected to ``out`` where ``accept`` holds (Jaccard by
+    default)."""
+    return f"""
+    WITH {_sql_shingle_prelude()},
+    {cand_ctes},
+    v AS (
+      SELECT doc_i, doc_j, len(list_intersect(si.sh, sj.sh)) AS c,
+             len(si.sh) AS n_i, len(sj.sh) AS n_j
+      FROM cand
+      JOIN nonempty si ON si.doc_id = doc_i
+      JOIN nonempty sj ON sj.doc_id = doc_j
+    )
+    SELECT doc_i, doc_j, {out} FROM v WHERE {accept}
+    """
 
 
 # --------------------------------------------------------------------------
@@ -509,13 +534,10 @@ def dedup_exact_oracle() -> str:
 
 
 @query
+@shared_fit("ngram_exact_pairs")
 def dedup_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """All document pairs with 3-token-shingle Jaccard ≥ 0.7.
-
-    Plan: explode shingles → self-equi-join on the shingle → count common →
-    Jaccard from |A|+|B|-common. The shingle-set sizes ride the exploded
-    rows (constant within a pair group, read back with first()), so no
-    separate sizes join exists at all.
+    """All document pairs with 3-token-shingle Jaccard ≥ 0.7: the exact
+    all-pairs kernel :func:`_truth_pairs_from` over the corpus postings.
     Quadratic in shingle-bucket occupancy — see module docstring; the LSH
     variant below is the scale path.
 
@@ -525,59 +547,35 @@ def dedup_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the 8 s total at sf0.1). Empty-shingle docs are harmless: explode
     emits nothing for them and candidates only arise from inner joins.
 
-    The detection is read through the session memo
-    (``_ngram_exact_pairs_shared``): ``dedup_minhash_recall`` scores its
-    banding loss against exactly this pair set, so the two queries share
-    one checkpointed detection per session.
+    A shared fit: ``dedup_minhash_recall`` scores its banding loss
+    against exactly this pair set, so the two queries share one
+    checkpointed detection per session.
     """
-    return _ngram_exact_pairs_shared(spark, sf_dir)
+    return _truth_pairs_from(_posts_checkpoint(spark, sf_dir))
 
 
-@shared_fit("ngram_exact_pairs")
-def _ngram_exact_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact all-pairs shingle-Jaccard detection
-    (doc_i, doc_j, jaccard), ONE self-join per session — read by
-    ``dedup_ngram_pairs`` and as the ground-truth side of
-    ``dedup_minhash_recall``."""
-    # Carry each side's set size on the exploded rows: the pair groupBy
-    # can then compute Jaccard directly (first(n) is constant within a
-    # group), avoiding two extra joins back to a sizes frame. Materialize
-    # the FLAT form — see _doc_postings for why the array form is the
-    # wrong one. EAGER (was lazy): both self-join sides read the frame as
-    # concurrent AQE stage jobs and re-ran the explode per side under
-    # lazy materialization. Blocks are released by the ContextCleaner
-    # when the result frame is GC'd
-    # (test_dedup_detectors_leave_no_persistent_blocks).
-    e = exploded(
-        _doc_shingles(spark, sf_dir),
-        F.col("sh"),
-        "g",
-        "doc_id",
-        F.size("sh").alias("n_sh"),
-    ).localCheckpoint(eager=True)
-    return (
-        e.alias("a")
-        .join(e.alias("b"), "g")
+def _truth_pairs_from(posts: DataFrame) -> DataFrame:
+    """The exact all-pairs kernel: (doc_i, doc_j, jaccard) for every pair
+    of a flat DISTINCT (doc_id, g) postings frame with Jaccard >= 0.7. ONE
+    postings self-join whose pair aggregate yields the common counts
+    directly — never a candidate distinct followed by re-joining the
+    postings; that shape re-multiplies every pair by its shingles and
+    measured 2.5x slower. Serves ``dedup_ngram_pairs`` (corpus postings)
+    and the text recall twins' truth (``_recall_slice_shared``, the eval
+    slice's postings)."""
+    common = (
+        posts.alias("a")
+        .join(posts.alias("b"), "g")
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(
-            F.col("a.doc_id").alias("doc_i"),
-            F.col("b.doc_id").alias("doc_j"),
+            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
         )
-        .agg(
-            F.count(F.lit(1)).alias("common"),
-            F.first("a.n_sh").alias("n_i"),
-            F.first("b.n_sh").alias("n_j"),
-        )
-        .select(
-            "doc_i",
-            "doc_j",
-            (
-                F.col("common").cast("double")
-                / (F.col("n_i") + F.col("n_j") - F.col("common"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .agg(F.count(F.lit(1)).alias("c"))
     )
+    # no explicit broadcast: sizes is one row per DOCUMENT, which only
+    # fits a broadcast at the sampled eval scale — AQE picks broadcast
+    # when it fits and degrades to a shuffle join when it doesn't
+    return _jaccard_accept(_pair_join(common, _doc_sizes(posts)))
 
 
 @query
@@ -615,7 +613,7 @@ def dedup_ngram_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the main join runs, so the concurrent-stage duplication the
     # UNGUARDED detectors suffered cannot happen on this path
     posts = _doc_postings(spark, sf_dir).localCheckpoint(eager=False)
-    return prefix_filtered_jaccard_pairs(posts, 7, 10)
+    return prefix_filtered_jaccard_pairs(posts, *JACCARD_Q)
 
 
 def dedup_ngram_pairs_prefix_oracle() -> str:
@@ -625,21 +623,9 @@ def dedup_ngram_pairs_prefix_oracle() -> str:
 
 
 def dedup_ngram_pairs_oracle() -> str:
-    return f"""
-    WITH s AS ({_sql_doc_shingles()}),
-    e AS (SELECT doc_id, unnest(sh) AS g FROM s),
-    c AS (
-      SELECT a.doc_id AS doc_i, b.doc_id AS doc_j, count(*) AS common
-      FROM e a JOIN e b ON a.g = b.g AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_i, doc_j,
-           common::DOUBLE / (si.n_sh + sj.n_sh - common) AS jaccard
-    FROM c
-    JOIN (SELECT doc_id, len(sh) AS n_sh FROM s) si ON si.doc_id = doc_i
-    JOIN (SELECT doc_id, len(sh) AS n_sh FROM s) sj ON sj.doc_id = doc_j
-    WHERE common::DOUBLE / (si.n_sh + sj.n_sh - common) >= {JACCARD_THRESHOLD}
-    """
+    # every pair sharing a shingle, verified: pairs sharing none have
+    # Jaccard 0
+    return _sql_verified_pairs(_sql_key_pairs("e", ("g",)))
 
 
 #: Max document frequency for a shingle to participate in capped candidate
@@ -650,32 +636,46 @@ def dedup_ngram_pairs_oracle() -> str:
 NGRAM_DF_CAP = 4
 
 
-def _df_capped_pairs(
-    posts: DataFrame, threshold: float, df_cap: int = NGRAM_DF_CAP
-) -> DataFrame:
-    """The df-capped candidate pipeline over flat (doc_id, g) postings —
-    shared by ``dedup_ngram_pairs_capped`` and the saturation FALLBACK of
-    ``prefix_filtered_jaccard_pairs``: candidates must share a gram seen
-    in <= df_cap docs (bucket cost capped at df_cap², immune to feature-
-    space saturation by construction), Jaccard then verified exactly on
-    the full sets."""
+def _key_pairs(a: DataFrame, keys: list, b: DataFrame | None = None) -> DataFrame:
+    """Distinct (doc_i < doc_j) candidate pairs of docs sharing a value of
+    ``keys``: the self-equi-join of ``a``, or ``a`` against ``b``, whose
+    docs may fall on either side of a pair. The candidate join of the
+    band and rare-gram detectors: a key's bucket holds few docs, so the
+    join is linear, not quadratic."""
+    j = a.alias("a").join((a if b is None else b).alias("b"), keys)
+    x, y = F.col("a.doc_id"), F.col("b.doc_id")
+    return (
+        j.filter(x < y if b is None else x != y)
+        .select(F.least(x, y).alias("doc_i"), F.greatest(x, y).alias("doc_j"))
+        .distinct()
+    )
+
+
+def _df_capped_pairs(posts: DataFrame) -> DataFrame:
+    """(doc_i, doc_j, c, n_i, n_j) verify rows of the df-capped candidates
+    over flat (doc_id, g) postings, shared by ``dedup_ngram_pairs_capped``
+    and ``dedup_containment_pairs``: candidates must share a gram seen in
+    <= NGRAM_DF_CAP docs (bucket cost capped at NGRAM_DF_CAP², immune to
+    feature-space saturation by construction), then
+    :func:`_verify_jaccard` counts the full sets."""
     rare = (
         posts.groupBy("g")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= df_cap)
+        .filter(F.col("df") <= NGRAM_DF_CAP)
         .select("g")
     )
-    rare_e = posts.join(rare, "g", "left_semi")
-    cand = (
-        rare_e.alias("a")
-        .join(rare_e.alias("b"), "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
-        )
-        .distinct()
-    )
-    return _verify_jaccard(posts, cand, threshold)
+    cand = _key_pairs(posts.join(rare, "g", "left_semi"), ["g"])
+    return _verify_jaccard(posts, cand)
+
+
+def _posts_checkpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus postings, checkpointed EAGERLY for a detector whose one
+    action reads them from several subtrees (signature or df aggregate,
+    candidate join sides, the verify's array reassembly). AQE submits
+    those as concurrent stage jobs, and a lazy cache() or checkpoint
+    re-ran the shingle explode per consumer (MinHash: job-time sum 12.9 s
+    vs 4.9 s wall). The blocks are GC-released with the result frame."""
+    return _doc_postings(spark, sf_dir).localCheckpoint(eager=True)
 
 
 @query
@@ -686,35 +686,19 @@ def dedup_ngram_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     capped at DF_CAP² instead of (hot-shingle df)², and the cap drops the
     boilerplate shingles that dominate the join volume on real corpora.
     """
-    return _df_capped_pairs(
-        # EAGER (was lazy): the df filter, size aggregate and both join
-        # sides read postings concurrently — the lazy form re-ran the
-        # shingle explode per stage job (job-time sum 2.7 s vs 1.6 s wall)
-        _doc_postings(spark, sf_dir).localCheckpoint(eager=True),
-        JACCARD_THRESHOLD,
-    )
+    return _jaccard_accept(_df_capped_pairs(_posts_checkpoint(spark, sf_dir)))
+
+
+def _sql_df_capped_cand() -> str:
+    """DuckDB twin of ``_df_capped_pairs``' candidates: CTEs ending in
+    ``cand``, pairs sharing a shingle held by <= NGRAM_DF_CAP docs."""
+    return f"""rare AS (SELECT g FROM e GROUP BY g HAVING count(*) <= {NGRAM_DF_CAP}),
+    re AS (SELECT e.* FROM e SEMI JOIN rare ON e.g = rare.g),
+    {_sql_key_pairs("re", ("g",))}"""
 
 
 def dedup_ngram_pairs_capped_oracle() -> str:
-    return f"""
-    WITH s AS ({_sql_doc_shingles()}),
-    nonempty AS (SELECT * FROM s WHERE len(sh) > 0),
-    e AS (SELECT doc_id, unnest(sh) AS g FROM nonempty),
-    rare AS (SELECT g FROM e GROUP BY g HAVING count(*) <= {NGRAM_DF_CAP}),
-    re AS (SELECT e.* FROM e SEMI JOIN rare ON e.g = rare.g),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-      FROM re a JOIN re b ON a.g = b.g AND a.doc_id < b.doc_id
-    )
-    SELECT doc_i, doc_j,
-      len(list_intersect(si.sh, sj.sh))::DOUBLE
-        / len(list_distinct(list_concat(si.sh, sj.sh))) AS jaccard
-    FROM cand
-    JOIN nonempty si ON si.doc_id = doc_i
-    JOIN nonempty sj ON sj.doc_id = doc_j
-    WHERE len(list_intersect(si.sh, sj.sh))::DOUBLE
-        / len(list_distinct(list_concat(si.sh, sj.sh))) >= {JACCARD_THRESHOLD}
-    """
+    return _sql_verified_pairs(_sql_df_capped_cand())
 
 
 # --------------------------------------------------------------------------
@@ -740,23 +724,31 @@ def minhash_pairs_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs-sized (≪ corpus).
 
     Candidate generation joins on (band_id, band_hash) — expected O(1)
-    occupancy per bucket, so the join is linear, not quadratic;
-    verification recomputes exact Jaccard only for candidates
-    (semi-join pruned). Signature via explode + codegen'd
-    min-aggregates: md5 is evaluated once per (seed, shingle) either
-    way, but the expression-form (functions.text_features.minhash) runs
-    12 interpreted higher-order array_min passes per row; the grouped
-    form is one shuffle on doc_id and ~4× faster at sf0.1. Values are
-    identical."""
-    # EAGER: the detection action reads postings from four subtrees
-    # (signature aggregate, both verify join sides, the size aggregate)
-    # that AQE submits as concurrent stage jobs — under a lazy cache()
-    # they raced on the unpopulated cache and re-ran the corpus shingle
-    # explode up to 4x (measured: job-time sum 12.9 s vs 4.9 s wall on
-    # the first consumer). Same storage footprint as the cache it
-    # replaces, GC-released.
-    posts = _doc_postings(spark, sf_dir).localCheckpoint(eager=True)
-    return _verify_jaccard(posts, _band_candidates(bands_of(posts)))
+    occupancy per bucket, so the join is linear, not quadratic; the
+    shared verify counts common shingles per candidate. Signature via
+    explode + codegen'd min-aggregates: md5 is evaluated once per (seed,
+    shingle) either way, but the expression-form
+    (functions.text_features.minhash) runs 12 interpreted higher-order
+    array_min passes per row; the grouped form is one shuffle on doc_id
+    and ~4× faster at sf0.1. Values are identical."""
+    posts = _posts_checkpoint(spark, sf_dir)
+    return _banded_pairs(posts, bands_of(posts))
+
+
+def _band_candidates(a: DataFrame, b: DataFrame | None = None) -> DataFrame:
+    """Distinct (doc_i, doc_j) candidate pairs of (doc_id, band_id,
+    band_hash) frames — the band join of the classic and OPH detectors
+    (self-join) and of the incremental store (batch × batch, batch ×
+    store): expected O(1) occupancy per bucket, so the join is linear."""
+    return _key_pairs(a, ["band_id", "band_hash"], b)
+
+
+def _banded_pairs(posts: DataFrame, bands: DataFrame) -> DataFrame:
+    """(doc_i, doc_j, jaccard): the pairs of a (doc_id, band_id,
+    band_hash) banding that pass the exact Jaccard verify — the one
+    detector body of the classic and OPH signatures and their recall
+    twins; only the signature differs."""
+    return _jaccard_accept(_verify_jaccard(posts, _band_candidates(bands)))
 
 
 def dedup_minhash_lsh_oracle() -> str:
@@ -769,27 +761,11 @@ def dedup_minhash_lsh_oracle() -> str:
             f"h{b * LSH_ROWS + r}" for r in range(LSH_ROWS)
         )
         band_rows.append(f"SELECT doc_id, {b} AS band_id, md5({parts}) AS band_hash FROM sig")
-    bands_sql = " UNION ALL ".join(band_rows)
-    return f"""
-    WITH s AS ({_sql_doc_shingles()}),
-    nonempty AS (SELECT * FROM s WHERE len(sh) > 0),
-    sig AS (SELECT doc_id, sh, {sig_cols} FROM nonempty),
-    bands AS ({bands_sql}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-      FROM bands a JOIN bands b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
+    return _sql_verified_pairs(
+        f"""sig AS (SELECT doc_id, sh, {sig_cols} FROM nonempty),
+    bands AS ({" UNION ALL ".join(band_rows)}),
+    {_sql_key_pairs("bands", ("band_id", "band_hash"))}"""
     )
-    SELECT doc_i, doc_j,
-      len(list_intersect(si.sh, sj.sh))::DOUBLE
-        / len(list_distinct(list_concat(si.sh, sj.sh))) AS jaccard
-    FROM cand
-    JOIN nonempty si ON si.doc_id = doc_i
-    JOIN nonempty sj ON sj.doc_id = doc_j
-    WHERE len(list_intersect(si.sh, sj.sh))::DOUBLE
-        / len(list_distinct(list_concat(si.sh, sj.sh))) >= {JACCARD_THRESHOLD}
-    """
 
 
 # --------------------------------------------------------------------------
@@ -799,21 +775,6 @@ def dedup_minhash_lsh_oracle() -> str:
 #: OPH bin count = classic signature length, so the banding geometry
 #: (LSH_BANDS × LSH_ROWS) is shared verbatim with dedup_minhash_lsh.
 OPH_BINS = MINHASH_K
-
-
-def _band_candidates(bands: DataFrame) -> DataFrame:
-    """Distinct (doc_i, doc_j) candidate pairs from a (doc_id, band_id,
-    band_hash) frame — the equi-join every banded detector shares: expected
-    O(1) occupancy per bucket, so the join is linear, not quadratic."""
-    return (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_id", "band_hash"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
-        )
-        .distinct()
-    )
 
 
 def _oph_signature(posts: DataFrame) -> DataFrame:
@@ -887,22 +848,14 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     full corpus (256 vs 255 at sf0.1 — both exact-verified, the delta is
     banding luck on sub-threshold candidates).
     """
-    # EAGER: the OPH signature, the size aggregate, and both verify join
-    # sides read postings as concurrent AQE stage jobs — lazy
-    # materialization raced and re-ran the shingle explode per consumer
-    # (measured job-time sum 2.75 s vs 1.83 s wall); GC-released either way
-    posts = _doc_postings(spark, sf_dir).localCheckpoint(eager=True)
-    cand = _band_candidates(_bands_from_sig(_oph_signature(posts)))
-    return _verify_jaccard(posts, cand)
+    posts = _posts_checkpoint(spark, sf_dir)
+    return _banded_pairs(posts, _bands_from_sig(_oph_signature(posts)))
 
 
 def dedup_minhash_oph_oracle() -> str:
     k = OPH_BINS
-    return f"""
-    WITH s AS ({_sql_doc_shingles()}),
-    nonempty AS (SELECT * FROM s WHERE len(sh) > 0),
-    posts AS (SELECT doc_id, unnest(sh) AS g FROM nonempty),
-    hx AS (SELECT doc_id, md5('oph|' || g) AS hx FROM posts),
+    return _sql_verified_pairs(
+        f"""hx AS (SELECT doc_id, md5('oph|' || g) AS hx FROM e),
     mins AS (
       SELECT doc_id,
              CAST(CAST('0x' || substr(hx, 1, 8) AS UBIGINT) % {k} AS INTEGER)
@@ -921,21 +874,8 @@ def dedup_minhash_oph_oracle() -> str:
              md5(string_agg(mv, '|' ORDER BY slot)) AS band_hash
       FROM slots GROUP BY doc_id, slot // {LSH_ROWS}
     ),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-      FROM bands a JOIN bands b
-        ON a.band_id = b.band_id AND a.band_hash = b.band_hash
-       AND a.doc_id < b.doc_id
+    {_sql_key_pairs("bands", ("band_id", "band_hash"))}"""
     )
-    SELECT doc_i, doc_j,
-      len(list_intersect(si.sh, sj.sh))::DOUBLE
-        / len(list_distinct(list_concat(si.sh, sj.sh))) AS jaccard
-    FROM cand
-    JOIN nonempty si ON si.doc_id = doc_i
-    JOIN nonempty sj ON sj.doc_id = doc_j
-    WHERE len(list_intersect(si.sh, sj.sh))::DOUBLE
-        / len(list_distinct(list_concat(si.sh, sj.sh))) >= {JACCARD_THRESHOLD}
-    """
 
 
 # --------------------------------------------------------------------------
@@ -1525,18 +1465,14 @@ def dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the exact side is the labeled quadratic baseline
     (block-pair cogroup — distributed but O(n²) work); production runs
     this eval on a sampled slice exactly like ``dedup_minhash_recall_sampled``.
-    The three counts are scalar aggregates combined by broadcast cross
-    join (1×1 frames).
     """
     # both pair sets come from the session memo (the registry detectors'
-    # own checkpointed detections) — the eval is three output-sized scans
-    truth = dedup_embedding_pairs(spark, sf_dir).select(
-        F.col("vec_i").alias("doc_i"), F.col("vec_j").alias("doc_j")
+    # own checkpointed detections) — the eval is one output-sized scan
+    return _detector_recall_counts(
+        dedup_embedding_pairs(spark, sf_dir),
+        dedup_embedding_lsh(spark, sf_dir),
+        "n_lsh_pairs",
     )
-    lsh = dedup_embedding_lsh(spark, sf_dir).select(
-        F.col("vec_i").alias("doc_i"), F.col("vec_j").alias("doc_j")
-    )
-    return _detector_recall_counts(truth, lsh, "n_lsh_pairs")
 
 
 #: Vector budget for the SAMPLED embedding recall eval: the exact truth
@@ -1575,28 +1511,18 @@ def dedup_embedding_recall_sampled(
         # jobs; the lazy form recomputed the scan+filter per consumer
         .localCheckpoint(eager=True)
     )
-    truth = (
-        # blocks=2 (3 block-pair tasks): the slice is budget-fixed
-        # (~EMB_RECALL_SAMPLE_VECS vectors at ANY corpus size), so one
-        # task's matmul is ~1k×1k — the full-corpus task grid paid 36
-        # Arrow tasks of overhead for the same (value-identical) pair set
-        _embedding_pairs_from(v, blocks=2)
-        .select(F.col("vec_i").alias("doc_i"), F.col("vec_j").alias("doc_j"))
-        .cache()
-    )
-    det = (
-        _embedding_lsh_from(v)
-        .select(F.col("vec_i").alias("doc_i"), F.col("vec_j").alias("doc_j"))
-        .cache()
-    )
-    return _detector_recall_counts(
-        truth, det, "n_lsh_pairs", release=(truth, det)
-    )
+    # blocks=2 (3 block-pair tasks): the slice is budget-fixed
+    # (~EMB_RECALL_SAMPLE_VECS vectors at ANY corpus size), so one task's
+    # matmul is ~1k×1k — the full-corpus task grid paid 36 Arrow tasks of
+    # overhead for the same (value-identical) pair set
+    truth = _embedding_pairs_from(v, blocks=2)
+    return _detector_recall_counts(truth, _embedding_lsh_from(v), "n_lsh_pairs")
 
 
 def _emb_pair_oracle(pairs_sql: str) -> str:
-    """An embedding pair query renamed to the (doc_i, doc_j) pair shape —
-    the SQL side of the Spark twins' vec -> doc alias."""
+    """An embedding pair query renamed to the (doc_i, doc_j) pair shape
+    that ``_pair_recall_oracle`` reads (the Spark tail takes the first
+    two columns as the pair)."""
     return f"SELECT vec_i AS doc_i, vec_j AS doc_j FROM ({pairs_sql})"
 
 
@@ -2231,19 +2157,17 @@ def dedup_fuzzy_capped_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_fuzzy_exact_pairs_shared`` / ``_fuzzy_capped_pairs_shared``,
     which share one title scan/checkpoint underneath) — the eval scores
     the detections the registry queries already ran instead of
-    re-running the explode and both joins itself, and the three recall
-    counts are output-sized scans over the checkpointed pair lists. The
+    re-running the explode and both joins itself, and the recall counts
+    are one output-sized scan of the checkpointed pair lists. The
     exact side's candidate-volume guard runs inside the shared fit, so
     this eval inherits the registry refusal semantics (it previously
     skipped the guard; anywhere the guard trips, the exact join
     underneath was never runnable anyway)."""
-    truth = _fuzzy_exact_pairs_shared(
-        spark, sf_dir, FUZZY_CANDIDATE_BUDGET
-    ).select("doc_i", "doc_j")
-    det = _fuzzy_capped_pairs_shared(spark, sf_dir, FUZZY_KEY_CAP).select(
-        "doc_i", "doc_j"
+    return _detector_recall_counts(
+        _fuzzy_exact_pairs_shared(spark, sf_dir, FUZZY_CANDIDATE_BUDGET),
+        _fuzzy_capped_pairs_shared(spark, sf_dir, FUZZY_KEY_CAP),
+        "n_capped_pairs",
     )
-    return _detector_recall_counts(truth, det, "n_capped_pairs")
 
 
 def dedup_fuzzy_capped_recall_oracle() -> str:
@@ -2269,22 +2193,13 @@ def dedup_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cost: the pair list is violation-bounded; the doc→source join
     broadcast-hashes the (tiny) pair side against the narrow projection.
     """
-    pairs = minhash_pairs_shared(spark, sf_dir)
-    src = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    enriched = (
-        pairs.join(
-            src.select(F.col("doc_id").alias("doc_i"), F.col("source").alias("src_i")),
-            "doc_i",
-        )
-        .join(
-            src.select(F.col("doc_id").alias("doc_j"), F.col("source").alias("src_j")),
-            "doc_j",
-        )
-        .select(
-            F.least("src_i", "src_j").alias("source_a"),
-            F.greatest("src_i", "src_j").alias("source_b"),
-            "jaccard",
-        )
+    src = load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.col("source").alias("src")
+    )
+    enriched = _pair_join(minhash_pairs_shared(spark, sf_dir), src).select(
+        F.least("src_i", "src_j").alias("source_a"),
+        F.greatest("src_i", "src_j").alias("source_b"),
+        "jaccard",
     )
     return enriched.groupBy("source_a", "source_b").agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -2539,20 +2454,21 @@ def dedup_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ground truth is inherently quadratic — production runs this
     eval on a sampled slice (``dedup_minhash_recall_sampled``, the
     executable form of that mode), never the full corpus; the LSH side is
-    the linear production path. The three counts are scalar aggregates
-    combined by broadcast cross join (1×1 frames).
+    the linear production path.
 
     Both sides are read through the session memo: the truth IS
-    ``dedup_ngram_pairs``' detection (``_ngram_exact_pairs_shared``) and
+    ``dedup_ngram_pairs``' detection (a shared fit) and
     the detector IS ``dedup_minhash_lsh``'s (``minhash_pairs_shared``) —
     both verify with exact Jaccard at the same threshold, so the pair
     sets are identical to re-detections (which is exactly what the
-    composed oracle runs) and the eval itself is three output-sized
-    count scans over the checkpointed pair lists.
+    composed oracle runs) and the eval itself is one output-sized scan
+    of the checkpointed pair lists.
     """
-    truth = _ngram_exact_pairs_shared(spark, sf_dir).select("doc_i", "doc_j")
-    det = minhash_pairs_shared(spark, sf_dir).select("doc_i", "doc_j")
-    return _detector_recall_counts(truth, det, "n_lsh_pairs")
+    return _detector_recall_counts(
+        dedup_ngram_pairs(spark, sf_dir),
+        minhash_pairs_shared(spark, sf_dir),
+        "n_lsh_pairs",
+    )
 
 
 #: Sampled recall eval's slice budget in DOCUMENTS (not a fraction): the
@@ -2641,12 +2557,8 @@ def dedup_minhash_recall_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     score DIFFERENT detectors against the SAME slice and truth, which
     previously re-derived both per query."""
     posts, truth = _recall_slice_shared(spark, sf_dir)
-    lsh = (
-        _verify_jaccard(posts, _band_candidates(bands_of(posts)))
-        .select("doc_i", "doc_j")
-        .cache()
-    )
-    return _detector_recall_counts(truth, lsh, "n_lsh_pairs", release=(lsh,))
+    det = _banded_pairs(posts, bands_of(posts))
+    return _detector_recall_counts(truth, det, "n_lsh_pairs")
 
 
 @shared_fit("recall_slice")
@@ -2671,50 +2583,56 @@ def _recall_slice_shared(
         # the slice is budget-fixed: O(slice) tasks downstream, not
         # corpus scan width (see EVAL_SLICE_PARTITIONS)
         .repartition(EVAL_SLICE_PARTITIONS)
-        # read twice: the truth self-join here and every detector
+        # read by the truth self-join here and by every detector
         .localCheckpoint(eager=True)
     )
     return posts, _truth_pairs_from(posts)
 
 
 def _detector_recall_counts(
-    truth: DataFrame, det: DataFrame, det_col: str, release: tuple = ()
+    truth: DataFrame, det: DataFrame, det_col: str
 ) -> DataFrame:
-    """Scalar recall frame from a truth pair set and a detector pair set
-    (both (doc_i, doc_j) frames, both consumed twice — callers cache):
-    |truth|, |detector|, |overlap|, recall = hit/true. The three counts
-    are scalar aggregates combined by broadcast cross join (1×1 frames) —
-    the assembly every recall twin shares.
+    """The one-row recall frame every pair-recall twin shares:
+    (n_true_pairs, ``det_col``, n_hit_pairs, recall = hit/true, NULL on an
+    empty truth). The first two columns of ``truth`` and ``det`` are the
+    pair (doc_i, doc_j or vec_i, vec_j).
 
-    ``release``: cached frames the caller built for this eval (postings,
-    truth, detector). The scalar result is materialized EAGERLY here
-    (1-row localCheckpoint) and every frame in ``release`` is unpersisted
-    before returning, so a recall twin leaves no storage behind — in a
-    long-lived session repeated invocations previously accumulated every
-    eval's cached postings/pair frames until an external clearCache
-    (round-8 ADVICE #2 / round-9 verdict ask #2)."""
-    hit = truth.join(det, ["doc_i", "doc_j"], "left_semi")
-    n_true = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
-    n_det = det.agg(F.count(F.lit(1)).alias(det_col))
-    n_hit = hit.agg(F.count(F.lit(1)).alias("n_hit_pairs"))
-    out = (
-        n_true.crossJoin(n_det)
-        .crossJoin(n_hit)
-        .select(
-            "n_true_pairs",
-            det_col,
-            "n_hit_pairs",
-            F.when(
-                F.col("n_true_pairs") > 0,
-                F.col("n_hit_pairs").cast("double") / F.col("n_true_pairs"),
-            ).alias("recall"),
+    One pass over each side: the two pair sets union with a (t, d) side
+    tag, one aggregate per pair sums the tags, and one global aggregate
+    gives |truth| = Σt, |det| = Σd and |truth ⋉ det| = Σ t where d > 0 —
+    the counts ``count()`` and a semi-join give, duplicated rows
+    included. Reading each side once is what lets the twins build their
+    pair sets lazily: no cache, no CacheManager entry."""
+
+    def tagged(pairs: DataFrame, t: int) -> DataFrame:
+        i, j = pairs.columns[:2]
+        return pairs.select(
+            F.col(i).alias("doc_i"),
+            F.col(j).alias("doc_j"),
+            F.lit(t).alias("t"),
+            F.lit(1 - t).alias("d"),
         )
+
+    per_pair = (
+        tagged(truth, 1)
+        .unionByName(tagged(det, 0))
+        .groupBy("doc_i", "doc_j")
+        .agg(F.sum("t").alias("t"), F.sum("d").alias("d"))
     )
-    if release:
-        out = out.localCheckpoint(eager=True)  # 1 row — forces the counts
-        for fr in release:
-            fr.unpersist()
-    return out
+    total = lambda c: F.coalesce(F.sum(c), F.lit(0))  # noqa: E731
+    return per_pair.agg(
+        total("t").alias("n_true_pairs"),
+        total("d").alias(det_col),
+        total(F.when(F.col("d") > 0, F.col("t"))).alias("n_hit_pairs"),
+    ).select(
+        "n_true_pairs",
+        det_col,
+        "n_hit_pairs",
+        F.when(
+            F.col("n_true_pairs") > 0,
+            F.col("n_hit_pairs").cast("double") / F.col("n_true_pairs"),
+        ).alias("recall"),
+    )
 
 
 def _pair_recall_oracle(
@@ -2765,24 +2683,18 @@ def dedup_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     157,521).
     """
     posts, truth = _recall_slice_shared(spark, sf_dir)
-    det = (
-        # budget=None: the eval slice is fixed-size (~RECALL_SAMPLE_TARGET
-        # docs), so the volume guard would only add an estimate pass and
-        # an internal sig cache this twin never releases; the guard has
-        # its own trip tests and runs on the production detector
-        simhash_pairs(
-            simhash_sig(posts, "g", SIMHASH_BITS),
-            SIMHASH_BITS,
-            HAMMING_MAX,
-            1,
-            budget=None,
-        )
-        .select("doc_i", "doc_j")
-        .cache()
+    # budget=None: the eval slice is fixed-size (~RECALL_SAMPLE_TARGET
+    # docs), so the volume guard would only add an estimate job and a
+    # signature checkpoint; the guard has its own trip tests and runs on
+    # the production detector
+    det = simhash_pairs(
+        simhash_sig(posts, "g", SIMHASH_BITS),
+        SIMHASH_BITS,
+        HAMMING_MAX,
+        1,
+        budget=None,
     )
-    return _detector_recall_counts(
-        truth, det, "n_simhash_pairs", release=(det,)
-    )
+    return _detector_recall_counts(truth, det, "n_simhash_pairs")
 
 
 def dedup_simhash_recall_oracle() -> str:
@@ -2806,62 +2718,12 @@ def dedup_minhash_oph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three text recall twins (``_recall_slice_shared``).
     """
     posts, truth = _recall_slice_shared(spark, sf_dir)
-    det = (
-        _verify_jaccard(
-            posts, _band_candidates(_bands_from_sig(_oph_signature(posts)))
-        )
-        .select("doc_i", "doc_j")
-        .cache()
-    )
-    return _detector_recall_counts(truth, det, "n_oph_pairs", release=(det,))
+    det = _banded_pairs(posts, _bands_from_sig(_oph_signature(posts)))
+    return _detector_recall_counts(truth, det, "n_oph_pairs")
 
 
 def dedup_minhash_oph_recall_oracle() -> str:
     return _text_slice_recall_oracle(dedup_minhash_oph_oracle(), "n_oph_pairs")
-
-
-def _truth_pairs_from(
-    posts: DataFrame, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """Exact-Jaccard ground-truth pairs from a flat (doc_id, g) postings
-    frame — the dedup_ngram_pairs shape (ONE postings self-join whose
-    pair-aggregate yields common counts directly — never a candidate
-    distinct followed by re-joining the postings; that shape
-    re-multiplies every pair by its shingles and measured 2.5x slower).
-    Shared by the text recall twins (3-gram
-    shingle postings at JACCARD_THRESHOLD) and the media twin (byte-4-gram
-    postings at its own threshold)."""
-    sizes = posts.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    return (
-        posts.alias("a")
-        .join(posts.alias("b"), "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-        # no explicit broadcast: sizes is one row per DOCUMENT, which only
-        # fits a broadcast at the sampled eval scale — AQE picks broadcast
-        # when it fits and degrades to a shuffle join when it doesn't
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i")
-            ),
-            "doc_i",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j")
-            ),
-            "doc_j",
-        )
-        .filter(
-            F.col("common").cast("double")
-            / (F.col("n_i") + F.col("n_j") - F.col("common"))
-            >= threshold
-        )
-        .select("doc_i", "doc_j")
-    )
 
 
 def dedup_minhash_recall_oracle() -> str:
@@ -2893,81 +2755,24 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(C(i in j), C(j in i)) >= CONTAINMENT_THRESHOLD; the keep policy
     downstream drops the contained (smaller) side.
 
-    Scale: same df-capped candidate generation as dedup_ngram_pairs_capped
-    (bucket cost <= NGRAM_DF_CAP² per rare shingle, boilerplate shingles
-    never join); verification reuses the flat-postings common-count join —
-    containment needs no new shuffle shape, only a different normalizer
-    (|S_i| instead of the union).
+    Scale: the df-capped candidates and verify of dedup_ngram_pairs_capped
+    (``_df_capped_pairs``: bucket cost <= NGRAM_DF_CAP² per rare
+    shingle, boilerplate shingles never join) — containment needs no new
+    shuffle shape, only a different normalizer (|S_i| instead of the
+    union).
     """
-    # EAGER (was lazy): five subtrees of the one action (df aggregate,
-    # semi-join, both candidate sides, the size aggregate) read the
-    # postings as concurrent AQE stage jobs and re-ran the explode per
-    # consumer under lazy materialization
-    e = _doc_postings(spark, sf_dir).localCheckpoint(eager=True)
-    rare = (
-        e.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= NGRAM_DF_CAP)
-        .select("g")
-    )
-    rare_e = e.join(rare, "g", "left_semi")
-    cand = (
-        rare_e.alias("a")
-        .join(rare_e.alias("b"), "g")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_i"), F.col("b.doc_id").alias("doc_j")
-        )
-        .distinct()
-    )
-    sizes = e.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    common = (
-        e.select(F.col("doc_id").alias("doc_i"), "g")
-        .join(cand, "doc_i")
-        .join(e.select(F.col("doc_id").alias("doc_j"), "g"), ["doc_j", "g"])
-        .groupBy("doc_i", "doc_j")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    return (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_i"), F.col("n_sh").alias("n_i")),
-            "doc_i",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_j"), F.col("n_sh").alias("n_j")),
-            "doc_j",
-        )
-        .select(
-            "doc_i",
-            "doc_j",
-            (F.col("common") / F.col("n_i")).alias("cont_i_in_j"),
-            (F.col("common") / F.col("n_j")).alias("cont_j_in_i"),
-        )
-        .filter(
-            F.greatest("cont_i_in_j", "cont_j_in_i") >= CONTAINMENT_THRESHOLD
-        )
-    )
+    v = _df_capped_pairs(_posts_checkpoint(spark, sf_dir))
+    return v.select(
+        "doc_i",
+        "doc_j",
+        (F.col("c") / F.col("n_i")).alias("cont_i_in_j"),
+        (F.col("c") / F.col("n_j")).alias("cont_j_in_i"),
+    ).filter(F.greatest("cont_i_in_j", "cont_j_in_i") >= CONTAINMENT_THRESHOLD)
 
 
 def dedup_containment_pairs_oracle() -> str:
-    return f"""
-    WITH s AS ({_sql_doc_shingles()}),
-    nonempty AS (SELECT * FROM s WHERE len(sh) > 0),
-    e AS (SELECT doc_id, unnest(sh) AS g FROM nonempty),
-    rare AS (SELECT g FROM e GROUP BY g HAVING count(*) <= {NGRAM_DF_CAP}),
-    re AS (SELECT e.* FROM e SEMI JOIN rare ON e.g = rare.g),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_i, b.doc_id AS doc_j
-      FROM re a JOIN re b ON a.g = b.g AND a.doc_id < b.doc_id
+    return _sql_verified_pairs(
+        _sql_df_capped_cand(),
+        out="c::DOUBLE / n_i AS cont_i_in_j, c::DOUBLE / n_j AS cont_j_in_i",
+        accept=f"greatest(c::DOUBLE / n_i, c::DOUBLE / n_j) >= {CONTAINMENT_THRESHOLD}",
     )
-    SELECT doc_i, doc_j,
-      len(list_intersect(si.sh, sj.sh))::DOUBLE / len(si.sh) AS cont_i_in_j,
-      len(list_intersect(si.sh, sj.sh))::DOUBLE / len(sj.sh) AS cont_j_in_i
-    FROM cand
-    JOIN nonempty si ON si.doc_id = doc_i
-    JOIN nonempty sj ON sj.doc_id = doc_j
-    WHERE greatest(
-        len(list_intersect(si.sh, sj.sh))::DOUBLE / len(si.sh),
-        len(list_intersect(si.sh, sj.sh))::DOUBLE / len(sj.sh)
-      ) >= {CONTAINMENT_THRESHOLD}
-    """

@@ -672,9 +672,11 @@ def media_simhash_capped_recall(
     ``scripts/recall_vs_cap.py`` sweeps the cap (RECALL_VS_CAP.json)."""
     from komodo_data_spark.operators.dedup import _detector_recall_counts
 
-    truth = _media_exact_pairs_shared(spark, sf_dir).select("doc_i", "doc_j")
-    det = _media_capped_pairs_shared(spark, sf_dir).select("doc_i", "doc_j")
-    return _detector_recall_counts(truth, det, "n_capped_pairs")
+    return _detector_recall_counts(
+        _media_exact_pairs_shared(spark, sf_dir),
+        _media_capped_pairs_shared(spark, sf_dir),
+        "n_capped_pairs",
+    )
 
 
 def media_simhash_capped_recall_oracle() -> str:
@@ -739,10 +741,10 @@ def media_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(gate)
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    # eager: truth and signature both read the postings, and a lazy cache()
-    # raced the final action's concurrent stage jobs into re-running the
-    # extraction (measured ~5x); the slice is budget-fixed, so O(slice)
-    # tasks downstream (dedup.EVAL_SLICE_PARTITIONS)
+    # eager: truth and signature both read the postings, and a lazy
+    # checkpoint raced the final action's concurrent stage jobs into
+    # re-running the extraction (measured ~5x); the slice is budget-fixed,
+    # so O(slice) tasks downstream (dedup.EVAL_SLICE_PARTITIONS)
     posts = (
         media_gram_postings(d)
         .repartition(EVAL_SLICE_PARTITIONS)
@@ -750,25 +752,15 @@ def media_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # budget=None on both sides: the eval slice is fixed-size, so a guard
     # would only add an estimate job per invocation
-    truth = (
-        prefix_filtered_jaccard_pairs(posts, *MEDIA_JACCARD_Q, budget=None)
-        .select("doc_i", "doc_j")
-        .cache()
+    truth = prefix_filtered_jaccard_pairs(posts, *MEDIA_JACCARD_Q, budget=None)
+    det = simhash_pairs(
+        simhash_sig(posts, "g", MEDIA_SIMHASH_BITS),
+        MEDIA_SIMHASH_BITS,
+        MEDIA_HAMMING_MAX,
+        0,
+        budget=None,
     )
-    det = (
-        simhash_pairs(
-            simhash_sig(posts, "g", MEDIA_SIMHASH_BITS),
-            MEDIA_SIMHASH_BITS,
-            MEDIA_HAMMING_MAX,
-            0,
-            budget=None,
-        )
-        .select("doc_i", "doc_j")
-        .cache()
-    )
-    return _detector_recall_counts(
-        truth, det, "n_simhash_pairs", release=(truth, det)
-    )
+    return _detector_recall_counts(truth, det, "n_simhash_pairs")
 
 
 def media_simhash_recall_oracle() -> str:

@@ -8,8 +8,9 @@ persistent band-key store and, per micro-batch:
 
 1. computes the batch's LSH band keys (the same ``bands_of`` the batch
    detector uses — one code path, no drift),
-2. joins them against the accumulated store (new × old) AND against
-   themselves (new × new) to emit candidate pairs,
+2. joins them against themselves (new × new) AND against the accumulated
+   store (new × old) to emit candidate pairs — the batch detector's band
+   join, ``dedup._band_candidates``,
 3. appends the batch's bands to the store.
 
 Both writes follow the epoch-store protocol (``streaming/stores.py``), so
@@ -33,7 +34,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from komodo_data_spark.operators.dedup import bands_of, postings_of
+from komodo_data_spark.operators.dedup import (
+    _band_candidates,
+    bands_of,
+    postings_of,
+)
 from komodo_data_spark.streaming.stores import (
     compact_distinct_store,
     file_stream,
@@ -41,21 +46,6 @@ from komodo_data_spark.streaming.stores import (
     read_store,
     start_batches,
 )
-
-
-def _pairs(left: DataFrame, right: DataFrame) -> DataFrame:
-    """Ordered candidate pairs from two band-key frames (equi-join on the
-    band key; doc_i < doc_j canonicalization)."""
-    return (
-        left.alias("a")
-        .join(right.alias("b"), ["band_id", "band_hash"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least("a.doc_id", "b.doc_id").alias("doc_i"),
-            F.greatest("a.doc_id", "b.doc_id").alias("doc_j"),
-        )
-        .distinct()
-    )
 
 
 def detect_batch(
@@ -72,10 +62,10 @@ def detect_batch(
     # so the batch retries instead of committing without its
     # new-vs-history pairs.
     store = read_store(spark, store_path)
-    cand = _pairs(bands, bands)
+    cand = _band_candidates(bands)
     if store is not None:
         store = store.select("doc_id", "band_id", "band_hash")
-        cand = cand.union(_pairs(bands, store)).distinct()
+        cand = cand.union(_band_candidates(bands, store)).distinct()
     epoch = F.lit(int(epoch_id))
     overwrite_partitions(cand.withColumn("epoch_id", epoch), pairs_path, "epoch_id")
     overwrite_partitions(bands.withColumn("epoch_id", epoch), store_path, "epoch_id")

@@ -86,8 +86,10 @@ def block() -> str:
         f"All pass `scripts/check.py` at sf0.01; "
         f"bench at sf0.1 runs all of them on local[N], N the usable cores "
         f"(compact line in "
-        f"BENCH_r*.json, per-query map in BENCH_DETAIL.json with per-round "
-        f"archives BENCH_DETAIL_r*.json). The driver's CORRECTNESS window is "
+        f"BENCH_r*.json, per-query map in BENCH_DETAIL.json, which every "
+        f"run overwrites; the committed BENCH_DETAIL_r*.json files are "
+        f"archived copies of past runs, never written by the bench). The "
+        f"driver's CORRECTNESS window is "
         f"the first 50 registry entries, rotated each round via "
         f"`__spark_entry__._PRIORITY`; cumulative driver-witnessed queries "
         f"across rounds: {len(witnessed)} of {len(qs)}.\n"

@@ -92,10 +92,22 @@ def test_converted_hub_queries_leave_no_cache_entries(spark, sf_dir):
     candidate/weight frames, the NB model's count/label frames, the CM
     sketch postings, media frame samples, split-by-cluster assignment,
     cluster edges) are lazy localCheckpoints too — one invocation each
-    must add ZERO CacheManager entries. Every remaining ``.cache()`` in
-    the package is either released on success (``release=`` /
-    explicit unpersist) or scoped to a memoized fit that unpersists."""
-    from komodo_data_spark.operators.multimodal_ops import media_frame_dedup
+    must add ZERO CacheManager entries. So must every pair-recall twin:
+    the recall tail reads each pair set once, so no twin caches one."""
+    from komodo_data_spark.operators.dedup import (
+        dedup_embedding_recall,
+        dedup_embedding_recall_sampled,
+        dedup_fuzzy_capped_recall,
+        dedup_minhash_oph_recall,
+        dedup_minhash_recall,
+        dedup_minhash_recall_sampled,
+        dedup_simhash_recall,
+    )
+    from komodo_data_spark.operators.multimodal_ops import (
+        media_frame_dedup,
+        media_simhash_capped_recall,
+        media_simhash_recall,
+    )
     from komodo_data_spark.operators.pipeline_ops import (
         dedup_clusters,
         docs_split_by_cluster,
@@ -115,6 +127,15 @@ def test_converted_hub_queries_leave_no_cache_entries(spark, sf_dir):
         media_frame_dedup,
         docs_split_by_cluster,
         dedup_clusters,
+        dedup_minhash_recall_sampled,
+        dedup_simhash_recall,
+        dedup_minhash_oph_recall,
+        dedup_embedding_recall,
+        dedup_embedding_recall_sampled,
+        dedup_minhash_recall,
+        dedup_fuzzy_capped_recall,
+        media_simhash_recall,
+        media_simhash_capped_recall,
     )
     cm_before = _cache_manager_size(spark)
     for fn in queries:
@@ -411,6 +432,45 @@ def test_recall_slice_share_matches_direct_derivation(spark, sf_dir):
     assert sorted(map(tuple, truth.collect())) == sorted(
         map(tuple, direct_truth.collect())
     )
+
+
+def test_recall_tail_degenerate_inputs(spark):
+    """The one-pass recall tail on degenerate pair sets: empty truth,
+    empty detector, both empty, and a truth holding a pair twice. Counts
+    are integer zeros, never NULL; recall is NULL exactly when the truth
+    is empty; the counts equal truth.count(), det.count() and the
+    truth ⋉ det semi-join count, duplicated rows included."""
+    from komodo_data_spark.operators.dedup import _detector_recall_counts
+
+    def pairs(rows):
+        return spark.createDataFrame(rows, "doc_i long, doc_j long")
+
+    some = [(1, 2), (3, 4), (5, 6)]
+    # name: (truth rows, detector rows, (n_true, n_det, n_hit))
+    cases = {
+        "empty truth": ([], some, (0, 3, 0)),
+        "empty detector": (some, [], (3, 0, 0)),
+        "both empty": ([], [], (0, 0, 0)),
+        # the duplicated truth pair counts twice, and both copies are hits
+        "duplicated truth pair": (
+            [(1, 2), (1, 2), (3, 4), (7, 8)],
+            [(1, 2), (5, 6)],
+            (4, 2, 2),
+        ),
+    }
+    for name, (t_rows, d_rows, expected) in cases.items():
+        truth, det = pairs(t_rows), pairs(d_rows)
+        out = _detector_recall_counts(truth, det, "n_det_pairs").collect()
+        assert len(out) == 1, name
+        r = out[0]
+        got = (r["n_true_pairs"], r["n_det_pairs"], r["n_hit_pairs"])
+        assert all(isinstance(v, int) for v in got), name
+        semi = truth.join(det, ["doc_i", "doc_j"], "left_semi").count()
+        assert got == (truth.count(), det.count(), semi) == expected, name
+        if expected[0] == 0:
+            assert r["recall"] is None, name
+        else:
+            assert r["recall"] == expected[2] / expected[0], name
 
 
 def test_bpe_conflicts_local_matches_column_predicate(spark):

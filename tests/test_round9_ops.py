@@ -1,5 +1,5 @@
-"""Round-9 operator tests: the prefix-join saturation guard + df-cap
-fallback, and the upgraded 64-bit shingle-feature SimHash detector."""
+"""Round-9 operator tests: the prefix-join saturation guard and the
+upgraded 64-bit shingle-feature SimHash detector."""
 
 from __future__ import annotations
 
@@ -36,26 +36,6 @@ def test_prefix_saturation_guard_trips(spark):
     # refusal happens BEFORE the candidate join: the message carries the
     # one-aggregate estimate, so callers can size a fallback
     assert f"{est:,}" in str(exc.value)
-
-
-def test_prefix_saturation_fallback_matches_capped_contract(spark):
-    from komodo_data_spark.operators.dedup import (
-        _df_capped_pairs,
-        prefix_filtered_jaccard_pairs,
-    )
-
-    posts = _saturated_posts(spark)
-    got = sorted(
-        (r["doc_i"], r["doc_j"], round(r["jaccard"], 9))
-        for r in prefix_filtered_jaccard_pairs(
-            posts, 7, 10, budget=1000, fallback="df_cap"
-        ).collect()
-    )
-    want = sorted(
-        (r["doc_i"], r["doc_j"], round(r["jaccard"], 9))
-        for r in _df_capped_pairs(posts, 7 / 10).collect()
-    )
-    assert got == want
 
 
 def test_prefix_guard_stays_open_on_rare_key_corpus(spark):
