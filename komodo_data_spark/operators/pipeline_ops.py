@@ -24,12 +24,13 @@ Scale notes (100 TB):
 - ``token_packing`` is the deterministic "concatenate in key order, cut at
   capacity" packing. The naive form (one window cumsum per language) caps
   parallelism at |langs| — every document of a language flows through ONE
-  task for the ordered cumsum. It instead runs the surrogate-keys /
-  twostage-budget shape: range-partition on (lang, doc_id), aggregate token
-  sums per (lang, partition) into a tiny frame, prefix-sum that frame,
-  broadcast the offsets back, cumsum within partitions — every stage
-  bounded by a partition, so the English slab of a 100 TB corpus packs in
-  parallel.
+  task for the ordered cumsum. It instead runs the bucketed prefix of
+  ``quantiles.prefix_scan`` over range partitions on (lang, doc_id):
+  aggregate token sums per (lang, partition) into a tiny frame, prefix-sum
+  that frame, broadcast the offsets back, cumsum within partitions — every
+  stage bounded by a partition, so the English slab of a 100 TB corpus
+  packs in parallel. The curriculum, surrogate-key and budget-mix queries
+  run on the same kernel.
 """
 
 from __future__ import annotations
@@ -39,6 +40,12 @@ from pyspark.sql import functions as F
 
 from komodo_data_spark.functions.text_features import sql_tokens, tokens
 from komodo_data_spark.operators.model_memo import shared_fit
+from komodo_data_spark.operators.quantiles import (
+    bucket_offsets,
+    exact_group_kth,
+    prefix_scan,
+    range_buckets,
+)
 from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events, load_table
 
@@ -423,6 +430,26 @@ MIX_TOKEN_BUDGETS = {"src0": 3000, "src1": 750, "src2": 0}
 MIX_DEFAULT_BUDGET = 1500
 
 
+def _budget_sized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, source, budget_tokens, n_tok, h): each doc's source budget,
+    token count and ordering hash — the projection both budget-mix plans
+    read."""
+    budget = F.coalesce(
+        *[
+            F.when(F.col("source") == s, F.lit(b))
+            for s, b in sorted(MIX_TOKEN_BUDGETS.items())
+        ],
+        F.lit(MIX_DEFAULT_BUDGET),
+    )
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "source",
+        budget.alias("budget_tokens"),
+        F.size(tokens()).alias("n_tok"),
+        F.md5(F.col("doc_id").cast("string")).alias("h"),
+    )
+
+
 @query
 def docs_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-source token-budget selection — the "mix sources to
@@ -441,21 +468,7 @@ def docs_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a map-side filter — same admitted set whenever the cut lands between
     docs. The window form is the exact reference semantics.
     """
-    d = load_table(spark, sf_dir, "documents")
-    budget = F.coalesce(
-        *[
-            F.when(F.col("source") == s, F.lit(b))
-            for s, b in sorted(MIX_TOKEN_BUDGETS.items())
-        ],
-        F.lit(MIX_DEFAULT_BUDGET),
-    )
-    d = d.select(
-        "doc_id",
-        "source",
-        budget.alias("budget_tokens"),
-        F.size(tokens()).alias("n_tok"),
-        F.md5(F.col("doc_id").cast("string")).alias("h"),
-    )
+    d = _budget_sized(spark, sf_dir)
     w = (
         Window.partitionBy("source")
         .orderBy("h", "doc_id")
@@ -500,7 +513,7 @@ def docs_token_budget_mix_oracle() -> str:
 def docs_token_budget_mix_twostage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB path for :func:`docs_token_budget_mix`, admitted-set
     EXACT (same oracle): replace the per-source global ordered window with
-    bucketed prefix sums, the docs_surrogate_keys technique applied to a
+    bucketed prefix sums (``quantiles.bucket_offsets``) applied to a
     budget cut.
 
     Docs bucket by the first 2 hex chars of their ordering hash (256
@@ -514,39 +527,16 @@ def docs_token_budget_mix_twostage(spark: SparkSession, sf_dir: str) -> DataFram
     quadratic-free proof: cum_before_doc < budget for every doc of a
     fully-admitted bucket because doc order refines bucket order.
     """
-    d = load_table(spark, sf_dir, "documents")
-    budget = F.coalesce(
-        *[
-            F.when(F.col("source") == s, F.lit(b))
-            for s, b in sorted(MIX_TOKEN_BUDGETS.items())
-        ],
-        F.lit(MIX_DEFAULT_BUDGET),
+    sized = _budget_sized(spark, sf_dir).withColumn(
+        "bucket", F.substring("h", 1, 2)
     )
-    sized = d.select(
-        "doc_id",
-        "source",
-        budget.alias("budget_tokens"),
-        F.size(tokens()).alias("n_tok"),
-        F.md5(F.col("doc_id").cast("string")).alias("h"),
-    ).withColumn("bucket", F.substring("h", 1, 2))
-    bstats = sized.groupBy("source", "budget_tokens", "bucket").agg(
-        F.sum("n_tok").alias("b_sum")
-    )
-    wb = (
-        Window.partitionBy("source")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bstats = bstats.withColumn(
-        "cum_before_bucket", F.coalesce(F.sum("b_sum").over(wb), F.lit(0))
-    )
-    joined = sized.join(F.broadcast(bstats), ["source", "budget_tokens", "bucket"])
-    full = joined.filter(
-        F.col("cum_before_bucket") + F.col("b_sum") <= F.col("budget_tokens")
-    ).select("source", "budget_tokens", "n_tok")
+    by = ["source", "budget_tokens"]
+    bstats = bucket_offsets(sized, by, "bucket", b_sum="n_tok")
+    joined = sized.join(F.broadcast(bstats), [*by, "bucket"])
+    before, budget = F.col("b_sum_before"), F.col("budget_tokens")
+    full = joined.filter(before + F.col("b_sum") <= budget).select(*by, "n_tok")
     boundary = joined.filter(
-        (F.col("cum_before_bucket") < F.col("budget_tokens"))
-        & (F.col("cum_before_bucket") + F.col("b_sum") > F.col("budget_tokens"))
+        (before < budget) & (before + F.col("b_sum") > budget)
     )
     wd = (
         Window.partitionBy("source", "bucket")
@@ -555,12 +545,10 @@ def docs_token_budget_mix_twostage(spark: SparkSession, sf_dir: str) -> DataFram
     )
     boundary_kept = (
         boundary.withColumn(
-            "cum_before_doc",
-            F.col("cum_before_bucket")
-            + F.coalesce(F.sum("n_tok").over(wd), F.lit(0)),
+            "cum_before_doc", before + F.coalesce(F.sum("n_tok").over(wd), F.lit(0))
         )
-        .filter(F.col("cum_before_doc") < F.col("budget_tokens"))
-        .select("source", "budget_tokens", "n_tok")
+        .filter(F.col("cum_before_doc") < budget)
+        .select(*by, "n_tok")
     )
     return (
         full.unionByName(boundary_kept)
@@ -597,14 +585,13 @@ def docs_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: the naive form is one GLOBAL ordered window
     (row_number over phase, h) — a single-partition sort at 100 TB. This
-    runs the docs_surrogate_keys / twostage-budget technique instead:
-    docs bucket by the first 2 hex chars of their shuffle hash; stage 1
-    counts per (phase, bucket) — map-side combinable aggregate; stage 2
-    computes bucket rank offsets with a window over the <= 4*256-row
-    bucket frame (tiny); stage 3 ranks within each (phase, bucket) — a
-    PARTITIONED window, ~1/1024th of the corpus per partition. Exact
-    because (phase, bucket) lexicographic order refines (phase, h)
-    order (bucket is a prefix of h). Oracle = the naive global window.
+    runs ``quantiles.prefix_scan`` instead: docs bucket by the first 2
+    hex chars of their shuffle hash; the rank is the inclusive running
+    count — the (phase, bucket) offset from the <= 4*256-row bucket
+    frame plus the row number within the (phase, bucket), a PARTITIONED
+    window of ~1/1024th of the corpus. Exact because (phase, bucket)
+    lexicographic order refines (phase, h) order (bucket is a prefix of
+    h). Oracle = the naive global window.
     """
     d = load_table(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull()
@@ -632,27 +619,14 @@ def docs_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("bucket", F.substring("h", 1, 2))
     )
-    bstats = sized.groupBy("phase", "bucket").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    wb = Window.orderBy("phase", "bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    bstats = bstats.withColumn(
-        "offset", F.coalesce(F.sum("n").over(wb), F.lit(0))
-    )
-    wd = Window.partitionBy("phase", "bucket").orderBy("h", "doc_id")
-    return (
-        sized.join(F.broadcast(bstats), ["phase", "bucket"])
-        .select(
-            "doc_id",
-            "phase",
-            "difficulty",
-            (F.col("offset") + F.row_number().over(wd)).alias(
-                "curriculum_rank"
-            ),
-        )
-    )
+    return prefix_scan(
+        sized,
+        [],
+        ["phase", "bucket"],
+        ["h", "doc_id"],
+        inclusive=True,
+        curriculum_rank=F.lit(1),
+    ).select("doc_id", "phase", "difficulty", "curriculum_rank")
 
 
 def docs_curriculum_order_oracle() -> str:
@@ -1075,54 +1049,21 @@ def dedup_clusters_oracle() -> str:
 
 PACK_CAPACITY = 2048
 
-#: Range partitions for the packing cumsum. Like _SK_PARTITIONS this is a
-#: parallelism knob, not a correctness knob — at 100 TB raise it to the
-#: cluster's task budget; the offset frame stays |langs| × this.
-_PACK_PARTITIONS = 8
-
 
 def _doc_starts(counts: DataFrame, n: str) -> DataFrame:
     """Each document's start offset ``s`` in its language's stream:
     ``counts`` is one row per (lang, doc_id) with a length column ``n``;
     docs lie end-to-end in doc_id order within a lang, so ``s`` is the
-    exclusive prefix sum of ``n``. Returns (lang, doc_id, n, s).
+    exclusive prefix sum of ``n``. Returns (lang, doc_id, n, pid, s).
 
     The naive form — ``sum() OVER (PARTITION BY lang ORDER BY doc_id)`` —
-    is a single-task-per-language sort. This is the two-stage shape of
-    :func:`docs_surrogate_keys` on a SUM: range-partition on
-    (lang, doc_id), so within a lang every doc of partition p precedes
-    every doc of partition p+1; prefix-sum the tiny |langs|×|pids|
-    frame of per-(lang, pid) sums; broadcast those offsets back and
-    cumsum within each (pid, lang). The range-partitioned frame is
-    checkpointed eagerly: partition ids must be identical in the sum
-    pass and the cumsum pass (two plan branches would re-sample range
-    boundaries independently)."""
-    counts = (
-        counts.repartitionByRange(_PACK_PARTITIONS, "lang", "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wo = (
-        Window.partitionBy("lang")
-        .orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        counts.groupBy("lang", "pid")
-        .agg(F.sum(n).alias("p_sum"))
-        .withColumn("offset", F.coalesce(F.sum("p_sum").over(wo), F.lit(0)))
-        .select("lang", "pid", "offset")
-    )
-    wd = (
-        Window.partitionBy("pid", "lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return counts.join(F.broadcast(offsets), ["lang", "pid"]).select(
-        "lang",
-        "doc_id",
-        n,
-        (F.col("offset") + F.coalesce(F.sum(n).over(wd), F.lit(0))).alias("s"),
+    is a single-task-per-language sort. This is ``quantiles.prefix_scan``
+    over ``quantiles.range_buckets`` on (lang, doc_id): within a lang
+    every doc of partition p precedes every doc of partition p+1, so the
+    tiny |langs|×|pids| frame of per-(lang, pid) sums gives each
+    partition's offset and the cumsum runs within each (lang, pid)."""
+    return prefix_scan(
+        range_buckets(counts, "lang", "doc_id"), ["lang"], "pid", "doc_id", s=n
     )
 
 
@@ -1133,8 +1074,9 @@ def token_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bin = floor(start_offset / capacity)), fully deterministic.
 
     Scale design: the start offsets come from :func:`_doc_starts`, a
-    two-stage range-partitioned prefix sum (no per-language single-task
-    sort at any size); the binning is map-side arithmetic on ``s``.
+    bucketed prefix sum over range partitions (no per-language
+    single-task sort at any size); the binning is map-side arithmetic on
+    ``s``.
     """
     d = load_table(spark, sf_dir, "documents")
     started = _doc_starts(
@@ -2035,45 +1977,29 @@ def cdc_apply_changes_oracle() -> str:
 # distributed surrogate-key assignment (global ordinals, no global sort task)
 # --------------------------------------------------------------------------
 
-_SK_PARTITIONS = 8
-
-
 @query
 def docs_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign dense sequential ids 1..N in doc_id order — WITHOUT the
     single-task trap. ``row_number() OVER (ORDER BY doc_id)`` forces every
-    row through ONE partition; instead: range-partition on the key (global
-    order across partitions), count rows per partition, prefix-sum those
-    counts into per-partition offsets (a tiny driver-size frame), broadcast
-    them back, and rank within each partition. Every stage is bounded by a
-    partition, so the same plan assigns ordinals to 100 TB.
-
-    The partitioned frame is checkpointed eagerly: partition ids must be
-    identical in the count pass and the rank pass (two plan branches would
-    re-sample range boundaries independently).
+    row through ONE partition; instead the id is the inclusive running
+    count of ``quantiles.prefix_scan`` over ``quantiles.range_buckets``:
+    range-partition on the key (global order across partitions), count
+    rows per partition, prefix-sum those counts into per-partition offsets
+    (a tiny frame), broadcast them back, and rank within each partition.
+    Every stage is bounded by a partition, so the same plan assigns
+    ordinals to 100 TB.
     """
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "lang")
-        .repartitionByRange(_SK_PARTITIONS, "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    wc = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = (
-        d.groupBy("pid")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("offset", F.coalesce(F.sum("n").over(wc), F.lit(0)))
-        .select("pid", "offset")
-    )
-    w = Window.partitionBy("pid").orderBy("doc_id")
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     return (
-        d.join(F.broadcast(offsets), "pid")
-        .select(
+        prefix_scan(
+            range_buckets(d, "doc_id"),
+            [],
+            "pid",
             "doc_id",
-            "lang",
-            (F.col("offset") + F.row_number().over(w)).alias("sk"),
+            inclusive=True,
+            sk=F.lit(1),
         )
+        .select("doc_id", "lang", "sk")
         .orderBy("doc_id")
     )
 
@@ -3578,8 +3504,6 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter feeding a window over the ~|strata|-row tie frame, so the
     exactness guarantee costs one extra tiny aggregate, not a sort.
     """
-    from komodo_data_spark.operators.quantiles import exact_group_kth
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 13), 16, 10).cast("long").alias("h")
     )

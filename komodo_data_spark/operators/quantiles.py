@@ -1,4 +1,5 @@
-"""Engine-exact per-group quantiles at ARBITRARY fractions.
+"""Engine-exact per-group quantiles at ARBITRARY fractions, and the
+bucketed prefix every ordered running aggregate in the package runs on.
 
 Why this module exists: Spark's exact ``percentile`` and DuckDB's
 ``quantile_cont`` both linearly interpolate at rank position ``(n-1)*q``,
@@ -25,14 +26,23 @@ Both engines run the same integer arithmetic, the same small-int double
 division, and the same three-op interpolation on the same double inputs —
 the result is bit-identical by IEEE-754 determinism, for ANY fraction.
 
-Order-statistic selection is the two-stage bucket-prefix shape used by
-``docs_surrogate_keys`` (pipeline_ops.py) rather than a per-group window
-over the corpus: rows are value-bucketed map-side, a tiny
-(|groups| x n_buckets) histogram is prefix-summed to locate the one
-bucket holding rank k, and only that bucket's rows (~ n/n_buckets of the
-group) are sorted. No corpus-wide or group-wide sort exists in the plan,
-so the same plan fits a 100 TB group by raising ``n_buckets`` (or
-recursing a second level, which this corpus never needs).
+The bucketed prefix (:func:`bucket_offsets`, :func:`prefix_scan`,
+:func:`range_buckets`) computes an ordered running aggregate without a
+global sort: aggregate per bucket (map-side combinable), window over the
+tiny bucket frame for each bucket's offset, broadcast the offsets back and
+window within each bucket. Exact whenever bucket order refines row order
+(a value bucket of the ordering value, a hash prefix, a range partition).
+The curriculum, surrogate-key, packing, budget-mix, two-sample-test,
+Spearman and skyline queries all run on it.
+
+Order-statistic selection (:func:`_order_stats`) runs on it too rather
+than on a per-group window over the corpus: rows are value-bucketed
+map-side, the (|groups| x n_buckets) weight histogram's offsets locate
+the one bucket holding each target position, and only that bucket's rows
+(~ n/n_buckets of the group) are sorted. The unweighted fit is the
+weighted one at unit weight. No corpus-wide or group-wide sort exists in
+the plan, so the same plan fits a 100 TB group by raising ``n_buckets``
+(or recursing a second level, which this corpus never needs).
 
 The reference (process.py) has no quantile operator at all — this is
 north-star extension surface (SURVEY.md §2.12 curation ops).
@@ -40,12 +50,205 @@ north-star extension surface (SURVEY.md §2.12 curation ops).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 #: Value-range buckets for the order-statistic locate stage. Each final
 #: per-bucket sort touches ~ group_size / N_QUANTILE_BUCKETS rows.
 N_QUANTILE_BUCKETS = 64
+
+#: Range partitions of :func:`range_buckets` — a parallelism knob, not a
+#: correctness knob: at 100 TB raise it to the cluster's task budget; the
+#: offset frame stays |groups| × this.
+RANGE_PARTITIONS = 8
+
+
+def _names(cols: str | list[str]) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols)
+
+
+def range_buckets(df: DataFrame, *cols: str) -> DataFrame:
+    """Range-partition ``df`` on ``cols`` and record each row's partition
+    as the bucket column ``pid``: every row of partition p precedes every
+    row of p+1 in ``cols`` order, so ``pid`` refines that order. The frame
+    is checkpointed eagerly: partition ids must be identical in the offset
+    pass and the in-bucket pass (two plan branches would re-sample range
+    boundaries independently)."""
+    return (
+        df.repartitionByRange(RANGE_PARTITIONS, *cols)
+        .withColumn("pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)
+    )
+
+
+def bucket_offsets(
+    df: DataFrame,
+    by: list[str],
+    bucket: str | list[str],
+    fn=F.sum,
+    **cols: str | Column,
+) -> DataFrame:
+    """One row per (``by``, ``bucket``) carrying each ``fn`` aggregate of
+    ``cols`` (output name -> column) over the bucket, plus
+    ``<name>_before``: the same aggregate over every earlier bucket of the
+    ``by`` group (0 for a sum; NULL for ``F.min`` when there is none).
+    The window runs over this |groups| × |buckets| frame, never over the
+    rows."""
+    keys = [*by, *_names(bucket)]
+    w = (
+        Window.partitionBy(*by)
+        .orderBy(*_names(bucket))
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    before = [fn(n).over(w) for n in cols]
+    if fn is F.sum:
+        before = [F.coalesce(b, F.lit(0)) for b in before]
+    return (
+        df.groupBy(*keys)
+        .agg(*[fn(c).alias(n) for n, c in cols.items()])
+        .select(
+            *keys, *cols, *[b.alias(f"{n}_before") for b, n in zip(before, cols)]
+        )
+    )
+
+
+def prefix_scan(
+    df: DataFrame,
+    by: list[str],
+    bucket: str | list[str],
+    order: str | list[str],
+    fn=F.sum,
+    inclusive: bool = False,
+    **cols: str | Column,
+) -> DataFrame:
+    """``df`` plus one column per ``cols`` entry (output name -> column):
+    the running ``fn`` (``F.sum`` or ``F.min``) of that column over the
+    rows before each row in (``bucket``, ``order``) order within its
+    ``by`` group — up to and including the row when ``inclusive``.
+    Exact when ``bucket`` order refines ``order``. The bucket offsets
+    broadcast back onto the rows; the row window is partitioned by
+    (``by``, ``bucket``), so no stage passes the rows through one task."""
+    keys = [*by, *_names(bucket)]
+    offsets = bucket_offsets(df, by, bucket, fn, **cols).drop(*cols)
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*_names(order))
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    run = []
+    for n, c in cols.items():
+        before, within = F.col(f"{n}_before"), fn(c).over(w)
+        if fn is F.sum:
+            run.append(before + F.coalesce(within, F.lit(0)))
+        else:
+            run.append(F.least(before, within))
+    return df.join(F.broadcast(offsets), keys).select(
+        *df.columns, *[r.alias(n) for r, n in zip(run, cols)]
+    )
+
+
+def _check(quantiles: dict[str, tuple[int, int]]) -> None:
+    for name, (num, den) in quantiles.items():
+        if not (0 <= num <= den) or den <= 0:
+            raise ValueError(f"quantile {name}: need 0 <= num <= den, got {num}/{den}")
+
+
+def _order_stats(
+    df: DataFrame,
+    group_cols: list[str],
+    value_col: str,
+    weight: Column,
+    targets: dict[str, Column],
+    n_buckets: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The order-statistic pass every fit shares. ``targets`` maps an
+    output name to a 1-based weight position (a column over the group's
+    total weight ``_wtot``); per group, ``picked`` holds the value at which
+    the running weight in value order first reaches each position. Rows
+    with a NULL value or a NULL / non-positive ``weight`` are ignored.
+    Returns ``(picked, kframe)``, both keyed by ``group_cols`` (``_g``
+    when empty); ``kframe`` is the per-group (_vmin, _vmax, _wtot) frame.
+
+    Stages: per-group extrema + total weight (one combinable aggregate);
+    map-side value bucketing (a pure function of (value, extrema), so
+    equal values share a bucket); the :func:`bucket_offsets` weight
+    histogram, whose interval (_cnt_before, _cnt_before + _cnt] locates
+    the bucket of each target; a running weight inside ONLY the located
+    buckets (the broadcast semi-join drops every other bucket). Exactly
+    one row satisfies _cw - w < _lt <= _cw since weights are positive,
+    and the picked VALUE is the same under any tie order."""
+    v = F.col(value_col).cast("double")
+    w = F.col("_w")
+    df = df.select(
+        *group_cols, v.alias(value_col), weight.cast("long").alias("_w")
+    ).filter(v.isNotNull() & w.isNotNull() & (w > 0))
+    # Empty group_cols -> one global group; a constant key keeps every
+    # stage identical instead of special-casing the scalar path.
+    if not group_cols:
+        df = df.withColumn("_g", F.lit(1))
+        group_cols = ["_g"]
+
+    kframe = df.groupBy(*group_cols).agg(
+        F.min(value_col).alias("_vmin"),
+        F.max(value_col).alias("_vmax"),
+        F.sum("_w").alias("_wtot"),
+    )
+    span = F.col("_vmax") - F.col("_vmin")
+    bucket = F.when(span <= F.lit(0.0), F.lit(0)).otherwise(
+        F.least(
+            F.floor((F.col(value_col) - F.col("_vmin")) / span * n_buckets).cast(
+                "int"
+            ),
+            F.lit(n_buckets - 1),
+        )
+    )
+    bucketed = df.join(F.broadcast(kframe), group_cols).withColumn("_b", bucket)
+
+    hist = bucket_offsets(bucketed, group_cols, "_b", _cnt="_w")
+    t, before = F.col("_t.t"), F.col("_cnt_before")
+    tk = (
+        hist.join(kframe, group_cols)
+        .select(
+            *group_cols,
+            "_b",
+            "_cnt",
+            "_cnt_before",
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(F.lit(name).alias("which"), pos.alias("t"))
+                        for name, pos in targets.items()
+                    ]
+                )
+            ).alias("_t"),
+        )
+        .filter((t > before) & (t <= before + F.col("_cnt")))
+        .select(
+            *group_cols,
+            "_b",
+            F.col("_t.which").alias("_which"),
+            (t - before).alias("_lt"),
+        )
+    )
+
+    wrun = (
+        Window.partitionBy(*group_cols, "_b", "_which")
+        .orderBy(value_col)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    picked = (
+        bucketed.join(F.broadcast(tk), [*group_cols, "_b"])
+        .withColumn("_cw", F.sum("_w").over(wrun))
+        .filter((F.col("_cw") >= F.col("_lt")) & (F.col("_cw") - w < F.col("_lt")))
+        .groupBy(*group_cols)
+        .agg(
+            *[
+                F.min(F.when(F.col("_which") == name, F.col(value_col))).alias(name)
+                for name in targets
+            ]
+        )
+    )
+    return picked, kframe
 
 
 def exact_group_quantiles(
@@ -68,137 +271,30 @@ def exact_group_quantiles(
     sides — the standard requirement everywhere in this repo), every
     returned threshold is bit-identical to the SQL produced by
     :func:`oracle_group_quantile_sql`.
+
+    Rank k (0-based) is weight position k+1 at unit weight, so both
+    bracket ends of every fraction are :func:`_order_stats` targets; the
+    interpolation is the one floating-point step, joined on ``kframe``.
     """
-    for name, spec in quantiles.items():
-        if spec[0] == "kth":
-            if int(spec[1]) < 1:
-                raise ValueError(f"{name}: kth rank must be >= 1, got {spec[1]}")
-            continue
-        num, den = spec
-        if not (0 <= num <= den) or den <= 0:
-            raise ValueError(f"quantile {name}: need 0 <= num <= den, got {num}/{den}")
+    _check(quantiles)
 
-    v = F.col(value_col).cast("double")
-    df = df.select(*group_cols, v.alias(value_col)).filter(v.isNotNull())
-    # Empty group_cols -> one global group; a constant key keeps every
-    # stage below identical instead of special-casing the scalar path.
-    if not group_cols:
-        df = df.withColumn("_g", F.lit(1))
-        group_cols = ["_g"]
+    def krem(num: int, den: int) -> Column:
+        return F.expr(f"((_wtot - 1) * {num}) % {den}")
 
-    # Stage 0 — per-group extrema + count (one hash aggregate, map-side
-    # combinable), then the EXACT integer bracket arithmetic per fraction.
-    kframe = df.groupBy(*group_cols).agg(
-        F.min(value_col).alias("_vmin"),
-        F.max(value_col).alias("_vmax"),
-        F.count(value_col).alias("_n"),
+    targets = {}
+    for name, (num, den) in quantiles.items():
+        klo = F.expr(f"((_wtot - 1) * {num}) div {den}")
+        targets[f"_vlo_{name}"] = klo + 1
+        targets[f"_vhi_{name}"] = klo + (krem(num, den) > 0).cast("bigint") + 1
+    picked, kframe = _order_stats(
+        df, group_cols, value_col, F.lit(1), targets, n_buckets
     )
-    for name, spec in quantiles.items():
-        if spec[0] == "kth":
-            # fixed 1-based rank, clamped to the group size: klo = min(k, n)-1
-            kframe = kframe.withColumn(
-                f"_klo_{name}",
-                F.least(F.lit(int(spec[1])).cast("long"), F.col("_n")) - 1,
-            ).withColumn(f"_krem_{name}", F.lit(0).cast("long"))
-        else:
-            num, den = spec
-            kframe = kframe.withColumn(
-                f"_klo_{name}", F.expr(f"((_n - 1) * {num}) div {den}")
-            ).withColumn(f"_krem_{name}", F.expr(f"((_n - 1) * {num}) % {den}"))
-
-    # Stage 1 — map-side value bucketing. The bucket id is a pure function
-    # of (value, group extrema): equal values always share a bucket, so a
-    # rank located in bucket b is served entirely by b's rows.
-    span = F.col("_vmax") - F.col("_vmin")
-    bucket = F.when(span <= F.lit(0.0), F.lit(0)).otherwise(
-        F.least(
-            F.floor((F.col(value_col) - F.col("_vmin")) / span * n_buckets).cast(
-                "int"
-            ),
-            F.lit(n_buckets - 1),
-        )
-    )
-    bucketed = df.join(F.broadcast(kframe), group_cols).withColumn("_b", bucket)
-
-    # Stage 2 — (|groups| x n_buckets)-row histogram; prefix-sum per group
-    # (a window over the TINY histogram frame, never over the corpus) gives
-    # each bucket its global rank interval [_cum, _cum + _cnt).
-    hist = bucketed.groupBy(*group_cols, "_b").agg(F.count(F.lit(1)).alias("_cnt"))
-    wc = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    hist = hist.withColumn("_cum", F.coalesce(F.sum("_cnt").over(wc), F.lit(0)))
-
-    # Stage 3 — locate the bucket + local offset of every requested rank
-    # (lo and hi bracket ends per fraction). <= 2·|quantiles| rows/group.
-    targets = []
-    for name in quantiles:
-        klo = F.col(f"_klo_{name}")
-        khi = klo + (F.col(f"_krem_{name}") > 0).cast("bigint")
-        targets.append(
-            F.struct(F.lit(f"{name}.lo").alias("which"), klo.alias("k"))
-        )
-        targets.append(
-            F.struct(F.lit(f"{name}.hi").alias("which"), khi.alias("k"))
-        )
-    tk = (
-        hist.join(kframe, group_cols)
-        .select(*group_cols, "_b", "_cum", "_cnt", F.explode(F.array(*targets)).alias("_t"))
-        .filter(
-            (F.col("_t.k") >= F.col("_cum"))
-            & (F.col("_t.k") < F.col("_cum") + F.col("_cnt"))
-        )
-        .select(
-            *group_cols,
-            "_b",
-            F.col("_t.which").alias("_which"),
-            (F.col("_t.k") - F.col("_cum")).alias("_lk"),
-        )
-    )
-
-    # Stage 4 — sort ONLY the target buckets (each ~ group/n_buckets rows;
-    # the broadcast semi-join drops every other bucket at the scan) and
-    # pick the local rank. Ties: equal values share a bucket and any tie
-    # order yields the same VALUE at a given rank, so row_number is safe.
-    w = Window.partitionBy(*group_cols, "_b", "_which").orderBy(value_col)
-    picked = (
-        bucketed.join(F.broadcast(tk), [*group_cols, "_b"])
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") - 1 == F.col("_lk"))
-        .groupBy(*group_cols)
-        .agg(
-            *[
-                agg
-                for name in quantiles
-                for agg in (
-                    F.min(
-                        F.when(F.col("_which") == f"{name}.lo", F.col(value_col))
-                    ).alias(f"_vlo_{name}"),
-                    F.min(
-                        F.when(F.col("_which") == f"{name}.hi", F.col(value_col))
-                    ).alias(f"_vhi_{name}"),
-                )
-            ]
-        )
-    )
-
-    # Stage 5 — the one floating-point step, identical on both engines:
-    # frac = rem/den (small-int double division), then lo + frac*(hi-lo).
-    out = picked.join(kframe, group_cols)
     cols = []
-    for name, spec in quantiles.items():
-        den = 1 if spec[0] == "kth" else spec[1]
-        frac = F.col(f"_krem_{name}").cast("double") / F.lit(den).cast("double")
-        cols.append(
-            (
-                F.col(f"_vlo_{name}")
-                + frac * (F.col(f"_vhi_{name}") - F.col(f"_vlo_{name}"))
-            ).alias(name)
-        )
-    keep = [c for c in group_cols if c != "_g"]
-    return out.select(*keep, *cols)
+    for name, (num, den) in quantiles.items():
+        frac = krem(num, den).cast("double") / F.lit(den).cast("double")
+        lo, hi = F.col(f"_vlo_{name}"), F.col(f"_vhi_{name}")
+        cols.append((lo + frac * (hi - lo)).alias(name))
+    return picked.join(kframe, group_cols or ["_g"]).select(*group_cols, *cols)
 
 
 def oracle_group_quantile_sql(
@@ -290,132 +386,28 @@ def exact_group_weighted_quantiles(
     NULL value or NULL/non-positive weight are ignored. ``q = 0/den``
     returns the group min (target clamps to 1); ``q = den/den`` the max.
 
-    Scale shape is stage-for-stage the unweighted fit: one extrema+total
-    aggregate, map-side value bucketing, a (|groups| x n_buckets) histogram
-    of WEIGHT sums prefix-summed per group (tiny window), then a running
-    weight cumsum inside only the located buckets (~group/n_buckets rows
-    each). No corpus- or group-wide sort exists in the plan. The picked
-    row is tie-safe: equal values share a bucket and the first crossing of
-    the running cumsum lands on the same VALUE under any tie order.
+    The fit is :func:`_order_stats` with one target per fraction, so the
+    plan has no corpus- or group-wide sort and never joins the extrema
+    frame back.
     """
-    for name, (num, den) in quantiles.items():
-        if not (0 <= num <= den) or den <= 0:
-            raise ValueError(
-                f"quantile {name}: need 0 <= num <= den, got {num}/{den}"
-            )
-
-    v = F.col(value_col).cast("double")
-    w = F.col(weight_col).cast("long")
-    df = (
-        df.select(*group_cols, v.alias(value_col), w.alias("_w"))
-        .filter(v.isNotNull() & w.isNotNull() & (w > 0))
-    )
-    if not group_cols:
-        df = df.withColumn("_g", F.lit(1))
-        group_cols = ["_g"]
-
-    # Stage 0 — per-group extrema + total weight, then the exact integer
-    # target per fraction: clamp(ceil(W*num/den), 1, W).
-    kframe = df.groupBy(*group_cols).agg(
-        F.min(value_col).alias("_vmin"),
-        F.max(value_col).alias("_vmax"),
-        F.sum("_w").alias("_wtot"),
-    )
-    for name, (num, den) in quantiles.items():
-        kframe = kframe.withColumn(
-            f"_tgt_{name}",
-            F.greatest(
-                F.least(
-                    F.expr(
-                        f"((_wtot * {num}) div {den}) + "
-                        f"(CASE WHEN (_wtot * {num}) % {den} > 0 THEN 1 ELSE 0 END)"
-                    ),
-                    F.col("_wtot"),
+    _check(quantiles)
+    targets = {
+        name: F.greatest(
+            F.least(
+                F.expr(
+                    f"((_wtot * {num}) div {den}) + "
+                    f"(CASE WHEN (_wtot * {num}) % {den} > 0 THEN 1 ELSE 0 END)"
                 ),
-                F.lit(1).cast("long"),
+                F.col("_wtot"),
             ),
+            F.lit(1).cast("long"),
         )
-
-    # Stage 1 — map-side value bucketing (same bucket function as the
-    # unweighted fit: equal values always share a bucket).
-    span = F.col("_vmax") - F.col("_vmin")
-    bucket = F.when(span <= F.lit(0.0), F.lit(0)).otherwise(
-        F.least(
-            F.floor((F.col(value_col) - F.col("_vmin")) / span * n_buckets).cast(
-                "int"
-            ),
-            F.lit(n_buckets - 1),
-        )
+        for name, (num, den) in quantiles.items()
+    }
+    picked, _ = _order_stats(
+        df, group_cols, value_col, F.col(weight_col), targets, n_buckets
     )
-    bucketed = df.join(F.broadcast(kframe), group_cols).withColumn("_b", bucket)
-
-    # Stage 2 — histogram of WEIGHT sums; prefix-sum per group over the
-    # tiny (|groups| x n_buckets) frame gives each bucket its cumulative
-    # weight interval (_cum, _cum + _cnt].
-    hist = bucketed.groupBy(*group_cols, "_b").agg(F.sum("_w").alias("_cnt"))
-    wc = (
-        Window.partitionBy(*group_cols)
-        .orderBy("_b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    hist = hist.withColumn("_cum", F.coalesce(F.sum("_cnt").over(wc), F.lit(0)))
-
-    # Stage 3 — locate the bucket whose weight interval contains each
-    # target; the crossing happens at local cumulative weight
-    # _lt = target - _cum (1-based in weight units).
-    targets = [
-        F.struct(F.lit(name).alias("which"), F.col(f"_tgt_{name}").alias("t"))
-        for name in quantiles
-    ]
-    tk = (
-        hist.join(kframe, group_cols)
-        .select(
-            *group_cols,
-            "_b",
-            "_cum",
-            "_cnt",
-            F.explode(F.array(*targets)).alias("_t"),
-        )
-        .filter(
-            (F.col("_t.t") > F.col("_cum"))
-            & (F.col("_t.t") <= F.col("_cum") + F.col("_cnt"))
-        )
-        .select(
-            *group_cols,
-            "_b",
-            F.col("_t.which").alias("_which"),
-            (F.col("_t.t") - F.col("_cum")).alias("_lt"),
-        )
-    )
-
-    # Stage 4 — running weight cumsum inside ONLY the target buckets; the
-    # first row whose cumulative weight reaches _lt carries the threshold
-    # value (exactly one row satisfies _cw - w < _lt <= _cw since weights
-    # are positive).
-    wrun = (
-        Window.partitionBy(*group_cols, "_b", "_which")
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    picked = (
-        bucketed.join(F.broadcast(tk), [*group_cols, "_b"])
-        .withColumn("_cw", F.sum("_w").over(wrun))
-        .filter(
-            (F.col("_cw") >= F.col("_lt"))
-            & (F.col("_cw") - F.col("_w") < F.col("_lt"))
-        )
-        .groupBy(*group_cols)
-        .agg(
-            *[
-                F.min(
-                    F.when(F.col("_which") == name, F.col(value_col))
-                ).alias(name)
-                for name in quantiles
-            ]
-        )
-    )
-    keep = [c for c in group_cols if c != "_g"]
-    return picked.select(*keep, *quantiles.keys())
+    return picked.select(*group_cols, *quantiles)
 
 
 def oracle_group_weighted_quantile_sql(
@@ -484,13 +476,17 @@ def exact_group_kth(
 ) -> DataFrame:
     """Value of the k-th SMALLEST element per group (1-based, clamped to
     the group size) — the fixed-rank sibling of
-    :func:`exact_group_quantiles`, same bucket-prefix machinery with the
-    rank given absolutely instead of as a fraction of the group. This is
-    the primitive behind exact per-group QUOTAS: filter
+    :func:`exact_group_quantiles`: one :func:`_order_stats` target at unit
+    weight, with the rank given absolutely instead of as a fraction of the
+    group. This is the primitive behind exact per-group QUOTAS: filter
     ``value <= kth`` to keep exactly k rows per group (when values are
     distinct) without ever sorting a group — the selection plan touches
     ~group/n_buckets rows per group.
     """
-    return exact_group_quantiles(
-        df, group_cols, value_col, {out_col: ("kth", k)}, n_buckets
+    if int(k) < 1:
+        raise ValueError(f"{out_col}: kth rank must be >= 1, got {k}")
+    target = F.least(F.lit(int(k)).cast("long"), F.col("_wtot"))
+    picked, _ = _order_stats(
+        df, group_cols, value_col, F.lit(1), {out_col: target}, n_buckets
     )
+    return picked.select(*group_cols, out_col)

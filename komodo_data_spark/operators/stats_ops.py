@@ -18,9 +18,14 @@ aggregates an analytics engine is expected to ship:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.operators.quantiles import (
+    exact_group_quantiles,
+    oracle_group_quantile_sql,
+    prefix_scan,
+)
 from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_events, load_table
 
@@ -158,14 +163,53 @@ def orders_stats_pack_oracle() -> str:
 
 KS_GROUP_A = "click"
 KS_GROUP_B = "purchase"
-#: Fixed bucket width for the two-stage CDF prefix sum. The events value
-#: domain is bounded (gate data: [0, ~500]); at an unbounded 100 TB domain
-#: swap the fixed grid for approx-quantile boundaries (the
-#: ``events_value_histogram_equidepth`` move) — same two-stage plan.
+#: Fixed value-bucket width for the ``quantiles.prefix_scan`` rank and CDF
+#: sums. The events value domain is bounded (gate data: [0, ~500]); at an
+#: unbounded 100 TB domain swap the fixed grid for approx-quantile
+#: boundaries (the ``events_value_histogram_equidepth`` move) — same plan.
 KS_BUCKET_WIDTH = 16.0
 #: sqrt(-ln(alpha/2)/2) for alpha=0.05 — the classic two-sample KS critical
 #: coefficient c(0.05) = 1.3581015157406195.
 KS_CRIT_95 = 1.3581015157406195
+
+
+def _ks_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(value, na, nb): one row per event of the two KS types with a
+    non-NULL value; ``na`` / ``nb`` are its 0/1 type indicators."""
+    return (
+        load_events(spark, sf_dir)
+        .filter(
+            F.col("event_type").isin(KS_GROUP_A, KS_GROUP_B)
+            & F.col("value").isNotNull()
+        )
+        .select(
+            "value",
+            (F.col("event_type") == KS_GROUP_A).cast("long").alias("na"),
+            (F.col("event_type") == KS_GROUP_B).cast("long").alias("nb"),
+        )
+    )
+
+
+def _ks_per_value(ev: DataFrame) -> DataFrame:
+    """(value, na, nb, bucket): per distinct value of :func:`_ks_events`,
+    the row count of each type and its KS_BUCKET_WIDTH value bucket — the
+    tie-group frame the KS and Mann–Whitney tests rank."""
+    return (
+        ev.groupBy("value")
+        .agg(F.sum("na").alias("na"), F.sum("nb").alias("nb"))
+        .withColumn("bucket", F.floor(F.col("value") / F.lit(KS_BUCKET_WIDTH)))
+    )
+
+
+def _midranks2(per: DataFrame, by: list[str], col: str, t: Column) -> DataFrame:
+    """``per`` plus ``r2``, the DOUBLED midrank 2·below + t + 1 of each tie
+    group (one row per distinct ``col`` within ``by``, ``t`` rows each;
+    ``bucket`` must refine ``col`` order). ``below`` — the rows strictly
+    below the group — is the exclusive ``quantiles.prefix_scan`` sum of
+    ``t``, so 2R stays integral even with .5 midranks."""
+    return prefix_scan(per, by, "bucket", col, below=t).withColumn(
+        "r2", 2 * F.col("below") + t + 1
+    )
 
 
 @query
@@ -178,70 +222,38 @@ def events_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     D = sup_x |F_a(x) - F_b(x)| needs both empirical CDFs at every
     observed value — a global ordered prefix sum, the one shape that
-    doesn't distribute naively. This runs it WITHOUT a global sort via
-    the two-stage bucket-prefix-sum technique (``docs_surrogate_keys`` /
-    ``docs_token_budget_mix_twostage``): (1) one hash aggregate to
-    per-distinct-value counts, (2) per-bucket subtotals cumulated over
-    the tiny ordered bucket frame (value buckets refine value order),
-    (3) within-bucket cumsum windows partitioned by bucket — every
-    window parallel, no single-partition pass over the data. The final
-    max is a scalar aggregate. Determinism across engines: each CDF
-    point is one integer-to-integer division, so Spark and DuckDB
-    produce bit-identical ratios regardless of aggregation order.
+    doesn't distribute naively. This runs it WITHOUT a global sort: one
+    hash aggregate to per-distinct-value counts, then the two inclusive
+    running sums of ``quantiles.prefix_scan`` (bucket subtotals cumulated
+    over the tiny ordered bucket frame — value buckets refine value order
+    — plus within-bucket windows partitioned by bucket), so no pass over
+    the data is single-partition. The final max is a scalar aggregate.
+    Determinism across engines: each CDF point is one integer-to-integer
+    division, so Spark and DuckDB produce bit-identical ratios regardless
+    of aggregation order. A type with no rows gives NULL statistics, as
+    the oracle does, not a division error.
     """
-    ev = (
-        load_events(spark, sf_dir)
-        .filter(
-            F.col("event_type").isin(KS_GROUP_A, KS_GROUP_B)
-            & F.col("value").isNotNull()
-        )
-        .select("event_type", "value")
+    ev = _ks_events(spark, sf_dir)
+    cdf = prefix_scan(
+        _ks_per_value(ev), [], "bucket", "value", inclusive=True, ca="na", cb="nb"
     )
-    per_value = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == KS_GROUP_A).cast("long")).alias("na"),
-        F.sum((F.col("event_type") == KS_GROUP_B).cast("long")).alias("nb"),
-    ).withColumn("bucket", F.floor(F.col("value") / F.lit(KS_BUCKET_WIDTH)))
-    bstats = per_value.groupBy("bucket").agg(
-        F.sum("na").alias("ba"), F.sum("nb").alias("bb")
-    )
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    bstats = bstats.select(
-        "bucket",
-        F.coalesce(F.sum("ba").over(wb), F.lit(0)).alias("cum_a_before"),
-        F.coalesce(F.sum("bb").over(wb), F.lit(0)).alias("cum_b_before"),
-    )
-    wv = (
-        Window.partitionBy("bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cdf = (
-        per_value.join(F.broadcast(bstats), "bucket")
-        .select(
-            "value",
-            (F.col("cum_a_before") + F.sum("na").over(wv)).alias("ca"),
-            (F.col("cum_b_before") + F.sum("nb").over(wv)).alias("cb"),
-        )
-    )
-    totals = ev.groupBy().agg(
-        F.sum((F.col("event_type") == KS_GROUP_A).cast("long")).alias("n_a"),
-        F.sum((F.col("event_type") == KS_GROUP_B).cast("long")).alias("n_b"),
-    )
+    totals = ev.agg(F.sum("na").alias("n_a"), F.sum("nb").alias("n_b"))
     d = (
         cdf.crossJoin(F.broadcast(totals))
         .select(
             "n_a",
             "n_b",
             F.abs(
-                F.col("ca") / F.col("n_a") - F.col("cb") / F.col("n_b")
+                F.try_divide("ca", "n_a") - F.try_divide("cb", "n_b")
             ).alias("d"),
         )
         .groupBy("n_a", "n_b")
         .agg(F.max("d").alias("ks_stat"), F.count(F.lit(1)).alias("n_points"))
     )
     crit = F.lit(KS_CRIT_95) * F.sqrt(
-        (F.col("n_a") + F.col("n_b"))
-        / (F.col("n_a").cast("double") * F.col("n_b"))
+        F.try_divide(
+            F.col("n_a") + F.col("n_b"), F.col("n_a").cast("double") * F.col("n_b")
+        )
     )
     return d.select(
         "n_a",
@@ -396,13 +408,14 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     day, the signed cusum there, its magnitude, and the series length.
 
     Scale design: the corpus collapses to (type, day) partial sums via
-    ONE map-side-combinable hash aggregate (the bucket-prefix move — days
-    are the buckets); the running sum and the arg-max are windows/aggs
-    over the tiny |types|×|days| frame, so no corpus-wide or per-type
-    sort ever exists. The grand mean is derived from the partials
-    themselves (one more tiny agg, broadcast back). Determinism: the
-    arg-max tie-breaks to the EARLIEST day via max_by on
-    (|cusum|, -day).
+    ONE map-side-combinable hash aggregate (the first stage of
+    ``quantiles.bucket_offsets`` — days are the buckets); the running sum
+    and the arg-max are windows/aggs over the tiny |types|×|days| frame,
+    so no corpus-wide or per-type sort ever exists — the days frame is
+    small enough that no in-bucket stage is needed. The grand mean is
+    derived from the partials themselves (one more tiny agg, broadcast
+    back). Determinism: the arg-max tie-breaks to the EARLIEST day via
+    max_by on (|cusum|, -day).
     """
     ev = load_events(spark, sf_dir).filter(F.col("value").isNotNull())
     daily = ev.groupBy(
@@ -500,58 +513,22 @@ def events_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: midranks never materialize per row — one hash aggregate
     collapses the corpus to per-DISTINCT-VALUE (n_a, n_b) counts, then
-    the rank prefix runs over that tie-group frame with the same
-    two-stage bucket-prefix shape as ``events_ks_test`` (value buckets
-    refine value order; every window is bucket-partitioned). Everything
+    the rank prefix runs over that tie-group frame as the exclusive
+    ``quantiles.prefix_scan`` sum of ``_midranks2`` (value buckets refine
+    value order; every window is bucket-partitioned). Everything
     up to the final z is INTEGER arithmetic — rank sums are kept doubled
     (2·R is always integral even with .5 midranks) and the tie-correction
     Σ(t³−t) is exact — so both engines agree bit-for-bit on U and only
-    the last sqrt/division is floating point.
+    the last sqrt/division is floating point. A type with no rows gives a
+    NULL z, as the oracle does, not a division error.
     """
-    ev = (
-        load_events(spark, sf_dir)
-        .filter(
-            F.col("event_type").isin(KS_GROUP_A, KS_GROUP_B)
-            & F.col("value").isNotNull()
-        )
-        .select("event_type", "value")
-    )
-    per_value = ev.groupBy("value").agg(
-        F.sum((F.col("event_type") == KS_GROUP_A).cast("long")).alias("na"),
-        F.sum((F.col("event_type") == KS_GROUP_B).cast("long")).alias("nb"),
-    ).withColumn("bucket", F.floor(F.col("value") / F.lit(KS_BUCKET_WIDTH)))
-    bstats = per_value.groupBy("bucket").agg(
-        (F.sum("na") + F.sum("nb")).alias("bn")
-    )
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    bstats = bstats.select(
-        "bucket", F.coalesce(F.sum("bn").over(wb), F.lit(0)).alias("cumb")
-    )
-    wv = (
-        Window.partitionBy("bucket")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     t = F.col("na") + F.col("nb")
-    ranked = per_value.join(F.broadcast(bstats), "bucket").select(
-        "na",
-        "nb",
-        t.alias("t"),
-        # rows strictly below this tie group, corpus-wide
-        (F.col("cumb") + F.coalesce(F.sum(t).over(wv), F.lit(0))).alias(
-            "below"
-        ),
-    )
-    # doubled midrank of the tie group = 2·below + t + 1 (integral)
+    ranked = _midranks2(_ks_per_value(_ks_events(spark, sf_dir)), [], "value", t)
     agg = ranked.agg(
         F.sum("na").alias("n_a"),
         F.sum("nb").alias("n_b"),
-        F.sum(F.col("na") * (2 * F.col("below") + F.col("t") + 1)).alias(
-            "r2_a"
-        ),
-        F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t")).alias(
-            "tie3"
-        ),
+        F.sum(F.col("na") * F.col("r2")).alias("r2_a"),
+        F.sum(t * t * t - t).alias("tie3"),
     )
     n_a, n_b = F.col("n_a"), F.col("n_b")
     n = n_a + n_b
@@ -564,11 +541,13 @@ def events_mannwhitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
         / 12.0
         * (
             (n + 1).cast("double")
-            - F.col("tie3").cast("double")
-            / (n.cast("double") * (n - 1).cast("double"))
+            - F.try_divide(
+                F.col("tie3").cast("double"),
+                n.cast("double") * (n - 1).cast("double"),
+            )
         )
     )
-    z = (u2_a - mu2).cast("double") / (2.0 * F.sqrt(var))
+    z = F.try_divide((u2_a - mu2).cast("double"), 2.0 * F.sqrt(var))
     return agg.select(
         "n_a",
         "n_b",
@@ -589,25 +568,16 @@ def events_mannwhitney_u_oracle() -> str:
     per_value AS (
       SELECT value,
              CAST(sum(CASE WHEN event_type = '{KS_GROUP_A}' THEN 1 ELSE 0 END) AS BIGINT) AS na,
-             CAST(sum(CASE WHEN event_type = '{KS_GROUP_B}' THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-             floor(value / {KS_BUCKET_WIDTH}) AS bucket
+             CAST(sum(CASE WHEN event_type = '{KS_GROUP_B}' THEN 1 ELSE 0 END) AS BIGINT) AS nb
       FROM ev GROUP BY value
     ),
-    bstats AS (
-      SELECT bucket,
-             coalesce(CAST(sum(sum(na) + sum(nb)) OVER (
-               ORDER BY bucket
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-             ) AS BIGINT), 0) AS cumb
-      FROM per_value GROUP BY bucket
-    ),
     ranked AS (
-      SELECT p.na, p.nb, p.na + p.nb AS t,
-             b.cumb + coalesce(CAST(sum(p.na + p.nb) OVER (
-               PARTITION BY p.bucket ORDER BY p.value
+      SELECT na, nb, na + nb AS t,
+             coalesce(CAST(sum(na + nb) OVER (
+               ORDER BY value
                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
              ) AS BIGINT), 0) AS below
-      FROM per_value p JOIN bstats b USING (bucket)
+      FROM per_value
     ),
     agg AS (
       SELECT CAST(sum(na) AS BIGINT) AS n_a, CAST(sum(nb) AS BIGINT) AS n_b,
@@ -672,8 +642,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_id", "event_type", "value")
         .localCheckpoint(eager=True)
     )
-    from komodo_data_spark.operators.quantiles import exact_group_quantiles
-
     med = exact_group_quantiles(ev, ["event_type"], "value", {"med": (1, 2)})
     dev = (
         ev.join(F.broadcast(med), "event_type")
@@ -704,8 +672,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_mad_outliers_oracle() -> str:
-    from komodo_data_spark.operators.quantiles import oracle_group_quantile_sql
-
     m = oracle_group_quantile_sql(
         "ev", ["event_type"], "value", {"med": (1, 2)}, prefix="_m"
     )
@@ -797,10 +763,10 @@ def events_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale design: ranks never come from a per-type global sort. Each
     axis collapses to per-DISTINCT-value tie-group counts (one hash
-    aggregate), gets its corpus-wide rank prefix from the two-stage
-    bucket-prefix shape (``events_ks_test`` / ``events_mannwhitney_u``:
-    tiny per-(type, bucket) frame windows, bucket order refines value
-    order), and joins back to event rows on the (type, value) key —
+    aggregate), gets its corpus-wide rank prefix from ``_midranks2``
+    (the ``quantiles.prefix_scan`` sum ``events_mannwhitney_u`` ranks
+    with: tiny per-(type, bucket) frame windows, bucket order refines
+    value order), and joins back to event rows on the (type, value) key —
     high-cardinality, skew-free. One final combinable aggregate emits
     |types| rows. Types with a constant axis (rank variance 0, ρ
     undefined) are excluded by distinct-count guard on BOTH engines —
@@ -817,30 +783,8 @@ def events_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         per = ev.groupBy("event_type", col).agg(
             F.count(F.lit(1)).alias("t")
         ).withColumn("bucket", F.floor(F.col(col) / F.lit(width)))
-        wb = (
-            Window.partitionBy("event_type")
-            .orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        bstats = (
-            per.groupBy("event_type", "bucket")
-            .agg(F.sum("t").alias("bn"))
-            .select(
-                "event_type",
-                "bucket",
-                F.coalesce(F.sum("bn").over(wb), F.lit(0)).alias("cumb"),
-            )
-        )
-        wv = (
-            Window.partitionBy("event_type", "bucket")
-            .orderBy(col)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        below = F.col("cumb") + F.coalesce(F.sum("t").over(wv), F.lit(0))
-        return per.join(F.broadcast(bstats), ["event_type", "bucket"]).select(
-            "event_type",
-            col,
-            (2 * below + F.col("t") + 1).alias("r2"),
+        return _midranks2(per, ["event_type"], col, F.col("t")).select(
+            "event_type", col, "r2"
         )
 
     rx = ranks2("ts_ms", SPEARMAN_TS_BUCKET_MS).withColumnRenamed("r2", "rx2")
@@ -878,7 +822,7 @@ def events_spearman_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_spearman_trend_oracle() -> str:
     # Independent algorithm: per-row midranks straight from window
     # rank()/count() (2·rank + t − 1 = the engine's 2·below + t + 1),
-    # instead of the bucket-prefix construction.
+    # instead of the bucketed prefix scan.
     return """
     WITH ev AS (
       SELECT event_type, epoch_ms(ts) AS ts_ms, value FROM events

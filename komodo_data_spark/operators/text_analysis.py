@@ -1216,10 +1216,11 @@ def text_bpe_packed_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale design: the token stream is ``_bpe_encoded``'s (vocab-bounded
     fit, broadcast join + posexplode); the per-doc token index is a
     window PARTITIONED BY doc_id (parallel — never a global sort); doc
-    start offsets are ``pipeline_ops._doc_starts``'s two-stage
-    range-partitioned prefix sum (per-(lang, pid) partials + a broadcast
-    offsets frame — no per-language single-task window at any corpus
-    size; the oracle's plain per-lang window sum is value-identical).
+    start offsets are ``pipeline_ops._doc_starts`` — the
+    ``quantiles.prefix_scan`` sum over range partitions (per-(lang, pid)
+    partials + a broadcast offsets frame — no per-language single-task
+    window at any corpus size; the oracle's plain per-lang window sum is
+    value-identical).
     The final seq/pos assignment is pure map-side arithmetic.
     """
     from pyspark.sql import Window

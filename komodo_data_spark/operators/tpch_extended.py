@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from komodo_data_spark.operators.quantiles import prefix_scan
 from komodo_data_spark.operators.relational import _dbl, dec
 from komodo_data_spark.registry import query
 from komodo_data_spark.sources.tables import load_table
@@ -890,7 +891,7 @@ def q22_oracle() -> str:
 # skyline (Pareto front) — the classic "not dominated by anyone" operator
 # --------------------------------------------------------------------------
 
-#: Bucket width over the price axis for the two-stage prefix min. The gate
+#: Bucket width over the price axis for the bucketed prefix min. The gate
 #: data's price domain is bounded ([900, 1000)); at an unbounded domain
 #: swap fixed-width buckets for approx-quantile boundaries (the
 #: ``events_ks_test`` note) — same plan, still no global sort.
@@ -909,15 +910,15 @@ def part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     point survives iff the strict-prefix minimum of size never reaches
     its own size class — so the whole operator reduces to (1) a hash
     aggregate to per-price minima, (2) the strict-before prefix minimum
-    over price order, run with the two-stage bucket technique
-    (``docs_token_budget_mix_twostage``): bucket subtotals cumulated on
-    the tiny ordered bucket frame + within-bucket windows partitioned by
-    bucket — every corpus-sized stage hash-partitioned, nothing passes
-    through one task. Survivor (price, min-size) classes broadcast back
-    to fetch the member rows (same-class duplicates are mutually
-    non-dominating, all skyline). The oracle deliberately uses the
-    INDEPENDENT O(n²) NOT EXISTS formulation, so the two engines agree
-    through entirely different algorithms.
+    over price order, the exclusive ``F.min`` of
+    ``quantiles.prefix_scan``: bucket minima cumulated on the tiny ordered
+    bucket frame + within-bucket windows partitioned by bucket — every
+    corpus-sized stage hash-partitioned, nothing passes through one task.
+    Survivor (price, min-size) classes broadcast back to fetch the member
+    rows (same-class duplicates are mutually non-dominating, all
+    skyline). The oracle deliberately uses the INDEPENDENT O(n²) NOT
+    EXISTS formulation, so the two engines agree through entirely
+    different algorithms.
     """
     pts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
@@ -928,26 +929,9 @@ def part_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     gx = gx.withColumn(
         "bucket", F.floor(F.col("price") / F.lit(SKYLINE_BUCKET_WIDTH))
     )
-    bmin = gx.groupBy("bucket").agg(F.min("gmin").alias("bm"))
-    wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
-    bmin = bmin.select("bucket", F.min("bm").over(wb).alias("before_bucket"))
-    wv = (
-        Window.partitionBy("bucket")
-        .orderBy("price")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
     survivors = (
-        gx.join(F.broadcast(bmin), "bucket")
-        .withColumn(
-            "before_x",
-            F.least(
-                F.coalesce("before_bucket", F.lit(2147483647)),
-                F.coalesce(
-                    F.min("gmin").over(wv), F.lit(2147483647)
-                ),
-            ),
-        )
-        .filter(F.col("before_x") > F.col("gmin"))
+        prefix_scan(gx, [], "bucket", "price", fn=F.min, before_x="gmin")
+        .filter(F.coalesce("before_x", F.lit(2147483647)) > F.col("gmin"))
         .select("price", F.col("gmin").alias("size"))
     )
     return pts.join(F.broadcast(survivors), ["price", "size"]).select(

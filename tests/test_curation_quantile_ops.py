@@ -249,6 +249,36 @@ def test_exact_group_quantiles_global_mode(spark):
     assert out[0]["q"] == 9.0  # rank (10*9)/10 = 9 exactly -> v[9]
 
 
+def test_exact_group_kth_ties_clamp_and_global_mode(spark):
+    """k-th smallest per group (1-based): heavy ties resolve to the tied
+    VALUE, k beyond the group size clamps to the group max, empty
+    group_cols gives one global row, NULLs are ignored, and k < 1
+    raises."""
+    import pytest
+
+    from komodo_data_spark.operators.quantiles import exact_group_kth
+
+    data = {
+        "ties": [2.5, 2.5, 2.5, 2.5, 7.0, 1.0],
+        "small": [4.0, 3.0],
+        "spread": [float(v) for v in range(100, 0, -7)],
+    }
+    rows = [(g, v) for g, vs in data.items() for v in vs] + [("small", None)]
+    df = spark.createDataFrame(rows, "grp string, val double")
+    for k in (1, 2, 3, 5, 6, 50):
+        got = {
+            r["grp"]: r["cut"]
+            for r in exact_group_kth(df, ["grp"], "val", k, out_col="cut").collect()
+        }
+        want = {g: sorted(vs)[min(k, len(vs)) - 1] for g, vs in data.items()}
+        assert got == want, (k, got, want)
+    every = sorted(v for vs in data.values() for v in vs)
+    glob = exact_group_kth(df, [], "val", 7).collect()
+    assert [r.asDict() for r in glob] == [{"kth": every[6]}]
+    with pytest.raises(ValueError):
+        exact_group_kth(df, ["grp"], "val", 0)
+
+
 def test_quality_band_filter_hand_computed(spark, tmp_path):
     """Band keep [median, p90): scores .1/.2/.3/.4/.5 (n=5, all-distinct
     tokens). median rank (4*1)/2 = 2 -> lo = .3; p90 rank (4*9)/10 = 3.6

@@ -6,6 +6,7 @@ transitivity, packing capacity."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from komodo_data_spark.operators import pipeline_ops as P
@@ -484,18 +485,32 @@ def test_curriculum_order_is_dense_phase_ordered_and_md5_shuffled(spark):
         assert r["phase"] == want
 
 
-def test_curriculum_order_has_no_global_window(spark, sf_dir):
-    """The corpus-sized window must be partitioned by (phase, bucket); the
-    only single-partition exchange allowed is the <=1024-row bucket-offset
-    frame. Guard: the executed plan's SinglePartition exchanges must all
-    sit above an aggregate (the bucket stats), never above the documents
-    scan directly."""
-    plan = (
-        P.docs_curriculum_order(spark, sf_dir)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+#: Every query whose ordered running aggregate runs on the bucketed prefix
+#: (``quantiles.prefix_scan`` / ``bucket_offsets``).
+PREFIX_SCAN_QUERIES = [
+    "docs_curriculum_order",
+    "docs_surrogate_keys",
+    "token_packing",
+    "token_packing_sequences",
+    "docs_token_budget_mix_twostage",
+    "events_ks_test",
+    "events_mannwhitney_u",
+    "events_spearman_trend",
+    "part_skyline",
+]
+
+
+@pytest.mark.parametrize("name", PREFIX_SCAN_QUERIES)
+def test_curriculum_order_has_no_global_window(spark, sf_dir, name):
+    """The corpus-sized window must be partitioned by its buckets; the
+    only single-partition exchange allowed is the tiny bucket-offset
+    frame (or a scalar total). Guard: the executed plan's SinglePartition
+    exchanges must all sit above an aggregate (the bucket stats), never
+    above the scan directly."""
+    from komodo_data_spark.registry import registered
+
+    fn, _ = registered()[name]
+    plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     for frag in plan.split("Exchange SinglePartition")[1:]:
         assert "HashAggregate" in frag[:2000] or "partial_count" in frag[:2000]

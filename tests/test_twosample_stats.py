@@ -5,6 +5,7 @@ moments are round numbers."""
 from __future__ import annotations
 
 import pyarrow as pa
+import pytest
 import pyarrow.parquet as pq
 
 
@@ -118,3 +119,31 @@ def test_mannwhitney_u_hand_computed(spark, tmp_path):
     var = (9.0 / 12.0) * (7.0 - 12.0 / 30.0)
     assert abs(r["z"] - (2.0 - 4.5) / math.sqrt(var)) < 1e-12
     assert r["significant_95"] is False
+
+
+@pytest.mark.parametrize("name", ["events_ks_test", "events_mannwhitney_u"])
+@pytest.mark.parametrize("only", ["a", "b"])
+def test_one_sided_sample_matches_oracle(spark, tmp_path, name, only):
+    """When one KS event type has no rows, every statistic that divides by
+    its size is NULL, as in the DuckDB oracle — never a DIVIDE_BY_ZERO.
+    The oracle answer for a purchase-only file is (0, 2, 2, NULL, NULL)
+    for KS and (0, 2, 0.0, 0.0, NULL, NULL) for Mann–Whitney."""
+    import duckdb
+
+    from komodo_data_spark.operators import stats_ops as S
+    from komodo_data_spark.registry import registered
+    from scripts.check import compare_query
+
+    kind = S.KS_GROUP_A if only == "a" else S.KS_GROUP_B
+    rows = [(1, kind, 1.0), (2, kind, 2.0), (3, "view", 5.0)]
+    d = _write_events(tmp_path, rows, name=f"only_{only}_sf")
+    fn, oracle = registered()[name]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet')"
+    )
+    ok, line = compare_query(spark, con, name, fn, oracle, d)
+    con.close()
+    assert ok, line
+    r = fn(spark, d).collect()
+    assert len(r) == 1 and r[0]["n_a" if only == "b" else "n_b"] == 0
